@@ -5,9 +5,12 @@ exact v1 hash semantics (/root/reference/dirhash.py), rebuilt on the
 DataFrame stack:
 
   codec.py    blocksize / algo whitelist / hash-string / v1 preimages
-  listing.py  recursive listing → entries (dirs get a trailing '/')
+  listing.py  recursive listing → entries (dirs get a trailing '/'),
+              routed driver/cluster by a serial-walk time budget
   chunks.py   fixed-size chunk plan (metadata DF) + range-read mapInPandas
-  hashdir.py  chunk digests (JVM sha2 fast path) → ordered collect → fold
+  hashdir.py  fused read+hash stage → ordered collect (or cluster sort
+              past a chunk-count bound) → fold
+  incremental.py  manifest-spliced re-hash of changed files only
   verify.py   recompute + compare (HashComparisonResult)
   archive.py  content-addressed archive sink (move, dedupe, chmod, link)
   cli.py      argparse CLI mirroring the reference's flags/exit codes

@@ -67,9 +67,15 @@ def chunk_plan(spark: SparkSession, entries: list[Entry], blocksize: int) -> Dat
     return _plan_from_meta(meta, blocksize)
 
 
+def chunk_count(entries: list[Entry], blocksize: int) -> int:
+    """Rows :func:`chunk_plan` will emit: Σ⌈size/blocksize⌉ over files,
+    measured from the listing alone."""
+    return sum(-(-e.size // blocksize) for e in entries if not e.is_dir)
+
+
 def chunk_plan_df(entries_df: DataFrame, blocksize: int) -> DataFrame:
     """:func:`chunk_plan` over a listing DATAFRAME
-    (``listing.ENTRY_DF_SCHEMA``) — the file list never passes through
+    (``listing.list_entries_df``) — the file list never passes through
     the driver, for folds that stream the listing."""
     meta = entries_df.where(~F.col("is_dir")).select(
         F.col("relative_path").alias("path"),

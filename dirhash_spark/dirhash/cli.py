@@ -54,13 +54,6 @@ def build_parser() -> argparse.ArgumentParser:
         help="persist the (path, size, mtime, block, digest) manifest "
         "for future incremental runs",
     )
-    p.add_argument(
-        "--streamed-fold",
-        action="store_true",
-        help="constant-memory driver fold: cluster-side digest sort, "
-        "one partition on the driver at a time (same hash; for "
-        "listings whose digest set outgrows a driver collect)",
-    )
     return p
 
 
@@ -86,9 +79,7 @@ def main(argv: list[str] | None = None, spark=None) -> int:
     try:
         if args.check or args.check_name:
             expected = args.check or os.path.basename(args.directory.rstrip("/"))
-            result = verify_directory_hash(
-                spark, args.directory, expected, streamed=args.streamed_fold
-            )
+            result = verify_directory_hash(spark, args.directory, expected)
             if result:
                 print(f"OK {result.actual_hash_value}")
                 return 0
@@ -106,7 +97,6 @@ def main(argv: list[str] | None = None, spark=None) -> int:
                 args.hash_algorithm,
                 args.block_size,
                 with_manifest=True,
-                streamed=args.streamed_fold,
             )
             # stats to stderr: stdout stays the reference's hash-only contract
             print(
@@ -116,11 +106,7 @@ def main(argv: list[str] | None = None, spark=None) -> int:
             )
         else:
             hash_string = hash_directory(
-                spark,
-                args.directory,
-                args.hash_algorithm,
-                args.block_size,
-                streamed=args.streamed_fold,
+                spark, args.directory, args.hash_algorithm, args.block_size
             )
             new_manifest = None
         print(hash_string)
@@ -129,11 +115,7 @@ def main(argv: list[str] | None = None, spark=None) -> int:
                 from .incremental import build_chunk_manifest
 
                 new_manifest = build_chunk_manifest(
-                    spark,
-                    args.directory,
-                    args.hash_algorithm,
-                    args.block_size,
-                    streamed=args.streamed_fold,
+                    spark, args.directory, args.hash_algorithm, args.block_size
                 )
             new_manifest.write.mode("overwrite").parquet(args.write_manifest)
             print(f"manifest: {args.write_manifest}", file=sys.stderr)

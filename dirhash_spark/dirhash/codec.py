@@ -138,8 +138,8 @@ def fold_header(h, relative_paths) -> None:
     """v1 fold HEADER into hasher ``h``:
     ``ascii(count) ‖ NUL ‖ NUL.join(sorted paths) ‖ NUL``.  THE single
     driver-side definition of the header framing — :func:`fold_digest`
-    and the streamed fold's serial route both call it (the cluster
-    twin is ``hashdir.fold_header_streamed``), so the
+    and the driver routes' streamed digest drain both call it (the
+    cluster twin is ``hashdir.fold_header_streamed``), so the
     security-critical framing cannot drift between routes."""
     ordered = sorted(relative_paths)
     h.update(str(len(ordered)).encode("ascii"))

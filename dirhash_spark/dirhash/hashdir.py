@@ -1,7 +1,8 @@
 """Directory hashing pipeline (REF A5-A7; lifecycle SURVEY §3.1).
 
 Stages (mirroring dirhash.py:307-444, re-expressed Spark-first):
-  1. LIST   driver-side recursive listing (metadata only)
+  1. LIST   recursive listing (metadata only), routed by the serial-walk
+            budget (listing.list_entries)
   2. PLAN   chunk metadata DataFrame (no bytes touched)
   3. READ+HASH   ONE fused mapInPandas stage: positioned range read,
             digest the v1 preimage immediately, emit only
@@ -22,10 +23,16 @@ Stages (mirroring dirhash.py:307-444, re-expressed Spark-first):
             including non-ASCII path code-point order.
   5. FOLD   driver-side sequential Merkle chain (inherently ordered)
 
-``chunk_digests`` (content → digest as a DataFrame op, F.sha2 JVM-side
-for SHA-2) remains for columnar pipelines whose bytes already live
-JVM-side (parquet-sourced columns, SURVEY B39-B41); the directory
-pipeline deliberately does not use it.
+The route is taken from what the listing measures, never from an
+option — every route yields the bit-identical v1 digest:
+  (a) the serial walk finishes inside its budget → the stages above;
+  (b) as (a), but the listing's chunk count exceeds
+      :data:`COLLECT_MAX_CHUNKS` → stage 4 becomes a cluster sort whose
+      digests drain into the chain one partition at a time
+      (:func:`fold_digests_streamed`), so driver memory stays constant;
+  (c) the walk trips its budget → the listing stays cluster-side too
+      (:func:`fold_listing_df`): header paths and digests both stream
+      from cluster sorts.
 """
 
 from __future__ import annotations
@@ -38,25 +45,28 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, LongType, StringType, StructField, StructType
 
 from ..session import configure
-from .chunks import chunk_plan, chunk_plan_df, open_for_range_read
+from .chunks import chunk_count, chunk_plan, chunk_plan_df, open_for_range_read
 from .codec import (
     DEFAULT_BLOCK_SIZE,
     build_hash_string,
-    chunk_preimage,
     fold_digest,
     fold_header,
     get_hash_func,
     parse_blocksize,
 )
 from .listing import (
-    Entry,
     list_entries,
-    listing_for_fold,
+    list_entries_df,
     reject_undecodable_paths,
     strip_trailing_slash,
 )
 
-_SHA2_BITS = {"sha224": 224, "sha256": 256, "sha384": 384, "sha512": 512}
+#: Chunk count above which the driver route drains digests from a
+#: cluster sort instead of one collect (route (b) in the module doc).
+#: The collect's documented scale bound: 100 TB at the 128 MiB default
+#: blocksize is ~800k rows of 32-byte digests plus paths.  Read at call
+#: time.
+COLLECT_MAX_CHUNKS = 1 << 20
 
 DIGEST_SCHEMA = StructType(
     [
@@ -67,38 +77,6 @@ DIGEST_SCHEMA = StructType(
 )
 
 
-def chunk_digests(chunks: DataFrame, algo: str) -> DataFrame:
-    """(path, block_num, content) → (path, block_num, digest)."""
-    canonical = algo.lower() if algo.lower().startswith("sha") else algo
-    if canonical in _SHA2_BITS:
-        bits = _SHA2_BITS[canonical]
-        preimage = F.concat(
-            F.encode(F.col("path"), "UTF-8"),
-            F.lit(b"\x00"),
-            F.encode(F.col("block_num").cast("string"), "UTF-8"),
-            F.lit(b"\x00"),
-            F.col("content"),
-        )
-        return chunks.select(
-            "path", "block_num", F.unhex(F.sha2(preimage, bits)).alias("digest")
-        )
-
-    get_hash_func(canonical)  # validate against the whitelist up front
-
-    def hash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        func = get_hash_func(canonical)
-        for pdf in batches:
-            digests = [
-                func(chunk_preimage(p, int(n), c)).digest()
-                for p, n, c in zip(pdf["path"], pdf["block_num"], pdf["content"])
-            ]
-            yield pd.DataFrame(
-                {"path": pdf["path"], "block_num": pdf["block_num"], "digest": digests}
-            )
-
-    return chunks.mapInPandas(hash_batches, DIGEST_SCHEMA)
-
-
 def _read_hash_ranges(algo: str):
     """Fused range-read + v1-preimage digest over chunk-plan rows.
 
@@ -107,7 +85,7 @@ def _read_hash_ranges(algo: str):
     cached across the rows of a batch (opened once per file per batch,
     never per row), and the producer sorts each partition on
     (path, block_num) — ``repartition(...).sortWithinPartitions(...)``
-    in :func:`digest_directory` — so a partition's reads advance
+    in :func:`hash_chunk_plan` — so a partition's reads advance
     file- and offset-ORDERED instead of seeking randomly (sequential
     range reads are the fast path on s3a/hdfs, the case
     :func:`open_for_range_read` exists for).  A repartitionByRange
@@ -150,34 +128,25 @@ def _read_hash_ranges(algo: str):
     return inner
 
 
+def hash_chunk_plan(spark: SparkSession, plan: DataFrame, algo: str) -> DataFrame:
+    """THE read+hash stage: chunk-plan rows → (path, block_num, digest),
+    one fused ``mapInPandas`` over plan rows spread across the cluster
+    (the plan is tiny metadata, so the shuffle costs nothing while the
+    stage's parallelism stops depending on how the plan was sliced)."""
+    get_hash_func(algo)  # whitelist check before any cluster work
+    n_parts = max(spark.sparkContext.defaultParallelism, 1)
+    return plan.repartition(n_parts, "path", "block_num").sortWithinPartitions(
+        "path", "block_num"
+    ).mapInPandas(
+        _read_hash_ranges(algo), DIGEST_SCHEMA
+    )
+
+
 def digest_directory(
     spark: SparkSession, entries, blocksize: int, algo: str
 ) -> DataFrame:
-    """(path, block_num, digest) for every chunk — fused single stage."""
-    get_hash_func(algo)  # whitelist check before any cluster work
-    plan = chunk_plan(spark, entries, blocksize)
-    n_parts = max(spark.sparkContext.defaultParallelism, 1)
-    return plan.repartition(n_parts, "path", "block_num").sortWithinPartitions(
-        "path", "block_num"
-    ).mapInPandas(
-        _read_hash_ranges(algo), DIGEST_SCHEMA
-    )
-
-
-def digest_directory_df(
-    spark: SparkSession, entries_df: DataFrame, blocksize: int, algo: str
-) -> DataFrame:
-    """:func:`digest_directory` from a listing DATAFRAME
-    (``listing.ENTRY_DF_SCHEMA``): the chunk plan derives cluster-side,
-    so the file list never passes through the driver."""
-    get_hash_func(algo)  # whitelist check before any cluster work
-    plan = chunk_plan_df(entries_df, blocksize)
-    n_parts = max(spark.sparkContext.defaultParallelism, 1)
-    return plan.repartition(n_parts, "path", "block_num").sortWithinPartitions(
-        "path", "block_num"
-    ).mapInPandas(
-        _read_hash_ranges(algo), DIGEST_SCHEMA
-    )
+    """(path, block_num, digest) for every chunk of a driver listing."""
+    return hash_chunk_plan(spark, chunk_plan(spark, entries, blocksize), algo)
 
 
 def fold_header_streamed(h, entries_df: DataFrame) -> None:
@@ -230,33 +199,83 @@ def fold_digests_streamed(h, digests: DataFrame) -> None:
         h.update(bytes(row["digest"]))
 
 
+def fold_listing_df(
+    spark: SparkSession, entries_df: DataFrame, hash_algorithm: str, blocksize: int
+) -> str:
+    """Route (c): the v1 hex digest of a cluster-side listing
+    (``listing.list_entries_df``) with a constant-memory driver fold.
+
+    A literal tree-reduce cannot exist for the v1 digest: the fold is a
+    single hash chain over an ORDERED byte stream (header then chunk
+    digests in (path, block_num) order, dirhash.py:422-441), and the
+    chain's state at byte k depends on every byte before it.  What CAN
+    move off the driver is everything except the O(1) hash state:
+
+    - the chunk plan derives from the listing DataFrame, and the
+      header's path sort is a cluster ``orderBy`` — the driver never
+      holds the entry list;
+    - sorts run on the cluster (``orderBy`` = range exchange; Spark's
+      UTF8String binary comparison equals Python's code-point string
+      sort because UTF-8 byte order preserves code-point order, so both
+      streams arrive in exactly the order the reference's driver sort
+      produced);
+    - digests are ``localCheckpoint``-ed FIRST, so the range exchange's
+      boundary-sampling pass re-reads materialized rows, not the fused
+      read+hash stage.  Trade-off: a local checkpoint pins those rows
+      in executor block-manager storage with lineage truncated, so
+      losing an executor mid-drain fails the job unrecoverably —
+      acceptable for digest-sized state;
+    - the driver consumes ``toLocalIterator(prefetchPartitions=True)``
+      — at most two sorted partitions resident at a time.
+    """
+    h = get_hash_func(hash_algorithm)()
+    fold_header_streamed(h, entries_df)
+    has_bytes = (
+        entries_df.where((~F.col("is_dir")) & (F.col("size") > 0)).limit(1).count() > 0
+    )
+    if has_bytes:
+        plan = chunk_plan_df(entries_df, blocksize)
+        fold_digests_streamed(
+            h, hash_chunk_plan(spark, plan, hash_algorithm).localCheckpoint()
+        )
+    return h.hexdigest()
+
+
 def hash_directory_raw(
     spark: SparkSession,
     directory: str,
     hash_algorithm: str = "sha256",
     blocksize: int | None = None,
 ) -> str:
-    """Compute the v1 hex digest of a directory tree (dirhash.py:307-444)."""
+    """Compute the v1 hex digest of a directory tree (dirhash.py:307-444)
+    on the route the listing measures (module doc)."""
     configure(spark)
     blocksize = blocksize or parse_blocksize(DEFAULT_BLOCK_SIZE)
     directory = strip_trailing_slash(directory)
 
     entries = list_entries(directory, spark)
+    if entries is None:  # (c) the serial walk tripped its budget
+        return fold_listing_df(
+            spark, list_entries_df(spark, directory), hash_algorithm, blocksize
+        )
     reject_undecodable_paths(entries)
     listing = [e.relative_path for e in entries]
 
-    has_bytes = any((not e.is_dir) and e.size > 0 for e in entries)
-    if has_bytes:
+    n_chunks = chunk_count(entries, blocksize)
+    if n_chunks > COLLECT_MAX_CHUNKS:  # (b) too many digests to collect
+        h = get_hash_func(hash_algorithm)()
+        fold_header(h, listing)
+        digests = digest_directory(spark, entries, blocksize, hash_algorithm)
+        fold_digests_streamed(h, digests.localCheckpoint())
+        return h.hexdigest()
+    if n_chunks:
         rows = digest_directory(spark, entries, blocksize, hash_algorithm).collect()
-        # bounded: digests only — 32 bytes + path per CHUNK (see scale
-        # note below), never content bytes.
+        # bounded: digests only — 32 bytes + path per CHUNK, at most
+        # COLLECT_MAX_CHUNKS rows (route (b) takes over beyond that).
         # Driver-side tuple sort == reference sortBy((path, num)),
         # dirhash.py:413 — and avoids the range-exchange sampling pass
-        # that would re-execute the read+hash stage.  Scale bound on this
-        # collect(): what moves is digests, never data — 32 bytes + path
-        # per CHUNK, so 100 TB at the 128 MiB default blocksize is ~800k
-        # rows ≈ tens of MB on the driver; the fold itself is inherently
-        # sequential (each step hashes the previous digest,
+        # that would re-execute the read+hash stage.  The fold itself is
+        # inherently sequential (each step hashes the previous digest,
         # dirhash.py:413-441), so no cluster topology helps it.
         rows.sort(key=lambda r: (r["path"], r["block_num"]))
         digest_list = [bytes(r["digest"]) for r in rows]
@@ -266,112 +285,14 @@ def hash_directory_raw(
     return fold_digest(hash_algorithm, listing, digest_list)
 
 
-def hash_directory_raw_streamed(
-    spark: SparkSession,
-    directory: str,
-    hash_algorithm: str = "sha256",
-    blocksize: int | None = None,
-) -> str:
-    """:func:`hash_directory_raw` with a constant-memory driver fold —
-    the scale variant for listings whose digest set outgrows a
-    driver-side ``collect()`` + sort (the one remaining driver-side
-    assumption flagged in listing.py).
-
-    A literal tree-reduce cannot exist for the v1 digest: the fold is a
-    single hash chain over an ORDERED byte stream (header then chunk
-    digests in (path, block_num) order, dirhash.py:422-441), and the
-    chain's state at byte k depends on every byte before it.  What CAN
-    move off the driver is everything except the O(1) hash state:
-
-    - the LISTING is routed by the serial-walk budget
-      (:func:`listing_for_fold`): a tree that lists inside the budget
-      keeps the driver-side header fold — by that measurement its
-      metadata fits the driver, and the profiled alternative (three
-      extra Spark jobs to count/sort/probe a driver-local relation)
-      halves small-tree throughput for nothing — while a budget trip
-      switches to the cluster-side walk, where per-level rows are
-      checkpointed on executors, the header's path sort is a cluster
-      ``orderBy``, and the chunk plan derives from the same DataFrame:
-      the driver never holds the entry list on the route where it
-      could not;
-    - sorts run on the cluster (``orderBy`` = range exchange; Spark's
-      UTF8String binary comparison equals Python's code-point string
-      sort because UTF-8 byte order preserves code-point order, so both
-      streams arrive in exactly the order the reference's driver sort
-      produced);
-    - sorted inputs are ``localCheckpoint``-ed FIRST, so the range
-      exchange's boundary-sampling pass re-reads materialized rows,
-      not the walk or the fused read+hash stage (the re-execution trap
-      that made the collect form avoid ``orderBy``).  Trade-off: a
-      local checkpoint pins those rows in executor block-manager
-      storage with lineage truncated, so losing an executor mid-drain
-      fails the job unrecoverably — acceptable for digest/metadata-
-      sized state; a cluster deployment that cannot tolerate the
-      restart should use reliable ``checkpoint()`` (or persist with
-      replication) at the cost of a distributed-FS write;
-    - the driver consumes ``toLocalIterator(prefetchPartitions=True)``
-      — at most two sorted partitions resident at a time (the one
-      being drained plus the one the executors compute concurrently;
-      prefetch overlaps the per-partition jobs with the hash drain,
-      +30% measured, r14), each ``update()`` feeding the chain — and
-      never materializes the NUL-joined listing copy that
-      ``fold_digest`` builds.
-
-    Peak driver memory: TWO partitions of path strings or digests (plus
-    one level's directory frontier during the walk), versus the collect
-    form's full listing + joined-listing copy + every digest row +
-    Python sort overhead.  Output is bit-identical to
-    :func:`hash_directory_raw` (pinned against the golden digests and
-    on randomized trees in tests/test_dirhash_e2e.py).
-    """
-    configure(spark)
-    blocksize = blocksize or parse_blocksize(DEFAULT_BLOCK_SIZE)
-    directory = strip_trailing_slash(directory)
-
-    entries, entries_df = listing_for_fold(spark, directory)
-    h = get_hash_func(hash_algorithm)()
-    if entries is not None:
-        # serial route: header folds driver-side over the (budget-
-        # bounded) listing via codec.fold_header — the SAME definition
-        # the collect form uses, never an inline copy
-        reject_undecodable_paths(entries)
-        fold_header(h, [e.relative_path for e in entries])
-        has_bytes = any((not e.is_dir) and e.size > 0 for e in entries)
-        digests = (
-            digest_directory(spark, entries, blocksize, hash_algorithm)
-            if has_bytes
-            else None
-        )
-    else:
-        fold_header_streamed(h, entries_df)
-        has_bytes = (
-            entries_df.where((~F.col("is_dir")) & (F.col("size") > 0)).limit(1).count()
-            > 0
-        )
-        digests = (
-            digest_directory_df(spark, entries_df, blocksize, hash_algorithm)
-            if has_bytes
-            else None
-        )
-
-    if digests is not None:
-        fold_digests_streamed(h, digests.localCheckpoint())
-    return h.hexdigest()
-
-
 def hash_directory(
     spark: SparkSession,
     directory: str,
     hash_algorithm: str = "sha256",
     blocksize: str = DEFAULT_BLOCK_SIZE,
-    streamed: bool = False,
 ) -> str:
-    """Full lifecycle → versioned hash string ``v1-<algo>-<bs>-<hex>``.
-
-    ``streamed=True`` selects the constant-memory driver fold
-    (:func:`hash_directory_raw_streamed`) — same digest, cluster-side
-    sort, one partition on the driver at a time.
-    """
-    raw = hash_directory_raw_streamed if streamed else hash_directory_raw
-    hex_digest = raw(spark, directory, hash_algorithm, parse_blocksize(blocksize))
+    """Full lifecycle → versioned hash string ``v1-<algo>-<bs>-<hex>``."""
+    hex_digest = hash_directory_raw(
+        spark, directory, hash_algorithm, parse_blocksize(blocksize)
+    )
     return build_hash_string(hash_algorithm, blocksize, hex_digest)

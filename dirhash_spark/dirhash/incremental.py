@@ -12,8 +12,9 @@ and run the fused read+hash stage over the changed set only:
   1. LIST      the full tree (metadata-only, as always);
   2. DIFF      against the manifest's file-level (path, size, mtime_ns)
                keys — a driver-side set comparison on the same scale as
-               the listing itself (or, with ``streamed=True``, a
-               cluster-side left join with no O(files) driver state);
+               the listing itself (or, when the listing tripped the
+               serial-walk budget, a cluster-side left join with no
+               O(files) driver state);
   3. READ+HASH only the changed/new files (the expensive stage now
                costs the churn, not the corpus);
   4. SPLICE    manifest digests for unchanged files ∪ fresh digests;
@@ -21,6 +22,12 @@ and run the fused read+hash stage over the changed set only:
                construction, pinned by tests/test_dirhash_e2e.py
                (modify one file in a copied tree: incremental ==
                full re-hash, and only that file re-read).
+
+Routes follow ``hashdir``'s rule (its module doc): (a) driver diff and
+collect fold; (b) driver diff, digests spliced as cluster relations and
+drained through ``fold_digests_streamed`` when the chunk count exceeds
+``hashdir.COLLECT_MAX_CHUNKS``; (c) fully cluster-side
+(:func:`_incremental_cluster`) when the walk trips its budget.
 
 At 100 TB with 1% daily churn this turns the re-hash from a
 100 TB read into a ~1 TB read plus a digest-table scan; the manifest
@@ -38,26 +45,42 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import hashdir
+from .chunks import chunk_count, chunk_plan_df
 from .codec import (
     DEFAULT_BLOCK_SIZE,
     build_hash_string,
     fold_digest,
+    fold_header,
     get_hash_func,
     parse_blocksize,
 )
 from .hashdir import (
     digest_directory,
-    digest_directory_df,
     fold_digests_streamed,
     fold_header_streamed,
+    hash_chunk_plan,
 )
 from .listing import (
     Entry,
     list_entries,
-    listing_for_fold,
+    list_entries_df,
     reject_undecodable_paths,
     strip_trailing_slash,
 )
+
+_STAT_SCHEMA = "path STRING, size BIGINT, mtime_ns BIGINT"
+_MANIFEST_COLUMNS = ("path", "size", "mtime_ns", "block_num", "digest")
+
+
+def _stamped(manifest: DataFrame, hash_algorithm: str, bs: int) -> DataFrame:
+    """Manifest columns plus the (hash_algorithm, blocksize_bytes) stamp
+    every row carries (see :func:`build_chunk_manifest`)."""
+    return manifest.select(
+        *_MANIFEST_COLUMNS,
+        F.lit(hash_algorithm).alias("hash_algorithm"),
+        F.lit(bs).cast("bigint").alias("blocksize_bytes"),
+    )
 
 
 def _mtimes_for(files: list[Entry], spark: SparkSession | None = None) -> dict[str, int]:
@@ -103,7 +126,6 @@ def build_chunk_manifest(
     directory: str,
     hash_algorithm: str = "sha256",
     blocksize: str = DEFAULT_BLOCK_SIZE,
-    streamed: bool = False,
 ) -> DataFrame:
     """One full read+hash pass → the reusable manifest:
     (path, size, mtime_ns, block_num, digest).  Persist this with any
@@ -115,64 +137,37 @@ def build_chunk_manifest(
     ones would splice old-parameter digests with fresh ones and print a
     plausible-looking but wrong v1 hash.
 
-    ``streamed=True`` builds the manifest without any O(files) driver
-    structure (the build-side twin of the streamed incremental fold):
-    budget-routed listing, executor-side stats, cluster-derived chunk
-    plan — the manifest relation never passes through the driver.  A
-    tree whose serial walk finishes inside the budget keeps the
-    driver-side build (same rows, pinned in tests)."""
+    A tree whose serial walk trips the budget builds the manifest
+    without any O(files) driver structure: cluster listing with
+    executor-side stats and a cluster-derived chunk plan (same rows,
+    pinned in tests)."""
     directory = strip_trailing_slash(directory)
     bs = parse_blocksize(blocksize)
-    if streamed:
-        dir_entries, entries_df = listing_for_fold(spark, directory, with_mtime=True)
-        if dir_entries is None:
-            # mtime_ns rides the walk's own scandir stat (one metadata
-            # pass); checkpoint so the manifest's stat side and the
-            # chunk plan re-read materialized rows
-            files = entries_df.where(~F.col("is_dir")).localCheckpoint()
-            return (
-                files.select(
-                    F.col("relative_path").alias("path"), "size", "mtime_ns"
-                )
-                # LEFT join: zero-chunk (empty) files keep their key,
-                # same contract as the driver-side build below
-                .join(digest_directory_df(spark, files, bs, hash_algorithm), "path", "left")
-                .select(
-                    "path",
-                    "size",
-                    "mtime_ns",
-                    "block_num",
-                    "digest",
-                    F.lit(hash_algorithm).alias("hash_algorithm"),
-                    F.lit(bs).cast("bigint").alias("blocksize_bytes"),
-                )
-            )
-        entries = [e for e in dir_entries if not e.is_dir]
+    entries = list_entries(directory, spark)
+    if entries is None:
+        # mtime_ns rides the walk's own scandir stat (one metadata
+        # pass); checkpoint so the manifest's stat side and the chunk
+        # plan re-read materialized rows
+        files = (
+            list_entries_df(spark, directory, with_mtime=True)
+            .where(~F.col("is_dir"))
+            .localCheckpoint()
+        )
+        stat_df = files.select(F.col("relative_path").alias("path"), "size", "mtime_ns")
+        digests = hash_chunk_plan(spark, chunk_plan_df(files, bs), hash_algorithm)
     else:
-        entries = [e for e in list_entries(directory, spark) if not e.is_dir]
-    reject_undecodable_paths(entries)
-    mtimes = _mtimes_for(entries, spark)
-    stats = {e.relative_path: (e.size, mtimes[e.relative_path]) for e in entries}
-    stat_df = spark.createDataFrame(
-        [(p, s, m) for p, (s, m) in stats.items()],
-        "path STRING, size BIGINT, mtime_ns BIGINT",
-    )
-    if any(e.size > 0 for e in entries):
-        digests = digest_directory(spark, entries, bs, hash_algorithm)
-    else:
-        digests = spark.createDataFrame([], "path STRING, block_num BIGINT, digest BINARY")
+        files = [e for e in entries if not e.is_dir]
+        reject_undecodable_paths(files)
+        mtimes = _mtimes_for(files, spark)
+        stat_df = spark.createDataFrame(
+            [(e.relative_path, e.size, mtimes[e.relative_path]) for e in files],
+            _STAT_SCHEMA,
+        )
+        digests = digest_directory(spark, files, bs, hash_algorithm)
     # LEFT join from the stat side: zero-chunk (empty) files keep a
     # manifest row with null block/digest — their (path, size, mtime)
     # key must survive or every empty file reads as "changed" forever.
-    return stat_df.join(digests, "path", "left").select(
-        "path",
-        "size",
-        "mtime_ns",
-        "block_num",
-        "digest",
-        F.lit(hash_algorithm).alias("hash_algorithm"),
-        F.lit(bs).cast("bigint").alias("blocksize_bytes"),
-    )
+    return _stamped(stat_df.join(digests, "path", "left"), hash_algorithm, bs)
 
 
 def _check_manifest_parameters(
@@ -216,7 +211,6 @@ def hash_directory_incremental(
     hash_algorithm: str = "sha256",
     blocksize: str = DEFAULT_BLOCK_SIZE,
     with_manifest: bool = False,
-    streamed: bool = False,
 ) -> tuple:
     """v1 hash string of ``directory`` computed by splicing manifest
     digests for files whose (path, size, mtime_ns) are unchanged and
@@ -226,31 +220,23 @@ def hash_directory_incremental(
     churn-sized.  With ``with_manifest=True`` a third element is the
     REFRESHED manifest built from the spliced digests (no second read
     pass) — the daily-rollover shape: hash incrementally, persist the
-    new manifest, repeat tomorrow.
-
-    ``streamed=True`` removes the O(files) driver residency this path
-    used to carry (the listing, the manifest-key set, and every spliced
-    digest were driver Python — the last such structure in the dirhash
-    scale paths): the stat-diff becomes a cluster-side left join of the
-    listing DataFrame against the manifest keys, the splice a union of
-    two cluster relations, and the fold the same budget-routed streamed
-    machinery as ``hash_directory_raw_streamed`` — a tree whose serial
-    walk finishes inside the budget is, by that measurement,
-    driver-sized and keeps the cheaper driver-side diff+fold
-    (bit-identical either way, pinned in tests/test_dirhash_e2e.py)."""
+    new manifest, repeat tomorrow.  The route follows the listing's
+    measurements (module doc); every route is bit-identical, pinned in
+    tests/test_dirhash_e2e.py."""
     directory = strip_trailing_slash(directory)
     bs = parse_blocksize(blocksize)
     _check_manifest_parameters(manifest, hash_algorithm, bs)
-    if streamed:
-        entries, entries_df = listing_for_fold(spark, directory, with_mtime=True)
-        if entries is None:
-            return _incremental_cluster(
-                spark, entries_df, manifest, hash_algorithm, bs, blocksize,
-                with_manifest,
-            )
-        all_entries = entries  # budget passed: driver-sized tree
-    else:
-        all_entries = list_entries(directory, spark)
+    all_entries = list_entries(directory, spark)
+    if all_entries is None:  # (c) the serial walk tripped its budget
+        return _incremental_cluster(
+            spark,
+            list_entries_df(spark, directory, with_mtime=True),
+            manifest,
+            hash_algorithm,
+            bs,
+            blocksize,
+            with_manifest,
+        )
     reject_undecodable_paths(all_entries)
     files = [e for e in all_entries if not e.is_dir]
     listing = [e.relative_path for e in all_entries]
@@ -271,30 +257,47 @@ def hash_directory_incremental(
             unchanged_paths.append(e.relative_path)
         else:
             changed.append(e)
-
-    digest_rows: list = []
-    if unchanged_paths:
-        keep = spark.createDataFrame([(p,) for p in unchanged_paths], "path STRING")
-        digest_rows.extend(
-            manifest.join(F.broadcast(keep), "path")
-            .where(F.col("digest").isNotNull())  # empty files carry no chunks
-            .select("path", "block_num", "digest")
-            .collect()  # bounded: digest rows only, as in hash_directory_raw
-        )
-    if any(e.size > 0 for e in changed):
-        digest_rows.extend(
-            # bounded: digest rows for the CHANGED files only
-            digest_directory(spark, changed, bs, hash_algorithm).collect()
-        )
-    digest_rows.sort(key=lambda r: (r["path"], r["block_num"]))
-    hex_digest = fold_digest(
-        hash_algorithm, listing, [bytes(r["digest"]) for r in digest_rows]
-    )
     stats = {
         "n_files": len(files),
         "n_reused_files": len(unchanged_paths),
         "n_rehashed_files": len(files) - len(unchanged_paths),
     }
+
+    spliced = []
+    if unchanged_paths:
+        keep = spark.createDataFrame([(p,) for p in unchanged_paths], "path STRING")
+        spliced.append(
+            manifest.join(F.broadcast(keep), "path")
+            .where(F.col("digest").isNotNull())  # empty files carry no chunks
+            .select("path", "block_num", "digest")
+        )
+    if any(e.size > 0 for e in changed):
+        spliced.append(digest_directory(spark, changed, bs, hash_algorithm))
+
+    if chunk_count(all_entries, bs) > hashdir.COLLECT_MAX_CHUNKS:
+        # (b) too many digests to collect: splice them cluster-side and
+        # drain them sorted into the chain
+        h = get_hash_func(hash_algorithm)()
+        fold_header(h, listing)
+        digests = spark.createDataFrame([], hashdir.DIGEST_SCHEMA)
+        for part in spliced:
+            digests = digests.unionByName(part)
+        stat_df = spark.createDataFrame(
+            [(e.relative_path, e.size, mtimes[e.relative_path]) for e in files],
+            _STAT_SCHEMA,
+        )
+        return _drain(
+            h, digests.localCheckpoint(), stat_df, stats,
+            hash_algorithm, bs, blocksize, with_manifest,
+        )
+
+    # bounded: at most COLLECT_MAX_CHUNKS digest rows, as in
+    # hash_directory_raw
+    digest_rows = [r for df in spliced for r in df.collect()]
+    digest_rows.sort(key=lambda r: (r["path"], r["block_num"]))
+    hex_digest = fold_digest(
+        hash_algorithm, listing, [bytes(r["digest"]) for r in digest_rows]
+    )
     hash_string = build_hash_string(hash_algorithm, blocksize, hex_digest)
     if not with_manifest:
         return hash_string, stats
@@ -311,12 +314,8 @@ def hash_directory_incremental(
     ]
     new_manifest = spark.createDataFrame(
         rows, "path STRING, size BIGINT, mtime_ns BIGINT, block_num BIGINT, digest BINARY"
-    ).select(
-        "*",
-        F.lit(hash_algorithm).alias("hash_algorithm"),
-        F.lit(bs).cast("bigint").alias("blocksize_bytes"),
     )
-    return hash_string, stats, new_manifest
+    return hash_string, stats, _stamped(new_manifest, hash_algorithm, bs)
 
 
 def _incremental_cluster(
@@ -367,29 +366,38 @@ def _incremental_cluster(
     changed = joined.where(F.col("matched").isNull()).select(
         "relative_path", F.lit(False).alias("is_dir"), "size", "full_path"
     )
+    plan = chunk_plan_df(changed, bs)
     digests = reused.unionByName(
-        digest_directory_df(spark, changed, bs, hash_algorithm)
+        hash_chunk_plan(spark, plan, hash_algorithm)
     ).localCheckpoint()  # the orderBy's range-exchange sampling (and a
     # with_manifest re-read) must re-read materialized digests, never
     # re-run the read+hash stage
 
     h = get_hash_func(hash_algorithm)()
     fold_header_streamed(h, entries_df)
+    stat_df = joined.select(F.col("relative_path").alias("path"), "size", "mtime_ns")
+    return _drain(
+        h, digests, stat_df, stats, hash_algorithm, bs, blocksize, with_manifest
+    )
+
+
+def _drain(
+    h,
+    digests: DataFrame,
+    stat_df: DataFrame,
+    stats: dict,
+    hash_algorithm: str,
+    bs: int,
+    blocksize: str,
+    with_manifest: bool,
+) -> tuple:
+    """Shared tail of routes (b) and (c): drain the localCheckpoint'd
+    spliced ``digests`` into hasher ``h`` (header already folded) and,
+    if asked, build the refreshed manifest from the same rows."""
     fold_digests_streamed(h, digests)
     hash_string = build_hash_string(hash_algorithm, blocksize, h.hexdigest())
     if not with_manifest:
         return hash_string, stats
-    new_manifest = (
-        joined.select(F.col("relative_path").alias("path"), "size", "mtime_ns")
-        .join(digests, "path", "left")  # zero-chunk files keep their key
-        .select(
-            "path",
-            "size",
-            "mtime_ns",
-            "block_num",
-            "digest",
-            F.lit(hash_algorithm).alias("hash_algorithm"),
-            F.lit(bs).cast("bigint").alias("blocksize_bytes"),
-        )
-    )
-    return hash_string, stats, new_manifest
+    # LEFT join: zero-chunk (empty) files keep their key
+    new_manifest = stat_df.join(digests, "path", "left")
+    return hash_string, stats, _stamped(new_manifest, hash_algorithm, bs)

@@ -3,27 +3,24 @@
 The reference shells out to ``hadoop fs -ls -R`` and regex-parses the
 output (fragile for filenames with newlines — a known reference quirk).
 Here the listing is a structured filesystem walk: the Hadoop FileSystem
-API via the JVM gateway when a SparkSession is available (works for any
-Hadoop-visible scheme: hdfs://, s3a://, file://), plain ``os.walk`` for
-local paths otherwise.  Output convention matches the reference:
-relative paths, directories suffixed '/', the root itself excluded.
+API via the JVM gateway for non-local schemes (hdfs://, s3a://, ...),
+plain ``os.walk`` for local paths.  Output convention matches the
+reference: relative paths, directories suffixed '/', the root itself
+excluded.
 
 Scale routing: a serial walk issues one listing round-trip per
 directory, so it is latency-bound on networked metadata (NFS/Lustre/
 object stores) and CPU-bound only on huge local trees.  Rather than
-guess which case we are in, :func:`list_entries` runs the serial walk
-under a TIME BUDGET when a SparkSession is available: most trees finish
-well inside it; a tree that trips the budget is, by that very
-measurement, one where listing time dominates — so the walk restarts as
-the level-parallel cluster walk (:func:`parallel_list_entries`), losing
-at most the budget against a listing already known to be slow.
-
-Driver residency: the ``Entry``-list forms hold the full listing on the
-driver (metadata: ~hundred MB at millions of files — fine, and the
-collect-fold needs it there anyway).  :func:`list_entries_df` is the
-form for folds that stream the listing (``hash_directory_raw_streamed``):
-rows stay cluster-side; only one level's directory frontier ever
-returns to the driver.
+guess which case we are in, :func:`list_entries` — the ONE router —
+runs the serial walk under a TIME BUDGET when a SparkSession is
+available.  Most trees finish well inside it and come back as an
+``Entry`` list (the driver holds metadata it has just proven it can
+walk).  A tree that trips the budget is, by that very measurement, one
+whose listing should not pass through the driver: ``list_entries``
+returns None and the caller lists with :func:`list_entries_df`, the
+level-parallel cluster walk whose rows stay in executor-side
+DataFrames — only one level's directory frontier ever returns to the
+driver.
 """
 
 from __future__ import annotations
@@ -49,9 +46,9 @@ def local_root(root: str) -> str | None:
     ignores the authority) can honour "that other host's filesystem",
     and a silently wrong route here means a silently wrong digest.
 
-    Every listing form routes through this ONE helper so the serial,
-    parallel, fold-router, and DataFrame walks can never desynchronize
-    on scheme handling (they share one symlink semantics by design).
+    Both listing forms route through this ONE helper so the serial and
+    cluster walks can never desynchronize on scheme handling (they
+    share one symlink semantics by design).
     """
     m = _SCHEME_RE.match(root)
     if not m:
@@ -85,15 +82,14 @@ class Entry:
     full_path: str  # absolute/scheme path usable for reads
 
 
-#: Schema of the DataFrame listing (list_entries_df).
-ENTRY_DF_SCHEMA = "relative_path string, is_dir boolean, size long, full_path string"
-#: The same listing with the stat's mtime (list_entries_df(with_mtime=True)).
-ENTRY_MTIME_DF_SCHEMA = ENTRY_DF_SCHEMA + ", mtime_ns long"
-
-#: Serial-walk budget before list_entries restarts as the parallel
-#: cluster walk (seconds).  Local filesystems list ~1M entries/s, so
-#: only trees that are huge or metadata-latency-bound trip this.
+#: Serial-walk budget (seconds) after which list_entries gives up and
+#: routes the caller to the cluster walk.  Local filesystems list ~1M
+#: entries/s, so only trees that are huge or metadata-latency-bound
+#: trip this.  Read at call time; 0 forces the cluster route.
 SERIAL_WALK_BUDGET_S = 2.0
+
+#: Partitions of each level's directory frontier in the cluster walk.
+_LEVEL_PARTITIONS = 32
 
 
 def strip_trailing_slash(path: str) -> str:
@@ -115,37 +111,28 @@ def strip_trailing_slash(path: str) -> str:
     return head
 
 
-def list_entries(
-    root: str, spark=None, serial_budget_s: float | None = None
-) -> list[Entry]:
+def list_entries(root: str, spark=None) -> list[Entry] | None:
     """Recursively list ``root`` → entries with reference conventions.
 
-    With a SparkSession and a local path, the serial walk runs under
-    ``serial_budget_s`` (default: :data:`SERIAL_WALK_BUDGET_S`, read at
-    call time); on trip it restarts as the cluster-parallel walk (see
-    module doc).  ``serial_budget_s=0`` forces the parallel walk;
-    ``spark=None`` always walks serially with no budget.
+    With a SparkSession and a local root the serial walk runs under
+    :data:`SERIAL_WALK_BUDGET_S` and returns None when the budget trips:
+    the caller then lists cluster-side with :func:`list_entries_df` (see
+    module doc).  ``spark=None`` always walks serially with no budget;
+    non-local schemes walk serially through the JVM gateway.
     """
     root = strip_trailing_slash(root)
-    # file:// is walked LOCALLY, same as a bare path: every listing form
-    # (serial, parallel, DataFrame) must share one symlink semantics —
-    # Hadoop's LocalFileSystem reports a symlinked dir as a directory
-    # and walks INTO it, so routing file:// through _list_hadoop made
-    # the collect and streamed folds diverge on symlink trees (and made
-    # hash("file:///t") != hash("/t") on the same tree).
+    # file:// is walked LOCALLY, same as a bare path: both listing forms
+    # must share one symlink semantics — Hadoop's LocalFileSystem
+    # reports a symlinked dir as a directory and walks INTO it, so
+    # routing file:// through _list_hadoop made the driver and cluster
+    # routes diverge on symlink trees (and made hash("file:///t") !=
+    # hash("/t") on the same tree).
     local = local_root(root)
     if local is None:
         if spark is None:
             raise FileNotFoundError(f"not a directory: {root}")
         return _list_hadoop(spark, root)
-    if spark is None:
-        return _list_local(local)
-    if serial_budget_s is None:
-        serial_budget_s = SERIAL_WALK_BUDGET_S
-    entries = _list_local(local, budget_s=serial_budget_s)
-    if entries is None:  # budget tripped → latency/size-bound tree
-        entries = parallel_list_entries(spark, local)
-    return entries
+    return _list_local(local, budget_s=None if spark is None else SERIAL_WALK_BUDGET_S)
 
 
 def reject_undecodable_paths(entries: list[Entry]) -> None:
@@ -283,9 +270,9 @@ _SCAN_LEVEL_SCHEMA = (
 )
 
 
-def _level_frontier_walk(spark, local_root: str, level_partitions: int):
-    """Shared core of the cluster walks: yield one localCheckpoint'd
-    DataFrame of ``_SCAN_LEVEL_SCHEMA`` rows per tree level.  Only the
+def _level_frontier_walk(spark, local_root: str):
+    """Core of the cluster walk: yield one localCheckpoint'd DataFrame
+    of ``_SCAN_LEVEL_SCHEMA`` rows per tree level.  Only the
     directory frontier — one level at a time — returns to the driver;
     the checkpoint means later consumers (union / collect) re-read
     materialized metadata rows, never the filesystem."""
@@ -293,7 +280,7 @@ def _level_frontier_walk(spark, local_root: str, level_partitions: int):
     while frontier:
         level = (
             spark.createDataFrame([(d,) for d in frontier], "dir string")
-            .repartition(min(level_partitions, max(1, len(frontier))))
+            .repartition(min(_LEVEL_PARTITIONS, max(1, len(frontier))))
             .mapInPandas(_scan_level, _SCAN_LEVEL_SCHEMA)
             .localCheckpoint()
         )
@@ -306,164 +293,45 @@ def _level_frontier_walk(spark, local_root: str, level_partitions: int):
         yield level
 
 
-def parallel_list_entries(
-    spark, root: str, level_partitions: int = 32
-) -> list[Entry]:
-    """:func:`list_entries` with the per-directory listing calls fanned
-    out across the cluster — the scale path for trees whose DIRECTORY
-    COUNT makes a serial walk latency-bound.
+def list_entries_df(spark, root: str, with_mtime: bool = False):
+    """Cluster-side twin of :func:`list_entries` for trees whose serial
+    walk tripped the budget: a DataFrame with the :class:`Entry` fields
+    as columns.  The per-directory listing calls fan out across the
+    cluster level by level, and entry rows stay in per-level
+    localCheckpoint'd DataFrames — only the directory frontier, one
+    level at a time, ever returns to the driver.
 
     A driver-serial walk issues one listing round-trip per directory:
     at 1M directories × ~1 ms metadata latency (NFS/Lustre; worse on
-    object stores) that is ~17 minutes of pure driver wait.  This walk
-    proceeds level by level: the current frontier of directories
-    becomes a DataFrame, every executor ``os.scandir``s its slice of
-    the frontier in parallel (one ``mapInPandas`` job per tree LEVEL,
-    so a 1M-dir tree of depth 10 costs 10 jobs of ~100k parallel
-    listings instead of 1M serial ones), and the non-symlink children
-    directories form the next frontier.
-
-    Output is the same ``Entry`` list with the same conventions —
-    byte-identical fold input, pinned against :func:`list_entries` in
-    tests/test_dirhash_e2e.py (symlink trees included; see
-    :func:`_scan_level` for the parity rules).  The listing itself
-    still returns to the driver (metadata: ~hundred MB at millions of
-    files — the accepted bound; :func:`list_entries_df` is the form
-    that keeps it cluster-side).
-
-    Local/shared-filesystem paths only: executors list with
-    ``os.scandir``, which is correct wherever the tree is mounted on
-    every worker (local mode, NFS, Lustre).  For ``hdfs://``-scheme
-    roots the executors would need a worker-side Hadoop client
-    (pyarrow ``HadoopFileSystem`` + libhdfs — not shipped in this
-    container), so those fall back to the serial JVM-gateway walk
-    rather than silently producing an empty listing.
-    """
-    root = strip_trailing_slash(root)
-    local = local_root(root)
-    if local is None:
-        return list_entries(root, spark)  # serial fallback (see doc)
-    if not os.path.isdir(local):
-        raise FileNotFoundError(f"not a directory: {local}")
-
-    entries: list[Entry] = []
-    for level in _level_frontier_walk(spark, local, level_partitions):
-        for r in level.collect():
-            # bounded: one tree LEVEL of (path, is_dir, size) metadata
-            # triples — the same rows a serial walk would hold anyway
-            rel = os.path.relpath(r["path"], local).replace(os.sep, "/")
-            if r["is_dir"]:
-                entries.append(Entry(rel + "/", True, 0, r["path"]))
-            else:
-                entries.append(Entry(rel, False, int(r["size"]), r["path"]))
-    return entries
-
-
-def listing_for_fold(
-    spark,
-    root: str,
-    serial_budget_s: float | None = None,
-    with_mtime: bool = False,
-) -> tuple[list[Entry] | None, "object"]:
-    """Serial-budget router for the streamed fold: returns
-    ``(entries, None)`` when the serial walk finishes inside the budget
-    — by that very measurement the listing fits the driver, so the fold
-    keeps its zero-Spark-job driver-side header (each metadata job on a
-    warm local session costs ~0.3-0.6 s of fixed overhead; paying three
-    of them to "stream" a 9-row listing halved the measured streamed-
-    fold throughput in r11 profiling) — else ``(None, entries_df)``
-    with the cluster-side level walk, where the listing never
-    materializes on the driver at all.  Scheme paths use the serial
-    JVM-gateway walk (same reason as :func:`parallel_list_entries`)."""
-    root = strip_trailing_slash(root)
-    local = local_root(root)
-    if local is None:
-        return list_entries(root, spark), None
-    if not os.path.isdir(local):
-        raise FileNotFoundError(f"not a directory: {local}")
-    if serial_budget_s is None:
-        serial_budget_s = SERIAL_WALK_BUDGET_S
-    if serial_budget_s > 0:
-        entries = _list_local(local, budget_s=serial_budget_s)
-        if entries is not None:
-            return entries, None
-    return None, list_entries_df(
-        spark, root, serial_budget_s=0, with_mtime=with_mtime
-    )
-
-
-def list_entries_df(
-    spark,
-    root: str,
-    level_partitions: int = 32,
-    serial_budget_s: float | None = None,
-    with_mtime: bool = False,
-):
-    """DataFrame twin of :func:`list_entries` (schema
-    :data:`ENTRY_DF_SCHEMA`) for folds that stream the listing
-    (``hash_directory_raw_streamed``): entry rows stay cluster-side in
-    per-level localCheckpoint'd DataFrames; only the directory
-    frontier — one level at a time — ever returns to the driver.
-
-    Small/fast trees (the serial walk finishes inside
-    ``serial_budget_s``) short-circuit to the driver walk +
-    ``createDataFrame``: their metadata fits the driver by that very
-    measurement, and a per-level Spark-job cadence would only add fixed
-    overhead.  ``serial_budget_s=0`` forces the cluster-side walk
-    (tests pin route equality).  Scheme paths go through the serial
-    JVM-gateway walk (same reason as :func:`parallel_list_entries`).
+    object stores) that is ~17 minutes of pure driver wait.  Here every
+    executor ``os.scandir``s its slice of the frontier in parallel (one
+    ``mapInPandas`` job per tree LEVEL, so a 1M-dir tree of depth 10
+    costs 10 jobs of ~100k parallel listings instead of 1M serial ones).
+    Rows carry the same conventions as the serial walk (parity rules in
+    :func:`_scan_level`, pinned in tests/test_dirhash_e2e.py).
 
     ``with_mtime=True`` appends an ``mtime_ns`` column (0 for dirs) for
-    consumers that diff listings against a manifest — on the cluster
-    route it rides the SAME ``scandir`` stat that sized the entry (no
-    second metadata pass over a latency-bound tree, and size/mtime are
-    a consistent snapshot under concurrent rewrites); on the serial
-    short-circuit the budget already proved the tree driver-sized, so
-    the driver stats it.  Local roots only (a non-local scheme with
-    ``with_mtime`` raises — no caller needs it, better loud than a
-    silent schema change).
+    consumers that diff listings against a manifest; it rides the SAME
+    ``scandir`` stat that sized the entry (no second metadata pass over
+    a latency-bound tree, and size/mtime are a consistent snapshot under
+    concurrent rewrites).
+
+    Local/shared-filesystem roots only: executors list with
+    ``os.scandir``, which is correct wherever the tree is mounted on
+    every worker (local mode, NFS, Lustre).  Other schemes would need a
+    worker-side Hadoop client, so :func:`list_entries` never routes
+    them here (it walks them through the JVM gateway) and this raises.
     """
     root = strip_trailing_slash(root)
     local = local_root(root)
     if local is None:
-        if with_mtime:
-            raise ValueError(
-                f"with_mtime requires a locally-walkable root, got {root!r}"
-            )
-        entries = list_entries(root, spark)
-        return spark.createDataFrame(
-            [(e.relative_path, e.is_dir, e.size, e.full_path) for e in entries],
-            ENTRY_DF_SCHEMA,
-        )
+        raise ValueError(f"the cluster walk requires a locally-walkable root, got {root!r}")
     if not os.path.isdir(local):
         raise FileNotFoundError(f"not a directory: {local}")
-    if serial_budget_s is None:
-        serial_budget_s = SERIAL_WALK_BUDGET_S
-    if serial_budget_s > 0:
-        entries = _list_local(local, budget_s=serial_budget_s)
-        if entries is not None:
-            if with_mtime:
-                return spark.createDataFrame(
-                    [
-                        (
-                            e.relative_path,
-                            e.is_dir,
-                            e.size,
-                            e.full_path,
-                            0 if e.is_dir else os.stat(e.full_path).st_mtime_ns,
-                        )
-                        for e in entries
-                    ],
-                    ENTRY_MTIME_DF_SCHEMA,
-                )
-            return spark.createDataFrame(
-                [(e.relative_path, e.is_dir, e.size, e.full_path) for e in entries],
-                ENTRY_DF_SCHEMA,
-            )
 
     from pyspark.sql import functions as F
 
-    levels = list(_level_frontier_walk(spark, local, level_partitions))
+    levels = list(_level_frontier_walk(spark, local))
     df = levels[0]
     for lv in levels[1:]:
         df = df.union(lv)

@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 from .codec import parse_blocksize, parse_hash_string
-from .hashdir import hash_directory_raw, hash_directory_raw_streamed
+from .hashdir import hash_directory_raw
 
 
 class HashComparisonResult:
@@ -39,21 +39,17 @@ def verify_raw_directory_hash(
     hex_digest: str,
     hash_algorithm: str = "sha256",
     blocksize: int | None = None,
-    streamed: bool = False,
 ) -> HashComparisonResult:
-    """``streamed=True`` recomputes with the constant-memory fold
-    (bit-identical digest, see ``hash_directory_raw_streamed``)."""
-    raw = hash_directory_raw_streamed if streamed else hash_directory_raw
-    actual = raw(spark, directory, hash_algorithm, blocksize)
+    """Recompute the hex digest of ``directory`` and compare."""
+    actual = hash_directory_raw(spark, directory, hash_algorithm, blocksize)
     return HashComparisonResult(actual == hex_digest, actual)
 
 
 def verify_directory_hash(
-    spark: SparkSession, directory: str, hash_string: str, streamed: bool = False
+    spark: SparkSession, directory: str, hash_string: str
 ) -> HashComparisonResult:
     """Parse a v1 hash string, recompute, compare (dirhash.py:538-555)."""
     algo, blocksize_str, hex_digest = parse_hash_string(hash_string)
     return verify_raw_directory_hash(
-        spark, directory, hex_digest, algo, parse_blocksize(blocksize_str),
-        streamed=streamed,
+        spark, directory, hex_digest, algo, parse_blocksize(blocksize_str)
     )

@@ -2723,13 +2723,14 @@ _VERBATIM_PREPASS_MIN_BYTES = int(
 
 
 def _verbatim_window_hashes(ws_col, wh_col):
-    """8-byte rolling window hash per {w}-word window: fold the
-    xxhash64 of each word through rotate-left-7 XOR — pure bitwise
-    (ANSI-safe, no overflow) and deterministic, so equal word windows
-    always hash equal; UNequal windows may collide, which is harmless
-    because every consumer re-groups survivors by the definitional
-    window STRING (collisions only admit a few extra postings to that
-    exact pass).""".format(w=_VERBATIM_W)
+    """8-byte windowed fold hash per ``_VERBATIM_W``-word window: each
+    window's slice of per-word xxhash64 values is folded afresh through
+    rotate-left-7 XOR (O(n·w) per document — a per-window fold, not a
+    rolling hash).  Pure bitwise (ANSI-safe, no overflow) and
+    deterministic, so equal word windows always hash equal; UNequal
+    windows may collide, which is harmless because every consumer
+    re-groups survivors by the definitional window STRING (collisions
+    only admit a few extra postings to that exact pass)."""
 
     def _rot7(a):
         return F.shiftleft(a, 7).bitwiseOR(F.shiftrightunsigned(a, 57))
@@ -2797,7 +2798,7 @@ def _verbatim_window_hashes(ws_col, wh_col):
 )
 def dedup_verbatim_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Verbatim-copy forensics: for every document pair sharing at
-    least one {w}-word window, the length of the LONGEST contiguous
+    least one ``_VERBATIM_W``-word window, the length of the LONGEST contiguous
     shared word run and the total number of matching window pairs —
     the quote/boilerplate detector that set-overlap dedup
     (jaccard/containment) cannot express, because it is order- and
@@ -2806,15 +2807,15 @@ def dedup_verbatim_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     quote yields max_run_words = 60.
 
     Algorithm (all exact integers): a COUNT pre-pass over 8-byte
-    rolling window hashes decides WHICH windows are shared, then the
+    windowed fold hashes decides WHICH windows are shared, then the
     definitional string algorithm runs over only those survivors —
-    explode every {w}-word window with its position; bucket by window
+    explode every window with its position; bucket by window
     string (df-capped, the dedup_containment guard) and expand
     cross-doc position pairs in-row; matches at positions (pa, pb)
     with equal diagonal pa-pb that are CONSECUTIVE in pa belong to one
     verbatim run, stitched by the gaps-and-islands trick
     (pa - row_number over the diagonal); island of n windows = run of
-    n + {w} - 1 words.
+    n + _VERBATIM_W - 1 words.
 
     The hash pre-pass (r15, guide §8 "decide with small rows, move big
     rows once"), routed by corpus size
@@ -2842,7 +2843,7 @@ def dedup_verbatim_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded in-row expansion), one shuffle on the (pair, diagonal)
     window, one pair rollup — linear in postings + matched windows,
     never all-pairs.
-    """.format(w=_VERBATIM_W)
+    """
     from ..catalog import parquet_table_bytes
 
     cat = Catalog(spark, sf_dir)

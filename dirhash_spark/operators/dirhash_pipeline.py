@@ -19,8 +19,9 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..dirhash.chunks import read_chunks
-from ..dirhash.hashdir import chunk_digests, hash_directory
-from ..dirhash.listing import list_entries
+from ..dirhash.codec import build_hash_string
+from ..dirhash.hashdir import digest_directory, fold_listing_df, hash_directory
+from ..dirhash.listing import list_entries, list_entries_df
 
 HASHTREE = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
@@ -106,11 +107,11 @@ def recursive_listing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("dirhash_chunk_digests", oracle=None, tags=("dirhash", "hash"))
 def dirhash_chunk_digests(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A5: per-chunk v1 digests (JVM-side sha2 over the exact preimage
-    ``path ‖ NUL ‖ ascii(num) ‖ NUL ‖ content``, dirhash.py:288-303)."""
+    """A5: per-chunk v1 digests over the exact preimage
+    ``path ‖ NUL ‖ ascii(num) ‖ NUL ‖ content`` (dirhash.py:288-303),
+    from the pipeline's own fused read+hash stage."""
     entries = list_entries(HASHTREE)
-    chunks = read_chunks(spark, entries, 4096)
-    return chunk_digests(chunks, "sha256").select(
+    return digest_directory(spark, entries, 4096, "sha256").select(
         "path", "block_num", F.hex(F.col("digest")).alias("digest_hex")
     )
 
@@ -238,14 +239,17 @@ def dirhash_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("dirhash_full_streamed", oracle=None, tags=("dirhash", "e2e"))
 def dirhash_full_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A7+A8, constant-memory fold: same pipeline, but the digest sort
-    runs on the cluster and the driver streams one sorted partition at
-    a time into the hash chain (hashdir.hash_directory_raw_streamed) —
-    the scale path for listings whose digest set outgrows a driver
-    collect.  Must emit the byte-identical hash string to
-    ``dirhash_full`` (also pinned against the from-scratch spec digest
-    in tests/test_dirhash_e2e.py)."""
-    hs = hash_directory(spark, HASHTREE, "sha256", "4k", streamed=True)
+    """A7+A8, constant-memory fold: the route a tree takes when its
+    serial walk trips the listing budget — cluster-side listing, and
+    both the header paths and the digests sorted on the cluster and
+    streamed into the hash chain one partition at a time
+    (hashdir.fold_listing_df).  Must emit the byte-identical hash string
+    to ``dirhash_full`` (also pinned against the from-scratch spec
+    digest in tests/test_dirhash_e2e.py)."""
+    entries_df = list_entries_df(spark, HASHTREE)
+    hs = build_hash_string(
+        "sha256", "4k", fold_listing_df(spark, entries_df, "sha256", 4096)
+    )
     return spark.createDataFrame([(HASHTREE, hs)], "directory STRING, hash_string STRING")
 
 

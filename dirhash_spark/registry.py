@@ -24,6 +24,10 @@ Contract details that live here so every operator honors them:
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -57,120 +61,44 @@ def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
     return deco
 
 
-#: Names pinned to the FRONT of ``all_queries()`` order, in this order.
-#: The external driver's CORRECTNESS run verifies a prefix window of the
-#: registry (50 entries per round), so we rotate which queries appear
-#: first.  Rounds 1-3 covered the relational / dedup+text+streaming /
-#: codec+asof+SQL slices; round 4 fronted the never-checked + fixed +
-#: new queries; round 5 fronted the hex-projected binary outputs plus
-#: every remaining r1-code row; round 6 re-fronted the 40 r2-code rows
-#: plus 10 never-checked; round 7 drained the 39-query never-checked
-#: backlog plus the 11 oldest r3 rows; round 8 drained the 23 remaining
-#: r3 rows, the 8 r7 registrations, and the first 19 r4 rows; round 9
-#: drained the 28 remaining r4 rows, the 6 r8 registrations, and the
-#: first 16 r5 rows; round 10 drained the 34 remaining r5 rows, the
-#: r9 driver-red ``ts_seasonal_decompose`` (confirmed green), the 3 r9
-#: registrations, and the first 12 r6 rows; round 11 drained the 38
-#: remaining r6 rows, the 2 r10 registrations, and the first 10
-#: r7-code rows (alphabetical); round 12 drained the 40 remaining
-#: r7-code rows plus the first 10 r8-code rows (alphabetical); round
-#: 13 drained the 40 remaining r8-code rows plus the first 10 r9-code
-#: rows (alphabetical).  Round 14 (per the r13 plan): (a) the 39
-#: remaining r9-code rows — they hit MUST age 5 the moment
-#: CORRECTNESS_r14 lands (r13 registered NO new queries, so there is
-#: no never-checked tier this round); (b) 11 slack slots on the
-#: oldest r10-code rows, MAY-front tier (age >= 4 at r14 close),
-#: taken alphabetically (first 11 of 50).  Exactly 50 names.
-#: Names not listed keep registration (insertion) order after these.
-#: Every name listed here MUST exist in the registry — ``all_queries()``
-#: raises otherwise (a silently skipped name is how coverage gaps hide).
-#: tests/test_entry.py::test_window_covers_stalest_driver_rows enforces
-#: the rotation policy against the committed CORRECTNESS_r*.json files.
-PRIORITY_ORDER: tuple[str, ...] = (
-    # (a) the 39 remaining r10-code rows — MUST tier the moment
-    # CORRECTNESS_r15 lands (age 5); alphabetical
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "embedding_pca",
-    "fn_math_cond",
-    "fn_string",
-    "join_anti",
-    "join_asof_forward",
-    "join_broadcast",
-    "join_cross",
-    "join_full_outer",
-    "join_inner_hash",
-    "join_left_outer",
-    "join_semi",
-    "join_theta_range",
-    "limit_topk",
-    "merge_upsert",
-    "mm_frame_sample",
-    "project_rename",
-    "scan_binary_file",
-    "scan_csv_infer",
-    "scan_fixed_binary",
-    "scan_parquet",
-    "set_except",
-    "set_intersect",
-    "set_union_all",
-    "set_union_dist",
-    "sim_ann_ivf_distfit",
-    "sink_parquet",
-    "text_span_dedup",
-    "topk_per_group",
-    "ts_anomaly_mad",
-    "ts_seasonal_decompose",
-    "win_first_last",
-    "win_lag_lead",
-    "win_moving_avg",
-    "win_percent_rank",
-    "win_range_frame",
-    "win_rank",
-    "win_running",
-    # (b) slack -> pre-emptive rotation of the oldest r11-code rows
-    # (age 4 at r15 close = MAY-front tier; first 11 of 50
-    # alphabetically)
-    "agg_approx_top_k",
-    "agg_bitmap_distinct",
-    "agg_boolean",
-    "agg_corr_matrix",
-    "agg_filtered",
-    "agg_grouping_id",
-    "agg_hll_sketch_merge",
-    "agg_listagg",
-    "corpus_cross_source_overlap",
-    "corpus_vocab_coverage",
-    "dirhash_full_streamed",
-)
-# r16 rotation backlog: after r15's window lands, the oldest driver
-# rows are the 39 remaining r11-code queries (the 50 r11 rows minus
-# the 11 fronted above) — they hit MUST age 5 when CORRECTNESS_r16
-# lands — with remaining slack on the oldest r12 rows.
-# Backlog arithmetic after r15's window: 239 registered = 39 (r10
-# remainder, this window) + 11 (r11, this window) + 39 (r11 remainder,
-# r16 MUST) + 50 (r12) + 50 (r13) + 50 (r14) — every query has either
-# a driver row or a dated slot here.
+#: Size of the prefix of ``all_queries()`` order that the external
+#: driver's correctness run verifies each round.
+CORRECTNESS_WINDOW = 50
+
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _newest_checked_round() -> dict[str, int]:
+    """name -> newest round whose committed ``CORRECTNESS_rNN.json`` has
+    a row for it (empty when no artifacts ship with the package)."""
+    newest: dict[str, int] = {}
+    for path in glob.glob(os.path.join(_REPO_ROOT, "CORRECTNESS_r*.json")):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", os.path.basename(path))
+        if not m:
+            continue
+        rnd = int(m.group(1))
+        with open(path) as f:
+            for name in json.load(f):
+                newest[name] = max(newest.get(name, 0), rnd)
+    return newest
 
 
 def all_queries() -> dict[str, Query]:
-    """Import all operator modules and return the populated registry,
-    reordered so :data:`PRIORITY_ORDER` names come first (see its doc).
+    """Import all operator modules and return the populated registry.
 
-    Raises ValueError if a PRIORITY_ORDER name is not registered: an
-    unknown name means a planned query was never implemented (or a
-    rename went stale), and silently skipping it would quietly drop the
-    intended verification coverage.
+    The first :data:`CORRECTNESS_WINDOW` names are the stalest queries
+    by the committed correctness artifacts: ordered by each query's
+    newest checked round (never-checked counts as round 0), ties broken
+    by name — so every round's window re-checks the rows that waited
+    longest, with no hand-kept list to rotate.  The rest keep
+    registration order, as does everything when no artifacts are found.
     """
     from . import operators  # noqa: F401  (import populates REGISTRY)
 
-    unknown = [name for name in PRIORITY_ORDER if name not in REGISTRY]
-    if unknown:
-        raise ValueError(f"PRIORITY_ORDER names not in registry: {unknown}")
-    ordered: dict[str, Query] = {}
-    for name in PRIORITY_ORDER:
-        ordered[name] = REGISTRY[name]
-    for name, q in REGISTRY.items():
-        if name not in ordered:
-            ordered[name] = q
+    newest = _newest_checked_round()
+    if not newest:
+        return dict(REGISTRY)
+    stalest = sorted(REGISTRY, key=lambda n: (newest.get(n, 0), n))
+    ordered = {n: REGISTRY[n] for n in stalest[:CORRECTNESS_WINDOW]}
+    ordered.update((n, q) for n, q in REGISTRY.items() if n not in ordered)
     return ordered

@@ -124,35 +124,58 @@ def test_manifest_flags_rejected_on_verify_path(spark, tree, capsys):
         assert "cannot be combined" in capsys.readouterr().err
 
 
-def test_streamed_fold_flag_same_hash(spark, tree, capsys):
-    """--streamed-fold must print byte-identical output to the default
-    collect-and-sort fold (it only changes WHERE the sort runs)."""
+def _force_streamed_route(monkeypatch) -> dict:
+    """Force route (b) — driver listing, digests drained through the
+    constant-memory ``fold_digests_streamed`` — by lowering the
+    chunk-count bound below any tree's chunk count; returns a counter
+    of the drains taken, so each test can prove the route ran."""
+    from dirhash_spark.dirhash import hashdir as H
+    from dirhash_spark.dirhash import incremental as I
+
+    calls = {"drain": 0}
+    for module in (H, I):
+        real = module.fold_digests_streamed
+
+        def counted(*a, _real=real, **k):
+            calls["drain"] += 1
+            return _real(*a, **k)
+
+        monkeypatch.setattr(module, "fold_digests_streamed", counted)
+    monkeypatch.setattr(H, "COLLECT_MAX_CHUNKS", -1)
+    return calls
+
+
+def test_streamed_fold_flag_same_hash(spark, tree, capsys, monkeypatch):
+    """The streamed fold (route (b), picked by chunk count) must print
+    byte-identical output to the default collect-and-sort fold (it only
+    changes WHERE the sort runs)."""
     assert main([tree, "--block-size", "1k"], spark=spark) == 0
     default = capsys.readouterr().out.strip()
-    assert main([tree, "--block-size", "1k", "--streamed-fold"], spark=spark) == 0
+    calls = _force_streamed_route(monkeypatch)
+    assert main([tree, "--block-size", "1k"], spark=spark) == 0
     assert capsys.readouterr().out.strip() == default
+    assert calls["drain"] == 1
 
 
-def test_streamed_fold_on_verify_path(spark, tree, capsys):
-    """--streamed-fold threads through --check/--check-name (ADVICE
-    r10: it was silently ignored there): same verdict and exit codes,
+def test_streamed_fold_on_verify_path(spark, tree, capsys, monkeypatch):
+    """--check on the streamed-fold route: same verdict and exit codes,
     recomputed via the constant-memory fold."""
     main([tree, "--block-size", "1k"], spark=spark)
     good = capsys.readouterr().out.strip()
 
-    assert main([tree, "--check", good, "--streamed-fold"], spark=spark) == 0
+    calls = _force_streamed_route(monkeypatch)
+    assert main([tree, "--check", good], spark=spark) == 0
     assert capsys.readouterr().out.startswith("OK ")
     bad = good[:-8] + "00000000"
-    assert main([tree, "--check", bad, "--streamed-fold"], spark=spark) == 1
+    assert main([tree, "--check", bad], spark=spark) == 1
     assert "MISMATCH" in capsys.readouterr().out
+    assert calls["drain"] == 2
 
 
-def test_streamed_fold_with_manifest_incremental(spark, tree, tmp_path, capsys):
-    """--streamed-fold + --manifest runs the streamed incremental path
-    (r12: the loud flag error became a real route once the incremental
-    fold went cluster-side) — same hash-only stdout contract, same
-    stderr reuse stats, byte-identical output to the plain incremental
-    run."""
+def test_streamed_fold_with_manifest_incremental(spark, tree, tmp_path, capsys, monkeypatch):
+    """--manifest on the streamed-fold route runs the streamed
+    incremental path: same hash-only stdout contract, same stderr reuse
+    stats, byte-identical output to the plain incremental run."""
     from dirhash_spark.dirhash.incremental import build_chunk_manifest
 
     man_path = str(tmp_path / "manifest")
@@ -162,13 +185,9 @@ def test_streamed_fold_with_manifest_incremental(spark, tree, tmp_path, capsys):
 
     assert main([tree, "--block-size", "1k", "--manifest", man_path], spark=spark) == 0
     plain = capsys.readouterr()
-    assert (
-        main(
-            [tree, "--block-size", "1k", "--manifest", man_path, "--streamed-fold"],
-            spark=spark,
-        )
-        == 0
-    )
+    calls = _force_streamed_route(monkeypatch)
+    assert main([tree, "--block-size", "1k", "--manifest", man_path], spark=spark) == 0
     streamed = capsys.readouterr()
     assert streamed.out == plain.out
     assert "reused" in streamed.err
+    assert calls["drain"] == 1

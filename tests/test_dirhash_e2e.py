@@ -14,11 +14,7 @@ import os
 import pytest
 
 from dirhash_spark.dirhash.chunks import read_chunks
-from dirhash_spark.dirhash.hashdir import (
-    hash_directory,
-    hash_directory_raw,
-    hash_directory_raw_streamed,
-)
+from dirhash_spark.dirhash.hashdir import hash_directory, hash_directory_raw
 from dirhash_spark.dirhash.listing import list_entries
 from dirhash_spark.dirhash.verify import (
     HashComparisonResult,
@@ -73,6 +69,57 @@ def spec_hash(root: str, files: dict[str, bytes], blocksize: int, algo: str = "s
     for _, d in chunks:
         h.update(d)
     return h.hexdigest()
+
+
+def spec_manifest(root: str, blocksize: int) -> set:
+    """Independent pure-Python manifest rows
+    (path, size, mtime_ns, block_num, digest): one row per chunk, and a
+    (path, size, mtime_ns, None, None) row per empty file."""
+    rows = set()
+    for dirpath, _, filenames in os.walk(root):
+        for f in filenames:
+            full = os.path.join(dirpath, f)
+            rel = os.path.relpath(full, root)
+            st = os.stat(full)
+            with open(full, "rb") as fh:
+                content = fh.read()
+            if not content:
+                rows.add((rel, 0, st.st_mtime_ns, None, None))
+            for i in range((len(content) + blocksize - 1) // blocksize):
+                pre = rel.encode() + b"\x00" + str(i).encode() + b"\x00"
+                pre += content[i * blocksize : (i + 1) * blocksize]
+                rows.add(
+                    (rel, len(content), st.st_mtime_ns, i, hashlib.sha256(pre).digest())
+                )
+    return rows
+
+
+def manifest_rows(manifest) -> set:
+    return {
+        (
+            r["path"],
+            r["size"],
+            r["mtime_ns"],
+            r["block_num"],
+            None if r["digest"] is None else bytes(r["digest"]),
+        )
+        for r in manifest.collect()
+    }
+
+
+def force_route(monkeypatch, route: str) -> None:
+    """Pin the route the listing's measurements pick: "driver" (a) as
+    measured, "streamed" (b) by lowering the chunk-count bound below
+    any tree's chunk count, "cluster" (c) by a zero serial-walk budget."""
+    import dirhash_spark.dirhash.hashdir as H
+    import dirhash_spark.dirhash.listing as L
+
+    if route == "streamed":
+        monkeypatch.setattr(H, "COLLECT_MAX_CHUNKS", -1)
+    elif route == "cluster":
+        monkeypatch.setattr(L, "SERIAL_WALK_BUDGET_S", 0)
+    else:
+        assert route == "driver", route
 
 
 def test_listing_conventions(tree):
@@ -141,20 +188,22 @@ def test_e2e_other_algorithms(spark, tree, algo):
     assert hash_directory_raw(spark, root, algo, bs) == spec_hash(root, files, bs, algo)
 
 
-def test_streamed_fold_bit_identical(spark, tree):
-    """The constant-memory fold (cluster-side orderBy + toLocalIterator)
-    must produce the exact digest of the collect-and-sort fold for every
-    blocksize shape: multi-chunk, short last block, single chunk."""
+def test_streamed_fold_bit_identical(spark, tree, monkeypatch):
+    """The constant-memory digest drain (cluster-side orderBy +
+    toLocalIterator, route (b)) must produce the exact digest of the
+    collect-and-sort fold for every blocksize shape: multi-chunk, short
+    last block, single chunk."""
     root, files = tree
+    want = hash_directory(spark, root, "sha256", "32k")
+    force_route(monkeypatch, "streamed")
     for bs in (7, 32 * 1024, 1 << 20):
-        assert hash_directory_raw_streamed(spark, root, "sha256", bs) == spec_hash(
+        assert hash_directory_raw(spark, root, "sha256", bs) == spec_hash(
             root, files, bs
         )
-    hs = hash_directory(spark, root, "sha256", "32k", streamed=True)
-    assert hs == hash_directory(spark, root, "sha256", "32k")
+    assert hash_directory(spark, root, "sha256", "32k") == want
 
 
-def test_streamed_fold_nonascii_sort_parity(spark, tmp_path):
+def test_streamed_fold_nonascii_sort_parity(spark, tmp_path, monkeypatch):
     """The streamed fold's load-bearing claim: Spark's binary UTF8String
     ordering equals Python's code-point string sort (UTF-8 byte order
     preserves code-point order), so the cluster-sorted digest stream
@@ -175,19 +224,22 @@ def test_streamed_fold_nonascii_sort_parity(spark, tmp_path):
         (root / rel).write_bytes(content)
     bs = 1024
     expected = spec_hash(str(root), files, bs)
-    assert hash_directory_raw_streamed(spark, str(root), "sha256", bs) == expected
     assert hash_directory_raw(spark, str(root), "sha256", bs) == expected
+    for route in ("streamed", "cluster"):
+        with monkeypatch.context() as m:
+            force_route(m, route)
+            assert hash_directory_raw(spark, str(root), "sha256", bs) == expected, route
 
 
-def test_streamed_fold_empty_and_emptyfile_tree(spark, tmp_path):
+def test_streamed_fold_empty_and_emptyfile_tree(spark, tmp_path, monkeypatch):
     """No chunk rows at all (dirs + empty files only): the streamed
-    fold must skip the digest job entirely and still match."""
+    digest drain over an empty digest set must still match."""
     root = tmp_path / "hollow"
     (root / "sub").mkdir(parents=True)
     (root / "sub" / "void.txt").write_bytes(b"")
-    assert hash_directory_raw_streamed(
-        spark, str(root), "sha256", 1024
-    ) == hash_directory_raw(spark, str(root), "sha256", 1024)
+    want = hash_directory_raw(spark, str(root), "sha256", 1024)
+    force_route(monkeypatch, "streamed")
+    assert hash_directory_raw(spark, str(root), "sha256", 1024) == want
 
 
 def test_verify_roundtrip(spark, tree):
@@ -335,17 +387,124 @@ def test_incremental_rehash_splices_exactly(spark, tmp_path):
     shutil.rmtree(root)
 
 
+@pytest.mark.parametrize("route", ["driver", "streamed", "cluster"])
+def test_forced_route_parity(spark, tmp_path, monkeypatch, capsys, route):
+    """Every route the listing's measurements can pick — (a) driver
+    collect fold, (b) driver listing with the digests drained from a
+    cluster sort, (c) cluster listing, diff, splice and fold — gives the
+    same results on every dirhash entry point: hash_directory and
+    verify against the spec digest; build_chunk_manifest and the
+    incremental re-hash's refreshed manifest against spec manifest
+    rows; the reuse stats against the known churn; and the CLI's
+    stdout, stderr and exit codes.  Counters prove the forced route
+    was really taken."""
+    from dirhash_spark.dirhash import hashdir as H
+    from dirhash_spark.dirhash import incremental as I
+    from dirhash_spark.dirhash.cli import main
+    from dirhash_spark.dirhash.incremental import (
+        build_chunk_manifest,
+        hash_directory_incremental,
+    )
+
+    root = tmp_path / "tree"
+    (root / "sub").mkdir(parents=True)
+    (root / "emptydir").mkdir()
+    files = {
+        "a.bin": bytes(range(256)) * 40,  # 10 chunks at 1k
+        "sub/b.bin": b"spark" * 1000,
+        "empty.txt": b"",
+    }
+
+    def write(rel, content, mtime_ns):
+        (root / rel).write_bytes(content)
+        os.utime(root / rel, ns=(mtime_ns, mtime_ns))
+
+    for rel, content in files.items():
+        write(rel, content, 1_000_000_000)
+    tree, bs = str(root), 1024
+
+    calls = {"drain": 0, "cluster_walk": 0}
+
+    def count(module, attr, key):
+        real = getattr(module, attr)
+
+        def counted(*a, **k):
+            calls[key] += 1
+            return real(*a, **k)
+
+        monkeypatch.setattr(module, attr, counted)
+
+    for module in (H, I):
+        count(module, "fold_digests_streamed", "drain")
+        count(module, "list_entries_df", "cluster_walk")
+    force_route(monkeypatch, route)
+
+    # full hash + verify
+    hs = hash_directory(spark, tree, "sha256", "1k")
+    assert hs == "v1-sha256-1k-" + spec_hash(tree, files, bs)
+    assert verify_directory_hash(spark, tree, hs)
+    bad = verify_directory_hash(spark, tree, hs[:-8] + "00000000")
+    assert not bad and bad.actual_hash_value == hs.rsplit("-", 1)[1]
+
+    # manifest build, then full reuse from it
+    man = build_chunk_manifest(spark, tree, "sha256", "1k").localCheckpoint()
+    assert manifest_rows(man) == spec_manifest(tree, bs)
+    man_path = str(tmp_path / "manifest")
+    man.write.parquet(man_path)
+    h, st = hash_directory_incremental(spark, tree, man, "sha256", "1k")
+    assert h == hs
+    assert st == {"n_files": 3, "n_reused_files": 3, "n_rehashed_files": 0}
+
+    # churn: append, add, delete — the interesting diff shapes at once
+    files["sub/b.bin"] += b"tail"
+    write("sub/b.bin", files["sub/b.bin"], 2_000_000_000)
+    files["new.txt"] = b"fresh"
+    write("new.txt", files["new.txt"], 2_000_000_000)
+    del files["empty.txt"]
+    (root / "empty.txt").unlink()
+    want = "v1-sha256-1k-" + spec_hash(tree, files, bs)
+
+    h, st, man2 = hash_directory_incremental(
+        spark, tree, man, "sha256", "1k", with_manifest=True
+    )
+    assert h == want
+    assert st == {"n_files": 3, "n_reused_files": 1, "n_rehashed_files": 2}
+    man2 = man2.localCheckpoint()
+    assert manifest_rows(man2) == spec_manifest(tree, bs)
+    h, st = hash_directory_incremental(spark, tree, man2, "sha256", "1k")
+    assert h == want and st["n_rehashed_files"] == 0
+
+    # the CLI on the same route: hash-only stdout, reuse stats on
+    # stderr, verify exit codes
+    capsys.readouterr()
+    assert main([tree, "--block-size", "1k"], spark=spark) == 0
+    assert capsys.readouterr().out.strip() == want
+    argv = [tree, "--block-size", "1k", "--manifest", man_path]
+    assert main([*argv, "--write-manifest", str(tmp_path / "m2")], spark=spark) == 0
+    cap = capsys.readouterr()
+    assert cap.out.strip() == want
+    assert "reused 1/3 files, re-hashed 2" in cap.err
+    assert main([tree, "--check", want], spark=spark) == 0
+    assert capsys.readouterr().out.startswith("OK ")
+    assert main([tree, "--check", want[:-8] + "00000000"], spark=spark) == 1
+    assert "MISMATCH" in capsys.readouterr().out
+
+    assert (calls["drain"] > 0) == (route != "driver"), calls
+    assert (calls["cluster_walk"] > 0) == (route == "cluster"), calls
+
+
 def test_incremental_streamed_cluster_route_bit_identical(
     spark, tmp_path, monkeypatch
 ):
-    """streamed=True with the serial-walk budget forced to 0 takes the
-    fully cluster-side incremental path (stat-diff join + digest-union
-    splice + streamed fold — no O(files) driver structure anywhere,
-    r11 verdict item 4): hash string, reuse stats, AND the refreshed
+    """The streamed-fold route (b) and, with the serial-walk budget
+    forced to 0, the fully cluster-side incremental route (c) (stat-diff
+    join + digest-union splice + streamed fold, no O(files) driver
+    structure anywhere): hash string, reuse stats, AND the refreshed
     manifest must all equal the driver route's on a mutated tree."""
     import time
 
     import dirhash_spark.dirhash.listing as L
+    from dirhash_spark.dirhash import hashdir as H
     from dirhash_spark.dirhash import incremental as I
     from dirhash_spark.dirhash.incremental import (
         build_chunk_manifest,
@@ -370,16 +529,15 @@ def test_incremental_streamed_cluster_route_bit_identical(
         spark, str(root), man, "sha256", "1k", with_manifest=True
     )
 
-    # serial route on a driver-sized tree: streamed=True must NOT take
+    # streamed fold on a driver-sized listing: route (b) must NOT take
     # the cluster path when the budget passes (fixed metadata jobs
     # would only slow a small tree, same routing as the raw fold)
     def _boom(*a, **k):
         raise AssertionError("cluster route taken on a driver-sized tree")
 
     monkeypatch.setattr(I, "_incremental_cluster", _boom)
-    got_h, got_st = hash_directory_incremental(
-        spark, str(root), man, "sha256", "1k", streamed=True
-    )
+    monkeypatch.setattr(H, "COLLECT_MAX_CHUNKS", -1)
+    got_h, got_st = hash_directory_incremental(spark, str(root), man, "sha256", "1k")
     assert (got_h, got_st) == (want_h, want_st)
     monkeypatch.undo()
 
@@ -387,21 +545,14 @@ def test_incremental_streamed_cluster_route_bit_identical(
     # all cluster-side; bit-identical results
     monkeypatch.setattr(L, "SERIAL_WALK_BUDGET_S", 0)
     got_h, got_st, got_man = hash_directory_incremental(
-        spark, str(root), man, "sha256", "1k", streamed=True, with_manifest=True
+        spark, str(root), man, "sha256", "1k", with_manifest=True
     )
     assert (got_h, got_st) == (want_h, want_st)
-    key = lambda r: (  # noqa: E731
-        r["path"],
-        r["size"],
-        r["mtime_ns"],
-        r["block_num"],
-        None if r["digest"] is None else bytes(r["digest"]),
-    )
-    assert sorted(map(key, got_man.collect())) == sorted(map(key, want_man.collect()))
+    assert manifest_rows(got_man) == manifest_rows(want_man)
 
     # and the refreshed cluster-route manifest restores full reuse
     h2, st2 = hash_directory_incremental(
-        spark, str(root), got_man.localCheckpoint(), "sha256", "1k", streamed=True
+        spark, str(root), got_man.localCheckpoint(), "sha256", "1k"
     )
     assert h2 == want_h and st2["n_rehashed_files"] == 0
 
@@ -409,15 +560,15 @@ def test_incremental_streamed_cluster_route_bit_identical(
     # manifest build (no O(files) driver structure) must produce
     # row-identical output to the driver-side build, and feed full
     # reuse back into the incremental fold
-    built_driver = build_chunk_manifest(spark, str(root), "sha256", "1k")
     built_cluster = build_chunk_manifest(
-        spark, str(root), "sha256", "1k", streamed=True
+        spark, str(root), "sha256", "1k"
     ).localCheckpoint()
-    assert sorted(map(key, built_cluster.collect())) == sorted(
-        map(key, built_driver.collect())
-    )
+    monkeypatch.undo()
+    built_driver = build_chunk_manifest(spark, str(root), "sha256", "1k")
+    assert manifest_rows(built_cluster) == manifest_rows(built_driver)
+    monkeypatch.setattr(L, "SERIAL_WALK_BUDGET_S", 0)
     h3, st3 = hash_directory_incremental(
-        spark, str(root), built_cluster, "sha256", "1k", streamed=True
+        spark, str(root), built_cluster, "sha256", "1k"
     )
     assert h3 == want_h and st3["n_rehashed_files"] == 0
 
@@ -466,50 +617,40 @@ def test_incremental_rejects_mismatched_manifest_parameters(spark, tmp_path):
 
 
 def test_parallel_listing_equals_serial(spark, tree, tmp_path):
-    """The level-parallel walk must produce the identical Entry set —
-    same relative paths (dirs slash-suffixed), sizes, and dir flags —
-    as the serial walk, on the fixture tree and on a wide many-dir
-    tree (the shape whose serial walk is latency-bound at scale)."""
-    from dirhash_spark.dirhash.listing import parallel_list_entries
+    """The level-parallel cluster walk must produce the identical entry
+    set — same relative paths (dirs slash-suffixed), sizes, and dir
+    flags — as the serial walk, on the fixture tree and on a wide
+    many-dir tree (the shape whose serial walk is latency-bound at
+    scale)."""
+    from dirhash_spark.dirhash.hashdir import fold_listing_df
+    from dirhash_spark.dirhash.listing import list_entries_df
 
     root, _ = tree
     as_set = lambda es: {(e.relative_path, e.is_dir, e.size) for e in es}  # noqa: E731
-    assert as_set(parallel_list_entries(spark, root)) == as_set(list_entries(root))
+    as_row_set = lambda df: {  # noqa: E731
+        (r["relative_path"], r["is_dir"], r["size"]) for r in df.collect()
+    }
+    assert as_row_set(list_entries_df(spark, root)) == as_set(list_entries(root))
 
     wide = tmp_path / "wide"
     for i in range(40):
         d = wide / f"d{i:02d}" / "sub"
         d.mkdir(parents=True)
         (d / f"f{i}.bin").write_bytes(b"x" * i)
-    assert as_set(parallel_list_entries(spark, str(wide))) == as_set(
-        list_entries(str(wide))
-    )
+    wide_df = list_entries_df(spark, str(wide))
+    assert as_row_set(wide_df) == as_set(list_entries(str(wide)))
     # and the fold consumes it identically: same v1 digest
-    from dirhash_spark.dirhash.hashdir import digest_directory, hash_directory_raw
-    from dirhash_spark.dirhash.codec import fold_digest
-
-    entries = parallel_list_entries(spark, str(wide))
-    rows = digest_directory(spark, entries, 7, "sha256").collect()
-    # bounded: digest rows of the 40-file test tree
-    rows.sort(key=lambda r: (r["path"], r["block_num"]))
-    got = fold_digest(
-        "sha256",
-        [e.relative_path for e in entries],
-        [bytes(r["digest"]) for r in rows],
+    assert fold_listing_df(spark, wide_df, "sha256", 7) == hash_directory_raw(
+        spark, str(wide), "sha256", 7
     )
-    assert got == hash_directory_raw(spark, str(wide), "sha256", 7)
 
 
 def test_parallel_listing_symlink_parity(spark, tmp_path):
     """os.walk parity on symlinks (ADVICE r10): a symlink to a
     directory lists as a dir entry but is NOT walked into; a symlink to
     a file records the TARGET's size (getsize follows links).  The
-    parallel walk and the DataFrame walk must both match the serial
-    walk's Entry set exactly."""
-    from dirhash_spark.dirhash.listing import (
-        list_entries_df,
-        parallel_list_entries,
-    )
+    cluster walk must match the serial walk's Entry set exactly."""
+    from dirhash_spark.dirhash.listing import list_entries_df
 
     root = tmp_path / "links"
     (root / "real").mkdir(parents=True)
@@ -528,24 +669,20 @@ def test_parallel_listing_symlink_parity(spark, tmp_path):
     assert ("filelink.bin", False, 777) in expected
     assert not any(p.startswith("dirlink/") and p != "dirlink/" for p, _, _ in expected)
 
-    assert as_set(parallel_list_entries(spark, str(root))) == expected
-    df_rows = list_entries_df(spark, str(root), serial_budget_s=0).collect()
+    df_rows = list_entries_df(spark, str(root)).collect()
     assert {(r["relative_path"], r["is_dir"], r["size"]) for r in df_rows} == expected
 
 
-def test_file_scheme_symlink_parity_streamed_vs_collect(spark, tmp_path):
+def test_file_scheme_symlink_parity_streamed_vs_collect(spark, tmp_path, monkeypatch):
     """ADVICE r11 (medium): a ``file://`` root must list with the SAME
     symlink semantics as the bare path in EVERY form.  Hadoop's
     LocalFileSystem reports a symlinked dir as a directory and walks
     INTO it, so routing file:// through the JVM-gateway walk made the
-    collect fold descend where the streamed/parallel walks (os.walk
-    semantics: dirlink listed, not descended) did not — a false
-    MISMATCH under ``--check --streamed-fold``, and
-    hash("file:///t") != hash("/t") on the same tree."""
-    from dirhash_spark.dirhash.hashdir import (
-        hash_directory_raw,
-        hash_directory_raw_streamed,
-    )
+    driver route descend where the cluster walk (os.walk semantics:
+    dirlink listed, not descended) did not — a false MISMATCH whenever
+    the routes differed, and hash("file:///t") != hash("/t") on the
+    same tree."""
+    from dirhash_spark.dirhash.hashdir import hash_directory_raw
     from dirhash_spark.dirhash.listing import list_entries
 
     root = tmp_path / "ftree"
@@ -576,21 +713,26 @@ def test_file_scheme_symlink_parity_streamed_vs_collect(spark, tmp_path):
 
     expected = hash_directory_raw(spark, str(root), "sha256", 64)
     assert hash_directory_raw(spark, uri, "sha256", 64) == expected
-    assert hash_directory_raw_streamed(spark, uri, "sha256", 64) == expected
-    assert hash_directory_raw_streamed(spark, str(root), "sha256", 64) == expected
+    for route in ("streamed", "cluster"):
+        with monkeypatch.context() as m:
+            force_route(m, route)
+            for path in (uri, str(root)):
+                assert hash_directory_raw(spark, path, "sha256", 64) == expected, (
+                    route,
+                    path,
+                )
 
 
 def test_listing_df_cluster_route_matches_serial(spark, tree, tmp_path):
-    """list_entries_df's cluster-side level walk (serial_budget_s=0)
-    must produce the same rows as the serial short-circuit route, and
-    full_path must stay readable."""
+    """list_entries_df's cluster-side level walk must produce the same
+    rows as the serial walk, and full_path must stay readable."""
     from dirhash_spark.dirhash.listing import list_entries_df
 
     root, _ = tree
-    fast = list_entries_df(spark, root).collect()
-    clustered = list_entries_df(spark, root, serial_budget_s=0).collect()
+    serial = [(e.relative_path, e.is_dir, e.size, e.full_path) for e in list_entries(root)]
+    clustered = list_entries_df(spark, root).collect()
     key = lambda r: (r["relative_path"], r["is_dir"], r["size"], r["full_path"])  # noqa: E731
-    assert sorted(map(key, clustered)) == sorted(map(key, fast))
+    assert sorted(map(key, clustered)) == sorted(serial)
     assert all(
         r["is_dir"] or open(r["full_path"], "rb").read(1) is not None for r in clustered
     )
@@ -605,25 +747,33 @@ def test_streamed_fold_cluster_listing_bit_identical(spark, tree, monkeypatch):
     monkeypatch.setattr(L, "SERIAL_WALK_BUDGET_S", 0.0)
     root, files = tree
     bs = 32 * 1024
-    assert hash_directory_raw_streamed(spark, root, "sha256", bs) == spec_hash(
+    assert hash_directory_raw(spark, root, "sha256", bs) == spec_hash(
         root, files, bs
     )
 
 
 def test_list_entries_budget_crossover(spark, tree, monkeypatch):
-    """The default list_entries path reroutes to the parallel walk when
-    the serial budget trips — same Entry set either way."""
+    """list_entries is the one router: inside the serial-walk budget it
+    returns the Entry list (driver route); a tripped budget returns
+    None, and the cluster walk the caller then takes carries the same
+    rows.  The budget is the module constant, read at call time, so
+    deployments (and tests) can retune it; a sessionless call always
+    walks serially."""
     import dirhash_spark.dirhash.listing as L
 
     root, _ = tree
     serial = list_entries(root)
     as_set = lambda es: {(e.relative_path, e.is_dir, e.size) for e in es}  # noqa: E731
-    # budget 0 forces the reroute through parallel_list_entries
-    assert as_set(list_entries(root, spark, serial_budget_s=0)) == as_set(serial)
-    # and the default budget (no kwarg) reads the module constant at
-    # call time, so deployments (and tests) can retune it
-    monkeypatch.setattr(L, "SERIAL_WALK_BUDGET_S", 0.0)
     assert as_set(list_entries(root, spark)) == as_set(serial)
+
+    monkeypatch.setattr(L, "SERIAL_WALK_BUDGET_S", 0.0)
+    assert list_entries(root, spark) is None
+    assert as_set(list_entries(root)) == as_set(serial)
+    clustered = {
+        (r["relative_path"], r["is_dir"], r["size"])
+        for r in L.list_entries_df(spark, root).collect()
+    }
+    assert clustered == as_set(serial)
 
 
 def test_streamed_fold_cluster_listing_hollow_tree(spark, tmp_path, monkeypatch):
@@ -636,41 +786,47 @@ def test_streamed_fold_cluster_listing_hollow_tree(spark, tmp_path, monkeypatch)
     (root / "sub" / "void.txt").write_bytes(b"")
     expected = hash_directory_raw(spark, str(root), "sha256", 1024)
     monkeypatch.setattr(L, "SERIAL_WALK_BUDGET_S", 0.0)
-    assert hash_directory_raw_streamed(spark, str(root), "sha256", 1024) == expected
+    assert hash_directory_raw(spark, str(root), "sha256", 1024) == expected
 
 
 def test_listing_for_fold_routing(spark, tree, monkeypatch):
-    """The fold router's contract: inside-budget serial walks return
-    the Entry list (driver-side header route), a tripped budget returns
-    the cluster DataFrame, and both carry the same rows."""
+    """The fold's routing contract: an inside-budget serial walk feeds
+    the driver-side fold (no cluster walk), a tripped budget sends the
+    fold to the cluster listing (no driver read+hash stage), and both
+    give the spec digest.  The budget is the module constant, read at
+    call time (deployment-tunable)."""
+    import dirhash_spark.dirhash.hashdir as H
     import dirhash_spark.dirhash.listing as L
 
-    root, _ = tree
-    entries, df = L.listing_for_fold(spark, root)
-    assert entries is not None and df is None
-    serial = {(e.relative_path, e.is_dir, e.size) for e in entries}
+    root, files = tree
+    bs = 32 * 1024
+    calls = {"cluster_walk": 0, "driver_stage": 0}
 
-    entries2, df2 = L.listing_for_fold(spark, root, serial_budget_s=0)
-    assert entries2 is None and df2 is not None
-    clustered = {
-        (r["relative_path"], r["is_dir"], r["size"]) for r in df2.collect()
-    }
-    assert clustered == serial
+    def count(attr, key):
+        real = getattr(H, attr)
 
-    # the module constant is read at call time (deployment-tunable)
+        def counted(*a, **k):
+            calls[key] += 1
+            return real(*a, **k)
+
+        monkeypatch.setattr(H, attr, counted)
+
+    count("list_entries_df", "cluster_walk")
+    count("digest_directory", "driver_stage")
+
+    assert hash_directory_raw(spark, root, "sha256", bs) == spec_hash(root, files, bs)
+    assert calls == {"cluster_walk": 0, "driver_stage": 1}
+
     monkeypatch.setattr(L, "SERIAL_WALK_BUDGET_S", 0.0)
-    entries3, df3 = L.listing_for_fold(spark, root)
-    assert entries3 is None and df3 is not None
+    assert hash_directory_raw(spark, root, "sha256", bs) == spec_hash(root, files, bs)
+    assert calls == {"cluster_walk": 1, "driver_stage": 1}
 
 
 def test_broken_symlink_fails_loudly_on_every_walk(spark, tmp_path):
     """A broken symlink kills the serial walk (os.path.getsize follows
-    the link) — the parallel and DataFrame walks must also fail loudly
-    rather than silently emitting a divergent Entry set."""
-    from dirhash_spark.dirhash.listing import (
-        list_entries_df,
-        parallel_list_entries,
-    )
+    the link) — the cluster walk must also fail loudly rather than
+    silently emitting a divergent Entry set."""
+    from dirhash_spark.dirhash.listing import list_entries_df
 
     root = tmp_path / "broken"
     root.mkdir()
@@ -680,16 +836,14 @@ def test_broken_symlink_fails_loudly_on_every_walk(spark, tmp_path):
     with pytest.raises(OSError):
         list_entries(str(root))
     with pytest.raises(Exception):  # surfaces as a Spark task failure
-        parallel_list_entries(spark, str(root))
-    with pytest.raises(Exception):
-        list_entries_df(spark, str(root), serial_budget_s=0).collect()
+        list_entries_df(spark, str(root)).collect()
 
 
 def test_collect_fold_bit_identical_under_forced_parallel_listing(
     spark, tree, monkeypatch
 ):
-    """hash_directory_raw routes its listing through the same budget
-    crossover — forcing the parallel walk must not change the digest."""
+    """hash_directory_raw routes its listing through the budget
+    crossover — forcing the cluster walk must not change the digest."""
     import dirhash_spark.dirhash.listing as L
 
     root, files = tree
@@ -713,9 +867,7 @@ def test_file_uri_authority_and_scheme_case(spark, tmp_path):
     from dirhash_spark.dirhash.listing import (
         list_entries,
         list_entries_df,
-        listing_for_fold,
         local_root,
-        parallel_list_entries,
     )
 
     root = tmp_path / "utree"
@@ -735,9 +887,7 @@ def test_file_uri_authority_and_scheme_case(spark, tmp_path):
     for call in (
         lambda: list_entries(bad, spark),
         lambda: list_entries(bad),
-        lambda: parallel_list_entries(spark, bad),
         lambda: list_entries_df(spark, bad),
-        lambda: listing_for_fold(spark, bad),
     ):
         with _pytest.raises(ValueError, match="authority"):
             call()

@@ -25,28 +25,30 @@ def test_every_oracle_has_a_query():
     assert all(isinstance(s, str) and "SELECT" in s.upper() for s in osql.values())
 
 
-def test_priority_order_names_all_registered():
-    """Every PRIORITY_ORDER name resolves — all_queries() raises on
-    phantoms, so a stale planned-query name can't silently drop its
-    intended driver-row coverage (round-2 postmortem).  The round-15
-    window's hand-picked anchors must sit inside the 50-entry prefix."""
-    from dirhash_spark.registry import PRIORITY_ORDER, all_queries
+def test_correctness_window_is_derived_from_artifacts(tmp_path, monkeypatch):
+    """The 50-name correctness window is a pure function of the
+    committed CORRECTNESS_r*.json files: the stalest queries by newest
+    checked round (never-checked = round 0), ties broken by name, then
+    the rest in registration order; with no artifacts, registration
+    order throughout."""
+    from dirhash_spark import registry
 
-    qs = all_queries()
-    assert set(PRIORITY_ORDER) <= set(qs)
-    assert len(PRIORITY_ORDER) == 50  # exactly one driver window
-    window = list(qs)[:50]
-    for must in (
-        # r10-code rows that hit MUST age 5 when CORRECTNESS_r15 lands
-        "dedup_ngram_jaccard",
-        "dedup_simhash",
-        "ts_anomaly_mad",
-        "win_running",
-        # pre-emptive r11-code rotation fills the slack
-        "agg_approx_top_k",
-        "dirhash_full_streamed",
-    ):
-        assert must in window, must
+    qs = registry.all_queries()
+    assert list(qs.values()) == [registry.REGISTRY[n] for n in qs]
+    assert sorted(qs) == sorted(registry.REGISTRY)
+
+    newest = registry._newest_checked_round()
+    assert newest, "no CORRECTNESS artifacts found"
+    key = lambda n: (newest.get(n, 0), n)  # noqa: E731
+    names = list(qs)
+    window, rest = names[: registry.CORRECTNESS_WINDOW], names[registry.CORRECTNESS_WINDOW :]
+    assert len(window) == registry.CORRECTNESS_WINDOW
+    assert window == sorted(window, key=key)
+    assert max(map(key, window)) < min(map(key, rest))
+    assert rest == [n for n in registry.REGISTRY if n in set(rest)]
+
+    monkeypatch.setattr(registry, "_REPO_ROOT", str(tmp_path))
+    assert list(registry.all_queries()) == list(registry.REGISTRY)
 
 
 def test_window_covers_stalest_driver_rows():

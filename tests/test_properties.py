@@ -657,17 +657,16 @@ def test_streamed_fold_equals_collect_fold_on_random_trees(
 ):
     """For ANY tree shape (empty files, nested dirs, unicode names, a
     1-byte blocksize making hundreds of chunks per file) the streamed
-    fold, the collect fold, and the independent pure-Python spec digest
-    must agree byte-for-byte — the cluster-sort-order and
-    boundary-sampling claims hold on the whole input domain, not just
-    the curated fixture."""
+    digest drain (route (b), forced by lowering the chunk-count bound),
+    the collect fold, and the independent pure-Python spec digest must
+    agree byte-for-byte — the cluster-sort-order and boundary-sampling
+    claims hold on the whole input domain, not just the curated
+    fixture."""
     import hashlib
     import os as _os
 
-    from dirhash_spark.dirhash.hashdir import (
-        hash_directory_raw,
-        hash_directory_raw_streamed,
-    )
+    import dirhash_spark.dirhash.hashdir as H
+    from dirhash_spark.dirhash.hashdir import hash_directory_raw
 
     root = str(tmp_path_factory.mktemp("rand_tree"))
     rels = {}
@@ -706,8 +705,13 @@ def test_streamed_fold_equals_collect_fold_on_random_trees(
         h.update(dgst)
     expected = h.hexdigest()
 
-    assert hash_directory_raw_streamed(spark, root, "sha256", blocksize) == expected
     assert hash_directory_raw(spark, root, "sha256", blocksize) == expected
+    bound = H.COLLECT_MAX_CHUNKS
+    H.COLLECT_MAX_CHUNKS = -1
+    try:
+        assert hash_directory_raw(spark, root, "sha256", blocksize) == expected
+    finally:
+        H.COLLECT_MAX_CHUNKS = bound
 
 
 # --- incremental re-hash: randomized-churn equivalence (r12) --------------
@@ -751,7 +755,7 @@ def test_incremental_routes_equal_full_rehash_on_random_churn(
 ):
     """For ANY initial tree and ANY churn (upserts of new/changed/
     same-content files, a deletion), the driver-side incremental
-    splice, the streamed serial route, AND the forced cluster route
+    splice, the streamed digest drain, AND the forced cluster route
     (stat-diff join + digest-union splice) must all equal the full
     re-hash byte-for-byte — and the reuse stats must equal the churn
     computed independently from the (path, size, mtime_ns) contract.
@@ -760,6 +764,7 @@ def test_incremental_routes_equal_full_rehash_on_random_churn(
     re-hashed — the rsync quick-check contract)."""
     import os as _os
 
+    import dirhash_spark.dirhash.hashdir as H
     import dirhash_spark.dirhash.listing as L
     from dirhash_spark.dirhash.hashdir import hash_directory
     from dirhash_spark.dirhash.incremental import (
@@ -794,16 +799,16 @@ def test_incremental_routes_equal_full_rehash_on_random_churn(
     n_rehashed = len(set(mutated))  # every churned file got a fresh mtime
 
     expected = hash_directory(spark, root, "sha256", blocksize)
-    for route in ("driver", "serial", "cluster"):
-        old_budget = L.SERIAL_WALK_BUDGET_S
+    for route in ("driver", "streamed", "cluster"):
+        old_budget, old_bound = L.SERIAL_WALK_BUDGET_S, H.COLLECT_MAX_CHUNKS
         L.SERIAL_WALK_BUDGET_S = 0 if route == "cluster" else old_budget
+        H.COLLECT_MAX_CHUNKS = -1 if route == "streamed" else old_bound
         try:
             h, stats = hash_directory_incremental(
-                spark, root, man, "sha256", blocksize,
-                streamed=route != "driver",
+                spark, root, man, "sha256", blocksize
             )
         finally:
-            L.SERIAL_WALK_BUDGET_S = old_budget
+            L.SERIAL_WALK_BUDGET_S, H.COLLECT_MAX_CHUNKS = old_budget, old_bound
         assert h == expected, route
         assert stats == {
             "n_files": n_files,
@@ -816,7 +821,7 @@ def test_incremental_routes_equal_full_rehash_on_random_churn(
 
 
 @settings(
-    max_examples=6,  # each example runs two cluster walks — keep it tight
+    max_examples=6,  # each example runs a cluster walk — keep it tight
     deadline=None,
     suppress_health_check=list(HealthCheck),
 )
@@ -841,18 +846,13 @@ def test_listing_routes_agree_on_random_trees(
     spark, tmp_path_factory, files, empty_dirs
 ):
     """For ANY tree shape — nested dirs, unicode names, empty files,
-    empty directories, even a completely empty root — the serial walk,
-    the level-parallel walk, and the cluster-side DataFrame walk must
-    produce the identical (relative_path, is_dir, size) set: the
-    routing budget may change WHERE the walk runs, never what it
-    returns."""
+    empty directories, even a completely empty root — the serial walk
+    and the level-parallel cluster walk must produce the identical
+    (relative_path, is_dir, size) set: the routing budget may change
+    WHERE the walk runs, never what it returns."""
     import os as _os
 
-    from dirhash_spark.dirhash.listing import (
-        list_entries,
-        list_entries_df,
-        parallel_list_entries,
-    )
+    from dirhash_spark.dirhash.listing import list_entries, list_entries_df
 
     root = str(tmp_path_factory.mktemp("rand_list_tree"))
     for (d, name), content in files.items():
@@ -864,15 +864,10 @@ def test_listing_routes_agree_on_random_trees(
         _os.makedirs(_os.path.join(root, d), exist_ok=True)
 
     serial = {(e.relative_path, e.is_dir, e.size) for e in list_entries(root)}
-    par = {
-        (e.relative_path, e.is_dir, e.size)
-        for e in parallel_list_entries(spark, root)
-    }
     dfr = {
         (r["relative_path"], r["is_dir"], r["size"])
-        for r in list_entries_df(spark, root, serial_budget_s=0).collect()
+        for r in list_entries_df(spark, root).collect()
     }
-    assert par == serial
     assert dfr == serial
 
 
