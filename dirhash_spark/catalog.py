@@ -145,9 +145,10 @@ def parquet_rowcount(sf_dir: str, name: str) -> int | None:
     return None
 
 
-#: (sf_dir, table) -> row-group count (or None); metadata-only, so one
-#: footer walk per corpus/table serves every spread decision.
-_SPLITS_CACHE: dict[tuple[str, str], int | None] = {}
+#: (sf_dir, table) -> row-group count; metadata-only, so one footer
+#: walk per corpus/table serves every spread decision.  Misses (None)
+#: are not cached: a table written later in the process must be seen.
+_SPLITS_CACHE: dict[tuple[str, str], int] = {}
 
 
 def parquet_split_count(sf_dir: str, name: str) -> int | None:
@@ -186,12 +187,14 @@ def parquet_split_count(sf_dir: str, name: str) -> int | None:
             out = None
     except Exception:
         out = None
-    _SPLITS_CACHE[key] = out
+    if out is not None:
+        _SPLITS_CACHE[key] = out
     return out
 
 
-#: (sf_dir, table) -> on-disk bytes (or None); metadata-only, cached.
-_BYTES_CACHE: dict[tuple[str, str], int | None] = {}
+#: (sf_dir, table) -> on-disk bytes; metadata-only, cached.  Misses
+#: (None) are not cached, as in :data:`_SPLITS_CACHE`.
+_BYTES_CACHE: dict[tuple[str, str], int] = {}
 
 
 def parquet_table_bytes(sf_dir: str, name: str) -> int | None:
@@ -224,7 +227,8 @@ def parquet_table_bytes(sf_dir: str, name: str) -> int | None:
             out = None
     except Exception:
         out = None
-    _BYTES_CACHE[key] = out
+    if out is not None:
+        _BYTES_CACHE[key] = out
     return out
 
 

@@ -8,8 +8,9 @@ DataFrame stack:
   listing.py  recursive listing → entries (dirs get a trailing '/'),
               routed driver/cluster by a serial-walk time budget
   chunks.py   fixed-size chunk plan (metadata DF) + range-read mapInPandas
-  hashdir.py  fused read+hash stage → ordered collect (or cluster sort
-              past a chunk-count bound) → fold
+  hashdir.py  fused read+hash stage → ordered collect → fold, or the
+              cluster fold past a chunk-count bound or a tripped walk
+              budget
   incremental.py  manifest-spliced re-hash of changed files only
   verify.py   recompute + compare (HashComparisonResult)
   archive.py  content-addressed archive sink (move, dedupe, chmod, link)

@@ -125,24 +125,16 @@ def fold_digest(algo: str, entries: list[str], chunk_digests: list[bytes]) -> st
     then the raw chunk digests concatenated in (path, block_num) order.
     ``entries`` are relative paths (dirs carry a trailing '/', empty files
     appear with zero chunks); sorted here with Python's lexicographic
-    string sort to match the reference (dirhash.py:418).
+    string sort to match the reference (dirhash.py:418).  THE single
+    driver-side definition of the header framing; its cluster twin is
+    ``hashdir.fold_header_streamed``.
     """
+    ordered = sorted(entries)
     h = get_hash_func(algo)()
-    fold_header(h, entries)
-    for digest in chunk_digests:
-        h.update(bytes(digest))
-    return h.hexdigest()
-
-
-def fold_header(h, relative_paths) -> None:
-    """v1 fold HEADER into hasher ``h``:
-    ``ascii(count) ‖ NUL ‖ NUL.join(sorted paths) ‖ NUL``.  THE single
-    driver-side definition of the header framing — :func:`fold_digest`
-    and the driver routes' streamed digest drain both call it (the
-    cluster twin is ``hashdir.fold_header_streamed``), so the
-    security-critical framing cannot drift between routes."""
-    ordered = sorted(relative_paths)
     h.update(str(len(ordered)).encode("ascii"))
     h.update(b"\x00")
     h.update("\x00".join(ordered).encode("utf-8"))
     h.update(b"\x00")
+    for digest in chunk_digests:
+        h.update(bytes(digest))
+    return h.hexdigest()

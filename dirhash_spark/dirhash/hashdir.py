@@ -23,16 +23,17 @@ Stages (mirroring dirhash.py:307-444, re-expressed Spark-first):
             including non-ASCII path code-point order.
   5. FOLD   driver-side sequential Merkle chain (inherently ordered)
 
-The route is taken from what the listing measures, never from an
-option — every route yields the bit-identical v1 digest:
-  (a) the serial walk finishes inside its budget → the stages above;
-  (b) as (a), but the listing's chunk count exceeds
-      :data:`COLLECT_MAX_CHUNKS` → stage 4 becomes a cluster sort whose
-      digests drain into the chain one partition at a time
-      (:func:`fold_digests_streamed`), so driver memory stays constant;
-  (c) the walk trips its budget → the listing stays cluster-side too
-      (:func:`fold_listing_df`): header paths and digests both stream
-      from cluster sorts.
+There are two routes, taken from what the listing measures, never
+from an option; both yield the bit-identical v1 digest:
+  (a) DRIVER: the serial walk finishes inside its budget and the
+      listing's chunk count is at most :data:`COLLECT_MAX_CHUNKS` → the
+      stages above;
+  (b) CLUSTER: the walk trips its budget (the listing stays
+      cluster-side, ``listing.list_entries_df``), or the driver listing
+      has too many chunks to collect the digests of (the listing is
+      shipped once, ``listing.entries_frame``) →
+      :func:`fold_listing_df`: header paths and digests both stream
+      from cluster sorts, so driver memory stays constant.
 """
 
 from __future__ import annotations
@@ -45,24 +46,24 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, LongType, StringType, StructField, StructType
 
 from ..session import configure
-from .chunks import chunk_count, chunk_plan, chunk_plan_df, open_for_range_read
+from .chunks import chunk_count, chunk_plan, chunk_plan_df, read_ranges, spread_plan
 from .codec import (
     DEFAULT_BLOCK_SIZE,
     build_hash_string,
     fold_digest,
-    fold_header,
     get_hash_func,
     parse_blocksize,
 )
 from .listing import (
+    entries_frame,
     list_entries,
     list_entries_df,
     reject_undecodable_paths,
     strip_trailing_slash,
 )
 
-#: Chunk count above which the driver route drains digests from a
-#: cluster sort instead of one collect (route (b) in the module doc).
+#: Chunk count above which a driver listing takes the cluster fold
+#: instead of one digest collect (module doc).
 #: The collect's documented scale bound: 100 TB at the 128 MiB default
 #: blocksize is ~800k rows of 32-byte digests plus paths.  Read at call
 #: time.
@@ -79,67 +80,34 @@ DIGEST_SCHEMA = StructType(
 
 def _read_hash_ranges(algo: str):
     """Fused range-read + v1-preimage digest over chunk-plan rows.
-
     Incremental ``update`` calls avoid materializing the concatenated
-    preimage (a full extra copy of every chunk).  File handles are
-    cached across the rows of a batch (opened once per file per batch,
-    never per row), and the producer sorts each partition on
-    (path, block_num) — ``repartition(...).sortWithinPartitions(...)``
-    in :func:`hash_chunk_plan` — so a partition's reads advance
-    file- and offset-ORDERED instead of seeking randomly (sequential
-    range reads are the fast path on s3a/hdfs, the case
-    :func:`open_for_range_read` exists for).  A repartitionByRange
-    form (contiguous global runs, fewer opens per file) was A/B'd and
-    rejected: its boundary-sampling pass is a whole extra job that
-    measured 10-20% of the local fold wall, while the open count is
-    already bounded by min(chunks, partitions) per file either way.
-    """
+    preimage (a full extra copy of every chunk)."""
 
     def inner(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         func = get_hash_func(algo)
         for pdf in batches:
-            handles: dict[str, object] = {}
-            try:
-                digests = []
-                for path, num, full_path, offset, length in zip(
-                    pdf["path"], pdf["block_num"], pdf["full_path"], pdf["offset"], pdf["length"]
-                ):
-                    fh = handles.get(full_path)
-                    if fh is None:
-                        fh = handles[full_path] = open_for_range_read(full_path)
-                    fh.seek(int(offset))
-                    h = func()
-                    h.update(path.encode("utf-8"))
-                    h.update(b"\x00")
-                    h.update(str(int(num)).encode("ascii"))
-                    h.update(b"\x00")
-                    h.update(fh.read(int(length)))
-                    digests.append(h.digest())
-                yield pd.DataFrame(
-                    {"path": pdf["path"], "block_num": pdf["block_num"], "digest": digests}
-                )
-            finally:
-                for fh in handles.values():
-                    try:
-                        fh.close()
-                    except Exception:
-                        pass
+            digests = []
+            for path, num, content in read_ranges(pdf):
+                h = func()
+                h.update(path.encode("utf-8"))
+                h.update(b"\x00")
+                h.update(str(num).encode("ascii"))
+                h.update(b"\x00")
+                h.update(content)
+                digests.append(h.digest())
+            yield pd.DataFrame(
+                {"path": pdf["path"], "block_num": pdf["block_num"], "digest": digests}
+            )
 
     return inner
 
 
 def hash_chunk_plan(spark: SparkSession, plan: DataFrame, algo: str) -> DataFrame:
     """THE read+hash stage: chunk-plan rows → (path, block_num, digest),
-    one fused ``mapInPandas`` over plan rows spread across the cluster
-    (the plan is tiny metadata, so the shuffle costs nothing while the
-    stage's parallelism stops depending on how the plan was sliced)."""
+    one fused ``mapInPandas`` over the spread plan
+    (:func:`.chunks.spread_plan`)."""
     get_hash_func(algo)  # whitelist check before any cluster work
-    n_parts = max(spark.sparkContext.defaultParallelism, 1)
-    return plan.repartition(n_parts, "path", "block_num").sortWithinPartitions(
-        "path", "block_num"
-    ).mapInPandas(
-        _read_hash_ranges(algo), DIGEST_SCHEMA
-    )
+    return spread_plan(spark, plan).mapInPandas(_read_hash_ranges(algo), DIGEST_SCHEMA)
 
 
 def digest_directory(
@@ -202,8 +170,9 @@ def fold_digests_streamed(h, digests: DataFrame) -> None:
 def fold_listing_df(
     spark: SparkSession, entries_df: DataFrame, hash_algorithm: str, blocksize: int
 ) -> str:
-    """Route (c): the v1 hex digest of a cluster-side listing
-    (``listing.list_entries_df``) with a constant-memory driver fold.
+    """The cluster route: the v1 hex digest of a listing DataFrame
+    (``listing.list_entries_df`` or ``listing.entries_frame``) with a
+    constant-memory driver fold.
 
     A literal tree-reduce cannot exist for the v1 digest: the fold is a
     single hash chain over an ORDERED byte stream (header then chunk
@@ -254,24 +223,25 @@ def hash_directory_raw(
     directory = strip_trailing_slash(directory)
 
     entries = list_entries(directory, spark)
-    if entries is None:  # (c) the serial walk tripped its budget
-        return fold_listing_df(
-            spark, list_entries_df(spark, directory), hash_algorithm, blocksize
-        )
-    reject_undecodable_paths(entries)
-    listing = [e.relative_path for e in entries]
+    if entries is None:  # the serial walk tripped its budget
+        entries_df = list_entries_df(spark, directory)
+    else:
+        reject_undecodable_paths(entries)
+        n_chunks = chunk_count(entries, blocksize)
+        if n_chunks <= COLLECT_MAX_CHUNKS:
+            return _fold_driver(spark, entries, n_chunks, hash_algorithm, blocksize)
+        entries_df = entries_frame(spark, entries)  # too many digests to collect
+    return fold_listing_df(spark, entries_df, hash_algorithm, blocksize)
 
-    n_chunks = chunk_count(entries, blocksize)
-    if n_chunks > COLLECT_MAX_CHUNKS:  # (b) too many digests to collect
-        h = get_hash_func(hash_algorithm)()
-        fold_header(h, listing)
-        digests = digest_directory(spark, entries, blocksize, hash_algorithm)
-        fold_digests_streamed(h, digests.localCheckpoint())
-        return h.hexdigest()
+
+def _fold_driver(
+    spark: SparkSession, entries, n_chunks: int, hash_algorithm: str, blocksize: int
+) -> str:
+    """The driver route: one digest collect, a driver sort, ``fold_digest``."""
     if n_chunks:
         rows = digest_directory(spark, entries, blocksize, hash_algorithm).collect()
         # bounded: digests only — 32 bytes + path per CHUNK, at most
-        # COLLECT_MAX_CHUNKS rows (route (b) takes over beyond that).
+        # COLLECT_MAX_CHUNKS rows (the cluster route takes over beyond that).
         # Driver-side tuple sort == reference sortBy((path, num)),
         # dirhash.py:413 — and avoids the range-exchange sampling pass
         # that would re-execute the read+hash stage.  The fold itself is
@@ -282,7 +252,7 @@ def hash_directory_raw(
     else:
         digest_list = []
 
-    return fold_digest(hash_algorithm, listing, digest_list)
+    return fold_digest(hash_algorithm, [e.relative_path for e in entries], digest_list)
 
 
 def hash_directory(

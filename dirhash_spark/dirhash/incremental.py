@@ -9,12 +9,11 @@ depends only on (path, block_num, content).  So a re-hash of a tree
 where few files changed can splice stored digests for unchanged files
 and run the fused read+hash stage over the changed set only:
 
-  1. LIST      the full tree (metadata-only, as always);
+  1. LIST      the full tree (metadata-only, as always); each file's
+               size and mtime_ns come from ONE stat (``listing`` module
+               doc), taken before any content is read;
   2. DIFF      against the manifest's file-level (path, size, mtime_ns)
-               keys — a driver-side set comparison on the same scale as
-               the listing itself (or, when the listing tripped the
-               serial-walk budget, a cluster-side left join with no
-               O(files) driver state);
+               keys;
   3. READ+HASH only the changed/new files (the expensive stage now
                costs the churn, not the corpus);
   4. SPLICE    manifest digests for unchanged files ∪ fresh digests;
@@ -23,24 +22,28 @@ and run the fused read+hash stage over the changed set only:
                (modify one file in a copied tree: incremental ==
                full re-hash, and only that file re-read).
 
-Routes follow ``hashdir``'s rule (its module doc): (a) driver diff and
-collect fold; (b) driver diff, digests spliced as cluster relations and
-drained through ``fold_digests_streamed`` when the chunk count exceeds
-``hashdir.COLLECT_MAX_CHUNKS``; (c) fully cluster-side
-(:func:`_incremental_cluster`) when the walk trips its budget.
+The refreshed manifest pairs each digest with the PRE-hash stat of the
+listing: a file rewritten mid-run then reads as changed next time
+(conservative), never as an unchanged file with a stale digest.
+
+Two routes, on ``hashdir``'s triggers (its module doc): (a) DRIVER —
+one ``collect`` of the manifest, then the stamp check, diff, splice and
+refreshed manifest run as Python over its rows, and the fold is
+``fold_digest``; (b) CLUSTER (:func:`_incremental_cluster`) — the diff
+is a left join, the splice a union, and the fold streams from cluster
+sorts, with no O(files) driver state.
 
 At 100 TB with 1% daily churn this turns the re-hash from a
 100 TB read into a ~1 TB read plus a digest-table scan; the manifest
 is 32 bytes per chunk + the stat triple per file (a 100 TB tree at
 128 MiB blocks is ~25 MB of digests per PB — parquet-stored,
 broadcastable).  mtime granularity: nanoseconds where the filesystem
-provides them; a (size, mtime_ns)-equal rewrite is treated as
-unchanged, the same contract rsync's quick check makes.
+provides them (milliseconds through the JVM gateway); a
+(size, mtime_ns)-equal rewrite is treated as unchanged, the same
+contract rsync's quick check makes.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -51,7 +54,6 @@ from .codec import (
     DEFAULT_BLOCK_SIZE,
     build_hash_string,
     fold_digest,
-    fold_header,
     get_hash_func,
     parse_blocksize,
 )
@@ -62,7 +64,7 @@ from .hashdir import (
     hash_chunk_plan,
 )
 from .listing import (
-    Entry,
+    entries_frame,
     list_entries,
     list_entries_df,
     reject_undecodable_paths,
@@ -70,7 +72,9 @@ from .listing import (
 )
 
 _STAT_SCHEMA = "path STRING, size BIGINT, mtime_ns BIGINT"
+_MANIFEST_SCHEMA = "path STRING, size BIGINT, mtime_ns BIGINT, block_num BIGINT, digest BINARY"
 _MANIFEST_COLUMNS = ("path", "size", "mtime_ns", "block_num", "digest")
+_STAMP_COLUMNS = ("hash_algorithm", "blocksize_bytes")
 
 
 def _stamped(manifest: DataFrame, hash_algorithm: str, bs: int) -> DataFrame:
@@ -81,44 +85,6 @@ def _stamped(manifest: DataFrame, hash_algorithm: str, bs: int) -> DataFrame:
         F.lit(hash_algorithm).alias("hash_algorithm"),
         F.lit(bs).cast("bigint").alias("blocksize_bytes"),
     )
-
-
-def _mtimes_for(files: list[Entry], spark: SparkSession | None = None) -> dict[str, int]:
-    """ONE pre-hash mtime snapshot (relative_path → mtime_ns) for the
-    driver route's change detection.  Two contracts live here:
-
-    - Taken BEFORE any content is read, and callers must reuse it for
-      the refreshed manifest: re-statting after hashing paired a file
-      rewritten mid-run with its pre-rewrite digest but post-rewrite
-      mtime — every later incremental run then spliced the stale digest
-      with no error.  Pairing the PRE-hash mtime instead means a
-      mid-run rewrite reads as changed next time (conservative).
-    - Local paths stat directly (cheap syscalls); scheme paths batch
-      ONE listStatus RPC per parent directory instead of one
-      getFileStatus per file — the driver-serial O(files) round-trips
-      were paid on exactly the latency-bound trees incremental targets
-      (millisecond granularity there — still monotone per rewrite).
-    """
-    out: dict[str, int] = {}
-    by_parent: dict[str, list[Entry]] = {}
-    for e in files:
-        if "://" not in e.full_path:
-            out[e.relative_path] = os.stat(e.full_path).st_mtime_ns
-        else:
-            by_parent.setdefault(e.full_path.rsplit("/", 1)[0], []).append(e)
-    if by_parent:
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        for parent, group in by_parent.items():
-            jpath = jvm.org.apache.hadoop.fs.Path(parent)
-            fs = jpath.getFileSystem(conf)
-            mt = {
-                st.getPath().toString(): int(st.getModificationTime()) * 1_000_000
-                for st in fs.listStatus(jpath)
-            }
-            for e in group:
-                out[e.relative_path] = mt[e.full_path]
-    return out
 
 
 def build_chunk_manifest(
@@ -145,23 +111,16 @@ def build_chunk_manifest(
     bs = parse_blocksize(blocksize)
     entries = list_entries(directory, spark)
     if entries is None:
-        # mtime_ns rides the walk's own scandir stat (one metadata
-        # pass); checkpoint so the manifest's stat side and the chunk
-        # plan re-read materialized rows
-        files = (
-            list_entries_df(spark, directory, with_mtime=True)
-            .where(~F.col("is_dir"))
-            .localCheckpoint()
-        )
+        # checkpoint so the manifest's stat side and the chunk plan
+        # re-read materialized rows
+        files = list_entries_df(spark, directory).where(~F.col("is_dir")).localCheckpoint()
         stat_df = files.select(F.col("relative_path").alias("path"), "size", "mtime_ns")
         digests = hash_chunk_plan(spark, chunk_plan_df(files, bs), hash_algorithm)
     else:
         files = [e for e in entries if not e.is_dir]
         reject_undecodable_paths(files)
-        mtimes = _mtimes_for(files, spark)
         stat_df = spark.createDataFrame(
-            [(e.relative_path, e.size, mtimes[e.relative_path]) for e in files],
-            _STAT_SCHEMA,
+            [(e.relative_path, e.size, e.mtime_ns) for e in files], _STAT_SCHEMA
         )
         digests = digest_directory(spark, files, bs, hash_algorithm)
     # LEFT join from the stat side: zero-chunk (empty) files keep a
@@ -170,31 +129,24 @@ def build_chunk_manifest(
     return _stamped(stat_df.join(digests, "path", "left"), hash_algorithm, bs)
 
 
-def _check_manifest_parameters(
-    manifest: DataFrame, hash_algorithm: str, blocksize_bytes: int
-) -> None:
-    """Refuse to splice digests computed under different parameters.
-    Raises ValueError for a manifest without the parameter stamp (a
-    pre-stamp manifest is unverifiable — rebuild it) or with a stamp
-    that doesn't match the requested (algorithm, blocksize)."""
-    cols = set(manifest.columns)
-    if not {"hash_algorithm", "blocksize_bytes"} <= cols:
+def _require_stamp(manifest: DataFrame) -> None:
+    """Refuse a manifest without the parameter stamp: a pre-stamp
+    manifest is unverifiable — rebuild it.  Schema only, no job."""
+    if not set(_STAMP_COLUMNS) <= set(manifest.columns):
         raise ValueError(
             "manifest has no (hash_algorithm, blocksize_bytes) stamp; "
             "rebuild it with build_chunk_manifest — digests of unknown "
             "provenance cannot be safely reused"
         )
-    stamps = (
-        # bounded: distinct over the 2 stamp columns — exactly 1 row on a
-        # well-formed manifest (validated right below).
-        manifest.select("hash_algorithm", "blocksize_bytes").distinct().collect()
-    )
-    mismatched = [
-        (r["hash_algorithm"], r["blocksize_bytes"])
-        for r in stamps
-        if (r["hash_algorithm"], r["blocksize_bytes"])
-        != (hash_algorithm, blocksize_bytes)
-    ]
+
+
+def _check_manifest_parameters(stamps: set, hash_algorithm: str, blocksize_bytes: int) -> None:
+    """Refuse to splice digests computed under different parameters:
+    raises ValueError when any of ``stamps``, the (hash_algorithm,
+    blocksize_bytes) pairs the manifest's rows carry, differs from the
+    requested pair.  Each route reads the stamps its own way (module
+    doc)."""
+    mismatched = sorted(stamps - {(hash_algorithm, blocksize_bytes)}, key=repr)
     if mismatched:
         raise ValueError(
             f"manifest was built with {mismatched}, but this run requests "
@@ -221,100 +173,83 @@ def hash_directory_incremental(
     REFRESHED manifest built from the spliced digests (no second read
     pass) — the daily-rollover shape: hash incrementally, persist the
     new manifest, repeat tomorrow.  The route follows the listing's
-    measurements (module doc); every route is bit-identical, pinned in
+    measurements (module doc); both routes are bit-identical, pinned in
     tests/test_dirhash_e2e.py."""
     directory = strip_trailing_slash(directory)
     bs = parse_blocksize(blocksize)
-    _check_manifest_parameters(manifest, hash_algorithm, bs)
-    all_entries = list_entries(directory, spark)
-    if all_entries is None:  # (c) the serial walk tripped its budget
-        return _incremental_cluster(
-            spark,
-            list_entries_df(spark, directory, with_mtime=True),
-            manifest,
-            hash_algorithm,
-            bs,
-            blocksize,
-            with_manifest,
-        )
-    reject_undecodable_paths(all_entries)
-    files = [e for e in all_entries if not e.is_dir]
-    listing = [e.relative_path for e in all_entries]
+    _require_stamp(manifest)
+    entries = list_entries(directory, spark)
+    if entries is None:  # the serial walk tripped its budget
+        entries_df = list_entries_df(spark, directory)
+    else:
+        reject_undecodable_paths(entries)
+        if chunk_count(entries, bs) <= hashdir.COLLECT_MAX_CHUNKS:
+            return _incremental_driver(
+                spark, entries, manifest, hash_algorithm, bs, blocksize, with_manifest
+            )
+        entries_df = entries_frame(spark, entries)  # too many digests to collect
+    return _incremental_cluster(
+        spark, entries_df, manifest, hash_algorithm, bs, blocksize, with_manifest
+    )
 
-    manifest_keys = {
-        (r["path"], r["size"], r["mtime_ns"])
-        # bounded: one metadata triple per manifest FILE (no digests, no
-        # content) — same order as the driver-side listing it diffs against.
-        for r in manifest.select("path", "size", "mtime_ns").distinct().collect()
-    }
-    # snapshot mtimes ONCE, pre-hash — the refreshed manifest below
-    # must pair digests with these (see _mtimes_for's TOCTOU contract)
-    mtimes = _mtimes_for(files, spark)
-    unchanged_paths = []
-    changed = []
+
+def _incremental_driver(
+    spark: SparkSession,
+    entries: list,
+    manifest: DataFrame,
+    hash_algorithm: str,
+    bs: int,
+    blocksize: str,
+    with_manifest: bool,
+) -> tuple:
+    """The driver route: ONE manifest collect serves the stamp check,
+    the stat diff, the splice and the refreshed manifest; only the
+    changed files are read and hashed."""
+    rows = manifest.select(*_MANIFEST_COLUMNS, *_STAMP_COLUMNS).collect()
+    # bounded: one row per chunk (and per empty file) of the tree the
+    # manifest was built from — the scale of the digest collect below
+    _check_manifest_parameters({r[5:] for r in rows}, hash_algorithm, bs)
+    stored: dict[tuple, list] = {}
+    for path, size, mtime_ns, num, digest, *_ in rows:
+        chunks = stored.setdefault((path, size, mtime_ns), [])
+        if digest is not None:  # empty files carry no chunks
+            chunks.append((path, num, bytes(digest)))
+
+    files = [e for e in entries if not e.is_dir]
+    digests, changed = [], []
     for e in files:
-        if (e.relative_path, e.size, mtimes[e.relative_path]) in manifest_keys:
-            unchanged_paths.append(e.relative_path)
-        else:
+        kept = stored.get((e.relative_path, e.size, e.mtime_ns))
+        if kept is None:
             changed.append(e)
+        else:
+            digests += kept
     stats = {
         "n_files": len(files),
-        "n_reused_files": len(unchanged_paths),
-        "n_rehashed_files": len(files) - len(unchanged_paths),
+        "n_reused_files": len(files) - len(changed),
+        "n_rehashed_files": len(changed),
     }
-
-    spliced = []
-    if unchanged_paths:
-        keep = spark.createDataFrame([(p,) for p in unchanged_paths], "path STRING")
-        spliced.append(
-            manifest.join(F.broadcast(keep), "path")
-            .where(F.col("digest").isNotNull())  # empty files carry no chunks
-            .select("path", "block_num", "digest")
-        )
     if any(e.size > 0 for e in changed):
-        spliced.append(digest_directory(spark, changed, bs, hash_algorithm))
+        # bounded: at most COLLECT_MAX_CHUNKS digest rows, as in
+        # hashdir's driver route
+        fresh = digest_directory(spark, changed, bs, hash_algorithm).collect()
+        digests += [(r["path"], r["block_num"], bytes(r["digest"])) for r in fresh]
+    digests.sort(key=lambda d: (d[0], d[1]))
 
-    if chunk_count(all_entries, bs) > hashdir.COLLECT_MAX_CHUNKS:
-        # (b) too many digests to collect: splice them cluster-side and
-        # drain them sorted into the chain
-        h = get_hash_func(hash_algorithm)()
-        fold_header(h, listing)
-        digests = spark.createDataFrame([], hashdir.DIGEST_SCHEMA)
-        for part in spliced:
-            digests = digests.unionByName(part)
-        stat_df = spark.createDataFrame(
-            [(e.relative_path, e.size, mtimes[e.relative_path]) for e in files],
-            _STAT_SCHEMA,
-        )
-        return _drain(
-            h, digests.localCheckpoint(), stat_df, stats,
-            hash_algorithm, bs, blocksize, with_manifest,
-        )
-
-    # bounded: at most COLLECT_MAX_CHUNKS digest rows, as in
-    # hash_directory_raw
-    digest_rows = [r for df in spliced for r in df.collect()]
-    digest_rows.sort(key=lambda r: (r["path"], r["block_num"]))
     hex_digest = fold_digest(
-        hash_algorithm, listing, [bytes(r["digest"]) for r in digest_rows]
+        hash_algorithm, [e.relative_path for e in entries], [d[2] for d in digests]
     )
     hash_string = build_hash_string(hash_algorithm, blocksize, hex_digest)
     if not with_manifest:
         return hash_string, stats
-    file_stats = {e.relative_path: (e.size, mtimes[e.relative_path]) for e in files}
-    rows = [
-        (r["path"], *file_stats[r["path"]], r["block_num"], bytes(r["digest"]))
-        for r in digest_rows
-    ]
-    chunked_paths = {r["path"] for r in digest_rows}
-    rows += [
-        (p, s, m, None, None)
-        for p, (s, m) in file_stats.items()
+    file_stats = {e.relative_path: (e.size, e.mtime_ns) for e in files}
+    new_rows = [(path, *file_stats[path], num, d) for path, num, d in digests]
+    chunked_paths = {d[0] for d in digests}
+    new_rows += [
+        (p, size, mtime_ns, None, None)
+        for p, (size, mtime_ns) in file_stats.items()
         if p not in chunked_paths  # zero-chunk (empty) files keep their key
     ]
-    new_manifest = spark.createDataFrame(
-        rows, "path STRING, size BIGINT, mtime_ns BIGINT, block_num BIGINT, digest BINARY"
-    )
+    new_manifest = spark.createDataFrame(new_rows, _MANIFEST_SCHEMA)
     return hash_string, stats, _stamped(new_manifest, hash_algorithm, bs)
 
 
@@ -327,17 +262,20 @@ def _incremental_cluster(
     blocksize: str,
     with_manifest: bool,
 ) -> tuple:
-    """Cluster-side incremental re-hash for trees whose listing tripped
-    the serial-walk budget: the stat-diff is a left join on
-    (path, size, mtime_ns), the splice a union of the manifest's
-    unchanged digests with freshly-hashed changed chunks, and the fold
-    streams one sorted partition at a time — peak driver state is one
-    partition of paths/digests plus one walk frontier, never the file
-    set (r11 verdict item 4: this was the last O(files) driver
-    structure in the dirhash scale paths)."""
-    files = entries_df.where(~F.col("is_dir"))  # mtime_ns rides the
-    # walk's own scandir stat — no second metadata pass (each file's
-    # size and mtime come from the SAME stat call)
+    """The cluster route, for a listing DataFrame (module doc): the
+    stat-diff is a left join on (path, size, mtime_ns), the splice a
+    union of the manifest's unchanged digests with freshly-hashed
+    changed chunks, and the fold streams one sorted partition at a
+    time — peak driver state is one partition of paths/digests plus one
+    walk frontier, never the file set."""
+    _check_manifest_parameters(
+        # bounded: distinct over the 2 stamp columns — exactly 1 row on
+        # a well-formed manifest
+        set(map(tuple, manifest.select(*_STAMP_COLUMNS).distinct().collect())),
+        hash_algorithm,
+        bs,
+    )
+    files = entries_df.where(~F.col("is_dir"))
     keys = manifest.select(
         F.col("path").alias("relative_path"), "size", "mtime_ns"
     ).distinct()
@@ -375,29 +313,11 @@ def _incremental_cluster(
 
     h = get_hash_func(hash_algorithm)()
     fold_header_streamed(h, entries_df)
-    stat_df = joined.select(F.col("relative_path").alias("path"), "size", "mtime_ns")
-    return _drain(
-        h, digests, stat_df, stats, hash_algorithm, bs, blocksize, with_manifest
-    )
-
-
-def _drain(
-    h,
-    digests: DataFrame,
-    stat_df: DataFrame,
-    stats: dict,
-    hash_algorithm: str,
-    bs: int,
-    blocksize: str,
-    with_manifest: bool,
-) -> tuple:
-    """Shared tail of routes (b) and (c): drain the localCheckpoint'd
-    spliced ``digests`` into hasher ``h`` (header already folded) and,
-    if asked, build the refreshed manifest from the same rows."""
     fold_digests_streamed(h, digests)
     hash_string = build_hash_string(hash_algorithm, blocksize, h.hexdigest())
     if not with_manifest:
         return hash_string, stats
     # LEFT join: zero-chunk (empty) files keep their key
+    stat_df = joined.select(F.col("relative_path").alias("path"), "size", "mtime_ns")
     new_manifest = stat_df.join(digests, "path", "left")
     return hash_string, stats, _stamped(new_manifest, hash_algorithm, bs)

@@ -20,7 +20,15 @@ whose listing should not pass through the driver: ``list_entries``
 returns None and the caller lists with :func:`list_entries_df`, the
 level-parallel cluster walk whose rows stay in executor-side
 DataFrames — only one level's directory frontier ever returns to the
-driver.
+driver.  The callers' second trigger for the cluster fold, a driver
+listing with too many chunks to collect the digests of, ships the
+listing once with :func:`entries_frame` (same columns).
+
+Every walk takes a file's size and ``mtime_ns`` from ONE stat: the
+serial walk's ``os.stat``, the JVM-gateway walk's ``FileStatus``, the
+cluster walk's ``scandir`` entry.  The incremental re-hash diffs those
+fields against its manifest, so they are a consistent pre-hash snapshot
+and no consumer stats a file a second time.
 """
 
 from __future__ import annotations
@@ -80,6 +88,7 @@ class Entry:
     is_dir: bool
     size: int  # 0 for dirs
     full_path: str  # absolute/scheme path usable for reads
+    mtime_ns: int  # 0 for dirs; from the same stat as ``size``
 
 
 #: Serial-walk budget (seconds) after which list_entries gives up and
@@ -175,12 +184,13 @@ def _list_local(root: str, budget_s: float | None = None) -> list[Entry] | None:
         for d in dirnames:
             full = os.path.join(dirpath, d)
             rel = os.path.relpath(full, root).replace(os.sep, "/")
-            entries.append(Entry(rel + "/", True, 0, full))
+            entries.append(Entry(rel + "/", True, 0, full, 0))
         for f in filenames:
             full = os.path.join(dirpath, f)
             rel = os.path.relpath(full, root).replace(os.sep, "/")
-            entries.append(Entry(rel, False, os.path.getsize(full), full))
-            # getsize is one metadata round-trip per FILE — re-check the
+            st = os.stat(full)  # follows symlinks: a file link stats as its target
+            entries.append(Entry(rel, False, st.st_size, full, st.st_mtime_ns))
+            # the stat is one metadata round-trip per FILE — re-check the
             # budget inside file-heavy directories too
             if (
                 deadline is not None
@@ -211,10 +221,12 @@ def _list_hadoop(spark, root: str) -> list[Entry]:
             full = status.getPath().toString()
             rel = full[len(root_uri) + 1 :]
             if status.isDirectory():
-                entries.append(Entry(rel + "/", True, 0, full))
+                entries.append(Entry(rel + "/", True, 0, full, 0))
                 stack.append(status.getPath())
             else:
-                entries.append(Entry(rel, False, status.getLen(), full))
+                # FileStatus carries milliseconds: still monotone per rewrite
+                mtime_ns = int(status.getModificationTime()) * 1_000_000
+                entries.append(Entry(rel, False, status.getLen(), full, mtime_ns))
     return entries
 
 
@@ -226,8 +238,8 @@ def _scan_level(batches) -> Iterator:
     - classification FOLLOWS symlinks (``de.is_dir()``): a symlink to a
       directory lists as a dir entry, exactly as ``os.walk`` puts it in
       ``dirnames``;
-    - sizes FOLLOW symlinks (``de.stat().st_size`` == the serial walk's
-      ``os.path.getsize``): a symlink to a file records the target's
+    - sizes and mtimes FOLLOW symlinks (``de.stat()`` == the serial
+      walk's ``os.stat``): a symlink to a file records the target's
       byte length (a broken symlink raises OSError on both walks);
     - only REAL directories are walked into (``walk_into`` =
       ``is_dir and not is_symlink`` == ``os.walk(followlinks=False)``),
@@ -243,13 +255,7 @@ def _scan_level(batches) -> Iterator:
                     is_dir = de.is_dir()
                 except OSError:  # os.walk treats an unstatable entry as a file
                     is_dir = False
-                # one stat per file entry serves size AND mtime_ns: the
-                # incremental diff consumes mtime from the SAME stat
-                # that sized the file (a second stat pass both doubled
-                # the metadata round-trips on the latency-bound trees
-                # this route exists for, and could observe a different
-                # version of a concurrently-rewritten file than the
-                # size did)
+                # one stat per file entry serves size AND mtime_ns (module doc)
                 st = None if is_dir else de.stat()
                 rows.append(
                     (
@@ -293,7 +299,7 @@ def _level_frontier_walk(spark, local_root: str):
         yield level
 
 
-def list_entries_df(spark, root: str, with_mtime: bool = False):
+def list_entries_df(spark, root: str):
     """Cluster-side twin of :func:`list_entries` for trees whose serial
     walk tripped the budget: a DataFrame with the :class:`Entry` fields
     as columns.  The per-directory listing calls fan out across the
@@ -308,13 +314,8 @@ def list_entries_df(spark, root: str, with_mtime: bool = False):
     ``mapInPandas`` job per tree LEVEL, so a 1M-dir tree of depth 10
     costs 10 jobs of ~100k parallel listings instead of 1M serial ones).
     Rows carry the same conventions as the serial walk (parity rules in
-    :func:`_scan_level`, pinned in tests/test_dirhash_e2e.py).
-
-    ``with_mtime=True`` appends an ``mtime_ns`` column (0 for dirs) for
-    consumers that diff listings against a manifest; it rides the SAME
-    ``scandir`` stat that sized the entry (no second metadata pass over
-    a latency-bound tree, and size/mtime are a consistent snapshot under
-    concurrent rewrites).
+    :func:`_scan_level`, pinned in tests/test_dirhash_e2e.py), one
+    column per :class:`Entry` field.
 
     Local/shared-filesystem roots only: executors list with
     ``os.scandir``, which is correct wherever the tree is mounted on
@@ -343,14 +344,25 @@ def list_entries_df(spark, root: str, with_mtime: bool = False):
     # keeps a '/' root (children '/name') from silently losing
     # the first character of every relative path.
     rel = F.expr(f"substring(path, {len(local.rstrip('/')) + 2})")
-    cols = [
+    return df.select(
         F.when(F.col("is_dir"), F.concat(rel, F.lit("/"))).otherwise(rel).alias(
             "relative_path"
         ),
         F.col("is_dir"),
         F.col("size").cast("long").alias("size"),
         F.col("path").alias("full_path"),
-    ]
-    if with_mtime:
-        cols.append(F.col("mtime_ns").cast("long").alias("mtime_ns"))
-    return df.select(*cols)
+        F.col("mtime_ns").cast("long").alias("mtime_ns"),
+    )
+
+
+def entries_frame(spark, entries: list[Entry]):
+    """A driver listing shipped to the cluster as a DataFrame with
+    :func:`list_entries_df`'s columns, for the cluster fold when the
+    listing is too big to collect the digests of (``hashdir`` module
+    doc).  Checkpointed: the fold reads the listing several times
+    (count, header sort, chunk plan, stat diff), and each read of an
+    unmaterialized local relation re-runs its Python row conversion."""
+    return spark.createDataFrame(
+        [(e.relative_path, e.is_dir, e.size, e.full_path, e.mtime_ns) for e in entries],
+        "relative_path string, is_dir boolean, size long, full_path string, mtime_ns long",
+    ).localCheckpoint()

@@ -1135,10 +1135,10 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup pair graph, one canonical keeper per cluster — the step a
     real curation pipeline needs after candidate pairs (pairs alone
     can't answer "which rows do I drop": a↔b and b↔c must collapse into
-    one {{a,b,c}} cluster with a single survivor).
+    one {a,b,c} cluster with a single survivor).
 
     Edges = exact trigram-Jaccard pairs (the dedup_ngram_jaccard
-    construction) at ≥ {tau}; components via distributed
+    construction) at ≥ ``_CLUSTER_JACCARD``; components via distributed
     min-label propagation + pointer jumping (see
     :func:`_connected_components`); canonical = smallest doc_id in the
     component.  Every document appears in the output — singletons are
@@ -1148,7 +1148,7 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle computes the same fixpoint declaratively: a recursive
     CTE builds the reachability closure and takes min(reachable id) per
     doc — portable SQL, no engine-specific CC primitive.
-    """.format(tau=_CLUSTER_JACCARD)
+    """
     cat = Catalog(spark, sf_dir)
     # NOT checkpointed before symmetrizing, unlike the semdedup/neardup
     # twins: the jaccard pairs sit directly above a join exchange, so
@@ -1274,12 +1274,12 @@ def dedup_cluster_canonical_bigstar(spark: SparkSession, sf_dir: str) -> DataFra
     """dedup_cluster_canonical's exact twin computed with the
     large-star/small-star algorithm (:func:`_cc_large_small_star`)
     instead of min-label propagation — same edges (trigram Jaccard >=
-    {tau}), same oracle, same (doc_id, cluster_id, is_canonical)
+    ``_CLUSTER_JACCARD``), same oracle, same (doc_id, cluster_id, is_canonical)
     fixpoint.  The alternating star rounds converge in O(log n) on
     skewed degree distributions and long chains where label propagation
     pays per-round full-label-table work; the round-count comparison on
     the adversarial fixtures lives in tests/test_llm_ops.py.
-    """.format(tau=_CLUSTER_JACCARD)
+    """
     cat = Catalog(spark, sf_dir)
     pairs = (
         REGISTRY["dedup_ngram_jaccard"]
@@ -2561,8 +2561,8 @@ _BLOOM_POS_SQL = ", ".join(
 def dedup_bloom_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build a Bloom-filter membership manifest over the corpus's
     content hashes (docs below the id split, as in dedup_incremental):
-    K={k} probe positions per document from disjoint sha256 hex
-    slices, OR-ed into {m}-bit words.  The returned
+    K=``_BLOOM_K`` probe positions per document from disjoint sha256 hex
+    slices, OR-ed into ``_BLOOM_M``-bit words.  The returned
     (word_idx, bits) table IS the manifest — at 100 TB it replaces the
     32-byte-per-doc hash manifest with ~1.25 bits/doc/probe: a 1e12-doc
     corpus needs a ~2 TB hash manifest but only a few GB of bloom
@@ -2573,7 +2573,7 @@ def dedup_bloom_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     commutative integer math — no engine variance anywhere, so even
     the false-positive pattern is reproducible.  One shuffle on the
     word index (256 groups), map-side combined.
-    """.format(k=_BLOOM_K, m=_BLOOM_M)
+    """
     cat = Catalog(spark, sf_dir)
     pos = (
         cat.documents.where(F.col("doc_id") < _INCR_SPLIT)
@@ -2637,7 +2637,7 @@ def dedup_bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bloom math AND the operational measurement of its
     false-positive rate on this corpus (maybe_seen & !is_dup rows).
 
-    Scale shape: the manifest aggregates to {m}/32 rows and
+    Scale shape: the manifest aggregates to ``_BLOOM_M``/32 rows and
     broadcasts; the batch explodes K probe rows per doc, joins the
     broadcast manifest, and folds back to one row per doc with
     bool_and — map-side work plus one doc_id-keyed shuffle.  The
@@ -2645,7 +2645,7 @@ def dedup_bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_incremental does (32-byte key semi-probe); production runs
     bloom-first and only hash-verifies the maybe_seen survivors,
     cutting manifest I/O by the true-negative rate.
-    """.format(m=_BLOOM_M)
+    """
     cat = Catalog(spark, sf_dir)
     corpus = cat.documents.where(F.col("doc_id") < _INCR_SPLIT).select(
         F.sha2("text", 256).alias("h")

@@ -818,8 +818,8 @@ _CHUNK_W, _CHUNK_S = 32, 24  # window, stride (8-token overlap)
 )
 def text_chunk_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-window document chunking — the training-prep/RAG step
-    that turns documents into overlapping {w}-token windows with
-    stride {s} (trailing chunk keeps the remainder; stride <=
+    that turns documents into overlapping ``_CHUNK_W``-token windows with
+    stride ``_CHUNK_S`` (trailing chunk keeps the remainder; stride <=
     window guarantees full coverage).  Chunk count is the exact integer
     1 + ceil(max(n-W,0)/S), so both engines enumerate identical chunk
     ids.
@@ -828,7 +828,7 @@ def text_chunk_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequence, slice the token array per chunk.  No shuffle at all; at
     100 TB this runs at scan speed and the downstream shard write
     (pipeline_training_export's layout) keys on (doc_id, chunk_id).
-    """.format(w=_CHUNK_W, s=_CHUNK_S)
+    """
     cat = Catalog(spark, sf_dir)
     ws = F.filter(F.split("text", r"\s+"), lambda t: t != "")
     base = cat.documents.select("doc_id", ws.alias("ws"))
@@ -968,7 +968,7 @@ _WINNOW_K, _WINNOW_W = 8, 4  # k-gram chars, winnow window
 def corpus_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocabulary coverage curve: what fraction of corpus tokens (in
     integer basis points) the top-K most frequent words cover, for
-    K in {ks} — the measurement behind tokenizer vocab sizing and
+    K in ``_COVERAGE_KS`` — the measurement behind tokenizer vocab sizing and
     OOV-rate budgeting.  Rank ties break on the word itself so the
     curve is deterministic cross-engine.
 
@@ -980,7 +980,7 @@ def corpus_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimated from the frequency histogram (same outputs, map-side),
     or range-partition the rank.  The corpus itself never re-shuffles
     either way.
-    """.format(ks=_COVERAGE_KS)
+    """
     cat = Catalog(spark, sf_dir)
     tok = cat.documents.select(
         F.explode(F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != "")).alias(
@@ -1046,8 +1046,8 @@ def corpus_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing fingerprint selection (the MOSS algorithm, Schleimer
-    et al. SIGMOD 2003): rolling {k}-char polynomial hashes, the
-    minimum of every {w}-hash window selected, distinct selected
+    et al. SIGMOD 2003): rolling ``_WINNOW_K``-char polynomial hashes, the
+    minimum of every ``_WINNOW_W``-hash window selected, distinct selected
     values emitted as (doc_id, fingerprint) rows.  Winnowing
     guarantees any shared substring of length >= k + w - 1 yields at
     least one shared fingerprint while storing ~2/(w+1) of the hash
@@ -1061,7 +1061,7 @@ def text_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     values — the original's rightmost-min tie rule is a position
     property that cannot affect it.  Map-only: hash stream, window
     mins, and dedup all happen inside the row; no shuffle at all.
-    """.format(k=_WINNOW_K, w=_WINNOW_W)
+    """
     cat = Catalog(spark, sf_dir)
     t = F.trim(F.regexp_replace(F.lower("text"), r"\s+", " "))
     # CPU-heavy map work over a byte-light scan: repartition for even
@@ -1311,7 +1311,7 @@ def _bpe_train(spark: SparkSession, sf_dir: str):
 
 @query("vocab_bpe_merges", oracle=_BPE_ORACLE, tags=("text", "llm", "bpe"))
 def vocab_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE vocabulary trainer, bounded to {n} merge steps: the actual
+    """BPE vocabulary trainer, bounded to ``_BPE_STEPS`` merge steps: the actual
     byte-pair-encoding training loop (Sennrich et al., ACL 2016) run
     as a Spark program.  Each step counts adjacent symbol pairs across
     the frequency-weighted word vocabulary, picks the most frequent
@@ -1334,7 +1334,7 @@ def vocab_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids.  A production trainer runs more steps of exactly this
     loop; cost is O(steps · vocab), independent of corpus size after
     the first aggregation.
-    """.format(n=_BPE_STEPS)
+    """
     rules, _ = _bpe_train(spark, sf_dir)
     return spark.createDataFrame(
         rules, "step: int, left_sym: string, right_sym: string, merged: string, pair_count: bigint"
@@ -1520,7 +1520,7 @@ _BPE_ENCODE_ORACLE = (
 def vocab_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenize the corpus with the TRAINED BPE vocabulary — the apply
     step that closes the tokenizer loop vocab_bpe_merges opens: after
-    the {n} merge rules, every distinct word's symbol sequence IS its
+    the ``_BPE_STEPS`` merge rules, every distinct word's symbol sequence IS its
     encoding, so per-document token counts under the trained tokenizer
     are one dictionary join away.  Output: (doc_id, n_words,
     n_bpe_tokens) — the real token-budget number (vs text_token_count's
@@ -1532,9 +1532,9 @@ def vocab_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the vocabulary-sized (word → len(syms)) table + a doc_id-keyed
     count — the corpus is touched once and never shuffles on anything
     wider than doc_id.  The oracle replays the identical merge
-    iterations as unrolled CTEs and joins the final w{{N+1}} table the
+    iterations as unrolled CTEs and joins the final w{N+1} table the
     same way.
-    """.format(n=_BPE_STEPS)
+    """
     cat = Catalog(spark, sf_dir)
     _, w_final = _bpe_train(spark, sf_dir)
     enc = w_final.select("word", F.size("syms").alias("n_syms"))

@@ -94,3 +94,22 @@ def test_maintenance_compact_reduces_file_count(spark):
     compact = glob.glob(os.path.join(sink_dir("orders_compacted", sf_dir), "*.parquet"))
     assert len(frag) == 64, len(frag)
     assert len(compact) == 4, len(compact)
+
+
+def test_footer_caches_keep_no_miss(tmp_path):
+    """A missing table answers None, and that miss is not cached: once
+    the table is written, the next call in the same process sees it
+    (both the byte-size and the row-group walkers)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dirhash_spark.catalog import parquet_split_count, parquet_table_bytes
+
+    sf = str(tmp_path)
+    assert parquet_table_bytes(sf, "late") is None
+    assert parquet_split_count(sf, "late") is None
+
+    path = tmp_path / "late.parquet"
+    pq.write_table(pa.table({"x": list(range(10))}), path)
+    assert parquet_table_bytes(sf, "late") == path.stat().st_size
+    assert parquet_split_count(sf, "late") == 1

@@ -125,10 +125,11 @@ def test_manifest_flags_rejected_on_verify_path(spark, tree, capsys):
 
 
 def _force_streamed_route(monkeypatch) -> dict:
-    """Force route (b) — driver listing, digests drained through the
-    constant-memory ``fold_digests_streamed`` — by lowering the
-    chunk-count bound below any tree's chunk count; returns a counter
-    of the drains taken, so each test can prove the route ran."""
+    """Force the cluster fold on a driver listing — the listing shipped
+    to the cluster, digests drained through the constant-memory
+    ``fold_digests_streamed`` — by lowering the chunk-count bound below
+    any tree's chunk count; returns a counter of the drains taken, so
+    each test can prove the route ran."""
     from dirhash_spark.dirhash import hashdir as H
     from dirhash_spark.dirhash import incremental as I
 
@@ -146,7 +147,7 @@ def _force_streamed_route(monkeypatch) -> dict:
 
 
 def test_streamed_fold_flag_same_hash(spark, tree, capsys, monkeypatch):
-    """The streamed fold (route (b), picked by chunk count) must print
+    """The streamed fold (the cluster route, picked by chunk count) must print
     byte-identical output to the default collect-and-sort fold (it only
     changes WHERE the sort runs)."""
     assert main([tree, "--block-size", "1k"], spark=spark) == 0

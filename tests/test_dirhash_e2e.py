@@ -108,9 +108,11 @@ def manifest_rows(manifest) -> set:
 
 
 def force_route(monkeypatch, route: str) -> None:
-    """Pin the route the listing's measurements pick: "driver" (a) as
-    measured, "streamed" (b) by lowering the chunk-count bound below
-    any tree's chunk count, "cluster" (c) by a zero serial-walk budget."""
+    """Pin the route and trigger the listing's measurements pick:
+    "driver" as measured; the cluster route on a shipped driver listing,
+    "streamed", by lowering the chunk-count bound below any tree's chunk
+    count; the cluster route on a cluster listing, "cluster", by a zero
+    serial-walk budget."""
     import dirhash_spark.dirhash.hashdir as H
     import dirhash_spark.dirhash.listing as L
 
@@ -190,9 +192,9 @@ def test_e2e_other_algorithms(spark, tree, algo):
 
 def test_streamed_fold_bit_identical(spark, tree, monkeypatch):
     """The constant-memory digest drain (cluster-side orderBy +
-    toLocalIterator, route (b)) must produce the exact digest of the
-    collect-and-sort fold for every blocksize shape: multi-chunk, short
-    last block, single chunk."""
+    toLocalIterator, on a shipped driver listing) must produce the
+    exact digest of the collect-and-sort fold for every blocksize
+    shape: multi-chunk, short last block, single chunk."""
     root, files = tree
     want = hash_directory(spark, root, "sha256", "32k")
     force_route(monkeypatch, "streamed")
@@ -389,9 +391,10 @@ def test_incremental_rehash_splices_exactly(spark, tmp_path):
 
 @pytest.mark.parametrize("route", ["driver", "streamed", "cluster"])
 def test_forced_route_parity(spark, tmp_path, monkeypatch, capsys, route):
-    """Every route the listing's measurements can pick — (a) driver
-    collect fold, (b) driver listing with the digests drained from a
-    cluster sort, (c) cluster listing, diff, splice and fold — gives the
+    """Both routes, on every trigger the listing's measurements can
+    pull — the driver collect fold; the cluster fold on a driver
+    listing shipped as a DataFrame (chunk count past the bound); the
+    cluster fold on a cluster listing (walk budget tripped) — give the
     same results on every dirhash entry point: hash_directory and
     verify against the spec digest; build_chunk_manifest and the
     incremental re-hash's refreshed manifest against spec manifest
@@ -423,7 +426,7 @@ def test_forced_route_parity(spark, tmp_path, monkeypatch, capsys, route):
         write(rel, content, 1_000_000_000)
     tree, bs = str(root), 1024
 
-    calls = {"drain": 0, "cluster_walk": 0}
+    calls = {"drain": 0, "cluster_walk": 0, "shipped": 0}
 
     def count(module, attr, key):
         real = getattr(module, attr)
@@ -437,6 +440,7 @@ def test_forced_route_parity(spark, tmp_path, monkeypatch, capsys, route):
     for module in (H, I):
         count(module, "fold_digests_streamed", "drain")
         count(module, "list_entries_df", "cluster_walk")
+        count(module, "entries_frame", "shipped")
     force_route(monkeypatch, route)
 
     # full hash + verify
@@ -489,18 +493,79 @@ def test_forced_route_parity(spark, tmp_path, monkeypatch, capsys, route):
     assert main([tree, "--check", want[:-8] + "00000000"], spark=spark) == 1
     assert "MISMATCH" in capsys.readouterr().out
 
+    # "streamed" is the cluster fold on a driver listing: the listing
+    # is shipped, never walked cluster-side
     assert (calls["drain"] > 0) == (route != "driver"), calls
     assert (calls["cluster_walk"] > 0) == (route == "cluster"), calls
+    assert (calls["shipped"] > 0) == (route == "streamed"), calls
+
+
+def test_incremental_driver_route_reads_manifest_once(spark, tmp_path, monkeypatch):
+    """The driver route reads the manifest with ONE job: the stamp
+    check, the stat diff, the splice and the refreshed manifest all run
+    over the rows of one collect.  Jobs are counted by job group around
+    hash_directory_incremental(with_manifest=True) on a churned tree;
+    the read+hash stage's own collect runs under a separate group."""
+    import uuid
+
+    from dirhash_spark.dirhash import incremental as I
+
+    root = tmp_path / "tree"
+    (root / "sub").mkdir(parents=True)
+    for i in range(20):
+        (root / "sub" / f"f{i}.bin").write_bytes(bytes([i]) * (100 + 37 * i))
+    (root / "empty.txt").write_bytes(b"")
+    man_path = str(tmp_path / "manifest")
+    I.build_chunk_manifest(spark, str(root), "sha256", "1k").write.parquet(man_path)
+    (root / "sub" / "f3.bin").write_bytes(b"churned" * 50)
+    (root / "new.txt").write_bytes(b"fresh")
+
+    sc = spark.sparkContext
+    digest_group = f"digest-{uuid.uuid4().hex}"
+    real = I.digest_directory
+
+    def grouped(*a, **k):
+        df = real(*a, **k)
+        collect = df.collect
+
+        def collect_in_group():
+            outer = sc.getLocalProperty("spark.jobGroup.id")
+            sc.setJobGroup(digest_group, "read+hash")
+            try:
+                return collect()
+            finally:
+                sc.setJobGroup(outer, "incremental")
+
+        df.collect = collect_in_group
+        return df
+
+    monkeypatch.setattr(I, "digest_directory", grouped)
+    prior = spark.read.parquet(man_path)  # the reader's schema job is not the op's
+    group = f"incremental-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "incremental")
+    try:
+        h, st, new_man = I.hash_directory_incremental(
+            spark, str(root), prior, "sha256", "1k", with_manifest=True
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    assert len(tracker.getJobIdsForGroup(group)) <= 1
+    assert len(tracker.getJobIdsForGroup(digest_group)) >= 1
+    assert st == {"n_files": 22, "n_reused_files": 20, "n_rehashed_files": 2}
+    assert h == hash_directory(spark, str(root), "sha256", "1k")
+    assert manifest_rows(new_man) == spec_manifest(str(root), 1024)
 
 
 def test_incremental_streamed_cluster_route_bit_identical(
     spark, tmp_path, monkeypatch
 ):
-    """The streamed-fold route (b) and, with the serial-walk budget
-    forced to 0, the fully cluster-side incremental route (c) (stat-diff
-    join + digest-union splice + streamed fold, no O(files) driver
-    structure anywhere): hash string, reuse stats, AND the refreshed
-    manifest must all equal the driver route's on a mutated tree."""
+    """The cluster route on a shipped driver listing (chunk count past
+    the bound) and, with the serial-walk budget forced to 0, on a
+    cluster listing (stat-diff join + digest-union splice + streamed
+    fold, no O(files) driver structure anywhere): hash string, reuse
+    stats, AND the refreshed manifest must all equal the driver
+    route's on a mutated tree."""
     import time
 
     import dirhash_spark.dirhash.listing as L
@@ -529,16 +594,19 @@ def test_incremental_streamed_cluster_route_bit_identical(
         spark, str(root), man, "sha256", "1k", with_manifest=True
     )
 
-    # streamed fold on a driver-sized listing: route (b) must NOT take
-    # the cluster path when the budget passes (fixed metadata jobs
-    # would only slow a small tree, same routing as the raw fold)
+    # chunk count past the bound: the driver listing is shipped to the
+    # cluster route — never re-walked cluster-side when the budget
+    # passes (the walk's level jobs would only slow a small tree)
     def _boom(*a, **k):
-        raise AssertionError("cluster route taken on a driver-sized tree")
+        raise AssertionError("cluster walk taken on a driver-sized tree")
 
-    monkeypatch.setattr(I, "_incremental_cluster", _boom)
+    monkeypatch.setattr(I, "list_entries_df", _boom)
     monkeypatch.setattr(H, "COLLECT_MAX_CHUNKS", -1)
-    got_h, got_st = hash_directory_incremental(spark, str(root), man, "sha256", "1k")
+    got_h, got_st, got_man = hash_directory_incremental(
+        spark, str(root), man, "sha256", "1k", with_manifest=True
+    )
     assert (got_h, got_st) == (want_h, want_st)
+    assert manifest_rows(got_man) == manifest_rows(want_man)
     monkeypatch.undo()
 
     # forced cluster route: budget 0 → listing, diff, splice, and fold

@@ -25,6 +25,17 @@ def test_every_oracle_has_a_query():
     assert all(isinstance(s, str) and "SELECT" in s.upper() for s in osql.values())
 
 
+def test_every_query_has_a_doc():
+    """Every registered query carries its docstring.  A ``\"\"\"...\"\"\".format()``
+    docstring is an expression, not a docstring: ``fn.__doc__`` is then
+    None and the registry's ``doc`` silently empty."""
+    from dirhash_spark.registry import REGISTRY
+
+    E.queries()  # imports the operators, which register themselves
+    assert REGISTRY
+    assert [n for n, q in REGISTRY.items() if not q.doc.strip()] == []
+
+
 def test_correctness_window_is_derived_from_artifacts(tmp_path, monkeypatch):
     """The 50-name correctness window is a pure function of the
     committed CORRECTNESS_r*.json files: the stalest queries by newest

@@ -104,7 +104,13 @@ def test_chunk_plan_arithmetic(spark, sizes, blocksize):
     from dirhash_spark.dirhash.listing import Entry
 
     entries = [
-        Entry(relative_path=f"f{i}.bin", full_path=f"/nonexistent/f{i}.bin", size=s, is_dir=False)
+        Entry(
+            relative_path=f"f{i}.bin",
+            full_path=f"/nonexistent/f{i}.bin",
+            size=s,
+            is_dir=False,
+            mtime_ns=0,
+        )
         for i, s in enumerate(sizes)
     ]
     rows = chunk_plan(spark, entries, blocksize).collect()
@@ -657,7 +663,8 @@ def test_streamed_fold_equals_collect_fold_on_random_trees(
 ):
     """For ANY tree shape (empty files, nested dirs, unicode names, a
     1-byte blocksize making hundreds of chunks per file) the streamed
-    digest drain (route (b), forced by lowering the chunk-count bound),
+    digest drain (the cluster route on a driver listing, forced by
+    lowering the chunk-count bound),
     the collect fold, and the independent pure-Python spec digest must
     agree byte-for-byte — the cluster-sort-order and boundary-sampling
     claims hold on the whole input domain, not just the curated
@@ -755,8 +762,9 @@ def test_incremental_routes_equal_full_rehash_on_random_churn(
 ):
     """For ANY initial tree and ANY churn (upserts of new/changed/
     same-content files, a deletion), the driver-side incremental
-    splice, the streamed digest drain, AND the forced cluster route
-    (stat-diff join + digest-union splice) must all equal the full
+    splice, the cluster route on a shipped driver listing, AND the
+    cluster route on a cluster listing (stat-diff join + digest-union
+    splice) must all equal the full
     re-hash byte-for-byte — and the reuse stats must equal the churn
     computed independently from the (path, size, mtime_ns) contract.
     mtimes are SET explicitly so the expected-churn set is exact (a
