@@ -11,9 +11,22 @@ Scale note: every accessor returns a *lazy* DataFrame straight off the
 parquet scan — column pruning and predicate pushdown reach the file source
 (verify with ``df.explain``: ``PushedFilters``/``ReadSchema``).  Nothing
 here collects or caches eagerly.
+
+Identity note: every value derived from a table — its plan, row count,
+and the operators' trained quantizers and sizing rules — is memoized
+under the table's stat fingerprint (:func:`table_stats`, :data:`MEMO`),
+not under its path alone, so a corpus rewritten in place is re-read on
+its next use within the same process.
 """
 
 from __future__ import annotations
+
+import functools
+import os
+import stat
+from collections.abc import Callable
+from dataclasses import dataclass
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -38,20 +51,131 @@ TABLE_NAMES = [
 #: TIMESTAMP(MICROS)/NTZ and need no conversion.)
 _NANO_TS_COLS: dict[str, list[str]] = {"events": ["ts"]}
 
-#: (applicationId, sf_dir, name) -> the loaded lazy PLAN.  A DataFrame
-#: is an immutable logical plan, so handing every caller the same
-#: object changes nothing about what executes — each action still
-#: computes from the parquet files — but it skips the repeated
-#: footer/schema read and reader construction a fresh
-#: ``spark.read.parquet`` pays (~0.1 s per call measured at r14: a
-#: query touching 4 catalog tables spent ~0.4 s of its bench wall
-#: re-deriving byte-identical plans).  The relation's file listing is
-#: pinned at first load per session — correct for the immutable input
-#: corpora (and the snapshot semantics table formats provide at
-#: scale); paths whose CONTENTS change between reads (the scratch
-#: sinks) go through ``spark.read`` directly, never this cache.
-#: Keyed by applicationId so a plan can never outlive its session.
-_TABLE_PLAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+@dataclass(frozen=True)
+class TableStats:
+    """What one stat per part file and the parquet footers say about a
+    local table.  ``fingerprint`` is the sorted (relative path, size,
+    ``mtime_ns``) of its visible part files — the stat manifest the
+    incremental re-hash diffs (``dirhash/incremental.py``) — so a table
+    rewritten in place gets a new fingerprint and an unchanged one keeps
+    its old one.  ``rows``/``row_groups`` are None when a visible part
+    is not parquet (its count is whatever Spark's reader makes of it:
+    callers fall back to Spark); ``bytes`` counts every visible part."""
+
+    rows: int | None
+    row_groups: int | None
+    bytes: int
+    fingerprint: tuple[tuple[str, int, int], ...]
+
+
+#: THE process-global memo of corpus-derived values: (sf_dir, table,
+#: name) -> (fingerprint of ``table``, value).  A lookup under another
+#: fingerprint recomputes and replaces the entry, so a corpus rewritten
+#: in place is re-derived (row counts, trained quantizers, plans) while
+#: memory stays one entry per key.  A non-local table has no
+#: fingerprint and is memoized by path.  ``MEMO.clear()`` forces every
+#: value to be recomputed (benches timing a cold derivation).
+MEMO: dict[tuple, tuple[Any, Any]] = {}
+
+
+def _lookup(key: tuple, fingerprint: Any, compute: Callable[[], Any]) -> Any:
+    hit = MEMO.get(key)
+    if hit is not None and hit[0] == fingerprint:
+        return hit[1]
+    value = compute()
+    if value is not None:  # a miss (empty corpus, unreadable footer) is retried
+        MEMO[key] = (fingerprint, value)
+    return value
+
+
+def memoized(sf_dir: str, table: str, name: Any, compute: Callable[[], Any]) -> Any:
+    """``compute()`` memoized as ``name`` of table ``table`` in
+    ``sf_dir``, valid for as long as the table's fingerprint holds (see
+    :data:`MEMO`).  The check is one :func:`table_stats` call: a stat
+    per part file, no footer read and no Spark job."""
+    st = table_stats(sf_dir, table)
+    return _lookup((sf_dir, table, name), None if st is None else st.fingerprint, compute)
+
+
+def corpus_memo(table: str) -> Callable:
+    """Decorator form of :func:`memoized` for a ``fn(cat, *args)`` that
+    derives a value from table ``table`` of ``cat``'s corpus: the value
+    is memoized as ``fn``'s name.  Extra arguments are not part of the
+    key, so they must themselves be determined by the corpus (the
+    residual PQ books take the corpus's own trained quantizer)."""
+
+    def wrap(fn: Callable) -> Callable:
+        @functools.wraps(fn)
+        def inner(cat, *args):
+            return memoized(cat.sf_dir, table, fn.__name__, lambda: fn(cat, *args))
+
+        return inner
+
+    return wrap
+
+
+def _visible_parts(path: str) -> list[tuple[str, str, int, int]] | None:
+    """Sorted (relative path, full path, size, mtime_ns) of the parts
+    Spark's reader would read under ``path``, one stat each; None for a
+    missing or non-local table, or a directory with no visible part.
+    Visible is Spark's rule: no path component starts with ``_`` or
+    ``.`` (``_temporary`` from an aborted write, ``_SUCCESS``,
+    ``.crc``).  Every visible file is a part whatever its extension
+    (Hive/Impala write suffix-less parts)."""
+    from .dirhash.listing import list_entries, local_root
+
+    try:
+        local = local_root(path)
+        if local is None:
+            return None
+        st = os.stat(local)
+        if stat.S_ISREG(st.st_mode):
+            return [("", local, st.st_size, st.st_mtime_ns)]
+        if not stat.S_ISDIR(st.st_mode):
+            return None
+        parts = sorted(
+            (e.relative_path, e.full_path, e.size, e.mtime_ns)
+            for e in list_entries(local)
+            if not e.is_dir
+            and not any(c.startswith(("_", ".")) for c in e.relative_path.split("/"))
+        )
+    except (OSError, ValueError):
+        return None
+    return parts or None
+
+
+def _read_footers(parts: list[tuple[str, str, int, int]], fingerprint) -> TableStats:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    size = sum(p[2] for p in parts)
+    try:
+        metas = [pq.read_metadata(full) for _, full, _, _ in parts]
+    except (OSError, pa.ArrowException):
+        # a visible part that is not parquet: Spark's reader decides
+        return TableStats(None, None, size, fingerprint)
+    return TableStats(
+        sum(m.num_rows for m in metas), sum(m.num_row_groups for m in metas), size, fingerprint
+    )
+
+
+def table_stats(sf_dir: str, name: str) -> TableStats | None:
+    """Rows, row groups, bytes and fingerprint of catalog table ``name``
+    from LOCAL metadata only — no Spark job.  The corpus-derived sizing
+    rules (IVF K, PQ params, simhash rep budget, scan spread, the
+    verbatim pre-pass) need one scalar per corpus; reading it here makes
+    their "eager construction" a file stat instead of a scheduled job.
+    Footers are read only for a fingerprint not seen before.  Returns
+    None when the table is missing or not local (the remote-FS case at
+    scale): callers then fall back to Spark (:func:`table_rowcount`) or
+    assume a production-sized, splittable corpus."""
+    parts = _visible_parts(os.path.join(sf_dir, f"{name}.parquet"))
+    if parts is None:
+        return None
+    fingerprint = tuple((rel, size, mtime) for rel, _, size, mtime in parts)
+    return _lookup(
+        (sf_dir, name, "table_stats"), fingerprint, lambda: _read_footers(parts, fingerprint)
+    )
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -78,158 +202,32 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
        session.py).  The cast stays as graceful degradation for hosts
        that lock the conf.
     """
-    configure(spark)  # outside the cache: idempotent, ~3 ms, and some
-    # callers rely on the conf side effect even on a plan-cache hit
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    cached = _TABLE_PLAN_CACHE.get(key)
-    if cached is not None:
-        return cached
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    dtypes = dict(df.dtypes)
-    for col in _NANO_TS_COLS.get(name, []):
-        if dtypes.get(col) == "bigint":
-            # Integer division: nanos exceed 2^53, double math would drift.
-            df = df.withColumn(col, F.timestamp_micros(F.expr(f"{col} div 1000")))
-    ntz_cols = [c for c, t in df.dtypes if t == "timestamp_ntz"]
-    if ntz_cols:
-        df = df.withColumns({c: F.col(c).cast("timestamp") for c in ntz_cols})
-    _TABLE_PLAN_CACHE[key] = df
-    return df
+    configure(spark)  # outside the memo: idempotent, ~3 ms, and some
+    # callers rely on the conf side effect even on a memo hit
 
+    def read() -> DataFrame:
+        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        dtypes = dict(df.dtypes)
+        for col in _NANO_TS_COLS.get(name, []):
+            if dtypes.get(col) == "bigint":
+                # Integer division: nanos exceed 2^53, double math would drift.
+                df = df.withColumn(col, F.timestamp_micros(F.expr(f"{col} div 1000")))
+        ntz_cols = [c for c, t in df.dtypes if t == "timestamp_ntz"]
+        if ntz_cols:
+            df = df.withColumns({c: F.col(c).cast("timestamp") for c in ntz_cols})
+        return df
 
-def parquet_rowcount(sf_dir: str, name: str) -> int | None:
-    """Table row count from LOCAL parquet footers — pure metadata, no
-    Spark job.  The corpus-derived sizing rules (IVF K, PQ params,
-    simhash rep budget, ANN blocking) need one scalar per corpus;
-    reading it from the footer makes their "eager construction" a
-    sub-millisecond file stat instead of a scheduled job.  Returns
-    ``None`` whenever the table is not a local parquet file/dir (the
-    remote-FS case at scale) — callers fall back to a distributed
-    ``count()``, which Spark itself answers from footer statistics.
-    Row-level parity with ``count()`` is pinned in tests (the catalog
-    normalizes column TYPES on load, never row sets)."""
-    import os
-
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        import pyarrow.parquet as pq
-
-        if os.path.isfile(path):
-            return pq.ParquetFile(path).metadata.num_rows
-        if os.path.isdir(path):
-            total, n_files = 0, 0
-            for root, dirs, files in os.walk(path):
-                # mirror Spark's reader: hidden files and dirs
-                # (underscore/dot-prefixed — _temporary from aborted
-                # writes, _SUCCESS, .crc) are invisible to count(),
-                # so they must be invisible here too.  EVERY visible
-                # file counts — Spark reads part files regardless of
-                # extension (Hive/Impala write suffix-less parts), so
-                # an extension filter would silently undercount; a
-                # visible file that is NOT parquet raises here and
-                # falls through to the Spark fallback, reproducing
-                # whatever the reader itself would do with it
-                dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-                for f in files:
-                    if not f.startswith(("_", ".")):
-                        total += pq.ParquetFile(
-                            os.path.join(root, f)
-                        ).metadata.num_rows
-                        n_files += 1
-            # a directory with NO visible parquet parts is not a local
-            # parquet table — fall back to the distributed count
-            # rather than deriving every sizing rule from n=0
-            return total if n_files else None
-    except Exception:
-        return None
-    return None
-
-
-#: (sf_dir, table) -> row-group count; metadata-only, so one footer
-#: walk per corpus/table serves every spread decision.  Misses (None)
-#: are not cached: a table written later in the process must be seen.
-_SPLITS_CACHE: dict[tuple[str, str], int] = {}
-
-
-def parquet_split_count(sf_dir: str, name: str) -> int | None:
-    """Total parquet ROW GROUPS across the table's visible files — the
-    number of scan tasks the layout can actually feed, since parquet
-    cannot split below a row group (a byte-range task whose range holds
-    no row-group start reads nothing).  Same local-footer / hidden-file
-    rules as :func:`parquet_rowcount`; ``None`` for non-local layouts
-    (callers must then assume the layout is splittable — at scale it
-    is, and guessing "unsplittable" would insert a corpus-wide
-    shuffle)."""
-    key = (sf_dir, name)
-    if key in _SPLITS_CACHE:
-        return _SPLITS_CACHE[key]
-    import os
-
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    out: int | None
-    try:
-        import pyarrow.parquet as pq
-
-        if os.path.isfile(path):
-            out = pq.ParquetFile(path).metadata.num_row_groups
-        elif os.path.isdir(path):
-            total, n_files = 0, 0
-            for root, dirs, files in os.walk(path):
-                dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-                for f in files:
-                    if not f.startswith(("_", ".")):
-                        total += pq.ParquetFile(
-                            os.path.join(root, f)
-                        ).metadata.num_row_groups
-                        n_files += 1
-            out = total if n_files else None
-        else:
-            out = None
-    except Exception:
-        out = None
-    if out is not None:
-        _SPLITS_CACHE[key] = out
-    return out
-
-
-#: (sf_dir, table) -> on-disk bytes; metadata-only, cached.  Misses
-#: (None) are not cached, as in :data:`_SPLITS_CACHE`.
-_BYTES_CACHE: dict[tuple[str, str], int] = {}
-
-
-def parquet_table_bytes(sf_dir: str, name: str) -> int | None:
-    """On-disk byte size of catalog table ``name`` — the scale signal
-    for routes that trade extra map passes against shuffle volume
-    (e.g. dedup_verbatim_runs' hash pre-pass).  Same local-file /
-    hidden-file rules as :func:`parquet_split_count`; ``None`` for
-    non-local layouts (callers must then assume the corpus is
-    production-sized)."""
-    key = (sf_dir, name)
-    if key in _BYTES_CACHE:
-        return _BYTES_CACHE[key]
-    import os
-
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    out: int | None
-    try:
-        if os.path.isfile(path):
-            out = os.path.getsize(path)
-        elif os.path.isdir(path):
-            total, n_files = 0, 0
-            for root, dirs, files in os.walk(path):
-                dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-                for f in files:
-                    if not f.startswith(("_", ".")):
-                        total += os.path.getsize(os.path.join(root, f))
-                        n_files += 1
-            out = total if n_files else None
-        else:
-            out = None
-    except Exception:
-        out = None
-    if out is not None:
-        _BYTES_CACHE[key] = out
-    return out
+    # The loaded lazy PLAN is memoized per session (applicationId, so a
+    # plan never outlives its session) and table fingerprint.  A
+    # DataFrame is an immutable logical plan, so handing every caller
+    # the same object changes nothing about what executes — each action
+    # still computes from the parquet files — but it skips the repeated
+    # footer/schema read and reader construction a fresh
+    # ``spark.read.parquet`` pays (~0.1 s per call measured at r14: a
+    # query touching 4 catalog tables spent ~0.4 s of its bench wall
+    # re-deriving byte-identical plans).  A table rewritten in place has
+    # a new fingerprint, so its next load re-reads it.
+    return memoized(sf_dir, name, ("plan", spark.sparkContext.applicationId), read)
 
 
 def spread_for_compute(df: DataFrame, sf_dir: str, name: str) -> DataFrame:
@@ -250,28 +248,30 @@ def spread_for_compute(df: DataFrame, sf_dir: str, name: str) -> DataFrame:
       would have paid a full corpus-wide shuffle of raw text for
       nothing.
 
-    The decision reads local parquet footers only (cached, no Spark
-    job); unknown/non-local layouts are assumed splittable."""
+    The decision reads local parquet footers only (:func:`table_stats`,
+    no Spark job); unknown/non-local layouts are assumed splittable."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
-    splits = parquet_split_count(sf_dir, name)
-    if splits is not None and splits < max(2, target // 2):
+    st = table_stats(sf_dir, name)
+    if st is not None and st.row_groups is not None and st.row_groups < max(2, target // 2):
         return df.repartition(target)
     return df
 
 
 def table_rowcount(spark: SparkSession, sf_dir: str, name: str) -> int:
     """Row count of catalog table ``name``: parquet footers when local
-    (:func:`parquet_rowcount`), the distributed ``count()`` otherwise.
-    THE single fallback rule — the per-module caches in
-    operators/similarity.py (embeddings) and operators/dedup.py
-    (documents) both delegate here so the footer/count semantics
-    cannot diverge between them.  Takes the session, not a DataFrame:
-    both paths must count the same relation (the RAW table), so the
-    fallback loads it itself rather than trusting a caller-passed
-    frame that the footer path would ignore."""
-    n = parquet_rowcount(sf_dir, name)
-    return load_table(spark, sf_dir, name).count() if n is None else n
+    (:func:`table_stats`), otherwise the distributed ``count()``,
+    memoized like any corpus-derived value (:func:`memoized`).  THE
+    single fallback rule — the corpus sizes in operators/similarity.py
+    (embeddings) and operators/dedup.py (documents) both read it, so
+    the footer/count semantics cannot diverge between them.  Takes the
+    session, not a DataFrame: both paths must count the same relation
+    (the RAW table), so the fallback loads it itself rather than
+    trusting a caller-passed frame that the footer path would ignore."""
+    st = table_stats(sf_dir, name)
+    if st is not None and st.rows is not None:
+        return st.rows
+    return memoized(sf_dir, name, "count", lambda: load_table(spark, sf_dir, name).count())
 
 
 def sink_dir(name: str, sf_dir: str) -> str:
@@ -285,7 +285,6 @@ def sink_dir(name: str, sf_dir: str) -> str:
     from the fixture tables), so the residual race is a rare transient
     read error, never wrong results."""
     import hashlib
-    import os
     import tempfile
 
     token = hashlib.sha256(sf_dir.encode()).hexdigest()[:12]

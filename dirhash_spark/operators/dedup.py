@@ -31,7 +31,7 @@ from __future__ import annotations
 
 import os
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -46,7 +46,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..catalog import Catalog, spread_for_compute
+from ..catalog import Catalog, spread_for_compute, table_rowcount, table_stats
 from ..registry import REGISTRY, query
 from .text import gram_start_indices
 
@@ -142,22 +142,13 @@ _REP_WINDOW = 64
 #: birthday-loaded bucket would build ~10M structs in one value).
 _WINDOW_CHUNK = 512
 
-#: documents-count per sf_dir — ONE count() per corpus, shared by the
-#: parameter-derivation rules below (same pattern as the embeddings
-#: count cache in operators/similarity.py).
-_N_DOCS_CACHE: dict[str, int] = {}
-
 
 def _corpus_n_docs(cat) -> int:
-    n = _N_DOCS_CACHE.get(cat.sf_dir)
-    if n is None:
-        # local corpora answer from parquet footers (no Spark job);
-        # non-local layouts fall back to the distributed count
-        from ..catalog import table_rowcount
-
-        n = table_rowcount(cat.spark, cat.sf_dir, "documents")
-        _N_DOCS_CACHE[cat.sf_dir] = n
-    return n
+    """Documents corpus size for the parameter-derivation rules below:
+    parquet footers for local corpora, one memoized ``count()``
+    otherwise (the same rule as the embeddings size in
+    operators/similarity.py)."""
+    return table_rowcount(cat.spark, cat.sf_dir, "documents")
 
 
 def _rep_expand_cap(n_docs: int) -> int:
@@ -531,8 +522,8 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     component connectivity is what the e2e consumers use.
 
     NOTE the derived budget makes construction EAGER: building this
-    query reads one cached corpus row count per sf_dir (local parquet
-    footers where possible, a distributed count otherwise — same
+    query reads one memoized corpus row count per corpus version (local
+    parquet footers where possible, a distributed count otherwise — same
     contract as the ANN index builders in operators/similarity.py;
     see SURVEY §2.C's eager-construction note).
 
@@ -924,6 +915,28 @@ _CC_MAX_ITERS = 20
 _CC_DRIVER_EDGE_BOUND = 1 << 16
 
 
+def _union_by_min(pairs) -> Callable:
+    """Union-find over ``(a, b)`` pairs with path compression and
+    union-by-min: returns ``find``, which maps every element to the
+    minimum member of its component — min-label propagation's fixpoint
+    exactly, so both driver routes below match the distributed one."""
+    parent: dict = {}
+
+    def find(x):
+        r = x
+        while parent.get(r, r) != r:
+            r = parent[r]
+        while parent.get(x, x) != x:
+            parent[x], x = r, parent[x]
+        return r
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return find
+
+
 def _cc_driver_unionfind(
     nodes: DataFrame, edges: DataFrame, labels_are_ids: bool = False
 ) -> DataFrame:
@@ -960,20 +973,7 @@ def _cc_driver_unionfind(
     checkpoint.
     """
     rows = edges.select("u", "v").collect()  # bounded: router-counted
-    parent: dict = {}
-
-    def find(x):
-        r = x
-        while parent.get(r, r) != r:
-            r = parent[r]
-        while parent.get(x, x) != x:
-            parent[x], x = r, parent[x]
-        return r
-
-    for e in rows:
-        ru, rv = find(e["u"]), find(e["v"])
-        if ru != rv:
-            parent[max(ru, rv)] = min(ru, rv)
+    find = _union_by_min(rows)
     endpoints = {e["u"] for e in rows} | {e["v"] for e in rows}
     t = dict(nodes.dtypes)["doc_id"]
     spark = nodes.sparkSession
@@ -2391,22 +2391,7 @@ def _neardup_cluster(spark: SparkSession, sf_dir: str, include_lsh: bool) -> Dat
     # before; route parity is pinned by test_neardup_cluster_route_parity.
     if int(ver_obs.get["n"]) * 2 <= _CC_DRIVER_EDGE_BOUND:
         pairs = ver.collect()  # bounded: router-counted
-        parent: dict = {}
-
-        def find(x):
-            r = x
-            while parent.get(r, r) != r:
-                r = parent[r]
-            while parent.get(x, x) != x:
-                parent[x], x = r, parent[x]
-            return r
-
-        for p in pairs:
-            ru, rv = find(p["doc_a"]), find(p["doc_b"])
-            if ru != rv:
-                # union-by-min keeps every root the component minimum,
-                # matching min-label propagation's fixpoint exactly
-                parent[max(ru, rv)] = min(ru, rv)
+        find = _union_by_min((p["doc_a"], p["doc_b"]) for p in pairs)
         endpoints = {p["doc_a"] for p in pairs} | {p["doc_b"] for p in pairs}
         t = dict(ver.dtypes)["doc_a"]
         return spark.createDataFrame(
@@ -2844,8 +2829,6 @@ def dedup_verbatim_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     window, one pair rollup — linear in postings + matched windows,
     never all-pairs.
     """
-    from ..catalog import parquet_table_bytes
-
     cat = Catalog(spark, sf_dir)
 
     # token array pinned behind the exchange: the window lambda
@@ -2863,8 +2846,8 @@ def dedup_verbatim_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "documents",
         )
 
-    tbl_bytes = parquet_table_bytes(cat.sf_dir, "documents")
-    if tbl_bytes is not None and tbl_bytes < _VERBATIM_PREPASS_MIN_BYTES:
+    st = table_stats(cat.sf_dir, "documents")
+    if st is not None and st.bytes < _VERBATIM_PREPASS_MIN_BYTES:
         # Small local corpus: window strings cost less to shuffle than
         # a second tokenization scan — single-pass definitional form.
         win_t = "ARRAY<STRUCT<pos: INT, win: STRING>>"

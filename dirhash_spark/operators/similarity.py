@@ -26,7 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import Catalog
+from ..catalog import Catalog, corpus_memo, table_rowcount, table_stats
 from ..registry import query
 
 _TOP_K = 10
@@ -204,42 +204,17 @@ def _nprobe_for(k: int) -> int:
     return min(k, max(_IVF_NPROBE, -(-k * _IVF_NPROBE // 16)))
 
 
-#: Corpus size per sf_dir (ONE embeddings count() per corpus, shared by
-#: every parameter-derivation rule — IVF K and the PQ codebook/re-rank
-#: sizing below all read this).
-_N_CACHE: dict[str, int] = {}
-
-#: Derived K per sf_dir (cached separately from _N_CACHE so benches can
-#: PIN a K without faking a corpus size — scripts/ann_scale_bench.py's
-#: fixed16 mode).
-_IVF_K_CACHE: dict[str, int] = {}
-
-
 def _corpus_n(cat: Catalog) -> int:
-    n = _N_CACHE.get(cat.sf_dir)
-    if n is None:
-        # local corpora answer from parquet footers (no Spark job);
-        # non-local layouts fall back to the distributed count
-        from ..catalog import table_rowcount
-
-        n = table_rowcount(cat.spark, cat.sf_dir, "embeddings")
-        _N_CACHE[cat.sf_dir] = n
-    return n
+    """Embeddings corpus size, shared by every parameter-derivation rule
+    (IVF K and the PQ codebook/re-rank sizing below): parquet footers
+    for local corpora, one memoized ``count()`` otherwise."""
+    return table_rowcount(cat.spark, cat.sf_dir, "embeddings")
 
 
 def _corpus_ivf_k(cat: Catalog) -> int:
-    k = _IVF_K_CACHE.get(cat.sf_dir)
-    if k is None:
-        k = _ivf_k(_corpus_n(cat))
-        _IVF_K_CACHE[cat.sf_dir] = k
-    return k
-
-#: Trained coarse quantizers, keyed by sf_dir.  Training is a bounded
-#: O(sample) driver-side job; caching it makes repeated queries reuse
-#: one artifact instead of re-reading the sample per invocation — the
-#: in-process stand-in for the persisted model a production deployment
-#: would load (the on-disk form is the ANN index, ``_ann_index_path``).
-_CENTROID_CACHE: dict[str, np.ndarray] = {}
+    """Derived K for the corpus (benches pin a K by patching this
+    accessor — scripts/ann_scale_bench.py's fixed16 mode)."""
+    return _ivf_k(_corpus_n(cat))
 
 
 def _train_sample_order(df):
@@ -271,6 +246,7 @@ def _assign_chunked(x: np.ndarray, cents: np.ndarray) -> np.ndarray:
     return out
 
 
+@corpus_memo("embeddings")
 def _train_centroids(cat: Catalog) -> np.ndarray | None:
     """Driver-side k-means on a bounded, deterministically-ordered
     sample — the coarse-quantizer training step.  The sample SCALES
@@ -281,11 +257,11 @@ def _train_centroids(cat: Catalog) -> np.ndarray | None:
     at the K cap it silently CLAMPED K to the sample size.  Training
     cost is O(sample·K·dim·iters) on the driver, independent of corpus
     size; the distributed trainer (``sim_ann_ivf_distfit``) is the
-    path when even that sample can't represent the corpus.  Cached per
-    sf_dir: train once, reuse for every query in the process."""
-    cached = _CENTROID_CACHE.get(cat.sf_dir)
-    if cached is not None:
-        return cached
+    path when even that sample can't represent the corpus.  Memoized
+    on the corpus fingerprint: train once per corpus version, reuse
+    for every query in the process — the in-process stand-in for the
+    persisted model a production deployment would load (the on-disk
+    form is the ANN index, ``_ann_index_path``)."""
     sample = (
         _train_sample_order(cat.embeddings)
         .limit(max(_IVF_SAMPLE, 32 * _corpus_ivf_k(cat)))
@@ -304,16 +280,11 @@ def _train_centroids(cat: Catalog) -> np.ndarray | None:
         for k in range(n_k):
             if (assign == k).any():
                 cents[k] = x[assign == k].mean(0)
-    _CENTROID_CACHE[cat.sf_dir] = cents
     return cents
 
 
-#: Distributed-trained coarse quantizers, keyed by sf_dir (twin of
-#: _CENTROID_CACHE for the dataflow trainer).
-_CENTROID_CACHE_DIST: dict[str, np.ndarray] = {}
-
-
-def _train_centroids_distributed(cat: Catalog, iters: int = _IVF_ITERS) -> np.ndarray | None:
+@corpus_memo("embeddings")
+def _train_centroids_distributed(cat: Catalog) -> np.ndarray | None:
     """Dataflow twin of the sampled trainer: Lloyd's k-means where every
     pass runs over the FULL corpus as a Spark aggregation — the answer
     to "what if the training sample can't represent 100 TB".
@@ -331,11 +302,9 @@ def _train_centroids_distributed(cat: Catalog, iters: int = _IVF_ITERS) -> np.nd
     trainer.
 
     tests/test_llm_ops.py asserts IVF recall with these centroids is
-    within tolerance of the sampled trainer's.
+    within tolerance of the sampled trainer's.  Memoized on the corpus
+    fingerprint, like :func:`_train_centroids`.
     """
-    cached = _CENTROID_CACHE_DIST.get(cat.sf_dir)
-    if cached is not None:
-        return cached
     emb = cat.embeddings.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
@@ -350,7 +319,7 @@ def _train_centroids_distributed(cat: Catalog, iters: int = _IVF_ITERS) -> np.nd
         return None
     cents = np.asarray(init, dtype=np.float64)
     dim = cents.shape[1]
-    for _ in range(iters):
+    for _ in range(_IVF_ITERS):
         recentered = (
             emb.select(_nearest_centroid(F.col("v"), cents).alias("cid"), "v")
             .groupBy("cid")
@@ -359,7 +328,6 @@ def _train_centroids_distributed(cat: Catalog, iters: int = _IVF_ITERS) -> np.nd
         )
         for r in recentered:
             cents[r["cid"]] = [r[f"c{i}"] for i in range(dim)]
-    _CENTROID_CACHE_DIST[cat.sf_dir] = cents
     return cents
 
 
@@ -462,7 +430,7 @@ def _empty_topk(spark: SparkSession) -> DataFrame:
 @query("sim_ann_ivf", oracle=None, tags=("similarity", "ann", "ivf"))
 def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN top-k via IVF coarse quantization: k-means centroids (trained
-    once per sf_dir on a bounded sample, cached), JVM-side cluster
+    once per corpus version on a bounded sample, memoized), JVM-side cluster
     assignment, search only the probe's nprobe nearest clusters, exact
     cosine re-rank inside.
 
@@ -559,9 +527,11 @@ def _ann_index_path(sf_dir: str) -> str:
     never reuse each other's index — a basename collision would
     silently return corpus A's neighbors for corpus B's queries (the
     readable basename stays in the key for humans; the hash carries
-    identity).  In-place DATA edits under the same path still require
-    dropping the index, exactly as for any ingest-time index; the
-    version prefix invalidates on CODE changes only.
+    identity).  A short hash of the embeddings fingerprint
+    (:func:`~dirhash_spark.catalog.table_stats`) sits beside it, so a
+    corpus rewritten in place gets a fresh index home and the stale
+    index is never read — no manual drop needed; the version prefix
+    invalidates on CODE changes.
     """
     import hashlib
     import os
@@ -571,6 +541,9 @@ def _ann_index_path(sf_dir: str) -> str:
     tag = (os.path.basename(resolved) or "default") + "-" + hashlib.sha256(
         resolved.encode("utf-8")
     ).hexdigest()[:12]
+    st = table_stats(sf_dir, "embeddings")
+    if st is not None:
+        tag += "-" + hashlib.sha256(repr(st.fingerprint).encode("utf-8")).hexdigest()[:8]
     return os.path.join(
         tempfile.gettempdir(), "dirhash_spark_ann_index", f"v{_ANN_INDEX_VERSION}", tag
     )
@@ -1031,38 +1004,26 @@ def _pq_rerank(n_vectors: int) -> int:
     return min(_PQ_RERANK_MAX, max(_PQ_RERANK_MIN, -(-n_vectors // _PQ_TARGET)))
 
 
-#: Derived (codebook K, re-rank depth) per sf_dir; pinnable by benches
-#: exactly like _IVF_K_CACHE.
-_PQ_PARAM_CACHE: dict[str, tuple[int, int]] = {}
-
-
 def _corpus_pq_params(cat: Catalog) -> tuple[int, int]:
-    p = _PQ_PARAM_CACHE.get(cat.sf_dir)
-    if p is None:
-        n = _corpus_n(cat)
-        p = (_pq_k(n), _pq_rerank(n))
-        _PQ_PARAM_CACHE[cat.sf_dir] = p
-    return p
+    """Derived (codebook K, re-rank depth) for the corpus; benches and
+    tests pin them by patching this accessor, like :func:`_corpus_ivf_k`."""
+    n = _corpus_n(cat)
+    return _pq_k(n), _pq_rerank(n)
 
 
-#: Trained sub-codebooks keyed by sf_dir, shape (_PQ_M, k_pq, D/_PQ_M).
-_PQ_CACHE: dict[str, np.ndarray] = {}
-
-
+@corpus_memo("embeddings")
 def _train_pq_codebooks(cat: Catalog) -> np.ndarray | None:
     """Per-subspace k-means codebooks (Jégou/Douze/Schmid, "Product
     quantization for nearest neighbor search", TPAMI 2011) on a bounded
     deterministic sample — O(sample) driver-side work at ANY corpus
-    size, cached per sf_dir.  The sample grows with the derived
+    size, memoized on the corpus fingerprint.  The sample grows with the derived
     codebook (16 points per centroid, floor _IVF_SAMPLE) so a 256-
     centroid book never trains on fewer points than centroids; at the
     fixture sizes the derived K is _PQ_K_MIN and the sample covers the
     whole corpus (membership identical to the fixed-constant era; the
     hash-ordered sampling changes only row ORDER, and the pinned
-    recall floors hold on the retrained books)."""
-    cached = _PQ_CACHE.get(cat.sf_dir)
-    if cached is not None:
-        return cached
+    recall floors hold on the retrained books).  Books have shape
+    (_PQ_M, k_pq, D/_PQ_M)."""
     k_pq, _ = _corpus_pq_params(cat)
     sample = (
         _train_sample_order(cat.embeddings)
@@ -1073,9 +1034,7 @@ def _train_pq_codebooks(cat: Catalog) -> np.ndarray | None:
     )
     if not sample:  # empty corpus: nothing to encode (callers emit empty)
         return None
-    books = _fit_pq_books(np.asarray(sample, dtype=np.float64), k_pq)
-    _PQ_CACHE[cat.sf_dir] = books
-    return books
+    return _fit_pq_books(np.asarray(sample, dtype=np.float64), k_pq)
 
 
 def _fit_pq_books(x: np.ndarray, k_pq: int) -> np.ndarray:
@@ -1099,12 +1058,7 @@ def _fit_pq_books(x: np.ndarray, k_pq: int) -> np.ndarray:
     return books
 
 
-#: Residual sub-codebooks for the v7 index (trained on v − nearest
-#: coarse centroid), keyed by sf_dir — sibling of _PQ_CACHE, which
-#: keeps the RAW-vector books ``sim_ann_pq`` (no coarse stage) uses.
-_PQR_CACHE: dict[str, np.ndarray] = {}
-
-
+@corpus_memo("embeddings")
 def _train_pq_residual_codebooks(cat: Catalog, cents: np.ndarray) -> np.ndarray | None:
     """Residual PQ codebooks (Jégou et al., TPAMI 2011 §IV-A — the
     FAISS ``IVFx,PQy`` layout): quantize ``v − centroid(v)`` instead of
@@ -1116,10 +1070,10 @@ def _train_pq_residual_codebooks(cat: Catalog, cents: np.ndarray) -> np.ndarray 
     centroid, so the books spend all their resolution on the
     within-list displacement, exactly the scale the blob case needs.
     Same bounded deterministic sample and per-subspace k-means as the
-    raw trainer (:func:`_fit_pq_books`)."""
-    cached = _PQR_CACHE.get(cat.sf_dir)
-    if cached is not None:
-        return cached
+    raw trainer (:func:`_fit_pq_books`).  Kept apart from the RAW-vector
+    books ``sim_ann_pq`` (no coarse stage) uses; ``cents`` is the
+    corpus's own memoized quantizer, so the corpus fingerprint keys
+    these books too."""
     k_pq, _ = _corpus_pq_params(cat)
     sample = (
         _train_sample_order(cat.embeddings)
@@ -1131,9 +1085,7 @@ def _train_pq_residual_codebooks(cat: Catalog, cents: np.ndarray) -> np.ndarray 
     if not sample:
         return None
     x = np.asarray(sample, dtype=np.float64)
-    books = _fit_pq_books(x - cents[_assign_chunked(x, cents)], k_pq)
-    _PQR_CACHE[cat.sf_dir] = books
-    return books
+    return _fit_pq_books(x - cents[_assign_chunked(x, cents)], k_pq)
 
 
 def _pq_codes_nrm(v: np.ndarray, books: np.ndarray):

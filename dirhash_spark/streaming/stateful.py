@@ -26,7 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import Catalog, sink_dir
+from ..catalog import Catalog, memoized, sink_dir, table_stats
 from ..operators.dedup import BLOOM_PROBE_ORACLE as _BLOOM_PROBE_ORACLE
 from ..registry import query
 
@@ -781,7 +781,8 @@ def stage_session_replay(
     stages wave 0, runs a query to completion, then stages waves 1-2
     and RESTARTS from the same checkpoint, so arrival-while-stopped is
     part of the replay.  Staging is incremental: existing files keep
-    their stamps.
+    their stamps (the local route restages every wave once the events
+    table has been rewritten in place).
 
     Local corpora take a DRIVER-side pyarrow route (r14): the staged
     payload is two columns of the events table (~1.6 MB at sf0.1), so
@@ -819,7 +820,12 @@ def _stage_replay_local(sf_dir: str, src: str, waves: tuple[int, ...]) -> bool:
     ``src`` containing only THIS route's wave files (Spark-route part
     names are UUIDs; mixing routes would stage duplicate events).
     Waves whose file already exists are skipped — staging is
-    incremental, existing files keep their mtime stamps."""
+    incremental, existing files keep their mtime stamps — as long as
+    the events table is the one they were cut from: the wave mtimes are
+    synthetic replay stamps, so the table's fingerprint
+    (:func:`~dirhash_spark.catalog.table_stats`) is kept in a hidden
+    ``_events_fingerprint`` sidecar in ``src``, and a table rewritten
+    since drops every staged wave before the requested ones are cut."""
     import datetime
     import time as _time
 
@@ -830,7 +836,8 @@ def _stage_replay_local(sf_dir: str, src: str, waves: tuple[int, ...]) -> bool:
     if _time.timezone != 0 or _time.daylight != 0:
         return False
     path = os.path.join(sf_dir, "events.parquet")
-    if not os.path.isfile(path):
+    st = table_stats(sf_dir, "events")
+    if st is None or not os.path.isfile(path):
         return False
     ours = {"wave0-part.parquet", "wave1-part.parquet", "wave2-sentinel.parquet"}
     if os.path.isdir(src):
@@ -879,6 +886,17 @@ def _stage_replay_local(sf_dir: str, src: str, waves: tuple[int, ...]) -> bool:
         os.utime(p, (tm, tm))
 
     os.makedirs(src, exist_ok=True)
+    sidecar = os.path.join(src, "_events_fingerprint")
+    stamp = repr(st.fingerprint)
+    try:
+        with open(sidecar) as f:
+            fresh = f.read() == stamp
+    except FileNotFoundError:
+        fresh = False
+    if not fresh:  # waves cut from another version of the table
+        for f in ours:
+            if os.path.exists(os.path.join(src, f)):
+                os.remove(os.path.join(src, f))
     masks = {0: us < mid_us, 1: us >= mid_us}
     for order in (0, 1):
         if order not in waves:
@@ -912,6 +930,8 @@ def _stage_replay_local(sf_dir: str, src: str, waves: tuple[int, ...]) -> bool:
             p,
         )
         _stamp(p, 2)
+    with open(sidecar, "w") as f:
+        f.write(stamp)
     return True
 
 
@@ -1021,10 +1041,6 @@ def stage_replay_from(
 #: A/B measured optimal on the staged corpus (see run_session_flush).
 _STATE_ROWS_PER_PARTITION = 256
 
-#: sf_dir -> derived width (the estimate scan is one column-pruned
-#: pass over events; same per-corpus memoization as the IVF trainers).
-_STATE_WIDTH_CACHE: dict[str, int] = {}
-
 
 def _width_for_sessions(open_sessions: int) -> int:
     """Power-of-two width for an open-session estimate: the smallest
@@ -1043,18 +1059,19 @@ def _session_state_width(spark: SparkSession, sf_dir: str) -> int:
     """Derive the session stream's state-store width from the corpus:
     open-session cardinality ≈ distinct users, estimated with
     ``approx_count_distinct`` (a sketch is plenty for a power-of-two
-    sizing decision), sized by :func:`_width_for_sessions`."""
-    cached = _STATE_WIDTH_CACHE.get(sf_dir)
-    if cached is not None:
-        return cached
-    users = (
-        Catalog(spark, sf_dir)
-        .events.agg(F.approx_count_distinct("user_id"))
-        .first()[0]
-    )
-    width = _width_for_sessions(users)
-    _STATE_WIDTH_CACHE[sf_dir] = width
-    return width
+    sizing decision), sized by :func:`_width_for_sessions`.  The
+    estimate scan is one column-pruned pass over events, memoized on
+    the events fingerprint like the IVF trainers."""
+
+    def width() -> int:
+        users = (
+            Catalog(spark, sf_dir)
+            .events.agg(F.approx_count_distinct("user_id"))
+            .first()[0]
+        )
+        return _width_for_sessions(users)
+
+    return memoized(sf_dir, "events", "state_width", width)
 
 
 def run_session_flush(

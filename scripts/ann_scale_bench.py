@@ -108,6 +108,7 @@ def skew_main() -> int:
     """IVF list-size skew measurement (see module docstring)."""
     from pyspark.sql import functions as F
 
+    from dirhash_spark.catalog import Catalog
     from dirhash_spark.operators import similarity as S
     from dirhash_spark.operators.similarity import build_ann_index
     from dirhash_spark.registry import all_queries
@@ -122,15 +123,12 @@ def skew_main() -> int:
             sf_dir = os.path.join(tempfile.gettempdir(), f"ann_skew_{kind}_{probe}")
             shutil.rmtree(sf_dir, True)
             _write_skew_corpus(n, sf_dir, kind, hot_probe=(probe == "hot"))
-            for cache in (S._N_CACHE, S._IVF_K_CACHE, S._PQ_PARAM_CACHE,
-                          S._PQ_CACHE, S._PQR_CACHE, S._CENTROID_CACHE, S._CENTROID_CACHE_DIST):
-                cache.pop(sf_dir, None)
             shutil.rmtree(S._ann_index_path(sf_dir), True)
 
             t0 = time.perf_counter()
             idx = build_ann_index(spark, sf_dir)
             build_s = round(time.perf_counter() - t0, 2)
-            k = len(S._CENTROID_CACHE[sf_dir])
+            k = len(S._train_centroids(Catalog(spark, sf_dir)))
 
             # v6 duplicate-grouped index: stored rows per list bound the
             # per-query SCAN cost (one row per distinct embedding);
@@ -170,9 +168,6 @@ def skew_main() -> int:
             print(f"# {kind}/{probe}: {row}", file=sys.stderr)
             shutil.rmtree(S._ann_index_path(sf_dir), True)
             shutil.rmtree(sf_dir, True)
-            for cache in (S._N_CACHE, S._IVF_K_CACHE, S._PQ_PARAM_CACHE,
-                          S._PQ_CACHE, S._PQR_CACHE, S._CENTROID_CACHE, S._CENTROID_CACHE_DIST):
-                cache.pop(sf_dir, None)
     print(json.dumps({"metric": "IVF list-size skew (30% hot mass, 20k vectors)",
                       "corpora": out}))
     spark.stop()
@@ -180,6 +175,7 @@ def skew_main() -> int:
 
 
 def main() -> int:
+    from dirhash_spark.catalog import MEMO, Catalog
     from dirhash_spark.operators.similarity import build_ann_index
     from dirhash_spark.registry import all_queries
     from dirhash_spark.session import get_spark
@@ -188,6 +184,7 @@ def main() -> int:
 
     spark = get_spark("ann_scale_bench")
     qs = all_queries()
+    derived_k, derived_pq = S._corpus_ivf_k, S._corpus_pq_params
     variants = ["sim_topk_cosine", "sim_ann_ivf_indexed", "sim_ann_ivfpq"]
     summary: dict[str, dict] = {}
 
@@ -208,28 +205,25 @@ def main() -> int:
             _write_corpus(n, sf_dir)
 
         for mode in ("fixed16", "derived"):
-            # reset per-corpus state: N/K/PQ caches, trained
-            # quantizers, and the on-disk index (its path is keyed by
-            # sf_dir, so the two modes would otherwise read each
-            # other's artifact)
-            S._N_CACHE.pop(sf_dir, None)
-            S._IVF_K_CACHE.pop(sf_dir, None)
-            S._PQ_PARAM_CACHE.pop(sf_dir, None)
-            S._PQ_CACHE.pop(sf_dir, None)
-            S._CENTROID_CACHE.pop(sf_dir, None)
-            S._CENTROID_CACHE_DIST.pop(sf_dir, None)
+            # reset per-corpus state: trained quantizers and codebooks,
+            # and the on-disk index (its path is keyed by the corpus,
+            # so the two modes would otherwise read each other's
+            # artifact)
+            MEMO.clear()
             shutil.rmtree(S._ann_index_path(sf_dir), True)
-            if mode == "fixed16":
-                # pin the pruning-lever premise: the pre-derivation
-                # constants (IVF K=16, PQ 32 centroids / 100 re-rank)
-                S._IVF_K_CACHE[sf_dir] = 16
-                S._PQ_PARAM_CACHE[sf_dir] = (32, 100)
+            # fixed16 pins the pruning-lever premise: the pre-derivation
+            # constants (IVF K=16, PQ 32 centroids / 100 re-rank)
+            S._corpus_ivf_k = (lambda cat: 16) if mode == "fixed16" else derived_k
+            S._corpus_pq_params = (
+                (lambda cat: (32, 100)) if mode == "fixed16" else derived_pq
+            )
 
             t0 = time.perf_counter()
             assert build_ann_index(spark, sf_dir) is not None  # non-empty corpora
             build_s = round(time.perf_counter() - t0, 2)
 
-            row = {"build_index_s": build_s, "K": len(S._CENTROID_CACHE[sf_dir])}
+            k = len(S._train_centroids(Catalog(spark, sf_dir)))
+            row = {"build_index_s": build_s, "K": k}
             exact: set[int] = set()
             for name in variants:
                 qs[name].fn(spark, sf_dir).collect()  # warm
@@ -256,8 +250,6 @@ def main() -> int:
             S._ann_index_path(os.path.join(tempfile.gettempdir(), f"ann_scale_{n}")),
             True,
         )
-        for cache in (S._N_CACHE, S._IVF_K_CACHE, S._PQ_PARAM_CACHE, S._PQ_CACHE, S._PQR_CACHE):
-            cache.pop(os.path.join(tempfile.gettempdir(), f"ann_scale_{n}"), None)
     spark.stop()
     return 0
 

@@ -168,9 +168,6 @@ def check_zero_norm(spark) -> bool:
         return True
     finally:
         shutil.rmtree(S._ann_index_path(tmp), True)
-        for cache in (S._N_CACHE, S._IVF_K_CACHE, S._PQ_PARAM_CACHE,
-                      S._PQ_CACHE, S._PQR_CACHE, S._CENTROID_CACHE, S._CENTROID_CACHE_DIST):
-            cache.pop(tmp, None)
         shutil.rmtree(tmp, True)
 
 
@@ -185,6 +182,7 @@ def check_star_cap(spark) -> dict:
     qs = all_queries()
     out: dict = {}
     saved_cap = dedup_mod._BUCKET_FULL_EXPAND_CAP
+    saved_n_docs = dedup_mod._corpus_n_docs
     n = 60
     tmp = tempfile.mkdtemp(prefix="rows_only_gate_star_")
     try:
@@ -244,7 +242,7 @@ def check_star_cap(spark) -> dict:
         fps = window_bucket_fps()
         planted_w = spark.createDataFrame(fps, "doc_id long, fp long")
         dedup_mod._BUCKET_FULL_EXPAND_CAP = 8  # < 19 docs, floors the budget
-        dedup_mod._N_DOCS_CACHE[tmp] = 1
+        dedup_mod._corpus_n_docs = lambda cat: 1
         try:
             dedup_mod._simhash_fingerprints = lambda cat: planted_w
             rows = qs["dedup_simhash"].fn(spark, tmp).collect()
@@ -261,7 +259,7 @@ def check_star_cap(spark) -> dict:
         # test_simhash_derived_cap_keeps_exact_pairs_past_old_cliff)
         fps = cliff_bucket_fps()
         planted_c = spark.createDataFrame(fps, "doc_id long, fp long")
-        dedup_mod._N_DOCS_CACHE[tmp] = 50_000_000
+        dedup_mod._corpus_n_docs = lambda cat: 50_000_000
         try:
             dedup_mod._simhash_fingerprints = lambda cat: planted_c
             rows = qs["dedup_simhash"].fn(spark, tmp).collect()
@@ -278,7 +276,7 @@ def check_star_cap(spark) -> dict:
         return out
     finally:
         dedup_mod._BUCKET_FULL_EXPAND_CAP = saved_cap
-        dedup_mod._N_DOCS_CACHE.pop(tmp, None)
+        dedup_mod._corpus_n_docs = saved_n_docs
         shutil.rmtree(tmp, True)
 
 
@@ -316,10 +314,6 @@ def check_blob_hot_recall(spark) -> float:
         return round(len(exact & ids) / len(exact), 2)
     finally:
         shutil.rmtree(S._ann_index_path(tmp), True)
-        for cache in (S._N_CACHE, S._IVF_K_CACHE, S._PQ_PARAM_CACHE,
-                      S._PQ_CACHE, S._PQR_CACHE, S._CENTROID_CACHE,
-                      S._CENTROID_CACHE_DIST):
-            cache.pop(tmp, None)
         shutil.rmtree(tmp, True)
 
 

@@ -44,6 +44,7 @@ def main() -> int:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from dirhash_spark.catalog import Catalog
     from dirhash_spark.operators import similarity as S
     from dirhash_spark.registry import all_queries
     from dirhash_spark.session import get_spark
@@ -81,9 +82,8 @@ def main() -> int:
         pq.write_table(tbl, os.path.join(tmp, "embeddings.parquet"))
 
         # fixed target list size: K ∝ N — derived automatically
-        # by _ivf_k(count) since r11; just clear per-dir caches
-        S._CENTROID_CACHE.pop(tmp, None)
-        S._IVF_K_CACHE.pop(tmp, None)
+        # by _ivf_k(count) since r11; a corpus rewritten in place is
+        # retrained on its new fingerprint
 
         def run():
             return qs["pipeline_semdedup_e2e"].fn(spark, tmp).count()
@@ -98,7 +98,7 @@ def main() -> int:
 
         # measured candidate volume Σ nC2 over the ACTUAL inverted
         # lists of the trained quantizer under 3-assignment
-        cents = S._CENTROID_CACHE[tmp]
+        cents = S._train_centroids(Catalog(spark, tmp))
         d2 = ((V[:, None, :] - cents[None, :, :]) ** 2).sum(-1)
         near3 = np.argsort(d2, axis=1)[:, :3]
         sizes = np.bincount(near3.ravel(), minlength=len(cents)).astype(np.int64)

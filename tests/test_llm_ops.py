@@ -329,9 +329,6 @@ def test_index_duplicate_grouping_bounded_and_exact(spark, tmp_path):
             assert got == exact, fn.__name__  # (b) bit-identical, ties included
     finally:
         shutil.rmtree(S._ann_index_path(sf), True)
-        for cache in (S._N_CACHE, S._IVF_K_CACHE, S._PQ_PARAM_CACHE,
-                      S._PQ_CACHE, S._PQR_CACHE, S._CENTROID_CACHE, S._CENTROID_CACHE_DIST):
-            cache.pop(sf, None)
 
 
 def test_cluster_canonical_properties(spark, sf_dir):
@@ -887,10 +884,6 @@ def test_embedding_ann_duplicate_group_chain_bounded(spark, tmp_path):
         import shutil
 
         shutil.rmtree(S._ann_index_path(sf), True)
-        for cache in (S._N_CACHE, S._IVF_K_CACHE, S._PQ_PARAM_CACHE,
-                      S._PQ_CACHE, S._PQR_CACHE, S._CENTROID_CACHE,
-                      S._CENTROID_CACHE_DIST):
-            cache.pop(sf, None)
 
 
 def test_ivfpq_dense_blob_saturation_fallback(spark, tmp_path):
@@ -933,10 +926,6 @@ def test_ivfpq_dense_blob_saturation_fallback(spark, tmp_path):
         assert recall >= 0.9, f"saturation fallback recall@10 {recall} < 0.9"
     finally:
         shutil.rmtree(S._ann_index_path(sf), True)
-        for cache in (S._N_CACHE, S._IVF_K_CACHE, S._PQ_PARAM_CACHE,
-                      S._PQ_CACHE, S._PQR_CACHE, S._CENTROID_CACHE,
-                      S._CENTROID_CACHE_DIST):
-            cache.pop(sf, None)
 
 
 def test_embedding_ann_dedup_recall_and_exact_precision(spark):
@@ -1061,9 +1050,6 @@ def test_pq_derived_codebook_recall_floor(spark, tmp_path):
         assert recall >= 0.7, f"derived-codebook IVFPQ recall@10 {recall} < 0.7"
     finally:
         shutil.rmtree(S._ann_index_path(sf), True)
-        for cache in (S._N_CACHE, S._IVF_K_CACHE, S._PQ_PARAM_CACHE,
-                      S._PQ_CACHE, S._PQR_CACHE, S._CENTROID_CACHE, S._CENTROID_CACHE_DIST):
-            cache.pop(sf, None)
 
 
 def _write_skew_embeddings(tmp_path):
@@ -1630,9 +1616,6 @@ def test_zero_norm_embedding_never_ranks(spark, tmp_path):
             ), fn.__name__
     finally:
         shutil.rmtree(S._ann_index_path(sf), True)
-        for cache in (S._N_CACHE, S._IVF_K_CACHE, S._PQ_PARAM_CACHE,
-                      S._PQ_CACHE, S._PQR_CACHE, S._CENTROID_CACHE, S._CENTROID_CACHE_DIST):
-            cache.pop(sf, None)
 
 
 def test_minhash_modmul_exact_vs_bigint():
@@ -1796,7 +1779,7 @@ def test_simhash_hot_distinct_bucket_window_beats_chain(
     planted = spark.createDataFrame(fps, "doc_id long, fp long")
     monkeypatch.setattr(dedup_mod, "_BUCKET_FULL_EXPAND_CAP", 8)  # < 19
     monkeypatch.setattr(dedup_mod, "_simhash_fingerprints", lambda cat: planted)
-    monkeypatch.setitem(dedup_mod._N_DOCS_CACHE, str(tmp_path), 1)
+    monkeypatch.setattr(dedup_mod, "_corpus_n_docs", lambda cat: 1)
     rows = QUERIES["dedup_simhash"].fn(spark, str(tmp_path)).collect()
     got = {(r["doc_a"], r["doc_b"]): r["hamming"] for r in rows}
     assert got == {(0, 1): 1}
@@ -1830,7 +1813,7 @@ def test_simhash_derived_cap_keeps_exact_pairs_past_old_cliff(
     )
     planted = spark.createDataFrame(fps, "doc_id long, fp long")
     monkeypatch.setattr(dedup_mod, "_simhash_fingerprints", lambda cat: planted)
-    monkeypatch.setitem(dedup_mod._N_DOCS_CACHE, str(tmp_path), 50_000_000)
+    monkeypatch.setattr(dedup_mod, "_corpus_n_docs", lambda cat: 50_000_000)
     rows = QUERIES["dedup_simhash"].fn(spark, str(tmp_path)).collect()
     got = {(r["doc_a"], r["doc_b"]): r["hamming"] for r in rows}
     # every doc shares quarter 0, so band 0 is each pair's first shared
@@ -1924,7 +1907,7 @@ def test_adc_table_sanitizes_non_finite(spark, monkeypatch):
     real = S._train_pq_codebooks(Catalog(spark, sf))
     poisoned = real.copy()
     poisoned[0, :, :] = np.nan  # one whole subspace unusable
-    monkeypatch.setitem(S._PQ_CACHE, sf, poisoned)
+    monkeypatch.setattr(S, "_train_pq_codebooks", lambda cat: poisoned)
     rows = QUERIES["sim_ann_pq"].fn(spark, sf).collect()
     assert len(rows) == 10
     assert all(r["cosine"] is not None and math.isfinite(r["cosine"]) for r in rows)
@@ -1934,7 +1917,7 @@ def test_adc_table_sanitizes_non_finite(spark, monkeypatch):
     )
     poisonedr = realr.copy()
     poisonedr[0, :, :] = np.nan
-    monkeypatch.setitem(S._PQR_CACHE, sf, poisonedr)
+    monkeypatch.setattr(S, "_train_pq_residual_codebooks", lambda cat, cents: poisonedr)
     rows = QUERIES["sim_ann_ivfpq"].fn(spark, sf).collect()
     assert len(rows) == 10
     assert all(r["cosine"] is not None and math.isfinite(r["cosine"]) for r in rows)
@@ -2012,8 +1995,8 @@ def test_pq_duplicate_clique_does_not_flood_rerank(spark, tmp_path, monkeypatch)
         str(tmp_path / "embeddings.parquet"),
     )
     sf = str(tmp_path)
-    monkeypatch.setitem(S._PQ_CACHE, sf, np.zeros((8, 32, 8)))
-    monkeypatch.setitem(S._PQ_PARAM_CACHE, sf, (32, 12))  # depth 12 < clique
+    monkeypatch.setattr(S, "_train_pq_codebooks", lambda cat: np.zeros((8, 32, 8)))
+    monkeypatch.setattr(S, "_corpus_pq_params", lambda cat: (32, 12))  # depth 12 < clique
     got = QUERIES["sim_ann_pq"].fn(spark, sf).collect()
     assert [r["vec_id"] for r in got] == list(range(61, 71))
 
@@ -2058,8 +2041,8 @@ def test_pq_winning_clique_expands_to_members(spark, tmp_path, monkeypatch):
         str(tmp_path / "embeddings.parquet"),
     )
     sf = str(tmp_path)
-    monkeypatch.setitem(S._PQ_CACHE, sf, np.zeros((8, 32, 8)))
-    monkeypatch.setitem(S._PQ_PARAM_CACHE, sf, (32, 12))
+    monkeypatch.setattr(S, "_train_pq_codebooks", lambda cat: np.zeros((8, 32, 8)))
+    monkeypatch.setattr(S, "_corpus_pq_params", lambda cat: (32, 12))
     got = QUERIES["sim_ann_pq"].fn(spark, sf).collect()
     # top-5 = the distinct closer vectors, then the clique's five
     # lowest member ids (ties broken by vec_id), each its own row
@@ -2108,56 +2091,6 @@ def test_score_list_pairs_digest_gate_parity():
     assert len(out) == len(clique) - 1
 
 
-def test_parquet_rowcount_matches_spark_count(spark):
-    """The footer-based corpus count feeding every derived-sizing rule
-    must equal the distributed count on real fixtures (catalog load
-    normalizes types, never row sets), and return None — triggering
-    the Spark fallback — for paths that are not local parquet."""
-    from dirhash_spark.catalog import Catalog, parquet_rowcount
-
-    for sf in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
-        cat = Catalog(spark, sf)
-        assert parquet_rowcount(sf, "embeddings") == cat.embeddings.count()
-        assert parquet_rowcount(sf, "documents") == cat.documents.count()
-    assert parquet_rowcount("/nonexistent/dir", "documents") is None
-
-
-def test_parquet_rowcount_ignores_hidden_files(tmp_path):
-    """Directory tables must count exactly what Spark's reader reads:
-    underscore/dot-prefixed files and dirs (_temporary leftovers from
-    an aborted write, _SUCCESS, .crc) are invisible, and a directory
-    with NO visible parquet parts returns None (Spark fallback), not
-    a silent n=0 that would misderive every sizing rule."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from dirhash_spark.catalog import parquet_rowcount
-
-    d = tmp_path / "documents.parquet"
-    (d / "_temporary" / "0").mkdir(parents=True)
-    t = pa.table({"doc_id": pa.array([1, 2, 3], pa.int64())})
-    pq.write_table(t, str(d / "part-0.parquet"))
-    pq.write_table(t, str(d / "_temporary" / "0" / "part-x.parquet"))
-    pq.write_table(t, str(d / "_hidden.parquet"))
-    (d / "_SUCCESS").write_text("")
-    assert parquet_rowcount(str(tmp_path), "documents") == 3
-
-    # Spark reads part files regardless of extension (Hive/Impala
-    # write suffix-less parts) — a suffix filter would undercount
-    pq.write_table(t, str(d / "part-1"))
-    assert parquet_rowcount(str(tmp_path), "documents") == 6
-
-    # a visible NON-parquet file makes the directory's footer count
-    # undefined — fall back to Spark rather than silently skipping it
-    (d / "notes.txt").write_text("not parquet")
-    assert parquet_rowcount(str(tmp_path), "documents") is None
-
-    e = tmp_path / "embeddings.parquet"
-    (e / "_temporary").mkdir(parents=True)
-    (e / "_SUCCESS").write_text("")
-    assert parquet_rowcount(str(tmp_path), "embeddings") is None
-
-
 def test_simhash_window_chunking_is_output_invisible(spark, tmp_path, monkeypatch):
     """The bounded-row chunked window must emit exactly the same pair
     set as a single-chunk run: with the chunk width shrunk to 6 (so
@@ -2185,7 +2118,7 @@ def test_simhash_window_chunking_is_output_invisible(spark, tmp_path, monkeypatc
     planted = spark.createDataFrame(fps, "doc_id long, fp long")
     monkeypatch.setattr(dedup_mod, "_BUCKET_FULL_EXPAND_CAP", 8)
     monkeypatch.setattr(dedup_mod, "_simhash_fingerprints", lambda cat: planted)
-    monkeypatch.setitem(dedup_mod._N_DOCS_CACHE, str(tmp_path), 1)
+    monkeypatch.setattr(dedup_mod, "_corpus_n_docs", lambda cat: 1)
 
     one_chunk = {
         (r["doc_a"], r["doc_b"]): r["hamming"]

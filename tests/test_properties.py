@@ -1137,10 +1137,6 @@ def test_indexed_ann_parity_random_duplicate_layouts(spark, tmp_path):
             assert c == e, (seed, c, e)
         finally:
             shutil.rmtree(S._ann_index_path(sf), True)
-            for cache in (S._N_CACHE, S._IVF_K_CACHE, S._PQ_PARAM_CACHE,
-                          S._PQ_CACHE, S._PQR_CACHE, S._CENTROID_CACHE,
-                          S._CENTROID_CACHE_DIST):
-                cache.pop(sf, None)
 
 
 @given(st.integers(min_value=0, max_value=10**12), st.integers(min_value=0, max_value=10**12))

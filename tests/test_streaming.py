@@ -270,7 +270,7 @@ def test_session_flush_restores_shuffle_conf_on_failure(spark, sf_dir, monkeypat
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
-def test_session_state_width_derived_from_corpus(spark, sf_dir):
+def test_session_state_width_derived_from_corpus(spark, sf_dir, monkeypatch):
     """The session stream's state-store width is DERIVED from the
     corpus's open-session estimate (distinct users), not hand-picked:
     pin the sizing rule at its anchors — the staged sf0.1 corpus
@@ -298,10 +298,15 @@ def test_session_state_width_derived_from_corpus(spark, sf_dir):
     users = load_table(spark, sf_dir, "events").select(
         F.countDistinct("user_id")
     ).first()[0]
-    S._STATE_WIDTH_CACHE.pop(sf_dir, None)
     assert S._session_state_width(spark, sf_dir) == S._width_for_sessions(users)
-    # memoized: second call answers from the cache
-    assert sf_dir in S._STATE_WIDTH_CACHE
+    # memoized: second call answers from the memo, re-deriving nothing
+    width = S._width_for_sessions(users)
+
+    def rederived(_):
+        raise AssertionError("state width re-derived on a memo hit")
+
+    monkeypatch.setattr(S, "_width_for_sessions", rederived)
+    assert S._session_state_width(spark, sf_dir) == width
 
 
 def test_session_replay_randomized_equivalence(spark, tmp_path):
@@ -553,3 +558,56 @@ def test_driver_staging_falls_back_on_nonlocal(tmp_path):
     from dirhash_spark.streaming import stateful as st
 
     assert not st._stage_replay_local(str(tmp_path), str(tmp_path / "src"), (0, 1, 2))
+
+
+def test_driver_staging_restages_rewritten_events(tmp_path):
+    """Incremental staging keeps wave files only while the events table
+    is the one they were cut from: rewriting ``events.parquet`` in place
+    and staging into the same ``src`` again must cut the waves from the
+    new rows (the wave mtimes are synthetic stamps and carry no
+    freshness signal of their own)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import os
+
+    from dirhash_spark.streaming import stateful as st
+
+    sf, src = tmp_path / "sf", str(tmp_path / "src")
+    sf.mkdir()
+
+    def write_events(users):
+        ts = [1_700_000_000_000_000 + i * 60_000_000 for i in range(len(users))]
+        pq.write_table(
+            pa.table(
+                {
+                    "ts": pa.array(ts, pa.timestamp("us")),
+                    "user_id": pa.array(users, pa.int64()),
+                }
+            ),
+            str(sf / "events.parquet"),
+        )
+
+    def wave_rows():
+        return {
+            f: sorted(pq.read_table(os.path.join(src, f))["user_id"].to_pylist())
+            for f in sorted(os.listdir(src))
+            if not f.startswith("_")
+        }
+
+    write_events([1, 2, 3, 4])
+    assert st._stage_replay_local(str(sf), src, (0, 1, 2))
+    first = wave_rows()
+    assert first["wave0-part.parquet"] == [1, 2]
+
+    write_events([7, 8, 9, 10, 11, 12])
+    assert st._stage_replay_local(str(sf), src, (0, 1, 2))
+    second = wave_rows()
+    assert second["wave0-part.parquet"] == [7, 8, 9]
+    assert second["wave1-part.parquet"] == [10, 11, 12]
+
+    # unchanged table: staging stays incremental (files kept as they are)
+    ctimes = {f: os.stat(os.path.join(src, f)).st_ctime_ns for f in second}
+    assert st._stage_replay_local(str(sf), src, (0, 1, 2))
+    assert {f: os.stat(os.path.join(src, f)).st_ctime_ns for f in second} == ctimes
+    assert wave_rows() == second
