@@ -8,10 +8,12 @@ DataFrame stack:
   listing.py  recursive listing → entries (dirs get a trailing '/'),
               routed driver/cluster by a serial-walk time budget
   chunks.py   fixed-size chunk plan (metadata DF) + range-read mapInPandas
-  hashdir.py  fused read+hash stage → ordered collect → fold, or the
-              cluster fold past a chunk-count bound or a tripped walk
-              budget
-  incremental.py  manifest-spliced re-hash of changed files only
+  hashdir.py  fused read+hash stage and the v1 fold (collected, or
+              streamed from cluster sorts)
+  incremental.py  THE pipeline: list → diff against stored digests →
+              read+hash the changed files → splice → fold, on a driver
+              or a cluster route; a full hash is the re-hash with
+              nothing stored
   verify.py   recompute + compare (HashComparisonResult)
   archive.py  content-addressed archive sink (move, dedupe, chmod, link)
   cli.py      argparse CLI mirroring the reference's flags/exit codes

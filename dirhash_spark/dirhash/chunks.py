@@ -39,16 +39,6 @@ from pyspark.sql.types import (
 
 from .listing import Entry
 
-PLAN_SCHEMA = StructType(
-    [
-        StructField("path", StringType(), False),
-        StructField("block_num", LongType(), False),
-        StructField("full_path", StringType(), False),
-        StructField("offset", LongType(), False),
-        StructField("length", LongType(), False),
-    ]
-)
-
 CHUNK_SCHEMA = StructType(
     [
         StructField("path", StringType(), False),

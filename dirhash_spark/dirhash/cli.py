@@ -20,7 +20,7 @@ import os
 import sys
 
 from .archive import move_folder_to_hashed_archive
-from .codec import DEFAULT_BLOCK_SIZE
+from .codec import DEFAULT_BLOCK_SIZE, build_hash_string, parse_blocksize
 from .hashdir import hash_directory
 from .verify import verify_directory_hash
 
@@ -104,19 +104,26 @@ def main(argv: list[str] | None = None, spark=None) -> int:
                 f"files, re-hashed {stats['n_rehashed_files']}",
                 file=sys.stderr,
             )
+        elif args.write_manifest:
+            from .incremental import rehash
+
+            # one pipeline call: the hash and the manifest from one read
+            # of every byte
+            hex_digest, _, new_manifest = rehash(
+                spark,
+                args.directory,
+                None,
+                args.hash_algorithm,
+                parse_blocksize(args.block_size),
+                with_manifest=True,
+            )
+            hash_string = build_hash_string(args.hash_algorithm, args.block_size, hex_digest)
         else:
             hash_string = hash_directory(
                 spark, args.directory, args.hash_algorithm, args.block_size
             )
-            new_manifest = None
         print(hash_string)
         if args.write_manifest:
-            if new_manifest is None:
-                from .incremental import build_chunk_manifest
-
-                new_manifest = build_chunk_manifest(
-                    spark, args.directory, args.hash_algorithm, args.block_size
-                )
             new_manifest.write.mode("overwrite").parquet(args.write_manifest)
             print(f"manifest: {args.write_manifest}", file=sys.stderr)
         if args.move_to_archive:

@@ -1,4 +1,5 @@
-"""Directory hashing pipeline (REF A5-A7; lifecycle SURVEY §3.1).
+"""Directory hashing: the stages and the v1 fold (REF A5-A7; lifecycle
+SURVEY §3.1).
 
 Stages (mirroring dirhash.py:307-444, re-expressed Spark-first):
   1. LIST   recursive listing (metadata only), routed by the serial-walk
@@ -15,25 +16,23 @@ Stages (mirroring dirhash.py:307-444, re-expressed Spark-first):
             physical choice — hash before any shuffle (dirhash.py:412-
             413) — and strengthens it: nothing but 32-byte digests ever
             crosses a process boundary.
-  4. COLLECT   unsorted collect of digest rows (tiny).  No cluster sort:
-            DataFrame orderBy = range exchange whose boundary sampling
-            re-executes the whole read+hash child a second time.  The
-            driver sorts the collected tuples with Python tuple order —
-            bit-identical to the reference's sortBy (dirhash.py:413),
-            including non-ASCII path code-point order.
-  5. FOLD   driver-side sequential Merkle chain (inherently ordered)
+  4. COLLECT   (driver route) unsorted collect of digest rows (tiny).
+            No cluster sort: DataFrame orderBy = range exchange whose
+            boundary sampling re-executes the whole read+hash child a
+            second time.  The driver sorts the collected tuples with
+            Python tuple order — bit-identical to the reference's
+            sortBy (dirhash.py:413), including non-ASCII path
+            code-point order.
+  5. FOLD   driver-side sequential Merkle chain (inherently ordered):
+            ``codec.fold_digest`` over collected digests, or the
+            streamed header and digest drains below on the cluster
+            route.
 
-There are two routes, taken from what the listing measures, never
-from an option; both yield the bit-identical v1 digest:
-  (a) DRIVER: the serial walk finishes inside its budget and the
-      listing's chunk count is at most :data:`COLLECT_MAX_CHUNKS` → the
-      stages above;
-  (b) CLUSTER: the walk trips its budget (the listing stays
-      cluster-side, ``listing.list_entries_df``), or the driver listing
-      has too many chunks to collect the digests of (the listing is
-      shipped once, ``listing.entries_frame``) →
-      :func:`fold_listing_df`: header paths and digests both stream
-      from cluster sorts, so driver memory stays constant.
+The read+hash stage and the fold live here.  The pipeline that runs
+them, its one router and its two routes (driver, cluster) live in
+:mod:`.incremental`, because a full hash IS a re-hash with nothing
+stored: :func:`hash_directory_raw` and :func:`fold_listing_df` run it
+with no manifest.
 """
 
 from __future__ import annotations
@@ -42,28 +41,19 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, LongType, StringType, StructField, StructType
 
 from ..session import configure
-from .chunks import chunk_count, chunk_plan, chunk_plan_df, read_ranges, spread_plan
-from .codec import (
-    DEFAULT_BLOCK_SIZE,
-    build_hash_string,
-    fold_digest,
-    get_hash_func,
-    parse_blocksize,
-)
-from .listing import (
-    entries_frame,
-    list_entries,
-    list_entries_df,
-    reject_undecodable_paths,
-    strip_trailing_slash,
-)
+from .chunks import chunk_plan, read_ranges, spread_plan
+from .codec import DEFAULT_BLOCK_SIZE, build_hash_string, get_hash_func, parse_blocksize
 
-#: Chunk count above which a driver listing takes the cluster fold
-#: instead of one digest collect (module doc).
+# The pipeline's listing and fold entry points, bound here too: the
+# benchmark's tracer (perfbench/spans.py) wraps these module names.
+from .codec import fold_digest  # noqa: F401
+from .listing import list_entries  # noqa: F401
+
+#: Chunk count above which a driver listing takes the cluster route
+#: instead of one digest collect (``incremental`` module doc).
 #: The collect's documented scale bound: 100 TB at the 128 MiB default
 #: blocksize is ~800k rows of 32-byte digests plus paths.  Read at call
 #: time.
@@ -170,44 +160,12 @@ def fold_digests_streamed(h, digests: DataFrame) -> None:
 def fold_listing_df(
     spark: SparkSession, entries_df: DataFrame, hash_algorithm: str, blocksize: int
 ) -> str:
-    """The cluster route: the v1 hex digest of a listing DataFrame
-    (``listing.list_entries_df`` or ``listing.entries_frame``) with a
-    constant-memory driver fold.
+    """The v1 hex digest of a listing DataFrame (``listing.list_entries_df``
+    or ``listing.entries_frame``) with a constant-memory driver fold: the
+    cluster route with nothing stored (``incremental.rehash_listing_df``)."""
+    from .incremental import rehash_listing_df  # imports this module
 
-    A literal tree-reduce cannot exist for the v1 digest: the fold is a
-    single hash chain over an ORDERED byte stream (header then chunk
-    digests in (path, block_num) order, dirhash.py:422-441), and the
-    chain's state at byte k depends on every byte before it.  What CAN
-    move off the driver is everything except the O(1) hash state:
-
-    - the chunk plan derives from the listing DataFrame, and the
-      header's path sort is a cluster ``orderBy`` — the driver never
-      holds the entry list;
-    - sorts run on the cluster (``orderBy`` = range exchange; Spark's
-      UTF8String binary comparison equals Python's code-point string
-      sort because UTF-8 byte order preserves code-point order, so both
-      streams arrive in exactly the order the reference's driver sort
-      produced);
-    - digests are ``localCheckpoint``-ed FIRST, so the range exchange's
-      boundary-sampling pass re-reads materialized rows, not the fused
-      read+hash stage.  Trade-off: a local checkpoint pins those rows
-      in executor block-manager storage with lineage truncated, so
-      losing an executor mid-drain fails the job unrecoverably —
-      acceptable for digest-sized state;
-    - the driver consumes ``toLocalIterator(prefetchPartitions=True)``
-      — at most two sorted partitions resident at a time.
-    """
-    h = get_hash_func(hash_algorithm)()
-    fold_header_streamed(h, entries_df)
-    has_bytes = (
-        entries_df.where((~F.col("is_dir")) & (F.col("size") > 0)).limit(1).count() > 0
-    )
-    if has_bytes:
-        plan = chunk_plan_df(entries_df, blocksize)
-        fold_digests_streamed(
-            h, hash_chunk_plan(spark, plan, hash_algorithm).localCheckpoint()
-        )
-    return h.hexdigest()
+    return rehash_listing_df(spark, entries_df, None, hash_algorithm, blocksize)[0]
 
 
 def hash_directory_raw(
@@ -216,43 +174,14 @@ def hash_directory_raw(
     hash_algorithm: str = "sha256",
     blocksize: int | None = None,
 ) -> str:
-    """Compute the v1 hex digest of a directory tree (dirhash.py:307-444)
-    on the route the listing measures (module doc)."""
+    """Compute the v1 hex digest of a directory tree (dirhash.py:307-444):
+    the pipeline with nothing stored (``incremental.rehash``), on the
+    route the listing measures."""
+    from .incremental import rehash  # imports this module
+
     configure(spark)
     blocksize = blocksize or parse_blocksize(DEFAULT_BLOCK_SIZE)
-    directory = strip_trailing_slash(directory)
-
-    entries = list_entries(directory, spark)
-    if entries is None:  # the serial walk tripped its budget
-        entries_df = list_entries_df(spark, directory)
-    else:
-        reject_undecodable_paths(entries)
-        n_chunks = chunk_count(entries, blocksize)
-        if n_chunks <= COLLECT_MAX_CHUNKS:
-            return _fold_driver(spark, entries, n_chunks, hash_algorithm, blocksize)
-        entries_df = entries_frame(spark, entries)  # too many digests to collect
-    return fold_listing_df(spark, entries_df, hash_algorithm, blocksize)
-
-
-def _fold_driver(
-    spark: SparkSession, entries, n_chunks: int, hash_algorithm: str, blocksize: int
-) -> str:
-    """The driver route: one digest collect, a driver sort, ``fold_digest``."""
-    if n_chunks:
-        rows = digest_directory(spark, entries, blocksize, hash_algorithm).collect()
-        # bounded: digests only — 32 bytes + path per CHUNK, at most
-        # COLLECT_MAX_CHUNKS rows (the cluster route takes over beyond that).
-        # Driver-side tuple sort == reference sortBy((path, num)),
-        # dirhash.py:413 — and avoids the range-exchange sampling pass
-        # that would re-execute the read+hash stage.  The fold itself is
-        # inherently sequential (each step hashes the previous digest,
-        # dirhash.py:413-441), so no cluster topology helps it.
-        rows.sort(key=lambda r: (r["path"], r["block_num"]))
-        digest_list = [bytes(r["digest"]) for r in rows]
-    else:
-        digest_list = []
-
-    return fold_digest(hash_algorithm, [e.relative_path for e in entries], digest_list)
+    return rehash(spark, directory, None, hash_algorithm, blocksize)[0]
 
 
 def hash_directory(

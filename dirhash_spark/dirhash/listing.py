@@ -357,8 +357,8 @@ def list_entries_df(spark, root: str):
 
 def entries_frame(spark, entries: list[Entry]):
     """A driver listing shipped to the cluster as a DataFrame with
-    :func:`list_entries_df`'s columns, for the cluster fold when the
-    listing is too big to collect the digests of (``hashdir`` module
+    :func:`list_entries_df`'s columns, for the cluster route when the
+    listing is too big to collect the digests of (``incremental`` module
     doc).  Checkpointed: the fold reads the listing several times
     (count, header sort, chunk plan, stat diff), and each read of an
     unmaterialized local relation re-runs its Python row conversion."""

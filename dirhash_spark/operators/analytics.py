@@ -654,8 +654,11 @@ def corpus_drift_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "graph_triangle_count",
+    # raw is MATERIALIZED: it is read six times, and DuckDB inlining it
+    # into each read runs the four-way join six times over (past 3 GB
+    # at sf0.1).  Same SQL meaning.
     oracle="""
-    WITH raw AS (
+    WITH raw AS MATERIALIZED (
       SELECT DISTINCT least(c.c_nationkey, s.s_nationkey) AS a,
              greatest(c.c_nationkey, s.s_nationkey) AS b
       FROM orders o

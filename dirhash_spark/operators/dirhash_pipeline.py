@@ -124,6 +124,78 @@ def dirhash_chunk_digests(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TREE_FOLD_BLOCK = 128 * 1024
 
 
+def _hex_chunk_digests(spark: SparkSession, entries, *extra) -> DataFrame:
+    """(path, block_num, digest, *extra) for every chunk of ``entries``
+    at :data:`_TREE_FOLD_BLOCK`, ``digest`` the hex sha256 of the
+    oracle-computable preimage ``path ‖ NUL ‖ num ‖ NUL ‖ hex(content)``."""
+    return read_chunks(spark, entries, _TREE_FOLD_BLOCK).select(
+        "path",
+        "block_num",
+        F.sha2(
+            F.concat(
+                F.col("path"),
+                F.lit("\x00"),
+                F.col("block_num").cast("string"),
+                F.lit("\x00"),
+                F.hex(F.col("content")),
+            ),
+            256,
+        ).alias("digest"),
+        *extra,
+    )
+
+
+def _subtree_rollup(spark: SparkSession, entries, digests: DataFrame, **aggs) -> DataFrame:
+    """The per-top-level-subtree hex Merkle rollup of ``dirhash_tree_fold``
+    (framing in its docstring) over the files ``entries`` and their chunk
+    ``digests`` (:func:`_hex_chunk_digests` rows).  ``aggs`` names extra
+    aggregates over a subtree's digest rows; they come out between
+    ``n_files`` and ``subtree_digest``, 0 for a subtree with no chunks.
+
+    Listing metadata and chunk digests each aggregate to one row per
+    subtree BEFORE they meet, so the only join in the plan is between
+    two subtree-sized tables (no per-chunk join against the listing)."""
+    subtree = F.split_part(F.col("path"), F.lit("/"), F.lit(1))
+    files_by_tree = (
+        spark.createDataFrame([(e.relative_path,) for e in entries], "path STRING")
+        .withColumn("subtree", subtree)
+        .groupBy("subtree")
+        .agg(
+            F.count(F.lit(1)).alias("n_files"),
+            F.array_sort(F.collect_list("path")).alias("entry_list"),
+        )
+    )
+    digests_by_tree = (
+        digests.withColumn("subtree", subtree)
+        .groupBy("subtree")
+        .agg(
+            *(agg.alias(name) for name, agg in aggs.items()),
+            F.concat_ws(
+                "",
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("path", "block_num", "digest"))),
+                    lambda s: s["digest"],
+                ),
+            ).alias("chunk_concat"),
+        )
+    )
+    return files_by_tree.join(digests_by_tree, "subtree", "left").select(
+        "subtree",
+        "n_files",
+        *(F.coalesce(name, F.lit(0)).alias(name) for name in aggs),
+        F.sha2(
+            F.concat(
+                F.col("n_files").cast("string"),
+                F.lit("\x00"),
+                F.array_join(F.col("entry_list"), "\x00"),
+                F.lit("\x00"),
+                F.coalesce(F.col("chunk_concat"), F.lit("")),
+            ),
+            256,
+        ).alias("subtree_digest"),
+    )
+
+
 @query(
     "dirhash_tree_fold",
     oracle=f"""
@@ -167,66 +239,10 @@ def dirhash_tree_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     digest strings shuffle to the subtree groups — the same
     "hash before shuffle" physical plan as the reference (dirhash.py:
     412-413), but with the fold itself distributed per group instead of
-    driver-side.  Listing metadata and chunk digests each aggregate to
-    one row per subtree BEFORE they meet, so the only join in the plan
-    is between two subtree-sized tables (no per-chunk join against the
-    listing).
+    driver-side (the rollup: :func:`_subtree_rollup`).
     """
     entries = [e for e in list_entries(HASHTREE) if not e.is_dir]
-    subtree = F.split_part(F.col("path"), F.lit("/"), F.lit(1))
-    files_df = spark.createDataFrame(
-        [(e.relative_path,) for e in entries], "path STRING"
-    )
-    files_by_tree = (
-        files_df.withColumn("subtree", subtree)
-        .groupBy("subtree")
-        .agg(
-            F.count(F.lit(1)).alias("n_files"),
-            F.array_sort(F.collect_list("path")).alias("entry_list"),
-        )
-    )
-    chunks = read_chunks(spark, entries, _TREE_FOLD_BLOCK)
-    digests_by_tree = (
-        chunks.select(
-            "path",
-            "block_num",
-            F.sha2(
-                F.concat(
-                    F.col("path"),
-                    F.lit("\x00"),
-                    F.col("block_num").cast("string"),
-                    F.lit("\x00"),
-                    F.hex(F.col("content")),
-                ),
-                256,
-            ).alias("digest"),
-        )
-        .withColumn("subtree", subtree)
-        .groupBy("subtree")
-        .agg(
-            F.concat_ws(
-                "",
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("path", "block_num", "digest"))),
-                    lambda s: s["digest"],
-                ),
-            ).alias("chunk_concat")
-        )
-    )
-    return files_by_tree.join(digests_by_tree, "subtree", "left").select(
-        "subtree",
-        "n_files",
-        F.sha2(
-            F.concat(
-                F.col("n_files").cast("string"),
-                F.lit("\x00"),
-                F.array_join(F.col("entry_list"), "\x00"),
-                F.lit("\x00"),
-                F.coalesce(F.col("chunk_concat"), F.lit("")),
-            ),
-            256,
-        ).alias("subtree_digest"),
-    )
+    return _subtree_rollup(spark, entries, _hex_chunk_digests(spark, entries))
 
 
 @query("dirhash_full", oracle=None, tags=("dirhash", "e2e"))
@@ -308,68 +324,13 @@ def dirhash_incremental_rehash(spark: SparkSession, sf_dir: str) -> DataFrame:
     entries = [e for e in list_entries(HASHTREE) if not e.is_dir]
     manifest_entries = [e for e in entries if e.relative_path.startswith("bin/")]
     changed_entries = [e for e in entries if not e.relative_path.startswith("bin/")]
-    subtree = F.split_part(F.col("path"), F.lit("/"), F.lit(1))
-
-    def hex_digests(src_entries, tag):
-        chunks = read_chunks(spark, src_entries, _TREE_FOLD_BLOCK)
-        return chunks.select(
-            "path",
-            "block_num",
-            F.sha2(
-                F.concat(
-                    F.col("path"),
-                    F.lit("\x00"),
-                    F.col("block_num").cast("string"),
-                    F.lit("\x00"),
-                    F.hex(F.col("content")),
-                ),
-                256,
-            ).alias("digest"),
-            F.lit(tag).alias("src"),
-        )
-
-    spliced = hex_digests(manifest_entries, "manifest").unionByName(
-        hex_digests(changed_entries, "fresh")
-    )
-    files_df = spark.createDataFrame(
-        [(e.relative_path,) for e in entries], "path STRING"
-    )
-    files_by_tree = (
-        files_df.withColumn("subtree", subtree)
-        .groupBy("subtree")
-        .agg(
-            F.count(F.lit(1)).alias("n_files"),
-            F.array_sort(F.collect_list("path")).alias("entry_list"),
-        )
-    )
-    digests_by_tree = (
-        spliced.withColumn("subtree", subtree)
-        .groupBy("subtree")
-        .agg(
-            F.sum((F.col("src") == "manifest").cast("long")).alias("n_reused_chunks"),
-            F.sum((F.col("src") == "fresh").cast("long")).alias("n_rehashed_chunks"),
-            F.concat_ws(
-                "",
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("path", "block_num", "digest"))),
-                    lambda s: s["digest"],
-                ),
-            ).alias("chunk_concat"),
-        )
-    )
-    return files_by_tree.join(digests_by_tree, "subtree", "left").select(
-        "subtree",
-        "n_files",
-        F.coalesce("n_reused_chunks", F.lit(0)).alias("n_reused_chunks"),
-        F.coalesce("n_rehashed_chunks", F.lit(0)).alias("n_rehashed_chunks"),
-        F.sha2(
-            F.concat(
-                F.col("n_files").cast("string"),
-                F.lit("\x00"),
-                F.array_join(F.col("entry_list"), "\x00"),
-                F.lit("\x00"),
-                F.coalesce(F.col("chunk_concat"), F.lit("")),
-            ),
-            256,
-        ).alias("subtree_digest"),
+    spliced = _hex_chunk_digests(
+        spark, manifest_entries, F.lit("manifest").alias("src")
+    ).unionByName(_hex_chunk_digests(spark, changed_entries, F.lit("fresh").alias("src")))
+    return _subtree_rollup(
+        spark,
+        entries,
+        spliced,
+        n_reused_chunks=F.sum((F.col("src") == "manifest").cast("long")),
+        n_rehashed_chunks=F.sum((F.col("src") == "fresh").cast("long")),
     )

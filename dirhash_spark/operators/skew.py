@@ -11,8 +11,8 @@ rewritten plans keep exact semantics:
   group S ways; because the salt is a pure function of the DISTINCT
   value, each distinct x lands in exactly one (key, salt) cell, so the
   phase-2 SUM of per-cell exact distincts is the exact global distinct
-  — at 1/S the per-reducer load.  Measured caveat (scripts/
-  skew_bench.py): for plain COUNT(DISTINCT) Catalyst's distinct-
+  — at 1/S the per-reducer load.  Measured caveat (BASELINE.md,
+  the skew lines): for plain COUNT(DISTINCT) Catalyst's distinct-
   aggregate rewrite already de-skews (it shuffles on (key, value)
   first), so manual salting buys nothing there; the pattern pays for
   aggregation STATE the planner cannot rewrite — collect_set/
@@ -50,7 +50,7 @@ def agg_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact distinct users per event_type via salted two-phase
     aggregation, with planner-opaque set state (collect_set) in phase 1
     — the case where salting measurably pays (module docstring;
-    2.0x at 10M rows in scripts/skew_bench.py).  Exactness: the salt is
+    2.0x at 10M rows, recorded in BASELINE.md).  Exactness: the salt is
     a pure function of user_id, so each distinct user counts in exactly
     one (event_type, salt) cell."""
     cat = Catalog(spark, sf_dir)

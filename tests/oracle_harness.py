@@ -11,6 +11,9 @@ from __future__ import annotations
 
 import datetime as dt
 import math
+import os
+import tempfile
+import uuid
 from collections import Counter
 
 import duckdb
@@ -18,8 +21,28 @@ import duckdb
 from dirhash_spark.catalog import TABLE_NAMES
 
 
+#: DuckDB's working-memory cap for an oracle connection.  Unset, DuckDB
+#: takes 80% of the host's RAM, which an oracle that blows up (a CTE
+#: inlined into a many-way self-join) spends in full, beside the Spark
+#: JVM and its Python workers.  Every sf0.01 oracle runs under it.
+ORACLE_MEMORY_LIMIT = "4GB"
+#: Spill cap.  Unset, DuckDB spills without bound into ``.tmp/`` under
+#: the working directory — the checkout.
+ORACLE_SPILL_LIMIT = "8GB"
+
+
 def make_duckdb(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
+    """An in-memory DuckDB with a view per fixture table, its memory
+    capped and its spill in a fresh directory under the system temp dir
+    (DuckDB creates it, and removes it when the connection closes)."""
+    spill = os.path.join(tempfile.gettempdir(), f"duckdb-oracle-{uuid.uuid4().hex}")
+    con = duckdb.connect(
+        config={
+            "memory_limit": ORACLE_MEMORY_LIMIT,
+            "temp_directory": spill,
+            "max_temp_directory_size": ORACLE_SPILL_LIMIT,
+        }
+    )
     for name in TABLE_NAMES:
         con.execute(
             f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{sf_dir}/{name}.parquet')"

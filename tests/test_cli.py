@@ -110,6 +110,45 @@ def test_incremental_manifest_cli_roundtrip(spark, tree, tmp_path, capsys):
     assert "reused 3/3" in cap.err
 
 
+@pytest.mark.parametrize("route", ["driver", "streamed", "cluster"])
+def test_write_manifest_reads_each_byte_once(spark, tree, tmp_path, capsys, monkeypatch, route):
+    """--write-manifest without --manifest takes the hash and the
+    manifest from ONE pipeline call: on every route the read+hash stage
+    reads each byte of the tree exactly once (an accumulator around the
+    stage's range reader counts them), and the manifest written gives
+    full reuse of the printed hash."""
+    from dirhash_spark.dirhash import hashdir as H
+    from dirhash_spark.dirhash import listing as L
+
+    tree_bytes = sum(
+        os.path.getsize(os.path.join(d, f)) for d, _, names in os.walk(tree) for f in names
+    )
+    read = spark.sparkContext.accumulator(0)
+    real = H.read_ranges
+
+    def counted(pdf):
+        for path, num, content in real(pdf):
+            read.add(len(content))
+            yield path, num, content
+
+    monkeypatch.setattr(H, "read_ranges", counted)
+    if route == "streamed":
+        monkeypatch.setattr(H, "COLLECT_MAX_CHUNKS", -1)
+    elif route == "cluster":
+        monkeypatch.setattr(L, "SERIAL_WALK_BUDGET_S", 0)
+
+    man = str(tmp_path / "manifest")
+    assert main([tree, "--block-size", "1k", "--write-manifest", man], spark=spark) == 0
+    full = capsys.readouterr().out.strip()
+    assert read.value == tree_bytes
+
+    assert main([tree, "--block-size", "1k", "--manifest", man], spark=spark) == 0
+    cap = capsys.readouterr()
+    assert cap.out.strip() == full
+    assert "reused 3/3 files, re-hashed 0" in cap.err
+    assert read.value == tree_bytes
+
+
 def test_manifest_flags_rejected_on_verify_path(spark, tree, capsys):
     """--manifest/--write-manifest combined with --check/--check-name
     must be rejected up front (exit 2, argparse error): the verify path
@@ -134,14 +173,13 @@ def _force_streamed_route(monkeypatch) -> dict:
     from dirhash_spark.dirhash import incremental as I
 
     calls = {"drain": 0}
-    for module in (H, I):
-        real = module.fold_digests_streamed
+    real = I.fold_digests_streamed
 
-        def counted(*a, _real=real, **k):
-            calls["drain"] += 1
-            return _real(*a, **k)
+    def counted(*a, **k):
+        calls["drain"] += 1
+        return real(*a, **k)
 
-        monkeypatch.setattr(module, "fold_digests_streamed", counted)
+    monkeypatch.setattr(I, "fold_digests_streamed", counted)
     monkeypatch.setattr(H, "COLLECT_MAX_CHUNKS", -1)
     return calls
 

@@ -401,7 +401,6 @@ def test_forced_route_parity(spark, tmp_path, monkeypatch, capsys, route):
     rows; the reuse stats against the known churn; and the CLI's
     stdout, stderr and exit codes.  Counters prove the forced route
     was really taken."""
-    from dirhash_spark.dirhash import hashdir as H
     from dirhash_spark.dirhash import incremental as I
     from dirhash_spark.dirhash.cli import main
     from dirhash_spark.dirhash.incremental import (
@@ -437,10 +436,9 @@ def test_forced_route_parity(spark, tmp_path, monkeypatch, capsys, route):
 
         monkeypatch.setattr(module, attr, counted)
 
-    for module in (H, I):
-        count(module, "fold_digests_streamed", "drain")
-        count(module, "list_entries_df", "cluster_walk")
-        count(module, "entries_frame", "shipped")
+    count(I, "fold_digests_streamed", "drain")
+    count(I, "list_entries_df", "cluster_walk")
+    count(I, "entries_frame", "shipped")
     force_route(monkeypatch, route)
 
     # full hash + verify
@@ -863,7 +861,7 @@ def test_listing_for_fold_routing(spark, tree, monkeypatch):
     fold to the cluster listing (no driver read+hash stage), and both
     give the spec digest.  The budget is the module constant, read at
     call time (deployment-tunable)."""
-    import dirhash_spark.dirhash.hashdir as H
+    import dirhash_spark.dirhash.incremental as I
     import dirhash_spark.dirhash.listing as L
 
     root, files = tree
@@ -871,13 +869,13 @@ def test_listing_for_fold_routing(spark, tree, monkeypatch):
     calls = {"cluster_walk": 0, "driver_stage": 0}
 
     def count(attr, key):
-        real = getattr(H, attr)
+        real = getattr(I, attr)
 
         def counted(*a, **k):
             calls[key] += 1
             return real(*a, **k)
 
-        monkeypatch.setattr(H, attr, counted)
+        monkeypatch.setattr(I, attr, counted)
 
     count("list_entries_df", "cluster_walk")
     count("digest_directory", "driver_stage")
