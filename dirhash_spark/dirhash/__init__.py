@@ -7,9 +7,10 @@ DataFrame stack:
   codec.py    blocksize / algo whitelist / hash-string / v1 preimages
   listing.py  recursive listing → entries (dirs get a trailing '/'),
               routed driver/cluster by a serial-walk time budget
-  chunks.py   fixed-size chunk plan (metadata DF) + range-read mapInPandas
-  hashdir.py  fused read+hash stage and the v1 fold (collected, or
-              streamed from cluster sorts)
+  chunks.py   fixed-size chunks: byte-balanced driver segments, the plan
+              DataFrame of a cluster listing, the range reader
+  hashdir.py  the fused read+hash loop (both routes) and the v1 fold
+              (collected, or streamed from cluster sorts)
   incremental.py  THE pipeline: list → diff against stored digests →
               read+hash the changed files → splice → fold, on a driver
               or a cluster route; a full hash is the re-hash with

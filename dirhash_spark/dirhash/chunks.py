@@ -1,4 +1,4 @@
-"""Fixed-size chunking as a DataFrame pipeline (REF A1).
+"""Fixed-size chunking: the chunk plan, its segments and the range reader (REF A1).
 
 The reference vendors Spark's own FixedLengthBinaryInputFormat
 (FixedLengthBinaryRecordReader.scala:105-142): records of ``blocksize``
@@ -6,25 +6,32 @@ bytes, key = global block index, short final block kept at true length,
 one RDD per file folded with union (an O(files) anti-pattern,
 dirhash.py:399-406).
 
-Here the *plan* is a DataFrame: one metadata row per chunk
-``(path, block_num, full_path, offset, length)`` built with
-``sequence``+``explode`` (no file bytes touched), then a single
-``mapInPandas`` stage performs positioned range reads.  Properties:
+Here a chunk is a metadata row ``(path, block_num, full_path, offset,
+length)``, and :func:`read_ranges` turns plan rows into positioned
+range reads.  The rows come in two shapes, one per route:
+
+- a driver listing is cut by :func:`plan_segments` into at most
+  ``defaultParallelism`` contiguous, byte-balanced runs of the
+  (path, block_num)-sorted chunks, shipped as per-file block ranges
+  (O(files + segments) rows, never one per chunk) and expanded in the
+  task by :func:`segment_rows` — no plan DataFrame, no shuffle;
+- a listing DataFrame is planned with ``sequence``+``explode``
+  (:func:`chunk_plan_df`, no file bytes touched) and spread by
+  :func:`spread_plan`.
+
+Properties, on both:
 
 - split alignment is by construction (offsets are block_num·blocksize,
   the reader never straddles a boundary — same invariant the Scala
   ``computeSplitSize`` enforces);
-- parallelism = total_blocks spread over ``repartition(n)``, independent
-  of file count or file size skew: a single 1 TB file becomes 8192
-  range-read tasks at 128 MiB blocks, many small files batch into few
-  tasks — the small-file coalescing Catalyst does for parquet, done here
-  for raw ranges;
+- parallelism follows bytes, not files: a single 1 TB file splits at
+  block boundaries across every task, many small files share one;
 - empty files contribute zero chunk rows (dirhash_test.py:205-208).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -61,6 +68,52 @@ def chunk_count(entries: list[Entry], blocksize: int) -> int:
     """Rows :func:`chunk_plan` will emit: Σ⌈size/blocksize⌉ over files,
     measured from the listing alone."""
     return sum(-(-e.size // blocksize) for e in entries if not e.is_dir)
+
+
+def plan_segments(entries: list[Entry], blocksize: int, n: int) -> list[list[tuple]]:
+    """Cut the chunks of a driver listing, in (path, block_num) order,
+    into at most ``n`` contiguous segments of near-equal bytes; each
+    segment is a list of per-file block ranges ``(path, full_path, size,
+    first_block, end_block)`` (end exclusive), in that same order.
+    Directories and empty files have no chunks and appear in none.
+
+    A chunk starting at byte ``s`` of the concatenated sequence (total
+    ``T`` bytes) belongs to segment ``s·n // T``.  A segment's chunks
+    all start inside ``[i·T/n, (i+1)·T/n)`` and each is at most one
+    block long, so no segment holds more than ``T/n + blocksize``
+    bytes.  Segments no chunk starts in are dropped, so fewer chunks
+    than ``n`` give fewer segments."""
+    files = sorted(
+        (e for e in entries if not e.is_dir and e.size > 0), key=lambda e: e.relative_path
+    )
+    total = sum(e.size for e in files)
+    segments: list[list[tuple]] = [[] for _ in range(n)]
+    start = 0  # where the file's first chunk sits in the concatenated sequence
+    for e in files:
+        size, first = int(e.size), 0
+        n_blocks = -(-size // blocksize)
+        while first < n_blocks:
+            seg = (start + first * blocksize) * n // total
+            # the first block that starts at or past the next boundary
+            end = min(n_blocks, -(-((seg + 1) * total - start * n) // (blocksize * n)))
+            segments[seg].append((e.relative_path, e.full_path, size, first, end))
+            first = end
+        start += size
+    return [s for s in segments if s]
+
+
+def segment_rows(segment: list[tuple], blocksize: int) -> Iterator[tuple]:
+    """The chunk-plan rows ``(path, block_num, full_path, offset,
+    length)`` of one :func:`plan_segments` segment, in its order."""
+    for path, full_path, size, first, end in segment:
+        for num in range(first, end):
+            offset = num * blocksize
+            yield path, num, full_path, offset, min(blocksize, size - offset)
+
+
+def plan_rows(pdf: pd.DataFrame) -> Iterator[tuple]:
+    """The chunk-plan rows of one ``mapInPandas`` batch, as tuples."""
+    return zip(pdf["path"], pdf["block_num"], pdf["full_path"], pdf["offset"], pdf["length"])
 
 
 def chunk_plan_df(entries_df: DataFrame, blocksize: int) -> DataFrame:
@@ -110,44 +163,42 @@ def open_for_range_read(full_path: str):
 
 
 def spread_plan(spark: SparkSession, plan: DataFrame) -> DataFrame:
-    """Spread chunk-plan rows across the cluster, each partition sorted
-    on (path, block_num).  The plan is tiny metadata, so the shuffle
-    costs nothing, while the read stage's parallelism stops depending
-    on how the plan was sliced; the sort makes a partition's reads
-    advance file- and offset-ORDERED instead of seeking randomly
-    (sequential range reads are the fast path on s3a/hdfs, the case
-    :func:`open_for_range_read` exists for).  A repartitionByRange form
-    (contiguous global runs, fewer opens per file) was A/B'd and
-    rejected: its boundary-sampling pass is a whole extra job that
-    measured 10-20% of the local fold wall, while the open count is
-    already bounded by min(chunks, partitions) per file either way."""
+    """Spread the chunk-plan rows of a listing DataFrame across the
+    cluster, each partition sorted on (path, block_num): a hash
+    repartition (one shuffle of plan metadata, and a job of its own)
+    makes the read stage's parallelism independent of how the plan was
+    sliced; the sort makes a partition's reads advance file- and
+    offset-ORDERED instead of seeking randomly (sequential range reads
+    are the fast path on s3a/hdfs, the case :func:`open_for_range_read`
+    exists for).  A driver listing needs none of this: it is cut into
+    byte-balanced segments on the driver (:func:`plan_segments`).  A
+    repartitionByRange form (contiguous global runs, fewer opens per
+    file) was A/B'd and rejected: its boundary-sampling pass is a whole
+    extra job that measured 10-20% of the local fold wall."""
     n_parts = max(spark.sparkContext.defaultParallelism, 1)
     return plan.repartition(n_parts, "path", "block_num").sortWithinPartitions(
         "path", "block_num"
     )
 
 
-def read_ranges(pdf: pd.DataFrame) -> Iterator[tuple[str, int, bytes]]:
-    """(path, block_num, content) for each chunk-plan row of one batch:
-    positioned range reads, with file handles cached across the rows of
-    the batch (opened once per file per batch, never per row) and
-    closed when the batch is done."""
-    handles: dict[str, object] = {}
+def read_ranges(rows: Iterable[tuple]) -> Iterator[tuple[str, int, bytes]]:
+    """(path, block_num, content) for each chunk-plan row ``(path,
+    block_num, full_path, offset, length)``: positioned range reads.
+    Both routes feed rows in (path, block_num) order, so one file
+    handle is open at a time — opened at a file's first row, closed
+    after its last."""
+    fh, open_path = None, None
     try:
-        for path, num, full_path, offset, length in zip(
-            pdf["path"], pdf["block_num"], pdf["full_path"], pdf["offset"], pdf["length"]
-        ):
-            fh = handles.get(full_path)
-            if fh is None:
-                fh = handles[full_path] = open_for_range_read(full_path)
+        for path, num, full_path, offset, length in rows:
+            if full_path != open_path:
+                if fh is not None:
+                    fh.close()
+                fh, open_path = open_for_range_read(full_path), full_path
             fh.seek(int(offset))
             yield path, int(num), fh.read(int(length))
     finally:
-        for fh in handles.values():
-            try:
-                fh.close()
-            except Exception:
-                pass
+        if fh is not None:
+            fh.close()
 
 
 def _read_chunk_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -156,7 +207,7 @@ def _read_chunk_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
             {
                 "path": pdf["path"],
                 "block_num": pdf["block_num"],
-                "content": [content for _, _, content in read_ranges(pdf)],
+                "content": [content for _, _, content in read_ranges(plan_rows(pdf))],
             }
         )
 

@@ -90,14 +90,16 @@ def main(argv: list[str] | None = None, spark=None) -> int:
             from .incremental import hash_directory_incremental
 
             prior = spark.read.parquet(args.manifest)
-            hash_string, stats, new_manifest = hash_directory_incremental(
+            # the refreshed manifest is built only when it will be written
+            hash_string, stats, *refreshed = hash_directory_incremental(
                 spark,
                 args.directory,
                 prior,
                 args.hash_algorithm,
                 args.block_size,
-                with_manifest=True,
+                with_manifest=bool(args.write_manifest),
             )
+            new_manifest = refreshed[0] if refreshed else None
             # stats to stderr: stdout stays the reference's hash-only contract
             print(
                 f"incremental: reused {stats['n_reused_files']}/{stats['n_files']} "

@@ -4,18 +4,22 @@ SURVEY §3.1).
 Stages (mirroring dirhash.py:307-444, re-expressed Spark-first):
   1. LIST   recursive listing (metadata only), routed by the serial-walk
             budget (listing.list_entries)
-  2. PLAN   chunk metadata DataFrame (no bytes touched)
-  3. READ+HASH   ONE fused mapInPandas stage: positioned range read,
-            digest the v1 preimage immediately, emit only
-            (path, block_num, digest) — chunk bytes never leave the
-            Python worker that read them.  The earlier two-stage form
-            (read in pandas, ship content to the JVM, F.sha2 there)
-            measured 0.04 GB/s at 1 GB: Arrow-serializing every content
-            byte Python→JVM cost more than the hashing itself.  Fusing
-            made it ~20x faster.  This keeps the reference's one good
-            physical choice — hash before any shuffle (dirhash.py:412-
-            413) — and strengthens it: nothing but 32-byte digests ever
-            crosses a process boundary.
+  2. PLAN   chunk metadata, no bytes touched: on the driver route
+            byte-balanced segments of the sorted chunks
+            (chunks.plan_segments), shipped with ``parallelize`` — no
+            plan DataFrame, no shuffle, one job; on the cluster route a
+            chunk-plan DataFrame spread by ``chunks.spread_plan``
+  3. READ+HASH   ONE fused loop on both routes (:func:`hash_rows`):
+            positioned range read, digest the v1 preimage immediately,
+            emit only (path, block_num, digest) — chunk bytes never
+            leave the Python worker that read them.  The earlier
+            two-stage form (read in pandas, ship content to the JVM,
+            F.sha2 there) measured 0.04 GB/s at 1 GB: Arrow-serializing
+            every content byte Python→JVM cost more than the hashing
+            itself.  Fusing made it ~20x faster.  This keeps the
+            reference's one good physical choice — hash before any
+            shuffle (dirhash.py:412-413) — and strengthens it: nothing
+            but 32-byte digests ever crosses a process boundary.
   4. COLLECT   (driver route) unsorted collect of digest rows (tiny).
             No cluster sort: DataFrame orderBy = range exchange whose
             boundary sampling re-executes the whole read+hash child a
@@ -37,18 +41,22 @@ with no manifest.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 
 import pandas as pd
+from pyspark import RDD
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import BinaryType, LongType, StringType, StructField, StructType
 
 from ..session import configure
-from .chunks import chunk_plan, read_ranges, spread_plan
+from .chunks import plan_rows, plan_segments, read_ranges, segment_rows, spread_plan
 from .codec import DEFAULT_BLOCK_SIZE, build_hash_string, get_hash_func, parse_blocksize
 
-# The pipeline's listing and fold entry points, bound here too: the
-# benchmark's tracer (perfbench/spans.py) wraps these module names.
+# Bound here for the benchmark's tracer (perfbench/spans.py), which wraps
+# these module names: the pipeline's listing and fold entry points, and
+# ``chunk_plan`` (a chunk-plan DataFrame), which the driver route no
+# longer calls.
+from .chunks import chunk_plan  # noqa: F401
 from .codec import fold_digest  # noqa: F401
 from .listing import list_entries  # noqa: F401
 
@@ -68,43 +76,62 @@ DIGEST_SCHEMA = StructType(
 )
 
 
-def _read_hash_ranges(algo: str):
-    """Fused range-read + v1-preimage digest over chunk-plan rows.
-    Incremental ``update`` calls avoid materializing the concatenated
-    preimage (a full extra copy of every chunk)."""
+def hash_rows(algo: str):
+    """THE read+hash loop, run by both routes: a function from
+    chunk-plan rows ``(path, block_num, full_path, offset, length)`` to
+    ``(path, block_num, digest)``, reading through :func:`read_ranges`
+    and digesting the v1 preimage.  Incremental ``update`` calls avoid
+    materializing the concatenated preimage (a full extra copy of every
+    chunk).  The loop is a closure, so Spark pickles it by value with
+    the reader this module binds when the stage is built."""
+    get_hash_func(algo)  # whitelist check on the driver, before any job
 
-    def inner(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def loop(rows: Iterable[tuple]) -> Iterator[tuple[str, int, bytes]]:
         func = get_hash_func(algo)
+        for path, num, content in read_ranges(rows):
+            h = func()
+            h.update(path.encode("utf-8"))
+            h.update(b"\x00")
+            h.update(str(num).encode("ascii"))
+            h.update(b"\x00")
+            h.update(content)
+            yield path, num, h.digest()
+
+    return loop
+
+
+def hash_chunk_plan(spark: SparkSession, plan: DataFrame, algo: str) -> DataFrame:
+    """The cluster route's read+hash stage: chunk-plan rows →
+    (path, block_num, digest), :func:`hash_rows` in one
+    ``mapInPandas`` over the spread plan (:func:`.chunks.spread_plan`)."""
+    loop = hash_rows(algo)
+
+    def hash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            digests = []
-            for path, num, content in read_ranges(pdf):
-                h = func()
-                h.update(path.encode("utf-8"))
-                h.update(b"\x00")
-                h.update(str(num).encode("ascii"))
-                h.update(b"\x00")
-                h.update(content)
-                digests.append(h.digest())
+            digests = [digest for _, _, digest in loop(plan_rows(pdf))]
             yield pd.DataFrame(
                 {"path": pdf["path"], "block_num": pdf["block_num"], "digest": digests}
             )
 
-    return inner
+    return spread_plan(spark, plan).mapInPandas(hash_batches, DIGEST_SCHEMA)
 
 
-def hash_chunk_plan(spark: SparkSession, plan: DataFrame, algo: str) -> DataFrame:
-    """THE read+hash stage: chunk-plan rows → (path, block_num, digest),
-    one fused ``mapInPandas`` over the spread plan
-    (:func:`.chunks.spread_plan`)."""
-    get_hash_func(algo)  # whitelist check before any cluster work
-    return spread_plan(spark, plan).mapInPandas(_read_hash_ranges(algo), DIGEST_SCHEMA)
+def digest_directory(spark: SparkSession, entries, blocksize: int, algo: str) -> RDD:
+    """The driver route's read+hash stage: ``(path, block_num, digest)``
+    tuples for every chunk of a driver listing, as an RDD whose
+    ``collect()`` runs it — one job, one task per byte-balanced segment
+    (:func:`.chunks.plan_segments` over ``defaultParallelism``), no
+    shuffle.  ``spark.createDataFrame(rdd, DIGEST_SCHEMA)`` gives it
+    columns."""
+    loop = hash_rows(algo)
+    sc = spark.sparkContext
+    segments = plan_segments(entries, blocksize, sc.defaultParallelism)
 
+    def hash_segments(segs: Iterator[list]) -> Iterator[tuple[str, int, bytes]]:
+        for segment in segs:
+            yield from loop(segment_rows(segment, blocksize))
 
-def digest_directory(
-    spark: SparkSession, entries, blocksize: int, algo: str
-) -> DataFrame:
-    """(path, block_num, digest) for every chunk of a driver listing."""
-    return hash_chunk_plan(spark, chunk_plan(spark, entries, blocksize), algo)
+    return sc.parallelize(segments, max(len(segments), 1)).mapPartitions(hash_segments)
 
 
 def fold_header_streamed(h, entries_df: DataFrame) -> None:

@@ -33,8 +33,10 @@ measures, never from an option; both are bit-identical:
       its budget and the listing's chunk count is at most
       ``hashdir.COLLECT_MAX_CHUNKS`` → one ``collect`` of the manifest
       serves the stamp check, the diff, the splice and the refreshed
-      manifest as Python over its rows; one digest collect; a driver
-      sort and ``fold_digest``;
+      manifest as Python over its rows; the changed files' chunks are
+      cut into byte-balanced segments on the driver and read+hashed in
+      one job with no shuffle (``hashdir.digest_directory``), whose
+      digests are collected; a driver sort and ``fold_digest``;
   (b) CLUSTER (:func:`rehash_listing_df`): the walk trips its budget
       (the listing stays cluster-side, ``listing.list_entries_df``), or
       the driver listing has too many chunks to collect the digests of
@@ -221,8 +223,9 @@ def _rehash_entries(
 ) -> tuple:
     """The driver route (:func:`rehash` contract): ONE manifest collect
     serves the stamp check, the stat diff, the splice and the refreshed
-    manifest; only the changed files are read and hashed, with one
-    digest collect, and the fold is ``fold_digest``."""
+    manifest; only the changed files are read and hashed, in one
+    shuffle-free job whose digests are collected, and the fold is
+    ``fold_digest``."""
     stored: dict[tuple, list] = {}
     if manifest is not None:
         rows = manifest.select(*_MANIFEST_COLUMNS, *_STAMP_COLUMNS).collect()
@@ -245,8 +248,7 @@ def _rehash_entries(
     if any(e.size > 0 for e in changed):
         # bounded: at most COLLECT_MAX_CHUNKS digest rows (the cluster
         # route takes over beyond that)
-        fresh = digest_directory(spark, changed, bs, hash_algorithm).collect()
-        digests += [(r["path"], r["block_num"], bytes(r["digest"])) for r in fresh]
+        digests += digest_directory(spark, changed, bs, hash_algorithm).collect()
     # Driver-side tuple sort == reference sortBy((path, num)),
     # dirhash.py:413 — and avoids the range-exchange sampling pass that
     # would re-execute the read+hash stage.  The fold itself is

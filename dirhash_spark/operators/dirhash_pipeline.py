@@ -20,7 +20,12 @@ from pyspark.sql import functions as F
 from ..registry import query
 from ..dirhash.chunks import read_chunks
 from ..dirhash.codec import build_hash_string
-from ..dirhash.hashdir import digest_directory, fold_listing_df, hash_directory
+from ..dirhash.hashdir import (
+    DIGEST_SCHEMA,
+    digest_directory,
+    fold_listing_df,
+    hash_directory,
+)
 from ..dirhash.listing import list_entries, list_entries_df
 
 HASHTREE = os.path.join(
@@ -111,7 +116,8 @@ def dirhash_chunk_digests(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``path ‖ NUL ‖ ascii(num) ‖ NUL ‖ content`` (dirhash.py:288-303),
     from the pipeline's own fused read+hash stage."""
     entries = list_entries(HASHTREE)
-    return digest_directory(spark, entries, 4096, "sha256").select(
+    digests = digest_directory(spark, entries, 4096, "sha256")
+    return spark.createDataFrame(digests, DIGEST_SCHEMA).select(
         "path", "block_num", F.hex(F.col("digest")).alias("digest_hex")
     )
 

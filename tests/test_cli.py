@@ -149,6 +149,32 @@ def test_write_manifest_reads_each_byte_once(spark, tree, tmp_path, capsys, monk
     assert read.value == tree_bytes
 
 
+def test_manifest_alone_builds_no_refreshed_manifest(spark, tree, tmp_path, capsys, monkeypatch):
+    """--manifest without --write-manifest asks the pipeline for no
+    refreshed manifest (nothing would write it), and prints the same
+    stdout and stderr as before: the hash, then the reuse stats."""
+    from dirhash_spark.dirhash import incremental as I
+
+    man = str(tmp_path / "manifest")
+    assert main([tree, "--block-size", "1k", "--write-manifest", man], spark=spark) == 0
+    full = capsys.readouterr().out.strip()
+
+    refreshed = []
+    real = I.rehash
+
+    def recorded(*a, **k):
+        result = real(*a, **k)
+        refreshed.append(result[2])
+        return result
+
+    monkeypatch.setattr(I, "rehash", recorded)
+    assert main([tree, "--block-size", "1k", "--manifest", man], spark=spark) == 0
+    cap = capsys.readouterr()
+    assert refreshed == [None]
+    assert cap.out == full + "\n"
+    assert cap.err == "incremental: reused 3/3 files, re-hashed 0\n"
+
+
 def test_manifest_flags_rejected_on_verify_path(spark, tree, capsys):
     """--manifest/--write-manifest combined with --check/--check-name
     must be rejected up front (exit 2, argparse error): the verify path

@@ -498,6 +498,39 @@ def test_forced_route_parity(spark, tmp_path, monkeypatch, capsys, route):
     assert (calls["shipped"] > 0) == (route == "streamed"), calls
 
 
+def test_driver_route_full_hash_is_one_job_without_shuffle(spark, tmp_path):
+    """A driver-route full hash runs exactly ONE Spark job and writes no
+    shuffle bytes: the chunk plan is cut into byte-balanced segments on
+    the driver and shipped with ``parallelize`` — no plan DataFrame, no
+    repartition.  Counted by job group, read from the status store."""
+    import uuid
+
+    root = tmp_path / "tree"
+    (root / "sub").mkdir(parents=True)
+    files = {"big.bin": bytes(range(256)) * 40, "empty.txt": b""}
+    files.update({f"sub/f{i}.bin": bytes([i]) * (50 + 97 * i) for i in range(12)})
+    for rel, content in files.items():
+        (root / rel).write_bytes(content)
+    expected = spec_hash(str(root), files, 1024)
+
+    sc = spark.sparkContext
+    group = f"full-hash-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "driver-route full hash")
+    try:
+        assert hash_directory_raw(spark, str(root), "sha256", 1024) == expected
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == 1
+    shuffle_write = 0
+    stages = store.job(jobs[0]).stageIds().iterator()
+    while stages.hasNext():
+        shuffle_write += store.lastStageAttempt(stages.next()).shuffleWriteBytes()
+    assert shuffle_write == 0
+
+
 def test_incremental_driver_route_reads_manifest_once(spark, tmp_path, monkeypatch):
     """The driver route reads the manifest with ONE job: the stamp
     check, the stat diff, the splice and the refreshed manifest all run

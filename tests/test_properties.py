@@ -129,6 +129,57 @@ def test_chunk_plan_arithmetic(spark, sizes, blocksize):
         assert sum(b["length"] for b in blocks) == s
 
 
+@settings(max_examples=300, deadline=None)
+@given(
+    files=st.dictionaries(
+        st.text(alphabet="ab/é☃._", min_size=1, max_size=10).filter(
+            lambda p: not p.endswith("/")
+        ),
+        st.integers(0, 5000),
+        max_size=10,
+    ),
+    dirs=st.lists(st.text(alphabet="xyz", min_size=1, max_size=4), max_size=3),
+    blocksize=st.integers(1, 1024),
+    n=st.integers(1, 16),
+)
+def test_plan_segments_cover_order_and_balance(files, dirs, blocksize, n):
+    """The driver route's segment planner: every (path, block_num) of
+    every non-empty file lands in exactly one segment, ranges run in
+    (path, block_num) code-point order, directories and empty files are
+    absent, no segment holds more than total/n + blocksize bytes, and
+    fewer chunks than segments give fewer (never empty) segments; the
+    rows a segment expands to tile each file exactly."""
+    from dirhash_spark.dirhash.chunks import plan_segments, segment_rows
+    from dirhash_spark.dirhash.listing import Entry
+
+    entries = [
+        Entry(relative_path=p, full_path=f"/nonexistent/{p}", size=s, is_dir=False, mtime_ns=0)
+        for p, s in files.items()
+    ] + [
+        Entry(relative_path=d + "/", full_path=f"/nonexistent/{d}", size=0, is_dir=True, mtime_ns=0)
+        for d in dirs
+    ]
+    segments = plan_segments(entries, blocksize, n)
+    ranges = [r for seg in segments for r in seg]
+    expected = sorted(
+        (p, num) for p, s in files.items() for num in range(-(-s // blocksize))
+    )
+    assert [(p, num) for p, _, _, first, end in ranges for num in range(first, end)] == expected
+    assert all(first < end and files.get(p, 0) > 0 for p, _, _, first, end in ranges)
+    assert all(full == f"/nonexistent/{p}" and s == files[p] for p, full, s, _, _ in ranges)
+    assert len(segments) <= min(n, len(expected))
+    total = sum(files.values())
+    tiled: dict[str, int] = {}
+    for seg in segments:
+        rows = list(segment_rows(seg, blocksize))
+        assert all(off == num * blocksize and 1 <= ln <= blocksize for _, num, _, off, ln in rows)
+        seg_bytes = sum(ln for *_, ln in rows)
+        assert 0 < seg_bytes and seg_bytes * n <= total + blocksize * n
+        for p, *_, ln in rows:
+            tiled[p] = tiled.get(p, 0) + ln
+    assert tiled == {p: s for p, s in files.items() if s > 0}
+
+
 _URL_RULES = (
     (r"#.*$", ""),
     (r"(\?|&)utm_[^&]*", r"\1"),
