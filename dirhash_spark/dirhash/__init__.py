@@ -7,8 +7,10 @@ DataFrame stack:
   codec.py    blocksize / algo whitelist / hash-string / v1 preimages
   listing.py  recursive listing → entries (dirs get a trailing '/'),
               routed driver/cluster by a serial-walk time budget
-  chunks.py   fixed-size chunks: byte-balanced driver segments, the plan
-              DataFrame of a cluster listing, the range reader
+  chunks.py   fixed-size chunks, one planner per listing kind: byte-
+              balanced segments of a driver listing (the read+hash stage
+              and read_chunks), the plan DataFrame of a cluster listing;
+              the range reader
   hashdir.py  the fused read+hash loop (both routes) and the v1 fold
               (collected, or streamed from cluster sorts)
   incremental.py  THE pipeline: list → diff against stored digests →

@@ -1,4 +1,4 @@
-"""Fixed-size chunking: the chunk plan, its segments and the range reader (REF A1).
+"""Fixed-size chunking: one planner per listing kind, and the range reader (REF A1).
 
 The reference vendors Spark's own FixedLengthBinaryInputFormat
 (FixedLengthBinaryRecordReader.scala:105-142): records of ``blocksize``
@@ -8,16 +8,20 @@ dirhash.py:399-406).
 
 Here a chunk is a metadata row ``(path, block_num, full_path, offset,
 length)``, and :func:`read_ranges` turns plan rows into positioned
-range reads.  The rows come in two shapes, one per route:
+range reads.  There is one planner per kind of listing:
 
-- a driver listing is cut by :func:`plan_segments` into at most
+- a driver listing: :func:`chunk_plan` cuts it into at most
   ``defaultParallelism`` contiguous, byte-balanced runs of the
-  (path, block_num)-sorted chunks, shipped as per-file block ranges
-  (O(files + segments) rows, never one per chunk) and expanded in the
-  task by :func:`segment_rows` — no plan DataFrame, no shuffle;
-- a listing DataFrame is planned with ``sequence``+``explode``
-  (:func:`chunk_plan_df`, no file bytes touched) and spread by
-  :func:`spread_plan`.
+  (path, block_num)-sorted chunks (:func:`plan_segments`), shipped as
+  per-file block ranges (O(files + segments) rows, never one per chunk)
+  and expanded in the task by :func:`segment_rows`; :func:`map_segments`
+  runs a reader over them — one job, no plan DataFrame, no shuffle.
+  Both the driver route's read+hash (``hashdir.digest_directory``) and
+  :func:`read_chunks` (``scan_fixed_binary``, ``dirhash_tree_fold``,
+  ``dirhash_incremental_rehash``) read this way;
+- a listing DataFrame: :func:`chunk_plan_df` plans it with
+  ``sequence``+``explode`` (no file bytes touched) and spreads it
+  across the cluster.
 
 Properties, on both:
 
@@ -31,9 +35,10 @@ Properties, on both:
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
+from pyspark import RDD
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -55,18 +60,17 @@ CHUNK_SCHEMA = StructType(
 )
 
 
-def chunk_plan(spark: SparkSession, entries: list[Entry], blocksize: int) -> DataFrame:
-    """Metadata-only chunk plan: one row per fixed-size block."""
-    files = [(e.relative_path, e.full_path, int(e.size)) for e in entries if not e.is_dir]
-    meta = spark.createDataFrame(
-        files or [], "path STRING, full_path STRING, size BIGINT"
-    )
-    return _plan_from_meta(meta, blocksize)
+def chunk_plan(spark: SparkSession, entries: list[Entry], blocksize: int) -> list[list[tuple]]:
+    """THE chunk plan of a driver listing: :func:`plan_segments` cut for
+    ``defaultParallelism`` tasks — metadata only, no job.
+    :func:`map_segments` runs a reader over it."""
+    return plan_segments(entries, blocksize, spark.sparkContext.defaultParallelism)
 
 
 def chunk_count(entries: list[Entry], blocksize: int) -> int:
-    """Rows :func:`chunk_plan` will emit: Σ⌈size/blocksize⌉ over files,
-    measured from the listing alone."""
+    """Chunks in a listing's plan (the rows :func:`chunk_plan`'s segments
+    expand to): Σ⌈size/blocksize⌉ over files, measured from the listing
+    alone."""
     return sum(-(-e.size // blocksize) for e in entries if not e.is_dir)
 
 
@@ -111,31 +115,54 @@ def segment_rows(segment: list[tuple], blocksize: int) -> Iterator[tuple]:
             yield path, num, full_path, offset, min(blocksize, size - offset)
 
 
+def map_segments(
+    spark: SparkSession,
+    segments: list[list[tuple]],
+    blocksize: int,
+    loop: Callable[[Iterable[tuple]], Iterator],
+) -> RDD:
+    """Run ``loop`` (chunk-plan rows → output tuples) over the rows of
+    each :func:`chunk_plan` segment, one task per segment: an RDD whose
+    action is one job with no shuffle.  Within a task rows arrive in
+    (path, block_num) order, so reads within a file stay sequential."""
+
+    def run(segs: Iterator[list[tuple]]) -> Iterator:
+        for segment in segs:
+            yield from loop(segment_rows(segment, blocksize))
+
+    return spark.sparkContext.parallelize(segments, max(len(segments), 1)).mapPartitions(run)
+
+
 def plan_rows(pdf: pd.DataFrame) -> Iterator[tuple]:
     """The chunk-plan rows of one ``mapInPandas`` batch, as tuples."""
     return zip(pdf["path"], pdf["block_num"], pdf["full_path"], pdf["offset"], pdf["length"])
 
 
 def chunk_plan_df(entries_df: DataFrame, blocksize: int) -> DataFrame:
-    """:func:`chunk_plan` over a listing DATAFRAME
-    (``listing.list_entries_df``) — the file list never passes through
-    the driver, for folds that stream the listing."""
-    meta = entries_df.where(~F.col("is_dir")).select(
-        F.col("relative_path").alias("path"),
-        "full_path",
-        F.col("size").cast("long").alias("size"),
-    )
-    return _plan_from_meta(meta, blocksize)
+    """THE chunk plan of a listing DATAFRAME (``listing.list_entries_df``
+    or ``listing.entries_frame``): one row per fixed-size block, built
+    with ``sequence``+``explode`` so the file list never passes through
+    the driver.
 
-
-def _plan_from_meta(meta: DataFrame, blocksize: int) -> DataFrame:
+    The rows are spread across the cluster, each partition sorted on
+    (path, block_num): a hash repartition (one shuffle of plan
+    metadata, and a job of its own) makes the read stage's parallelism
+    independent of how the listing was sliced; the sort makes a
+    partition's reads advance file- and offset-ORDERED instead of
+    seeking randomly (sequential range reads are the fast path on
+    s3a/hdfs, the case :func:`open_for_range_read` exists for).  A
+    driver listing needs none of this: :func:`chunk_plan` cuts it into
+    byte-balanced segments on the driver.  A repartitionByRange form
+    (contiguous global runs, fewer opens per file) was A/B'd and
+    rejected: its boundary-sampling pass is a whole extra job that
+    measured 10-20% of the local fold wall."""
     n_blocks = F.floor((F.col("size") + blocksize - 1) / blocksize).cast("long")
-    return (
-        meta.where(F.col("size") > 0)
+    plan = (
+        entries_df.where(~F.col("is_dir") & (F.col("size") > 0))
         .select(
-            "path",
+            F.col("relative_path").alias("path"),
             "full_path",
-            "size",
+            F.col("size").cast("long").alias("size"),
             F.explode(F.sequence(F.lit(0).cast("long"), n_blocks - 1)).alias("block_num"),
         )
         .select(
@@ -147,6 +174,10 @@ def _plan_from_meta(meta: DataFrame, blocksize: int) -> DataFrame:
                 "length"
             ),
         )
+    )
+    n_parts = max(entries_df.sparkSession.sparkContext.defaultParallelism, 1)
+    return plan.repartition(n_parts, "path", "block_num").sortWithinPartitions(
+        "path", "block_num"
     )
 
 
@@ -160,25 +191,6 @@ def open_for_range_read(full_path: str):
         fs, inner = pafs.FileSystem.from_uri(full_path)
         return fs.open_input_file(inner)
     return open(full_path, "rb")
-
-
-def spread_plan(spark: SparkSession, plan: DataFrame) -> DataFrame:
-    """Spread the chunk-plan rows of a listing DataFrame across the
-    cluster, each partition sorted on (path, block_num): a hash
-    repartition (one shuffle of plan metadata, and a job of its own)
-    makes the read stage's parallelism independent of how the plan was
-    sliced; the sort makes a partition's reads advance file- and
-    offset-ORDERED instead of seeking randomly (sequential range reads
-    are the fast path on s3a/hdfs, the case :func:`open_for_range_read`
-    exists for).  A driver listing needs none of this: it is cut into
-    byte-balanced segments on the driver (:func:`plan_segments`).  A
-    repartitionByRange form (contiguous global runs, fewer opens per
-    file) was A/B'd and rejected: its boundary-sampling pass is a whole
-    extra job that measured 10-20% of the local fold wall."""
-    n_parts = max(spark.sparkContext.defaultParallelism, 1)
-    return plan.repartition(n_parts, "path", "block_num").sortWithinPartitions(
-        "path", "block_num"
-    )
 
 
 def read_ranges(rows: Iterable[tuple]) -> Iterator[tuple[str, int, bytes]]:
@@ -201,19 +213,9 @@ def read_ranges(rows: Iterable[tuple]) -> Iterator[tuple[str, int, bytes]]:
             fh.close()
 
 
-def _read_chunk_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "path": pdf["path"],
-                "block_num": pdf["block_num"],
-                "content": [content for _, _, content in read_ranges(plan_rows(pdf))],
-            }
-        )
-
-
 def read_chunks(spark: SparkSession, entries: list[Entry], blocksize: int) -> DataFrame:
-    """(path, block_num, content) for every fixed-size block of every file."""
-    return spread_plan(spark, chunk_plan(spark, entries, blocksize)).mapInPandas(
-        _read_chunk_batches, CHUNK_SCHEMA
-    )
+    """(path, block_num, content) for every fixed-size block of every
+    file of a driver listing: :func:`read_ranges` over the
+    :func:`chunk_plan` segments, one job, no shuffle."""
+    rdd = map_segments(spark, chunk_plan(spark, entries, blocksize), blocksize, read_ranges)
+    return spark.createDataFrame(rdd, CHUNK_SCHEMA)

@@ -4,11 +4,13 @@ SURVEY §3.1).
 Stages (mirroring dirhash.py:307-444, re-expressed Spark-first):
   1. LIST   recursive listing (metadata only), routed by the serial-walk
             budget (listing.list_entries)
-  2. PLAN   chunk metadata, no bytes touched: on the driver route
-            byte-balanced segments of the sorted chunks
-            (chunks.plan_segments), shipped with ``parallelize`` — no
-            plan DataFrame, no shuffle, one job; on the cluster route a
-            chunk-plan DataFrame spread by ``chunks.spread_plan``
+  2. PLAN   chunk metadata, no bytes touched, one planner per listing
+            kind: a driver listing is cut into byte-balanced segments
+            of the sorted chunks (chunks.chunk_plan), shipped with
+            ``parallelize`` — no plan DataFrame, no shuffle, one job
+            (chunks.map_segments, which chunks.read_chunks shares); a
+            listing DataFrame gets a spread chunk-plan DataFrame
+            (chunks.chunk_plan_df)
   3. READ+HASH   ONE fused loop on both routes (:func:`hash_rows`):
             positioned range read, digest the v1 preimage immediately,
             emit only (path, block_num, digest) — chunk bytes never
@@ -35,8 +37,7 @@ Stages (mirroring dirhash.py:307-444, re-expressed Spark-first):
 The read+hash stage and the fold live here.  The pipeline that runs
 them, its one router and its two routes (driver, cluster) live in
 :mod:`.incremental`, because a full hash IS a re-hash with nothing
-stored: :func:`hash_directory_raw` and :func:`fold_listing_df` run it
-with no manifest.
+stored: :func:`hash_directory_raw` runs it with no manifest.
 """
 
 from __future__ import annotations
@@ -49,14 +50,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import BinaryType, LongType, StringType, StructField, StructType
 
 from ..session import configure
-from .chunks import plan_rows, plan_segments, read_ranges, segment_rows, spread_plan
+from .chunks import chunk_plan, map_segments, plan_rows, read_ranges
 from .codec import DEFAULT_BLOCK_SIZE, build_hash_string, get_hash_func, parse_blocksize
 
 # Bound here for the benchmark's tracer (perfbench/spans.py), which wraps
-# these module names: the pipeline's listing and fold entry points, and
-# ``chunk_plan`` (a chunk-plan DataFrame), which the driver route no
-# longer calls.
-from .chunks import chunk_plan  # noqa: F401
+# these module names: the pipeline's listing and fold entry points.  It
+# also wraps ``chunk_plan`` (imported above), which digest_directory
+# calls through this module's global so the wrapper sees the call.
 from .codec import fold_digest  # noqa: F401
 from .listing import list_entries  # noqa: F401
 
@@ -100,10 +100,10 @@ def hash_rows(algo: str):
     return loop
 
 
-def hash_chunk_plan(spark: SparkSession, plan: DataFrame, algo: str) -> DataFrame:
+def hash_chunk_plan(plan: DataFrame, algo: str) -> DataFrame:
     """The cluster route's read+hash stage: chunk-plan rows →
     (path, block_num, digest), :func:`hash_rows` in one
-    ``mapInPandas`` over the spread plan (:func:`.chunks.spread_plan`)."""
+    ``mapInPandas`` over the spread plan (:func:`.chunks.chunk_plan_df`)."""
     loop = hash_rows(algo)
 
     def hash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -113,25 +113,18 @@ def hash_chunk_plan(spark: SparkSession, plan: DataFrame, algo: str) -> DataFram
                 {"path": pdf["path"], "block_num": pdf["block_num"], "digest": digests}
             )
 
-    return spread_plan(spark, plan).mapInPandas(hash_batches, DIGEST_SCHEMA)
+    return plan.mapInPandas(hash_batches, DIGEST_SCHEMA)
 
 
 def digest_directory(spark: SparkSession, entries, blocksize: int, algo: str) -> RDD:
     """The driver route's read+hash stage: ``(path, block_num, digest)``
     tuples for every chunk of a driver listing, as an RDD whose
-    ``collect()`` runs it — one job, one task per byte-balanced segment
-    (:func:`.chunks.plan_segments` over ``defaultParallelism``), no
-    shuffle.  ``spark.createDataFrame(rdd, DIGEST_SCHEMA)`` gives it
-    columns."""
+    ``collect()`` runs it — :func:`hash_rows` over the
+    :func:`.chunks.chunk_plan` segments (:func:`.chunks.map_segments`):
+    one job, one task per byte-balanced segment, no shuffle.
+    ``spark.createDataFrame(rdd, DIGEST_SCHEMA)`` gives it columns."""
     loop = hash_rows(algo)
-    sc = spark.sparkContext
-    segments = plan_segments(entries, blocksize, sc.defaultParallelism)
-
-    def hash_segments(segs: Iterator[list]) -> Iterator[tuple[str, int, bytes]]:
-        for segment in segs:
-            yield from loop(segment_rows(segment, blocksize))
-
-    return sc.parallelize(segments, max(len(segments), 1)).mapPartitions(hash_segments)
+    return map_segments(spark, chunk_plan(spark, entries, blocksize), blocksize, loop)
 
 
 def fold_header_streamed(h, entries_df: DataFrame) -> None:
@@ -182,17 +175,6 @@ def fold_digests_streamed(h, digests: DataFrame) -> None:
     )
     for row in it:
         h.update(bytes(row["digest"]))
-
-
-def fold_listing_df(
-    spark: SparkSession, entries_df: DataFrame, hash_algorithm: str, blocksize: int
-) -> str:
-    """The v1 hex digest of a listing DataFrame (``listing.list_entries_df``
-    or ``listing.entries_frame``) with a constant-memory driver fold: the
-    cluster route with nothing stored (``incremental.rehash_listing_df``)."""
-    from .incremental import rehash_listing_df  # imports this module
-
-    return rehash_listing_df(spark, entries_df, None, hash_algorithm, blocksize)[0]
 
 
 def hash_directory_raw(

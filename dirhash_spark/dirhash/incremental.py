@@ -333,7 +333,7 @@ def rehash_listing_df(
             "path",
         ).where(F.col("digest").isNotNull()).select("path", "block_num", "digest")
 
-    digests = hash_chunk_plan(spark, chunk_plan_df(changed, bs), hash_algorithm)
+    digests = hash_chunk_plan(chunk_plan_df(changed, bs), hash_algorithm)
     if reused is not None:
         digests = reused.unionByName(digests)
     digests = digests.localCheckpoint()

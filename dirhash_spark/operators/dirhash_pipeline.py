@@ -20,12 +20,8 @@ from pyspark.sql import functions as F
 from ..registry import query
 from ..dirhash.chunks import read_chunks
 from ..dirhash.codec import build_hash_string
-from ..dirhash.hashdir import (
-    DIGEST_SCHEMA,
-    digest_directory,
-    fold_listing_df,
-    hash_directory,
-)
+from ..dirhash.hashdir import DIGEST_SCHEMA, digest_directory, hash_directory
+from ..dirhash.incremental import rehash_listing_df
 from ..dirhash.listing import list_entries, list_entries_df
 
 HASHTREE = os.path.join(
@@ -264,14 +260,14 @@ def dirhash_full_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A7+A8, constant-memory fold: the route a tree takes when its
     serial walk trips the listing budget — cluster-side listing, and
     both the header paths and the digests sorted on the cluster and
-    streamed into the hash chain one partition at a time
-    (hashdir.fold_listing_df).  Must emit the byte-identical hash string
+    streamed into the hash chain one partition at a time: the cluster
+    route with nothing stored (incremental.rehash_listing_df).  Must
+    emit the byte-identical hash string
     to ``dirhash_full`` (also pinned against the from-scratch spec
     digest in tests/test_dirhash_e2e.py)."""
     entries_df = list_entries_df(spark, HASHTREE)
-    hs = build_hash_string(
-        "sha256", "4k", fold_listing_df(spark, entries_df, "sha256", 4096)
-    )
+    hex_digest = rehash_listing_df(spark, entries_df, None, "sha256", 4096)[0]
+    hs = build_hash_string("sha256", "4k", hex_digest)
     return spark.createDataFrame([(HASHTREE, hs)], "directory STRING, hash_string STRING")
 
 

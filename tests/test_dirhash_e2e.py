@@ -498,11 +498,32 @@ def test_forced_route_parity(spark, tmp_path, monkeypatch, capsys, route):
     assert (calls["shipped"] > 0) == (route == "streamed"), calls
 
 
-def test_driver_route_full_hash_is_one_job_without_shuffle(spark, tmp_path):
-    """A driver-route full hash runs exactly ONE Spark job and writes no
-    shuffle bytes: the chunk plan is cut into byte-balanced segments on
-    the driver and shipped with ``parallelize`` — no plan DataFrame, no
-    repartition.  Counted by job group, read from the status store."""
+def _full_hash_matches_spec(spark, root, files):
+    assert hash_directory_raw(spark, root, "sha256", 1024) == spec_hash(root, files, 1024)
+
+
+def _read_chunks_tile_every_file(spark, root, files):
+    by_file: dict[str, list] = {}
+    for r in read_chunks(spark, list_entries(root), 1024).collect():
+        by_file.setdefault(r["path"], []).append((r["block_num"], bytes(r["content"])))
+    assert set(by_file) == {rel for rel, content in files.items() if content}
+    for rel, chunks in by_file.items():
+        chunks.sort()
+        assert [num for num, _ in chunks] == list(range(len(chunks)))
+        assert b"".join(content for _, content in chunks) == files[rel]
+
+
+@pytest.mark.parametrize(
+    "run",
+    [_full_hash_matches_spec, _read_chunks_tile_every_file],
+    ids=["hash_directory_raw", "read_chunks"],
+)
+def test_driver_route_full_hash_is_one_job_without_shuffle(spark, tmp_path, run):
+    """A driver-route full hash, and a raw chunk read of a driver
+    listing, each run exactly ONE Spark job and write no shuffle bytes:
+    the chunk plan is cut into byte-balanced segments on the driver and
+    shipped with ``parallelize`` — no plan DataFrame, no repartition.
+    Counted by job group, read from the status store."""
     import uuid
 
     root = tmp_path / "tree"
@@ -511,13 +532,12 @@ def test_driver_route_full_hash_is_one_job_without_shuffle(spark, tmp_path):
     files.update({f"sub/f{i}.bin": bytes([i]) * (50 + 97 * i) for i in range(12)})
     for rel, content in files.items():
         (root / rel).write_bytes(content)
-    expected = spec_hash(str(root), files, 1024)
 
     sc = spark.sparkContext
     group = f"full-hash-{uuid.uuid4().hex}"
     sc.setJobGroup(group, "driver-route full hash")
     try:
-        assert hash_directory_raw(spark, str(root), "sha256", 1024) == expected
+        run(spark, str(root), files)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
@@ -529,6 +549,49 @@ def test_driver_route_full_hash_is_one_job_without_shuffle(spark, tmp_path):
     while stages.hasNext():
         shuffle_write += store.lastStageAttempt(stages.next()).shuffleWriteBytes()
     assert shuffle_write == 0
+
+
+def test_traced_driver_hash_reports_every_layer(spark, tmp_path, monkeypatch):
+    """The benchmark's tracer (perfbench/spans.py) wraps engine names at
+    their import sites; a driver-route hash must fire each layer's span,
+    so a renamed or bypassed name fails here rather than reading 0 in a
+    benchmark run: the chunk plan's span sees every chunk, the
+    read+hash stage runs one job, and the listing span sees every
+    entry."""
+    import importlib.util
+    import sys
+
+    spans_path = os.path.join(os.path.dirname(os.path.dirname(__file__)), "perfbench", "spans.py")
+    spec = importlib.util.spec_from_file_location("perfbench_spans", spans_path)
+    spans = importlib.util.module_from_spec(spec)
+    # its dataclasses resolve their annotations through sys.modules
+    monkeypatch.setitem(sys.modules, spec.name, spans)
+    spec.loader.exec_module(spans)
+
+    root = tmp_path / "tree"
+    (root / "sub").mkdir(parents=True)
+    files = {"a.bin": b"a" * 2500, "b.txt": b"bee", "sub/c.bin": b"c" * 1024}
+    for rel, content in files.items():
+        (root / rel).write_bytes(content)
+    n_chunks = sum(-(-len(content) // 1024) for content in files.values())
+
+    sc = spark.sparkContext
+    tracer = spans.Tracer(sc)
+    restore = spans.install(tracer)
+    try:
+        tracer.active = True
+        with tracer.span("op"):
+            hash_directory(spark, str(root), "sha256", "1k")
+        tracer.active = False
+        tracer.read_counters(tracer.spans)
+        metrics = spans.layer_metrics(tracer.spans, sc.defaultParallelism, 1.0)
+    finally:
+        restore()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert metrics["chunks.n"] == n_chunks
+    assert metrics["chunks.plan_s"] > 0
+    assert metrics["hashdir.jobs"] == 1
+    assert metrics["listing.entries"] == len(list_entries(str(root)))
 
 
 def test_incremental_driver_route_reads_manifest_once(spark, tmp_path, monkeypatch):
@@ -721,7 +784,7 @@ def test_parallel_listing_equals_serial(spark, tree, tmp_path):
     flags — as the serial walk, on the fixture tree and on a wide
     many-dir tree (the shape whose serial walk is latency-bound at
     scale)."""
-    from dirhash_spark.dirhash.hashdir import fold_listing_df
+    from dirhash_spark.dirhash.incremental import rehash_listing_df
     from dirhash_spark.dirhash.listing import list_entries_df
 
     root, _ = tree
@@ -739,7 +802,7 @@ def test_parallel_listing_equals_serial(spark, tree, tmp_path):
     wide_df = list_entries_df(spark, str(wide))
     assert as_row_set(wide_df) == as_set(list_entries(str(wide)))
     # and the fold consumes it identically: same v1 digest
-    assert fold_listing_df(spark, wide_df, "sha256", 7) == hash_directory_raw(
+    assert rehash_listing_df(spark, wide_df, None, "sha256", 7)[0] == hash_directory_raw(
         spark, str(wide), "sha256", 7
     )
 

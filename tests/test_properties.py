@@ -96,12 +96,14 @@ def test_fold_entry_order_invariance(entries, digests):
     blocksize=st.integers(1, 1024),
 )
 def test_chunk_plan_arithmetic(spark, sizes, blocksize):
-    """For arbitrary file sizes: block offsets/lengths tile each file
-    exactly — contiguous indices from 0, every block full except a
-    short last one, lengths summing to the file size, empty files
-    absent (dirhash_test.py:205-208 semantics)."""
-    from dirhash_spark.dirhash.chunks import chunk_plan
-    from dirhash_spark.dirhash.listing import Entry
+    """For arbitrary file sizes, on both planners (the driver listing's
+    segments, expanded, and the listing DataFrame's plan): block
+    offsets/lengths tile each file exactly — contiguous indices from 0,
+    every block full except a short last one, lengths summing to the
+    file size, empty files absent (dirhash_test.py:205-208 semantics) —
+    and the two planners give the same rows."""
+    from dirhash_spark.dirhash.chunks import chunk_plan, chunk_plan_df, segment_rows
+    from dirhash_spark.dirhash.listing import Entry, entries_frame
 
     entries = [
         Entry(
@@ -113,20 +115,27 @@ def test_chunk_plan_arithmetic(spark, sizes, blocksize):
         )
         for i, s in enumerate(sizes)
     ]
-    rows = chunk_plan(spark, entries, blocksize).collect()
-    by_file: dict[str, list] = {}
-    for r in rows:
-        by_file.setdefault(r["path"], []).append(r)
-    assert set(by_file) == {f"f{i}.bin" for i, s in enumerate(sizes) if s > 0}
-    for i, s in enumerate(sizes):
-        if s == 0:
-            continue
-        blocks = sorted(by_file[f"f{i}.bin"], key=lambda r: r["block_num"])
-        assert [b["block_num"] for b in blocks] == list(range(len(blocks)))
-        assert all(b["offset"] == b["block_num"] * blocksize for b in blocks)
-        assert all(b["length"] == blocksize for b in blocks[:-1])
-        assert 1 <= blocks[-1]["length"] <= blocksize
-        assert sum(b["length"] for b in blocks) == s
+    driver_rows = [
+        row for seg in chunk_plan(spark, entries, blocksize) for row in segment_rows(seg, blocksize)
+    ]
+    cluster_rows = [
+        tuple(r) for r in chunk_plan_df(entries_frame(spark, entries), blocksize).collect()
+    ]
+    assert sorted(driver_rows) == sorted(cluster_rows)
+    for rows in (driver_rows, cluster_rows):
+        by_file: dict[str, list] = {}
+        for path, num, _, offset, length in rows:
+            by_file.setdefault(path, []).append((num, offset, length))
+        assert set(by_file) == {f"f{i}.bin" for i, s in enumerate(sizes) if s > 0}
+        for i, s in enumerate(sizes):
+            if s == 0:
+                continue
+            blocks = sorted(by_file[f"f{i}.bin"])
+            assert [num for num, _, _ in blocks] == list(range(len(blocks)))
+            assert all(offset == num * blocksize for num, offset, _ in blocks)
+            assert all(length == blocksize for _, _, length in blocks[:-1])
+            assert 1 <= blocks[-1][2] <= blocksize
+            assert sum(length for _, _, length in blocks) == s
 
 
 @settings(max_examples=300, deadline=None)
