@@ -4,15 +4,16 @@ Distributed content-addressable directory hashing with the reference's
 exact v1 hash semantics (/root/reference/dirhash.py), rebuilt on the
 DataFrame stack:
 
-  codec.py    blocksize / algo whitelist / hash-string / v1 preimages
+  codec.py    blocksize / algo whitelist / hash-string / the v1 byte
+              framing: chunk digest and fold, one each for both routes
   listing.py  recursive listing → entries (dirs get a trailing '/'),
-              routed driver/cluster by a serial-walk time budget
+              routed driver/cluster by a serial-walk time budget; one
+              directory scan for both local walks
   chunks.py   fixed-size chunks, one planner per listing kind: byte-
               balanced segments of a driver listing (the read+hash stage
               and read_chunks), the plan DataFrame of a cluster listing;
               the range reader
-  hashdir.py  the fused read+hash loop (both routes) and the v1 fold
-              (collected, or streamed from cluster sorts)
+  hashdir.py  the fused read+hash loop and its stage (both routes)
   incremental.py  THE pipeline: list → diff against stored digests →
               read+hash the changed files → splice → fold, on a driver
               or a cluster route; a full hash is the re-hash with

@@ -37,7 +37,6 @@ from __future__ import annotations
 
 from collections.abc import Callable, Iterable, Iterator
 
-import pandas as pd
 from pyspark import RDD
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -131,11 +130,6 @@ def map_segments(
             yield from loop(segment_rows(segment, blocksize))
 
     return spark.sparkContext.parallelize(segments, max(len(segments), 1)).mapPartitions(run)
-
-
-def plan_rows(pdf: pd.DataFrame) -> Iterator[tuple]:
-    """The chunk-plan rows of one ``mapInPandas`` batch, as tuples."""
-    return zip(pdf["path"], pdf["block_num"], pdf["full_path"], pdf["offset"], pdf["length"])
 
 
 def chunk_plan_df(entries_df: DataFrame, blocksize: int) -> DataFrame:

@@ -14,12 +14,19 @@ Reference behavior mirrored here:
 - algorithm whitelist: SHA-2 family (either case), sha3 family,
   blake2b/blake2s; md5/sha1 rejected (dirhash.py:158-173).
 - hash string: ``v1-<algo>-<blocksize>-<hex>`` (dirhash.py:250-274).
+
+The v1 byte framing is written once, here, and both routes run it:
+:func:`chunk_digest` digests a chunk's preimage (:func:`chunk_preimage`
+is its reference form), and :func:`fold` is the final chain, fed
+driver-sorted lists by :func:`fold_digest` on the driver route and
+cluster-sorted one-pass streams on the cluster route.
 """
 
 from __future__ import annotations
 
 import hashlib
 import re
+from collections.abc import Iterable
 
 #: Reference default (dirhash.py:153).
 DEFAULT_BLOCK_SIZE = "128M"
@@ -118,23 +125,48 @@ def chunk_preimage(relative_path: str, block_num: int, content: bytes) -> bytes:
     return relative_path.encode("utf-8") + b"\x00" + str(block_num).encode("ascii") + b"\x00" + bytes(content)
 
 
-def fold_digest(algo: str, entries: list[str], chunk_digests: list[bytes]) -> str:
-    """Final Merkle-style fold (dirhash.py:422-441) → hex digest.
-
-    Framing: ``ascii(len(entries)) ‖ NUL ‖ NUL.join(sorted entries) ‖ NUL``
-    then the raw chunk digests concatenated in (path, block_num) order.
-    ``entries`` are relative paths (dirs carry a trailing '/', empty files
-    appear with zero chunks); sorted here with Python's lexicographic
-    string sort to match the reference (dirhash.py:418).  THE single
-    driver-side definition of the header framing; its cluster twin is
-    ``hashdir.fold_header_streamed``.
-    """
-    ordered = sorted(entries)
-    h = get_hash_func(algo)()
-    h.update(str(len(ordered)).encode("ascii"))
+def chunk_digest(func, relative_path: str, block_num: int, content: bytes) -> bytes:
+    """``func(chunk_preimage(relative_path, block_num, content)).digest()``
+    for a hashlib constructor ``func``, with the preimage fed in pieces:
+    no concatenated copy of the chunk is made."""
+    h = func()
+    h.update(relative_path.encode("utf-8"))
     h.update(b"\x00")
-    h.update("\x00".join(ordered).encode("utf-8"))
+    h.update(str(block_num).encode("ascii"))
+    h.update(b"\x00")
+    h.update(content)
+    return h.digest()
+
+
+def fold(
+    algo: str, n_entries: int, sorted_entries: Iterable[str], chunk_digests: Iterable[bytes]
+) -> str:
+    """THE v1 fold (dirhash.py:422-441) → hex digest.
+
+    Framing: ``ascii(n_entries) ‖ NUL ‖ NUL.join(sorted_entries) ‖ NUL``
+    then the raw chunk digests concatenated.  ``sorted_entries`` are the
+    relative paths in Python string order (dirs carry a trailing '/',
+    empty files appear with zero chunks) and ``chunk_digests`` are in
+    (path, block_num) order.  Each sequence is read once, in order, so
+    either may be a one-pass iterator that starts its work only when
+    the fold reaches it."""
+    h = get_hash_func(algo)()
+    h.update(str(n_entries).encode("ascii"))
+    h.update(b"\x00")
+    for i, path in enumerate(sorted_entries):
+        if i:
+            h.update(b"\x00")
+        h.update(path.encode("utf-8"))
     h.update(b"\x00")
     for digest in chunk_digests:
         h.update(bytes(digest))
     return h.hexdigest()
+
+
+def fold_digest(algo: str, entries: list[str], chunk_digests: list[bytes]) -> str:
+    """:func:`fold` over a driver listing's relative paths, sorted here
+    with Python's lexicographic string sort to match the reference
+    (dirhash.py:418), and its chunk digests in (path, block_num)
+    order."""
+    ordered = sorted(entries)
+    return fold(algo, len(ordered), ordered, chunk_digests)

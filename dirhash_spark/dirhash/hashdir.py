@@ -11,8 +11,11 @@ Stages (mirroring dirhash.py:307-444, re-expressed Spark-first):
             (chunks.map_segments, which chunks.read_chunks shares); a
             listing DataFrame gets a spread chunk-plan DataFrame
             (chunks.chunk_plan_df)
-  3. READ+HASH   ONE fused loop on both routes (:func:`hash_rows`):
-            positioned range read, digest the v1 preimage immediately,
+  3. READ+HASH   ONE fused loop on both routes (:func:`hash_rows`), in
+            one stage shape: an RDD ``mapPartitions`` over chunk-plan
+            rows (the driver route's segments, the cluster route's
+            plan DataFrame's ``.rdd``).  Positioned range read, digest
+            the v1 preimage immediately (``codec.chunk_digest``),
             emit only (path, block_num, digest) — chunk bytes never
             leave the Python worker that read them.  The earlier
             two-stage form (read in pandas, ship content to the JVM,
@@ -29,14 +32,15 @@ Stages (mirroring dirhash.py:307-444, re-expressed Spark-first):
             Python tuple order — bit-identical to the reference's
             sortBy (dirhash.py:413), including non-ASCII path
             code-point order.
-  5. FOLD   driver-side sequential Merkle chain (inherently ordered):
-            ``codec.fold_digest`` over collected digests, or the
-            streamed header and digest drains below on the cluster
-            route.
+  5. FOLD   driver-side sequential Merkle chain (inherently ordered),
+            ``codec.fold`` on both routes: ``codec.fold_digest`` over
+            the driver listing and collected digests, or, on the
+            cluster route, over the listing's count and two
+            cluster-sorted streams (header paths, then digests).
 
-The read+hash stage and the fold live here.  The pipeline that runs
-them, its one router and its two routes (driver, cluster) live in
-:mod:`.incremental`, because a full hash IS a re-hash with nothing
+The read+hash stage lives here; the fold is ``codec``'s.  The pipeline
+that runs them, its one router and its two routes (driver, cluster)
+live in :mod:`.incremental`, because a full hash IS a re-hash with nothing
 stored: :func:`hash_directory_raw` runs it with no manifest.
 """
 
@@ -44,14 +48,19 @@ from __future__ import annotations
 
 from collections.abc import Iterable, Iterator
 
-import pandas as pd
 from pyspark import RDD
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import BinaryType, LongType, StringType, StructField, StructType
 
 from ..session import configure
-from .chunks import chunk_plan, map_segments, plan_rows, read_ranges
-from .codec import DEFAULT_BLOCK_SIZE, build_hash_string, get_hash_func, parse_blocksize
+from .chunks import chunk_plan, map_segments, read_ranges
+from .codec import (
+    DEFAULT_BLOCK_SIZE,
+    build_hash_string,
+    chunk_digest,
+    get_hash_func,
+    parse_blocksize,
+)
 
 # Bound here for the benchmark's tracer (perfbench/spans.py), which wraps
 # these module names: the pipeline's listing and fold entry points.  It
@@ -80,40 +89,25 @@ def hash_rows(algo: str):
     """THE read+hash loop, run by both routes: a function from
     chunk-plan rows ``(path, block_num, full_path, offset, length)`` to
     ``(path, block_num, digest)``, reading through :func:`read_ranges`
-    and digesting the v1 preimage.  Incremental ``update`` calls avoid
-    materializing the concatenated preimage (a full extra copy of every
-    chunk).  The loop is a closure, so Spark pickles it by value with
-    the reader this module binds when the stage is built."""
+    and digesting with ``codec.chunk_digest``.  The loop is a closure,
+    so Spark pickles it by value with the reader this module binds
+    when the stage is built."""
     get_hash_func(algo)  # whitelist check on the driver, before any job
 
     def loop(rows: Iterable[tuple]) -> Iterator[tuple[str, int, bytes]]:
         func = get_hash_func(algo)
         for path, num, content in read_ranges(rows):
-            h = func()
-            h.update(path.encode("utf-8"))
-            h.update(b"\x00")
-            h.update(str(num).encode("ascii"))
-            h.update(b"\x00")
-            h.update(content)
-            yield path, num, h.digest()
+            yield path, num, chunk_digest(func, path, num, content)
 
     return loop
 
 
 def hash_chunk_plan(plan: DataFrame, algo: str) -> DataFrame:
     """The cluster route's read+hash stage: chunk-plan rows →
-    (path, block_num, digest), :func:`hash_rows` in one
-    ``mapInPandas`` over the spread plan (:func:`.chunks.chunk_plan_df`)."""
-    loop = hash_rows(algo)
-
-    def hash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            digests = [digest for _, _, digest in loop(plan_rows(pdf))]
-            yield pd.DataFrame(
-                {"path": pdf["path"], "block_num": pdf["block_num"], "digest": digests}
-            )
-
-    return plan.mapInPandas(hash_batches, DIGEST_SCHEMA)
+    (path, block_num, digest), :func:`hash_rows` over the partitions of
+    the spread plan (:func:`.chunks.chunk_plan_df`)."""
+    digests = plan.rdd.mapPartitions(hash_rows(algo))
+    return plan.sparkSession.createDataFrame(digests, DIGEST_SCHEMA)
 
 
 def digest_directory(spark: SparkSession, entries, blocksize: int, algo: str) -> RDD:
@@ -125,56 +119,6 @@ def digest_directory(spark: SparkSession, entries, blocksize: int, algo: str) ->
     ``spark.createDataFrame(rdd, DIGEST_SCHEMA)`` gives it columns."""
     loop = hash_rows(algo)
     return map_segments(spark, chunk_plan(spark, entries, blocksize), blocksize, loop)
-
-
-def fold_header_streamed(h, entries_df: DataFrame) -> None:
-    """Stream the v1 fold HEADER from a cluster-side listing into
-    hasher ``h``: entry count, NUL, the NUL-separated relative paths in
-    cluster sort order (Spark's UTF8String binary order == code-point
-    order, matching Python's str sort — parity pinned in
-    tests/test_properties.py), trailing NUL — byte-identical to the
-    driver-side header :func:`..codec.fold_digest` builds.  One sorted
-    partition of path strings is driver-resident at a time, never the
-    listing.  THE single definition of the streamed header framing:
-    the full-hash fold and the incremental splice both call it, so the
-    framing cannot drift between them."""
-    h.update(str(entries_df.count()).encode("ascii"))
-    h.update(b"\x00")
-    paths = (
-        entries_df.orderBy("relative_path")
-        .select("relative_path")
-        # bounded: at most TWO sorted partitions of path strings
-        # resident at a time — never the full listing.  Prefetching
-        # overlaps the next partition's job with the driver's hash
-        # drain (without it the executors sit idle between the
-        # per-partition jobs toLocalIterator schedules); measured
-        # +30% streamed-fold throughput, r14 BASELINE.md.
-        .toLocalIterator(prefetchPartitions=True)
-    )
-    for i, row in enumerate(paths):
-        if i:
-            h.update(b"\x00")
-        h.update(row["relative_path"].encode("utf-8"))
-    h.update(b"\x00")
-
-
-def fold_digests_streamed(h, digests: DataFrame) -> None:
-    """Drain (path, block_num)-sorted chunk digests into hasher ``h``
-    — the v1 fold's payload section, cluster-sorted; one sorted
-    partition of 32-byte digests driver-resident at a time.  Shared by
-    the full-hash streamed fold and the incremental splice (callers
-    localCheckpoint ``digests`` first so the orderBy's range-exchange
-    sampling never re-runs the read+hash stage)."""
-    it = (
-        digests.orderBy("path", "block_num")
-        .select("digest")
-        # bounded: at most TWO sorted partitions of 32-byte digests
-        # resident at a time — never the full set (prefetch rationale
-        # in fold_header_streamed above)
-        .toLocalIterator(prefetchPartitions=True)
-    )
-    for row in it:
-        h.update(bytes(row["digest"]))
 
 
 def hash_directory_raw(

@@ -4,9 +4,12 @@ The reference shells out to ``hadoop fs -ls -R`` and regex-parses the
 output (fragile for filenames with newlines — a known reference quirk).
 Here the listing is a structured filesystem walk: the Hadoop FileSystem
 API via the JVM gateway for non-local schemes (hdfs://, s3a://, ...),
-plain ``os.walk`` for local paths.  Output convention matches the
-reference: relative paths, directories suffixed '/', the root itself
-excluded.
+and for local paths :func:`_scan_dir`, ONE ``os.scandir`` pass per
+directory that both local walks run — the serial walk on the driver,
+the cluster walk on the executors — so the two share one set of rules
+by construction (classification, stat, descent, relative path; see
+:func:`_scan_dir`).  Output convention matches the reference: relative
+paths, directories suffixed '/', the root itself excluded.
 
 Scale routing: a serial walk issues one listing round-trip per
 directory, so it is latency-bound on networked metadata (NFS/Lustre/
@@ -25,8 +28,8 @@ listing with too many chunks to collect the digests of, ships the
 listing once with :func:`entries_frame` (same columns).
 
 Every walk takes a file's size and ``mtime_ns`` from ONE stat: the
-serial walk's ``os.stat``, the JVM-gateway walk's ``FileStatus``, the
-cluster walk's ``scandir`` entry.  The incremental re-hash diffs those
+local walks' ``scandir`` entry stat, the JVM-gateway walk's
+``FileStatus``.  The incremental re-hash diffs those
 fields against its manifest, so they are a consistent pre-hash snapshot
 and no consumer stats a file a second time.
 """
@@ -147,7 +150,7 @@ def list_entries(root: str, spark=None) -> list[Entry] | None:
 def reject_undecodable_paths(entries: list[Entry]) -> None:
     """Fail CLEARLY on filenames that are not valid UTF-8.
 
-    ``os.walk`` surrogateescapes undecodable bytes (Linux filenames are
+    ``os.scandir`` surrogateescapes undecodable bytes (Linux filenames are
     bytes), and such a path later explodes deep inside the pipeline —
     ``UnicodeEncodeError: surrogates not allowed`` from a worker's
     ``path.encode('utf-8')``, the fold's NUL-join, or py4j string
@@ -167,31 +170,55 @@ def reject_undecodable_paths(entries: list[Entry]) -> None:
             ) from None
 
 
+def _scan_dir(directory: str, prefix: int) -> Iterator[tuple]:
+    """THE directory scan of both local walks: one ``os.scandir`` pass
+    over ``directory``, yielding ``(relative_path, is_dir, size,
+    full_path, mtime_ns, walk_into)`` per entry — the :class:`Entry`
+    fields plus whether to descend.  The rules:
+
+    - classification FOLLOWS symlinks (``is_dir()``): a symlink to a
+      directory lists as a dir entry; an entry that cannot be stat'ed
+      lists as a file, whose stat then raises;
+    - ONE stat per file, following symlinks: a symlink to a file
+      records the target's size and mtime (a broken symlink raises);
+    - only REAL directories are walked into (``is_dir and not
+      is_symlink``): a symlinked directory is listed, its contents not;
+    - the relative path is the full path with the root's ``prefix``
+      characters (``len(os.path.join(root, ""))``) stripped.
+
+    A directory that cannot be read raises here (``PermissionError``
+    naming it) on both walks: hashing the tree without its contents
+    would be a silently wrong digest."""
+    with os.scandir(directory) as it:
+        for de in it:
+            try:
+                is_dir = de.is_dir()
+            except OSError:  # unstatable: lists as a file, whose stat raises
+                is_dir = False
+            if is_dir:
+                yield de.path[prefix:] + "/", True, 0, de.path, 0, not de.is_symlink()
+            else:
+                st = de.stat()
+                yield de.path[prefix:], False, st.st_size, de.path, st.st_mtime_ns, False
+
+
 def _list_local(root: str, budget_s: float | None = None) -> list[Entry] | None:
-    """Serial ``os.walk`` listing; returns None if ``budget_s`` elapses
-    first (checked every 64 directories — cheap vs. the walk itself)."""
+    """Serial walk: a driver-side directory frontier over
+    :func:`_scan_dir`; returns None if ``budget_s`` elapses first
+    (checked every 1024 entries — cheap vs. the walk itself)."""
     if not os.path.isdir(root):
         raise FileNotFoundError(f"not a directory: {root}")
     if budget_s is not None and budget_s <= 0:
         return None
     deadline = None if budget_s is None else time.perf_counter() + budget_s
+    prefix = len(os.path.join(root, ""))
     entries: list[Entry] = []
-    n_dirs = 0
-    for dirpath, dirnames, filenames in os.walk(root):
-        n_dirs += 1
-        if deadline is not None and n_dirs % 64 == 0 and time.perf_counter() > deadline:
-            return None
-        for d in dirnames:
-            full = os.path.join(dirpath, d)
-            rel = os.path.relpath(full, root).replace(os.sep, "/")
-            entries.append(Entry(rel + "/", True, 0, full, 0))
-        for f in filenames:
-            full = os.path.join(dirpath, f)
-            rel = os.path.relpath(full, root).replace(os.sep, "/")
-            st = os.stat(full)  # follows symlinks: a file link stats as its target
-            entries.append(Entry(rel, False, st.st_size, full, st.st_mtime_ns))
-            # the stat is one metadata round-trip per FILE — re-check the
-            # budget inside file-heavy directories too
+    frontier = [root]
+    while frontier:
+        for rel, is_dir, size, full, mtime_ns, walk_into in _scan_dir(frontier.pop(), prefix):
+            entries.append(Entry(rel, is_dir, size, full, mtime_ns))
+            if walk_into:
+                frontier.append(full)
             if (
                 deadline is not None
                 and len(entries) % 1024 == 0
@@ -211,9 +238,9 @@ def _list_hadoop(spark, root: str) -> list[Entry]:
     entries: list[Entry] = []
 
     # explicit stack, not recursion: both local walks are iterative
-    # (os.walk; the frontier walk), and an object-store tree nested
-    # past ~1000 synthetic prefixes must not die with RecursionError
-    # on the one route scheme paths are forced onto
+    # frontiers too, and an object-store tree nested past ~1000
+    # synthetic prefixes must not die with RecursionError on the one
+    # route scheme paths are forced onto
     stack = [fs.makeQualified(jpath)]
     while stack:
         p = stack.pop()
@@ -230,69 +257,40 @@ def _list_hadoop(spark, root: str) -> list[Entry]:
     return entries
 
 
-def _scan_level(batches) -> Iterator:
-    """Per-directory ``os.scandir`` with ``os.walk`` parity (the serial
-    walk is the semantic contract; equivalence is pinned in
-    tests/test_dirhash_e2e.py, including symlink trees):
-
-    - classification FOLLOWS symlinks (``de.is_dir()``): a symlink to a
-      directory lists as a dir entry, exactly as ``os.walk`` puts it in
-      ``dirnames``;
-    - sizes and mtimes FOLLOW symlinks (``de.stat()`` == the serial
-      walk's ``os.stat``): a symlink to a file records the target's
-      byte length (a broken symlink raises OSError on both walks);
-    - only REAL directories are walked into (``walk_into`` =
-      ``is_dir and not is_symlink`` == ``os.walk(followlinks=False)``),
-      so a symlinked directory is listed but its contents are not.
-    """
-    import pandas as pd
-
-    for pdf in batches:
-        rows = []
-        for d in pdf["dir"]:
-            for de in os.scandir(d):
-                try:
-                    is_dir = de.is_dir()
-                except OSError:  # os.walk treats an unstatable entry as a file
-                    is_dir = False
-                # one stat per file entry serves size AND mtime_ns (module doc)
-                st = None if is_dir else de.stat()
-                rows.append(
-                    (
-                        de.path,
-                        is_dir,
-                        0 if is_dir else st.st_size,
-                        is_dir and not de.is_symlink(),
-                        0 if is_dir else st.st_mtime_ns,
-                    )
-                )
-        yield pd.DataFrame(
-            rows, columns=["path", "is_dir", "size", "walk_into", "mtime_ns"]
-        )
-
-
-_SCAN_LEVEL_SCHEMA = (
-    "path string, is_dir boolean, size long, walk_into boolean, mtime_ns long"
+#: The cluster walk's per-level rows: :func:`_scan_dir`'s tuples.
+_SCAN_SCHEMA = (
+    "relative_path string, is_dir boolean, size long, full_path string, "
+    "mtime_ns long, walk_into boolean"
 )
+_SCAN_COLUMNS = [c.split()[0] for c in _SCAN_SCHEMA.split(", ")]
 
 
 def _level_frontier_walk(spark, local_root: str):
     """Core of the cluster walk: yield one localCheckpoint'd DataFrame
-    of ``_SCAN_LEVEL_SCHEMA`` rows per tree level.  Only the
-    directory frontier — one level at a time — returns to the driver;
-    the checkpoint means later consumers (union / collect) re-read
-    materialized metadata rows, never the filesystem."""
+    of :func:`_scan_dir` rows (``_SCAN_SCHEMA``) per tree level.  Only
+    the directory frontier — one level at a time — returns to the
+    driver; the checkpoint means later consumers (union / collect)
+    re-read materialized metadata rows, never the filesystem."""
+    prefix = len(os.path.join(local_root, ""))
+
+    def scan(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            rows = [row for d in pdf["dir"] for row in _scan_dir(d, prefix)]
+            yield pd.DataFrame(rows, columns=_SCAN_COLUMNS)
+
     frontier = [local_root]
     while frontier:
         level = (
             spark.createDataFrame([(d,) for d in frontier], "dir string")
             .repartition(min(_LEVEL_PARTITIONS, max(1, len(frontier))))
-            .mapInPandas(_scan_level, _SCAN_LEVEL_SCHEMA)
+            .mapInPandas(scan, _SCAN_SCHEMA)
             .localCheckpoint()
         )
         frontier = [
-            r["path"]
-            for r in level.where("walk_into").select("path").collect()
+            r["full_path"]
+            for r in level.where("walk_into").select("full_path").collect()
             # bounded: one tree LEVEL of directory paths — the walk
             # frontier a serial walk would also hold
         ]
@@ -313,8 +311,7 @@ def list_entries_df(spark, root: str):
     executor ``os.scandir``s its slice of the frontier in parallel (one
     ``mapInPandas`` job per tree LEVEL, so a 1M-dir tree of depth 10
     costs 10 jobs of ~100k parallel listings instead of 1M serial ones).
-    Rows carry the same conventions as the serial walk (parity rules in
-    :func:`_scan_level`, pinned in tests/test_dirhash_e2e.py), one
+    Rows are :func:`_scan_dir`'s, the serial walk's own scan, one
     column per :class:`Entry` field.
 
     Local/shared-filesystem roots only: executors list with
@@ -330,29 +327,11 @@ def list_entries_df(spark, root: str):
     if not os.path.isdir(local):
         raise FileNotFoundError(f"not a directory: {local}")
 
-    from pyspark.sql import functions as F
-
     levels = list(_level_frontier_walk(spark, local))
     df = levels[0]
     for lv in levels[1:]:
         df = df.union(lv)
-    # Children paths are os.path.join(parent, name) descending from
-    # the local root, so the relative path is a fixed-length prefix strip
-    # (substring positions count the same code points Python len does).
-    # The joining '/' is only appended when the local root doesn't already
-    # end with one — computing the strip length from the rstrip'd root
-    # keeps a '/' root (children '/name') from silently losing
-    # the first character of every relative path.
-    rel = F.expr(f"substring(path, {len(local.rstrip('/')) + 2})")
-    return df.select(
-        F.when(F.col("is_dir"), F.concat(rel, F.lit("/"))).otherwise(rel).alias(
-            "relative_path"
-        ),
-        F.col("is_dir"),
-        F.col("size").cast("long").alias("size"),
-        F.col("path").alias("full_path"),
-        F.col("mtime_ns").cast("long").alias("mtime_ns"),
-    )
+    return df.drop("walk_into")
 
 
 def entries_frame(spark, entries: list[Entry]):

@@ -14,6 +14,11 @@ many pairs the change won (ties count for neither side), and whether a
 gain may be claimed: wins in at least nine tenths of the pairs and
 medians further apart than the parent's interquartile range.  Nothing
 under either checkout's ``perfbench/`` is written.
+
+Each run starts in its own session and has a deadline of four times
+its run length plus 240 s; a run still going then has its whole
+process group killed, and the script exits non-zero naming the
+checkout, the side and the seed.
 """
 
 from __future__ import annotations
@@ -21,18 +26,28 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import signal
 import statistics
 import subprocess
 import sys
 
 
-def run_once(checkout: str, workload: str, seed: int, seconds: float) -> dict:
+def run_once(checkout: str, side: str, workload: str, seed: int, seconds: float) -> dict:
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
            "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
-    proc = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
-    lines = [ln for ln in proc.stdout.splitlines() if ln.strip()]
+    deadline = 4 * seconds + 240
+    proc = subprocess.Popen(cmd, cwd=checkout, stdout=subprocess.PIPE,
+                            stderr=subprocess.PIPE, text=True, start_new_session=True)
+    try:
+        stdout, stderr = proc.communicate(timeout=deadline)
+    except subprocess.TimeoutExpired:
+        os.killpg(proc.pid, signal.SIGKILL)
+        proc.communicate()
+        raise SystemExit(f"{checkout}: {side} run, seed {seed}, still running after "
+                         f"{deadline:g} s; its process group was killed") from None
+    lines = [ln for ln in stdout.splitlines() if ln.strip()]
     if proc.returncode != 0 or not lines:
-        raise SystemExit(f"{checkout}: exit {proc.returncode}\n{proc.stderr[-2000:]}")
+        raise SystemExit(f"{checkout}: exit {proc.returncode}\n{stderr[-2000:]}")
     return json.loads(lines[-1])
 
 
@@ -60,7 +75,7 @@ def main(argv=None) -> int:
         seed = seeds[i % len(seeds)]
         order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
         for side in order:
-            result = run_once(sides[side], args.workload, seed, seconds)
+            result = run_once(sides[side], side, args.workload, seed, seconds)
             runs[side].append(result)
             values = {k: round(v["value"], 4) for k, v in result["metrics"].items()}
             print(f"pair {i} seed {seed} {side}: correct={result['correct']} "

@@ -192,20 +192,20 @@ def test_manifest_flags_rejected_on_verify_path(spark, tree, capsys):
 def _force_streamed_route(monkeypatch) -> dict:
     """Force the cluster fold on a driver listing — the listing shipped
     to the cluster, digests drained through the constant-memory
-    ``fold_digests_streamed`` — by lowering the chunk-count bound below
-    any tree's chunk count; returns a counter of the drains taken, so
-    each test can prove the route ran."""
+    ``incremental.rehash_listing_df`` — by lowering the chunk-count
+    bound below any tree's chunk count; returns a counter of the
+    cluster folds taken, so each test can prove the route ran."""
     from dirhash_spark.dirhash import hashdir as H
     from dirhash_spark.dirhash import incremental as I
 
     calls = {"drain": 0}
-    real = I.fold_digests_streamed
+    real = I.rehash_listing_df
 
     def counted(*a, **k):
         calls["drain"] += 1
         return real(*a, **k)
 
-    monkeypatch.setattr(I, "fold_digests_streamed", counted)
+    monkeypatch.setattr(I, "rehash_listing_df", counted)
     monkeypatch.setattr(H, "COLLECT_MAX_CHUNKS", -1)
     return calls
 

@@ -436,7 +436,7 @@ def test_forced_route_parity(spark, tmp_path, monkeypatch, capsys, route):
 
         monkeypatch.setattr(module, attr, counted)
 
-    count(I, "fold_digests_streamed", "drain")
+    count(I, "rehash_listing_df", "drain")
     count(I, "list_entries_df", "cluster_walk")
     count(I, "entries_frame", "shipped")
     force_route(monkeypatch, route)
@@ -999,6 +999,35 @@ def test_broken_symlink_fails_loudly_on_every_walk(spark, tmp_path):
         list_entries(str(root))
     with pytest.raises(Exception):  # surfaces as a Spark task failure
         list_entries_df(spark, str(root)).collect()
+
+
+def test_unreadable_directory_fails_loudly(spark, tmp_path, monkeypatch):
+    """A directory that cannot be listed fails every local walk and the
+    driver-route hash, naming it — never a listing (and a digest) of
+    the tree minus that directory's contents."""
+    import re
+
+    root = tmp_path / "locked"
+    (root / "a").mkdir(parents=True)
+    (root / "a" / "x").write_bytes(b"x")
+    (root / "b").mkdir()
+    (root / "b" / "y").write_bytes(b"y")
+    locked = str(root / "b")
+    real_scandir = os.scandir
+
+    def scandir(path="."):
+        if os.fspath(path) == locked:
+            raise PermissionError(13, "Permission denied", locked)
+        return real_scandir(path)
+
+    monkeypatch.setattr(os, "scandir", scandir)
+    for call in (
+        lambda: list_entries(str(root)),
+        lambda: list_entries(str(root), spark),
+        lambda: hash_directory(spark, str(root), "sha256", "1k"),
+    ):
+        with pytest.raises(PermissionError, match=re.escape(locked)):
+            call()
 
 
 def test_collect_fold_bit_identical_under_forced_parallel_listing(

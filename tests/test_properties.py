@@ -17,8 +17,11 @@ from hypothesis import strategies as st
 
 from dirhash_spark.dirhash.codec import (
     build_hash_string,
+    chunk_digest,
     chunk_preimage,
+    fold,
     fold_digest,
+    get_hash_func,
     parse_blocksize,
     parse_hash_string,
     supported_algorithms,
@@ -61,13 +64,18 @@ def test_hash_string_roundtrip(algo, n, suffix, hexstr):
 def test_chunk_preimage_framing(path, num, content):
     """Preimage = path ‖ NUL ‖ ascii(num) ‖ NUL ‖ content, exactly —
     and parseable back (path has no NULs, num is digits), so two
-    distinct (path, num, content) triples can never collide preimages."""
+    distinct (path, num, content) triples can never collide preimages.
+    The digest both routes compute, fed in pieces, is the digest of
+    that preimage."""
     pre = chunk_preimage(path, num, content)
     head, rest = pre.split(b"\x00", 1)
     numpart, tail = rest.split(b"\x00", 1)
     assert head.decode("utf-8") == path
     assert int(numpart) == num
     assert tail == content
+    for algo in ("sha256", "blake2b"):
+        f = get_hash_func(algo)
+        assert chunk_digest(f, path, num, content) == f(pre).digest()
 
 
 @given(
@@ -81,10 +89,13 @@ def test_chunk_preimage_framing(path, num, content):
 def test_fold_entry_order_invariance(entries, digests):
     """fold_digest sorts the listing itself (dirhash.py:418): any input
     permutation of entries yields the same digest, while chunk-digest
-    ORDER matters (the Merkle chain is order-dependent by design)."""
+    ORDER matters (the Merkle chain is order-dependent by design).
+    ``fold`` fed one-pass iterators — the cluster route's streams —
+    gives the same digest."""
     h1 = fold_digest("sha256", entries, digests)
     h2 = fold_digest("sha256", list(reversed(entries)), digests)
     assert h1 == h2
+    assert fold("sha256", len(entries), iter(sorted(entries)), iter(digests)) == h1
     if list(reversed(digests)) != digests:
         h3 = fold_digest("sha256", entries, list(reversed(digests)))
         assert h3 != h1
@@ -916,7 +927,7 @@ def test_listing_routes_agree_on_random_trees(
     """For ANY tree shape — nested dirs, unicode names, empty files,
     empty directories, even a completely empty root — the serial walk
     and the level-parallel cluster walk must produce the identical
-    (relative_path, is_dir, size) set: the routing budget may change
+    set of Entry rows, all five fields: the routing budget may change
     WHERE the walk runs, never what it returns."""
     import os as _os
 
@@ -931,9 +942,12 @@ def test_listing_routes_agree_on_random_trees(
     for d in empty_dirs:
         _os.makedirs(_os.path.join(root, d), exist_ok=True)
 
-    serial = {(e.relative_path, e.is_dir, e.size) for e in list_entries(root)}
+    serial = {
+        (e.relative_path, e.is_dir, e.size, e.full_path, e.mtime_ns)
+        for e in list_entries(root)
+    }
     dfr = {
-        (r["relative_path"], r["is_dir"], r["size"])
+        (r["relative_path"], r["is_dir"], r["size"], r["full_path"], r["mtime_ns"])
         for r in list_entries_df(spark, root).collect()
     }
     assert dfr == serial
