@@ -18,8 +18,14 @@ def _chmod_readonly(path: str) -> None:
     write permission from targets OUTSIDE the archived tree (the
     listing layer explicitly supports symlinked files/dirs, so such
     trees are in-contract), and a broken link would crash os.stat
-    halfway through an already-moved archive."""
-    for dirpath, dirnames, filenames in os.walk(path, topdown=False):
+    halfway through an already-moved archive.  A subdirectory that
+    cannot be listed raises, instead of being skipped with its files
+    left writable."""
+
+    def _raise(err: OSError) -> None:
+        raise err
+
+    for dirpath, dirnames, filenames in os.walk(path, topdown=False, onerror=_raise):
         for name in filenames + dirnames:
             p = os.path.join(dirpath, name)
             if os.path.islink(p):

@@ -64,6 +64,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..routing import checkpoint_counted
 from . import hashdir
 from .chunks import chunk_count, chunk_plan_df
 from .codec import (
@@ -311,18 +312,19 @@ def rehash_listing_df(
         keys = manifest.select(
             F.col("path").alias("relative_path"), "size", "mtime_ns"
         ).distinct()
-        files = files.join(
-            keys.withColumn("matched", F.lit(True)),
-            ["relative_path", "size", "mtime_ns"],
-            "left",
-            # consumed by the counts aggregate, the reused-digest
-            # semi-side, the changed-file chunk plan, and the refreshed
-            # manifest — checkpoint so the diff join runs once
-        ).localCheckpoint()
-        counts = files.agg(
-            F.count(F.lit(1)).alias("n_files"), F.count("matched").alias("n_reused")
-        ).first()
-        stats = _stats(int(counts["n_files"]), int(counts["n_files"]) - int(counts["n_reused"]))
+        # consumed by the reused-digest semi-side, the changed-file
+        # chunk plan, and the refreshed manifest — checkpointed so the
+        # diff join runs once
+        files, counts = checkpoint_counted(
+            files.join(
+                keys.withColumn("matched", F.lit(True)),
+                ["relative_path", "size", "mtime_ns"],
+                "left",
+            ),
+            n_files=F.count(F.lit(1)),
+            n_reused=F.count("matched"),
+        )
+        stats = _stats(counts["n_files"], counts["n_files"] - counts["n_reused"])
         changed = files.where(F.col("matched").isNull())
         reused = manifest.join(
             files.where("matched").select(F.col("relative_path").alias("path")),

@@ -35,7 +35,7 @@ from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -48,6 +48,7 @@ from pyspark.sql.types import (
 
 from ..catalog import Catalog, spread_for_compute, table_rowcount, table_stats
 from ..registry import REGISTRY, query
+from ..routing import checkpoint_counted
 from .text import gram_start_indices
 
 # Shared normalization (Spark expr and DuckDB SQL must stay in lockstep).
@@ -1015,12 +1016,13 @@ def _cc_driver_unionfind(
 
 def _connected_components(
     nodes: DataFrame, edges: DataFrame, labels_are_ids: bool = False
-) -> DataFrame:
+) -> tuple[DataFrame, int]:
     """Distributed connected components by min-label propagation with
     pointer jumping — or, below a measured edge bound, a driver
     union-find with a broadcast join back (see
-    :data:`_CC_DRIVER_EDGE_BOUND`; ``last_iters`` reads 0 on that
-    route).  ``labels_are_ids=True`` is the caller's assertion that
+    :data:`_CC_DRIVER_EDGE_BOUND`).  Returns ``(labels, rounds)``;
+    ``rounds == 0`` means the driver route ran.
+    ``labels_are_ids=True`` is the caller's assertion that
     ``label == doc_id`` for every node AND every edge endpoint appears
     in ``nodes`` (how all in-repo callers construct the node table);
     the driver route then derives initial labels from the endpoint ids
@@ -1051,14 +1053,9 @@ def _connected_components(
     SoCC 2014) — same primitives, provably fewer rounds on skewed
     degree distributions.
     """
-    # The router count rides the checkpoint's own materialization job as
-    # an observed metric (r15) — the separate count() job it replaces
-    # was cheap per call but every CC caller paid it once per query.
-    n_edges_obs = Observation()
-    edges = edges.observe(n_edges_obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
-    if int(n_edges_obs.get["n"]) <= _CC_DRIVER_EDGE_BOUND:
-        _connected_components.last_iters = 0
-        return _cc_driver_unionfind(nodes, edges, labels_are_ids=labels_are_ids)
+    edges, m = checkpoint_counted(edges, n=F.count(F.lit(1)))
+    if m["n"] <= _CC_DRIVER_EDGE_BOUND:
+        return _cc_driver_unionfind(nodes, edges, labels_are_ids=labels_are_ids), 0
     labels = nodes
     prev_sum = None
     iters = 0
@@ -1076,20 +1073,11 @@ def _connected_components(
         labels = labels.join(jump, labels["label"] == jump["pj_doc"], "left").select(
             "doc_id", F.coalesce("pj_label", "label").alias("label")
         )
-        # convergence sum observed on the checkpoint job itself (r15):
-        # one Spark job per round instead of two (checkpoint + agg)
-        sum_obs = Observation()
-        labels = labels.observe(
-            sum_obs, F.sum("label").alias("s")
-        ).localCheckpoint()
-        s = sum_obs.get["s"]
-        if s == prev_sum:
+        labels, m = checkpoint_counted(labels, s=F.sum("label"))
+        if m["s"] == prev_sum:
             break
-        prev_sum = s
-    # exposed for the round-count comparison tests vs the
-    # large-star/small-star variant; not part of the operator contract
-    _connected_components.last_iters = iters
-    return labels
+        prev_sum = m["s"]
+    return labels, iters
 
 
 #: Shared by dedup_cluster_canonical and its large-star/small-star twin
@@ -1166,7 +1154,7 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
     ).unionByName(pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v")))
     nodes = cat.documents.select("doc_id", F.col("doc_id").alias("label"))
-    labels = _connected_components(nodes, edges, labels_are_ids=True)
+    labels, _ = _connected_components(nodes, edges, labels_are_ids=True)
     return labels.select(
         "doc_id",
         F.col("label").alias("cluster_id"),
@@ -1174,7 +1162,9 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _cc_large_small_star(pairs: DataFrame, max_iters: int = _CC_MAX_ITERS) -> DataFrame:
+def _cc_large_small_star(
+    pairs: DataFrame, max_iters: int = _CC_MAX_ITERS
+) -> tuple[DataFrame, int]:
     """Connected components by alternating large-star / small-star
     rounds (Kiveris et al., "Connected Components in MapReduce and
     Beyond", SoCC 2014) — the web-scale refinement next to
@@ -1197,9 +1187,8 @@ def _cc_large_small_star(pairs: DataFrame, max_iters: int = _CC_MAX_ITERS) -> Da
     O(log diameter), but each round still touches the full label
     table; star rounds shrink the edge set itself as stars form).
 
-    Returns (doc_id, label) for every node that appears in an edge —
-    singletons are the caller's join.  Sets ``last_iters`` like its
-    sibling for the round-count comparison tests.
+    Returns ``(labels, rounds)``: labels are (doc_id, label) for every
+    node that appears in an edge — singletons are the caller's join.
     """
     # (u, v) with u > v, deduped; checkpointed so iteration re-reads
     # rows, not the upstream candidate/verify lineage.
@@ -1238,9 +1227,7 @@ def _cc_large_small_star(pairs: DataFrame, max_iters: int = _CC_MAX_ITERS) -> Da
             .where(F.col("node") != F.col("m"))
             .select(F.col("node").alias("u"), F.col("m").alias("v"))
             .distinct()
-            .localCheckpoint()
         )
-        edges = ss
         # order-independent fixpoint digest: (count, sum of xxhash64
         # over the (u, v) pair).  A (count, sum(u), sum(v)) triple can
         # collide for distinct edge sets (a round that rewires edges
@@ -1248,21 +1235,19 @@ def _cc_large_small_star(pairs: DataFrame, max_iters: int = _CC_MAX_ITERS) -> Da
         # non-star edge set); the per-pair hash sum changes whenever
         # any edge changes.  decimal(38,0) accumulator: a long sum of
         # 64-bit hashes overflows under ANSI mode.
-        cur = tuple(
-            edges.agg(
-                F.count(F.lit(1)),
-                F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
-            ).first()
+        edges, cur = checkpoint_counted(
+            ss,
+            n=F.count(F.lit(1)),
+            h=F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
         )
         if cur == prev:
             break
         prev = cur
-    _cc_large_small_star.last_iters = iters
     # at the fixpoint each non-root points straight at its component
     # minimum; the min() is a no-op guard against a max_iters bailout
     return edges.groupBy("u").agg(F.min("v").alias("label")).select(
         F.col("u").alias("doc_id"), "label"
-    )
+    ), iters
 
 
 @query(
@@ -1287,7 +1272,7 @@ def dedup_cluster_canonical_bigstar(spark: SparkSession, sf_dir: str) -> DataFra
         .where(F.col("jaccard") >= _CLUSTER_JACCARD)
         .select("doc_a", "doc_b")
     )
-    member = _cc_large_small_star(pairs)
+    member, _ = _cc_large_small_star(pairs)
     return (
         cat.documents.select("doc_id")
         .join(member, "doc_id", "left")
@@ -1650,7 +1635,7 @@ def pipeline_semdedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes = cat.embeddings.select(
         F.col("vec_id").alias("doc_id"), F.col("vec_id").alias("label")
     )
-    labels = _connected_components(nodes, edges, labels_are_ids=True)
+    labels, _ = _connected_components(nodes, edges, labels_are_ids=True)
     return labels.select(
         F.col("doc_id").alias("vec_id"),
         F.col("label").alias("cluster_id"),
@@ -2365,17 +2350,12 @@ def pipeline_neardup_e2e_lsh_union(spark: SparkSession, sf_dir: str) -> DataFram
 
 
 def _neardup_cluster(spark: SparkSession, sf_dir: str, include_lsh: bool) -> DataFrame:
-    ver_obs = Observation()
-    ver = (
-        _neardup_verified_pairs(spark, sf_dir, include_lsh=include_lsh)
-        .observe(ver_obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
+    ver, m = checkpoint_counted(
+        _neardup_verified_pairs(spark, sf_dir, include_lsh=include_lsh), n=F.count(F.lit(1))
     )
     # materialized ONCE (localCheckpoint): both the edge list and the
     # node list read it, and the CC loop re-reads edges every round —
     # left lazy, the posting+verify lineage would execute 2+ more times.
-    # The router count below rides the checkpoint job as an observed
-    # metric (r15) — the separate count() job is gone.
 
     # Unlike the canonical/semdedup callers — whose corpus-sized node
     # tables (singletons included) must stay cluster-side — this graph's
@@ -2389,7 +2369,7 @@ def _neardup_cluster(spark: SparkSession, sf_dir: str, include_lsh: bool) -> Dat
     # the lazy join-back), ~1.0 s of the 2.8 s e2e wall at sf0.1.
     # Above the bound the distributed propagation runs exactly as
     # before; route parity is pinned by test_neardup_cluster_route_parity.
-    if int(ver_obs.get["n"]) * 2 <= _CC_DRIVER_EDGE_BOUND:
+    if m["n"] * 2 <= _CC_DRIVER_EDGE_BOUND:
         pairs = ver.collect()  # bounded: router-counted
         find = _union_by_min((p["doc_a"], p["doc_b"]) for p in pairs)
         endpoints = {p["doc_a"] for p in pairs} | {p["doc_b"] for p in pairs}
@@ -2408,7 +2388,7 @@ def _neardup_cluster(spark: SparkSession, sf_dir: str, include_lsh: bool) -> Dat
         .distinct()
         .select("doc_id", F.col("doc_id").alias("label"))
     )
-    labels = _connected_components(nodes, edges, labels_are_ids=True)
+    labels, _ = _connected_components(nodes, edges, labels_are_ids=True)
     return labels.select(
         "doc_id",
         F.col("label").alias("cluster_id"),
@@ -2480,14 +2460,8 @@ def _neardup_verified_pairs(
         cand_lsh = REGISTRY["dedup_minhash"].fn(spark, sf_dir).select("doc_a", "doc_b")
         cand = cand.unionByName(cand_lsh)
     # Checkpointed so the verify join doesn't re-execute the candidate
-    # lineage per join side; the runtime count rides the checkpoint job
-    # as an observed metric (r15) — one job instead of two.
-    cand_obs = Observation()
-    cand = (
-        cand.distinct()
-        .observe(cand_obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
-    )
+    # lineage per join side.
+    cand, m = checkpoint_counted(cand.distinct(), n=F.count(F.lit(1)))
 
     # -- exact verify on candidates only (integer comparison, no floats).
     #    Join strategy decided at RUNTIME from the actual candidate
@@ -2497,7 +2471,7 @@ def _neardup_verified_pairs(
     a = g.select(F.col("doc_id").alias("doc_a"), F.col("grams").alias("ga"), F.col("sz").alias("sa"))
     b = g.select(F.col("doc_id").alias("doc_b"), F.col("grams").alias("gb"), F.col("sz").alias("sb"))
     inter = F.size(F.array_intersect(F.col("ga"), F.col("gb")))
-    if int(cand_obs.get["n"]) <= VERIFY_BROADCAST_MAX_PAIRS:
+    if m["n"] <= VERIFY_BROADCAST_MAX_PAIRS:
         joined = a.join(F.broadcast(cand), "doc_a").join(b, "doc_b")
     else:
         joined = a.hint("merge").join(cand, "doc_a").join(b.hint("merge"), "doc_b")
@@ -2870,19 +2844,13 @@ def dedup_verbatim_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
         #    (hash, count) pairs; no doc_id, position, or string
         #    crosses the wire.
         p1 = tokens().select(F.transform("ws", lambda w: F.xxhash64(w)).alias("wh"))
-        match_obs = Observation()
-        matched = (
-            p1.select(
-                F.explode(_verbatim_window_hashes("wh", F.col("wh"))).alias("h")
-            )
+        matched, m = checkpoint_counted(
+            p1.select(F.explode(_verbatim_window_hashes("wh", F.col("wh"))).alias("h"))
             .groupBy("h")
             .agg(F.count(F.lit(1)).alias("n"))
             .where(F.col("n") >= 2)
-            .select("h")
-            # materialized once; the router count below rides the
-            # checkpoint job as an observed metric
-            .observe(match_obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint()
+            .select("h"),
+            n=F.count(F.lit(1)),
         )
         # -- pass 2: rebuild windows WITH strings map-side, keep only
         #    postings whose window hash matched, then the definitional
@@ -2908,7 +2876,7 @@ def dedup_verbatim_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", F.col("w.pos").alias("pos"), F.col("w.win").alias("win"),
             F.col("w.h").alias("h"),
         )
-        if int(match_obs.get["n"]) <= _VERBATIM_BROADCAST_MAX_HASHES:
+        if m["n"] <= _VERBATIM_BROADCAST_MAX_HASHES:
             surv = e.join(F.broadcast(matched), "h")
         else:  # boilerplate-dense degenerate corpora: 8-byte merge join
             surv = e.hint("merge").join(matched, "h")

@@ -10,11 +10,12 @@ single scan (word count adds one shuffle for its groupBy).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import Catalog, sink_dir
 from ..registry import query
+from ..routing import checkpoint_counted
 
 
 def gram_start_indices(toks, n: int):
@@ -1252,17 +1253,13 @@ def _bpe_train(spark: SparkSession, sf_dir: str):
     symbols = F.transform(
         F.sequence(F.lit(1), F.length("word")), lambda i: F.substr(F.col("word"), i, F.lit(1))
     )
-    # router count observed on the checkpoint's own job (r15): one
-    # Spark job instead of two (checkpoint + count)
-    vocab_obs = Observation()
-    w = (
+    w, m = checkpoint_counted(
         tok.groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
-        .select("word", "freq", symbols.alias("syms"))
-        .observe(vocab_obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
+        .select("word", "freq", symbols.alias("syms")),
+        n=F.count(F.lit(1)),
     )
-    if int(vocab_obs.get["n"]) <= _BPE_DRIVER_VOCAB_BOUND:
+    if m["n"] <= _BPE_DRIVER_VOCAB_BOUND:
         # bounded: router-counted <= _BPE_DRIVER_VOCAB_BOUND vocab rows
         vocab = [(r["word"], int(r["freq"]), list(r["syms"])) for r in w.collect()]
         rules, vocab = _bpe_merge_driver(vocab, _BPE_STEPS)

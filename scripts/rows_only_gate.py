@@ -343,9 +343,9 @@ def check_cc_routes(spark) -> bool:
     saved = dedup_mod._CC_DRIVER_EDGE_BOUND
     try:
         dedup_mod._CC_DRIVER_EDGE_BOUND = 1 << 30  # force driver route
-        drv = dict(map(tuple, dedup_mod._connected_components(nodes, edges).collect()))
+        drv = dict(map(tuple, dedup_mod._connected_components(nodes, edges)[0].collect()))
         dedup_mod._CC_DRIVER_EDGE_BOUND = -1  # force distributed route
-        dist = dict(map(tuple, dedup_mod._connected_components(nodes, edges).collect()))
+        dist = dict(map(tuple, dedup_mod._connected_components(nodes, edges)[0].collect()))
     finally:
         dedup_mod._CC_DRIVER_EDGE_BOUND = saved
     return drv == dist

@@ -1170,6 +1170,34 @@ def test_archive_chmod_skips_symlinks(tmp_path):
     assert not (os.stat(os.path.join(target, "f.txt")).st_mode & stat_mod.S_IWUSR)
 
 
+def test_archive_unreadable_subdirectory_fails_loudly(tmp_path, monkeypatch):
+    """A subdirectory the read-only pass cannot list fails the archive
+    move, naming it — never a "read-only" archive whose files under that
+    subdirectory stay writable."""
+    import re
+
+    from dirhash_spark.dirhash.archive import move_folder_to_hashed_archive
+
+    src = tmp_path / "tree"
+    (src / "a").mkdir(parents=True)
+    (src / "a" / "x").write_bytes(b"x")
+    (src / "b").mkdir()
+    (src / "b" / "y").write_bytes(b"y")
+    locked = str(tmp_path / "archive" / "v1-sha256-4k-deadbeef" / "b")
+    real_scandir = os.scandir
+
+    def scandir(path="."):
+        if os.fspath(path) == locked:
+            raise PermissionError(13, "Permission denied", locked)
+        return real_scandir(path)
+
+    monkeypatch.setattr(os, "scandir", scandir)
+    with pytest.raises(PermissionError, match=re.escape(locked)):
+        move_folder_to_hashed_archive(
+            str(src), "v1-sha256-4k-deadbeef", str(tmp_path / "archive")
+        )
+
+
 def test_strip_trailing_slash_preserves_uri_roots():
     """'file:///' (the documented filesystem-root spelling) and
     'hdfs://nn/' (an authority root) must survive strip_trailing_slash

@@ -569,8 +569,8 @@ def test_bigstar_cc_matches_minlabel_and_round_counts(spark, tmp_path, monkeypat
 
     def both(pairs_list):
         pairs = spark.createDataFrame(pairs_list, "doc_a long, doc_b long")
-        star = dict(map(tuple, _cc_large_small_star(pairs).collect()))
-        it_star = _cc_large_small_star.last_iters
+        star_labels, it_star = _cc_large_small_star(pairs)
+        star = dict(map(tuple, star_labels.collect()))
         edges = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")).unionByName(
             pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
         )
@@ -580,13 +580,14 @@ def test_bigstar_cc_matches_minlabel_and_round_counts(spark, tmp_path, monkeypat
             .distinct()
             .select("doc_id", F.col("doc_id").alias("label"))
         )
-        ml = dict(map(tuple, _connected_components(nodes, edges).collect()))
+        ml_labels, it_ml = _connected_components(nodes, edges)
+        ml = dict(map(tuple, ml_labels.collect()))
         # the star form omits component roots (label == self by
         # construction); the registered query restores them via the
         # documents left-join, so compare with that coalesce applied
         star_full = {n: star.get(n, n) for n in ml}
         assert star_full == ml
-        return it_star, _connected_components.last_iters
+        return it_star, it_ml
 
     chain = [(i, i + 1) for i in range(63)]
     clique = [(100 + i, 100 + j) for i in range(20) for j in range(i + 1, 20)]
@@ -1472,8 +1473,8 @@ def test_cc_driver_fastpath_matches_distributed(spark, monkeypatch):
     including singletons (present in nodes, absent from edges: they
     must keep their own label, proving corpus-sized nodes never enter
     the driver mapping), chains, cliques, and fixed-seed random graphs
-    — and the router must actually take each route (last_iters == 0 on
-    the fast path, > 0 when forced distributed)."""
+    — and the router must actually take each route (0 rounds on the
+    fast path, > 0 when forced distributed)."""
     import random
 
     from pyspark.sql import functions as F
@@ -1489,11 +1490,13 @@ def test_cc_driver_fastpath_matches_distributed(spark, monkeypatch):
         nodes = spark.range(n_nodes).select(
             F.col("id").alias("doc_id"), F.col("id").alias("label")
         )
-        fast = dict(map(tuple, _connected_components(nodes, edges).collect()))
-        assert dedup_mod._connected_components.last_iters == 0, "fast path not taken"
+        fast_labels, rounds = _connected_components(nodes, edges)
+        fast = dict(map(tuple, fast_labels.collect()))
+        assert rounds == 0, "fast path not taken"
         monkeypatch.setattr(dedup_mod, "_CC_DRIVER_EDGE_BOUND", -1)
-        slow = dict(map(tuple, _connected_components(nodes, edges).collect()))
-        assert dedup_mod._connected_components.last_iters > 0, "force-route failed"
+        slow_labels, rounds = _connected_components(nodes, edges)
+        slow = dict(map(tuple, slow_labels.collect()))
+        assert rounds > 0, "force-route failed"
         monkeypatch.setattr(dedup_mod, "_CC_DRIVER_EDGE_BOUND", 1 << 16)
         assert fast == slow and len(fast) == n_nodes
 
@@ -1531,10 +1534,11 @@ def test_cc_fastpath_seeded_labels_and_missing_endpoint(spark, monkeypatch):
     nodes = spark.range(7).select(
         F.col("id").alias("doc_id"), (F.lit(100) - F.col("id")).alias("label")
     )
-    fast = dict(map(tuple, _connected_components(nodes, edges).collect()))
-    assert dedup_mod._connected_components.last_iters == 0
+    fast_labels, rounds = _connected_components(nodes, edges)
+    fast = dict(map(tuple, fast_labels.collect()))
+    assert rounds == 0
     monkeypatch.setattr(dedup_mod, "_CC_DRIVER_EDGE_BOUND", -1)
-    slow = dict(map(tuple, _connected_components(nodes, edges).collect()))
+    slow = dict(map(tuple, _connected_components(nodes, edges)[0].collect()))
     monkeypatch.setattr(dedup_mod, "_CC_DRIVER_EDGE_BOUND", 1 << 16)
     assert fast == slow == {0: 98, 1: 98, 2: 98, 3: 97, 4: 96, 5: 94, 6: 94}
 
@@ -1548,19 +1552,23 @@ def test_cc_fastpath_seeded_labels_and_missing_endpoint(spark, monkeypatch):
 def test_neardup_cluster_route_parity(spark, sf_dir, monkeypatch):
     """_neardup_cluster's full-driver route (endpoint-only node set →
     bounded collect + union-find + LocalTableScan) must emit the exact
-    row set and schema of the forced distributed CC path, for both the
+    row set and schema of the forced distributed CC path, and the verify
+    stage's default broadcast join those of its forced sort-merge join
+    (candidate count above VERIFY_BROADCAST_MAX_PAIRS), for both the
     registered posting-only pipeline and the lsh_union variant."""
     import dirhash_spark.operators.dedup as dedup_mod
 
-    for name in ("pipeline_neardup_e2e", "pipeline_neardup_e2e_lsh_union"):
-        df_fast = QUERIES[name].fn(spark, sf_dir)
-        fast = sorted(map(tuple, df_fast.collect()))
-        monkeypatch.setattr(dedup_mod, "_CC_DRIVER_EDGE_BOUND", -1)
-        df_slow = QUERIES[name].fn(spark, sf_dir)
-        slow = sorted(map(tuple, df_slow.collect()))
-        monkeypatch.setattr(dedup_mod, "_CC_DRIVER_EDGE_BOUND", 1 << 16)
-        assert fast == slow, name
-        assert df_fast.dtypes == df_slow.dtypes, name
+    for constant, forced in (("_CC_DRIVER_EDGE_BOUND", -1), ("VERIFY_BROADCAST_MAX_PAIRS", 0)):
+        default = getattr(dedup_mod, constant)
+        for name in ("pipeline_neardup_e2e", "pipeline_neardup_e2e_lsh_union"):
+            df_fast = QUERIES[name].fn(spark, sf_dir)
+            fast = sorted(map(tuple, df_fast.collect()))
+            monkeypatch.setattr(dedup_mod, constant, forced)
+            df_slow = QUERIES[name].fn(spark, sf_dir)
+            slow = sorted(map(tuple, df_slow.collect()))
+            monkeypatch.setattr(dedup_mod, constant, default)
+            assert fast == slow, (constant, name)
+            assert df_fast.dtypes == df_slow.dtypes, (constant, name)
 
 
 def test_ann_index_keyed_by_path_identity(tmp_path):
