@@ -2504,6 +2504,57 @@ _BLOOM_POS_SQL = ", ".join(
 )
 
 
+def bloom_corpus(cat: Catalog) -> tuple[DataFrame, DataFrame]:
+    """The corpus side of every Bloom query, built once: the
+    ``(word_idx, bits)`` manifest over the sha256 of the documents
+    below the id split, and their distinct hash set ``h`` (the exact
+    truth the verdicts are checked against)."""
+    corpus = cat.documents.where(F.col("doc_id") < _INCR_SPLIT).select(
+        F.sha2("text", 256).alias("h")
+    )
+    manifest = (
+        corpus.select(F.explode(_bloom_positions_spark(F.col("h"))).alias("pos"))
+        .select(
+            F.expr("CAST(pos div 32 AS BIGINT)").alias("word_idx"),
+            F.expr("shiftleft(CAST(1 AS BIGINT), CAST(pos % 32 AS INT))").alias("b"),
+        )
+        .groupBy("word_idx")
+        .agg(F.bit_or("b").cast("bigint").alias("bits"))
+    )
+    return manifest, corpus.distinct()
+
+
+def bloom_verdicts(docs: DataFrame, manifest: DataFrame, hashes: DataFrame) -> DataFrame:
+    """Per document of ``docs`` (doc_id, text): ``maybe_seen`` (all K
+    manifest bits set) and the exact ``is_dup`` (its sha256 is in
+    ``hashes``).  Both probes broadcast their small side; the one
+    doc_id-keyed shuffle folds the K probe rows back with bool_and."""
+    batch = docs.select("doc_id", F.sha2("text", 256).alias("h"))
+    probes = batch.select(
+        "doc_id", F.explode(_bloom_positions_spark(F.col("h"))).alias("pos")
+    )
+    hit = (
+        probes.join(
+            F.broadcast(manifest),
+            F.expr("pos div 32") == F.col("word_idx"),
+            "left",
+        )
+        .select(
+            "doc_id",
+            F.expr(
+                "(shiftright(coalesce(bits, CAST(0 AS BIGINT)), CAST(pos % 32 AS INT)) & 1) = 1"
+            ).alias("bit_set"),
+        )
+        .groupBy("doc_id")
+        .agg(F.bool_and("bit_set").alias("maybe_seen"))
+    )
+    seen = hashes.select(F.col("h").alias("ch"), F.lit(True).alias("seen"))
+    truth = batch.join(F.broadcast(seen), F.col("h") == F.col("ch"), "left").select(
+        "doc_id", F.coalesce("seen", F.lit(False)).alias("is_dup")
+    )
+    return hit.join(truth, "doc_id").select("doc_id", "maybe_seen", "is_dup")
+
+
 @query(
     "dedup_bloom_manifest",
     oracle=f"""
@@ -2533,19 +2584,7 @@ def dedup_bloom_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the false-positive pattern is reproducible.  One shuffle on the
     word index (256 groups), map-side combined.
     """
-    cat = Catalog(spark, sf_dir)
-    pos = (
-        cat.documents.where(F.col("doc_id") < _INCR_SPLIT)
-        .select(F.explode(_bloom_positions_spark(F.sha2("text", 256))).alias("pos"))
-    )
-    return (
-        pos.select(
-            F.expr("CAST(pos div 32 AS BIGINT)").alias("word_idx"),
-            F.expr("shiftleft(CAST(1 AS BIGINT), CAST(pos % 32 AS INT))").alias("b"),
-        )
-        .groupBy("word_idx")
-        .agg(F.bit_or("b").cast("bigint").alias("bits"))
-    )
+    return bloom_corpus(Catalog(spark, sf_dir))[0]
 
 
 #: Shared by dedup_bloom_probe AND the streaming ingest gate
@@ -2606,46 +2645,9 @@ def dedup_bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     cutting manifest I/O by the true-negative rate.
     """
     cat = Catalog(spark, sf_dir)
-    corpus = cat.documents.where(F.col("doc_id") < _INCR_SPLIT).select(
-        F.sha2("text", 256).alias("h")
+    return bloom_verdicts(
+        cat.documents.where(F.col("doc_id") >= _INCR_SPLIT), *bloom_corpus(cat)
     )
-    manifest = (
-        corpus.select(F.explode(_bloom_positions_spark(F.col("h"))).alias("pos"))
-        .select(
-            F.expr("CAST(pos div 32 AS BIGINT)").alias("word_idx"),
-            F.expr("shiftleft(CAST(1 AS BIGINT), CAST(pos % 32 AS INT))").alias("b"),
-        )
-        .groupBy("word_idx")
-        .agg(F.bit_or("b").alias("bits"))
-    )
-    batch = cat.documents.where(F.col("doc_id") >= _INCR_SPLIT).select(
-        "doc_id", F.sha2("text", 256).alias("h")
-    )
-    probes = batch.select(
-        "doc_id", F.explode(_bloom_positions_spark(F.col("h"))).alias("pos")
-    )
-    hit = (
-        probes.join(
-            F.broadcast(manifest),
-            F.expr("pos div 32") == F.col("word_idx"),
-            "left",
-        )
-        .select(
-            "doc_id",
-            (
-                F.expr(
-                    "(shiftright(coalesce(bits, CAST(0 AS BIGINT)), CAST(pos % 32 AS INT)) & 1) = 1"
-                )
-            ).alias("bit_set"),
-        )
-        .groupBy("doc_id")
-        .agg(F.bool_and("bit_set").alias("maybe_seen"))
-    )
-    seen = corpus.distinct().select(F.col("h").alias("ch"), F.lit(True).alias("seen"))
-    truth = batch.join(F.broadcast(seen), F.col("h") == F.col("ch"), "left").select(
-        "doc_id", F.coalesce("seen", F.lit(False)).alias("is_dup")
-    )
-    return hit.join(truth, "doc_id").select("doc_id", "maybe_seen", "is_dup")
 
 
 # ------------------------------------------- verbatim run detection

@@ -35,9 +35,47 @@ from ..registry import query
 _FRESH_KEY_OFFSET_SQL = (
     "CAST('1' || repeat('0', length(CAST(max(c_custkey) AS STRING))) AS BIGINT)"
 )
-# The oracle-side twin is the `off` CTE repeated verbatim in three
-# oracles: merge_upsert, snapshot_diff, and the streaming CDC merge in
-# streaming/stateful.py — change all four together.
+# Its oracle-side twin is the `off` CTE of _CHANGES_SQL.
+
+#: The change batch of ``_change_batch`` in DuckDB SQL (CTEs upd, del,
+#: off, ins), shared by every MERGE and diff oracle.
+_CHANGES_SQL = """
+    upd AS (
+      SELECT c_custkey AS k, floor(c_acctbal * 50) / 100 AS new_bal
+      FROM customer WHERE c_custkey % 10 = 3
+    ),
+    del AS (SELECT c_custkey AS k FROM customer WHERE c_custkey % 10 = 7),
+    off AS (
+      SELECT CAST('1' || repeat('0', length(CAST(max(c_custkey) AS VARCHAR)))
+                  AS BIGINT) AS o
+      FROM customer
+    ),
+    ins AS (SELECT c_custkey + o AS k FROM customer, off WHERE c_custkey % 100 = 1)"""
+
+_MERGED_SQL = """
+    SELECT c.c_custkey,
+           c.c_name,
+           c.c_nationkey,
+           CASE WHEN u.k IS NOT NULL THEN u.new_bal ELSE c.c_acctbal END AS c_acctbal,
+           c.c_mktsegment,
+           CASE WHEN u.k IS NOT NULL THEN 'updated' ELSE 'kept' END AS merge_action
+    FROM customer c
+    LEFT JOIN upd u ON c.c_custkey = u.k
+    LEFT JOIN del d ON c.c_custkey = d.k
+    WHERE d.k IS NULL
+    UNION ALL
+    SELECT k,
+           'Customer#new' || CAST(k AS VARCHAR),
+           CAST(k % 25 AS INT),
+           CAST(0.0 AS DOUBLE),
+           'AUTOMOBILE',
+           'inserted'
+    FROM ins"""
+
+#: The one-shot MERGE of the change batch into customer: the oracle of
+#: merge_upsert AND of the streaming CDC apply (stream_cdc_merge_upsert),
+#: whose key-disjoint micro-batches reach the same table.
+MERGE_ORACLE = f"WITH {_CHANGES_SQL}{_MERGED_SQL}"
 
 
 def _change_batch(cat: Catalog) -> DataFrame:
@@ -72,39 +110,56 @@ def _change_batch(cat: Catalog) -> DataFrame:
     return upd.unionByName(dele).unionByName(ins)
 
 
+def merge_changes(base: DataFrame, changes: DataFrame) -> DataFrame:
+    """One MERGE of a ``(k, op, new_bal)`` change batch into a customer
+    snapshot that carries ``merge_action``: the non-insert changes ride
+    as the broadcast build side of one left join, so the base streams
+    through map-side and is never shuffled; U rows take the new balance
+    and become 'updated', D rows drop, untouched rows keep their
+    ``merge_action``, and I rows append as 'inserted'."""
+    merged = base.join(
+        F.broadcast(changes.where(F.col("op") != "I")),
+        base["c_custkey"] == F.col("k"),
+        "left",
+    ).where(F.col("op").isNull() | (F.col("op") == "U"))
+    survivors = merged.select(
+        "c_custkey",
+        "c_name",
+        "c_nationkey",
+        F.when(F.col("op") == "U", F.col("new_bal"))
+        .otherwise(F.col("c_acctbal"))
+        .alias("c_acctbal"),
+        "c_mktsegment",
+        F.when(F.col("op") == "U", F.lit("updated"))
+        .otherwise(F.col("merge_action"))
+        .alias("merge_action"),
+    )
+    inserts = changes.where(F.col("op") == "I").select(
+        F.col("k").alias("c_custkey"),
+        F.concat(F.lit("Customer#new"), F.col("k").cast("string")).alias("c_name"),
+        (F.col("k") % 25).cast("int").alias("c_nationkey"),
+        F.lit(0.0).alias("c_acctbal"),
+        F.lit("AUTOMOBILE").alias("c_mktsegment"),
+        F.lit("inserted").alias("merge_action"),
+    )
+    return survivors.unionByName(inserts)
+
+
+def kept_base(cat: Catalog) -> DataFrame:
+    """The customer table as a MERGE base: every row 'kept'."""
+    return cat.customer.select(
+        "c_custkey",
+        "c_name",
+        "c_nationkey",
+        "c_acctbal",
+        "c_mktsegment",
+        F.lit("kept").alias("merge_action"),
+    )
+
+
 @query(
     "merge_upsert",
-    oracle="""
-    WITH upd AS (
-      SELECT c_custkey AS k, floor(c_acctbal * 50) / 100 AS new_bal
-      FROM customer WHERE c_custkey % 10 = 3
-    ),
-    del AS (SELECT c_custkey AS k FROM customer WHERE c_custkey % 10 = 7),
-    off AS (
-      SELECT CAST('1' || repeat('0', length(CAST(max(c_custkey) AS VARCHAR)))
-                  AS BIGINT) AS o
-      FROM customer
-    ),
-    ins AS (SELECT c_custkey + o AS k FROM customer, off WHERE c_custkey % 100 = 1)
-    SELECT c.c_custkey,
-           c.c_name,
-           c.c_nationkey,
-           CASE WHEN u.k IS NOT NULL THEN u.new_bal ELSE c.c_acctbal END AS c_acctbal,
-           c.c_mktsegment,
-           CASE WHEN u.k IS NOT NULL THEN 'updated' ELSE 'kept' END AS merge_action
-    FROM customer c
-    LEFT JOIN upd u ON c.c_custkey = u.k
-    LEFT JOIN del d ON c.c_custkey = d.k
-    WHERE d.k IS NULL
-    UNION ALL
-    SELECT k,
-           'Customer#new' || CAST(k AS VARCHAR),
-           CAST(k % 25 AS INT),
-           CAST(0.0 AS DOUBLE),
-           'AUTOMOBILE',
-           'inserted'
-    FROM ins
-    """,
+    oracle=MERGE_ORACLE,
     tags=("warehouse", "merge", "cdc"),
 )
 def merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -122,62 +177,17 @@ def merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_plans.py (no exchange above the customer scan).
     """
     cat = Catalog(spark, sf_dir)
-    changes = _change_batch(cat)
-    base = cat.customer
-    merged = base.join(
-        F.broadcast(changes.where(F.col("op") != "I")),
-        base["c_custkey"] == F.col("k"),
-        "left",
-    ).where(F.col("op").isNull() | (F.col("op") == "U"))
-    survivors = merged.select(
-        "c_custkey",
-        "c_name",
-        "c_nationkey",
-        F.when(F.col("op") == "U", F.col("new_bal"))
-        .otherwise(F.col("c_acctbal"))
-        .alias("c_acctbal"),
-        "c_mktsegment",
-        F.when(F.col("op") == "U", F.lit("updated"))
-        .otherwise(F.lit("kept"))
-        .alias("merge_action"),
-    )
-    inserts = changes.where(F.col("op") == "I").select(
-        F.col("k").alias("c_custkey"),
-        F.concat(F.lit("Customer#new"), F.col("k").cast("string")).alias("c_name"),
-        (F.col("k") % 25).cast("int").alias("c_nationkey"),
-        F.lit(0.0).alias("c_acctbal"),
-        F.lit("AUTOMOBILE").alias("c_mktsegment"),
-        F.lit("inserted").alias("merge_action"),
-    )
-    return survivors.unionByName(inserts)
+    return merge_changes(kept_base(cat), _change_batch(cat))
 
 
 @query(
     "snapshot_diff",
-    oracle="""
-    WITH upd AS (
-      SELECT c_custkey AS k, floor(c_acctbal * 50) / 100 AS new_bal
-      FROM customer WHERE c_custkey % 10 = 3
-    ),
-    del AS (SELECT c_custkey AS k FROM customer WHERE c_custkey % 10 = 7),
-    off AS (
-      SELECT CAST('1' || repeat('0', length(CAST(max(c_custkey) AS VARCHAR)))
-                  AS BIGINT) AS o
-      FROM customer
-    ),
-    ins AS (SELECT c_custkey + o AS k FROM customer, off WHERE c_custkey % 100 = 1),
+    oracle=f"""
+    WITH {_CHANGES_SQL},
     nxt AS (
-      SELECT c.c_custkey, c.c_name, c.c_nationkey,
-             CASE WHEN u.k IS NOT NULL THEN u.new_bal ELSE c.c_acctbal END AS c_acctbal,
-             c.c_mktsegment
-      FROM customer c
-      LEFT JOIN upd u ON c.c_custkey = u.k
-      LEFT JOIN del d ON c.c_custkey = d.k
-      WHERE d.k IS NULL
-      UNION ALL
-      SELECT k, 'Customer#new' || CAST(k AS VARCHAR), CAST(k % 25 AS INT),
-             CAST(0.0 AS DOUBLE), 'AUTOMOBILE'
-      FROM ins
+      SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
+      FROM ({_MERGED_SQL}
+      ) m
     )
     SELECT CAST(coalesce(b.c_custkey, n.c_custkey) AS BIGINT) AS k,
            CASE WHEN b.c_custkey IS NULL THEN 'I'

@@ -13,6 +13,14 @@ store → memory sink) to completion inside the callable and returns the
 sink table: the driver's oracle check then proves the stateful path
 computes exactly the batch aggregate — all events arrive in one trigger,
 so each user emits exactly one final row.
+
+Every stream query here is bounded, and all of them run through ONE
+runner, :func:`run_bounded`: start on an available-now trigger, wait
+with a time limit that raises instead of truncating the sink, always
+stop.  The foreachBatch bodies are the batch queries' own: the bloom
+ingest gate calls ``dedup.bloom_verdicts`` (dedup_bloom_probe's body)
+and the CDC apply calls ``warehouse.merge_changes`` (merge_upsert's),
+so each twin's oracle is its batch query's constant.
 """
 
 from __future__ import annotations
@@ -20,28 +28,46 @@ from __future__ import annotations
 import json
 import math
 import os
+import shutil
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..catalog import Catalog, memoized, sink_dir, table_stats
-from ..operators.dedup import BLOOM_PROBE_ORACLE as _BLOOM_PROBE_ORACLE
+from ..operators.dedup import BLOOM_PROBE_ORACLE, _INCR_SPLIT, bloom_corpus, bloom_verdicts
+from ..operators.warehouse import MERGE_ORACLE, _change_batch, kept_base, merge_changes
 from ..registry import query
+from ..session import configure
 
 _OUT_SCHEMA = "user_id BIGINT, n_events BIGINT, total_value DOUBLE"
 _STATE_SCHEMA = "n BIGINT, total DOUBLE"
 
 
-def _await_or_raise(q, name: str, timeout_s: int = 180) -> None:
+def _await_or_raise(q, name: str, timeout_s: int) -> None:
     """``awaitTermination`` returning False means the stream did NOT
     finish in time — stopping it then would truncate the sink and
     return a silently partial result (surfacing as a bogus oracle
-    mismatch), so fail loudly instead.  ONE definition for every
-    bounded-stream query in this module."""
+    mismatch), so fail loudly instead."""
     if not q.awaitTermination(timeout_s):
         raise TimeoutError(f"{name}: stream still running after {timeout_s} s")
+
+
+def run_bounded(writer: DataStreamWriter, name: str, timeout_s: int = 180) -> StreamingQuery:
+    """Run ``writer`` as one bounded stream: start it with an
+    available-now trigger (every input present at start, then stop),
+    wait at most ``timeout_s`` through :func:`_await_or_raise`, and
+    always stop the query.  Returns the stopped query, whose
+    ``recentProgress`` stays readable.  Every stream query in this
+    module runs through here."""
+    q = writer.trigger(availableNow=True).start()
+    try:
+        _await_or_raise(q, name, timeout_s)
+    finally:
+        q.stop()
+    return q
 
 
 def _round_half_away(x: float, digits: int = 2) -> float:
@@ -92,17 +118,13 @@ def stream_stateful_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = Catalog(spark, sf_dir)
     src = sink_dir("stateful_events", sf_dir)
     cat.events.select("user_id", "value").write.mode("overwrite").parquet(src)
-    q = (
+    run_bounded(
         running_totals_stream(spark, src)
         .writeStream.format("memory")
         .queryName("dirhash_stateful_running")
-        .outputMode("update")
-        .start()
+        .outputMode("update"),
+        "stream_stateful_running",
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     # Materialize: the memory-sink table is tied to the (now stopped)
     # query; hand back an immutable snapshot.
     return spark.createDataFrame(
@@ -139,8 +161,6 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat.events.select("event_id", "ts", "user_id", "value").write.mode(
         "overwrite"
     ).parquet(src)
-    import shutil
-
     shutil.rmtree(dst, ignore_errors=True)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -151,17 +171,10 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = spark.readStream.schema(
         "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, value DOUBLE"
     ).parquet(src)
-    q = (
-        tumbling_counts(stream)
-        .writeStream.foreachBatch(write_batch)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+    run_bounded(
+        tumbling_counts(stream).writeStream.foreachBatch(write_batch).outputMode("complete"),
+        "stream_foreach_batch_sink",
     )
-    try:
-        _await_or_raise(q, "stream_foreach_batch_sink")
-    finally:
-        q.stop()
     return spark.read.parquet(dst)
 
 
@@ -201,18 +214,13 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = spark.readStream.schema(
         "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, value DOUBLE"
     ).parquet(src)
-    q = (
+    run_bounded(
         enrich_with_nation(stream, cat.customer)
         .writeStream.format("memory")
         .queryName("dirhash_stream_static_join")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("complete"),
+        "stream_static_join",
     )
-    try:
-        _await_or_raise(q, "stream_static_join")
-    finally:
-        q.stop()
     return spark.createDataFrame(
         # bounded: memory-sink snapshot of nation-keyed aggregate state
         spark.table("dirhash_stream_static_join").collect(),
@@ -299,25 +307,18 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spark.dataSource.register(ReadingsStreamSource)
     base = sink_dir("pyds_stream", sf_dir)
-    import shutil
-
     # Clear the checkpoint too: a surviving checkpoint resumes at the
     # final offset and the fresh sink directory would stay empty.
     shutil.rmtree(base, ignore_errors=True)
     shutil.rmtree(base + "_ck", ignore_errors=True)
-    q = (
+    run_bounded(
         spark.readStream.format("readings_stream")
         .load()
         .writeStream.format("parquet")
         .option("path", base)
-        .option("checkpointLocation", base + "_ck")
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", base + "_ck"),
+        "stream_python_datasource",
     )
-    try:
-        _await_or_raise(q, "stream_python_datasource")
-    finally:
-        q.stop()
     return spark.read.parquet(base)
 
 
@@ -391,17 +392,13 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat.events.select("event_id", "ts", "user_id", "event_type").write.mode(
         "overwrite"
     ).parquet(src)
-    q = (
-        _click_purchase_join(spark, src, "inner").writeStream.format("memory")
+    run_bounded(
+        _click_purchase_join(spark, src, "inner")
+        .writeStream.format("memory")
         .queryName("dirhash_stream_stream_join")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        "stream_stream_join",
     )
-    try:
-        _await_or_raise(q, "stream_stream_join")
-    finally:
-        q.stop()
     return spark.createDataFrame(
         # bounded: memory-sink snapshot of the joined-window output
         spark.table("dirhash_stream_stream_join").collect(),
@@ -440,8 +437,6 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint (exactly-once), read back at the end minus the
     sentinel.  State size stays bounded by the join window at any
     stream length — same eviction math as the inner form."""
-    import shutil
-
     cat = Catalog(spark, sf_dir)
     base = sink_dir("ss_louter", sf_dir)
     src, dst, ckpt = (os.path.join(base, d) for d in ("src", "dst", "ckpt"))
@@ -450,19 +445,14 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev.write.mode("overwrite").parquet(src)
 
     def run_once() -> None:
-        q = (
+        run_bounded(
             _click_purchase_join(spark, src, "left_outer")
             .writeStream.format("parquet")
             .option("path", dst)
             .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("append"),
+            "stream_stream_left_outer",
         )
-        try:
-            _await_or_raise(q, "stream_stream_left_outer")
-        finally:
-            q.stop()
 
     run_once()  # real data: inner matches emit, unmatched clicks held
     # Sentinel click+purchase 2 h past the last real event: run 2's
@@ -499,7 +489,7 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-import this module to unpickle the stateful UDF before the
     # registry is populated, so module-level REGISTRY access crashes
     # every Arrow-batched query defined here).
-    oracle=_BLOOM_PROBE_ORACLE,
+    oracle=BLOOM_PROBE_ORACLE,
     tags=("streaming", "dedup", "bloom"),
 )
 def stream_bloom_ingest_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -522,10 +512,6 @@ def stream_bloom_ingest_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_incremental does.  State stores hold nothing: the gate is
     stateless per batch, so it runs at source parallelism forever.
     """
-    import shutil
-
-    from ..operators.dedup import _INCR_SPLIT, _bloom_positions_spark
-
     cat = Catalog(spark, sf_dir)
     src = sink_dir("bloom_gate_src", sf_dir)
     dst = sink_dir("bloom_gate_out", sf_dir)
@@ -539,105 +525,26 @@ def stream_bloom_ingest_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat.documents.where(F.col("doc_id") >= _INCR_SPLIT).select(
         "doc_id", "text"
     ).repartition(4).write.mode("overwrite").parquet(src)
-
-    corpus = cat.documents.where(F.col("doc_id") < _INCR_SPLIT).select(
-        F.sha2("text", 256).alias("h")
-    )
-    manifest = (
-        corpus.select(F.explode(_bloom_positions_spark(F.col("h"))).alias("pos"))
-        .select(
-            F.expr("CAST(pos div 32 AS BIGINT)").alias("word_idx"),
-            F.expr("shiftleft(CAST(1 AS BIGINT), CAST(pos % 32 AS INT))").alias("b"),
-        )
-        .groupBy("word_idx")
-        .agg(F.bit_or("b").alias("bits"))
-        .localCheckpoint()  # built once; every micro-batch re-reads it
-    )
-    seen = (
-        corpus.distinct()
-        .select(F.col("h").alias("ch"), F.lit(True).alias("seen"))
-        .localCheckpoint()
-    )
+    # built once; every micro-batch re-reads the checkpointed blocks
+    manifest, hashes = (df.localCheckpoint() for df in bloom_corpus(cat))
 
     def gate(batch_df: DataFrame, batch_id: int) -> None:
-        batch = batch_df.select("doc_id", F.sha2("text", 256).alias("h"))
-        probes = batch.select(
-            "doc_id", F.explode(_bloom_positions_spark(F.col("h"))).alias("pos")
-        )
-        hit = (
-            probes.join(
-                F.broadcast(manifest),
-                F.expr("pos div 32") == F.col("word_idx"),
-                "left",
-            )
-            .select(
-                "doc_id",
-                F.expr(
-                    "(shiftright(coalesce(bits, CAST(0 AS BIGINT)), CAST(pos % 32 AS INT)) & 1) = 1"
-                ).alias("bit_set"),
-            )
-            .groupBy("doc_id")
-            .agg(F.bool_and("bit_set").alias("maybe_seen"))
-        )
-        truth = batch.join(
-            F.broadcast(seen), F.col("h") == F.col("ch"), "left"
-        ).select("doc_id", F.coalesce("seen", F.lit(False)).alias("is_dup"))
-        hit.join(truth, "doc_id").write.mode("append").parquet(dst)
+        bloom_verdicts(batch_df, manifest, hashes).write.mode("append").parquet(dst)
 
     stream = (
         spark.readStream.schema("doc_id BIGINT, text STRING")
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = (
-        stream.writeStream.foreachBatch(gate)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
+    run_bounded(
+        stream.writeStream.foreachBatch(gate).option("checkpointLocation", ckpt),
+        "stream_bloom_ingest_gate",
     )
-    try:
-        _await_or_raise(q, "stream_bloom_ingest_gate")
-    finally:
-        q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.read.parquet(dst).select("doc_id", "maybe_seen", "is_dup")
-
+    shutil.rmtree(ckpt, ignore_errors=True)
+    return spark.read.parquet(dst)
 
 
 # ------------------------------------------------ streaming CDC merge
-
-_CDC_MERGE_ORACLE = """
-    WITH upd AS (
-      SELECT c_custkey AS k, floor(c_acctbal * 50) / 100 AS new_bal
-      FROM customer WHERE c_custkey % 10 = 3
-    ),
-    del AS (SELECT c_custkey AS k FROM customer WHERE c_custkey % 10 = 7),
-    off AS (
-      SELECT CAST('1' || repeat('0', length(CAST(max(c_custkey) AS VARCHAR)))
-                  AS BIGINT) AS o
-      FROM customer
-    ),
-    ins AS (SELECT c_custkey + o AS k FROM customer, off WHERE c_custkey % 100 = 1)
-    SELECT c.c_custkey,
-           c.c_name,
-           c.c_nationkey,
-           CASE WHEN u.k IS NOT NULL THEN u.new_bal ELSE c.c_acctbal END AS c_acctbal,
-           c.c_mktsegment,
-           CASE WHEN u.k IS NOT NULL THEN 'updated' ELSE 'kept' END AS merge_action
-    FROM customer c
-    LEFT JOIN upd u ON c.c_custkey = u.k
-    LEFT JOIN del d ON c.c_custkey = d.k
-    WHERE d.k IS NULL
-    UNION ALL
-    SELECT k,
-           'Customer#new' || CAST(k AS VARCHAR),
-           CAST(k % 25 AS INT),
-           CAST(0.0 AS DOUBLE),
-           'AUTOMOBILE',
-           'inserted'
-    FROM ins
-    """
-
 
 def cdc_apply_batch(spark: SparkSession, root: str):
     """The foreachBatch MERGE body of ``stream_cdc_merge_upsert``,
@@ -646,37 +553,11 @@ def cdc_apply_batch(spark: SparkSession, root: str):
     version dir from the predecessor snapshot (idempotent) — it never
     double-applies onto its own output.  That per-batch-id versioning
     is the entire exactly-once story for this sink (no state store),
-    so it is the thing the replay test exercises."""
-
+    so it is the thing the replay test exercises.  The MERGE itself is
+    ``warehouse.merge_changes``, the batch merge_upsert's body."""
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         cur = spark.read.parquet(os.path.join(root, f"v{batch_id}"))
-        changes = batch_df
-        merged = cur.join(
-            F.broadcast(changes.where(F.col("op") != "I")),
-            cur["c_custkey"] == F.col("k"),
-            "left",
-        ).where(F.col("op").isNull() | (F.col("op") == "U"))
-        survivors = merged.select(
-            "c_custkey",
-            "c_name",
-            "c_nationkey",
-            F.when(F.col("op") == "U", F.col("new_bal"))
-            .otherwise(F.col("c_acctbal"))
-            .alias("c_acctbal"),
-            "c_mktsegment",
-            F.when(F.col("op") == "U", F.lit("updated"))
-            .otherwise(F.col("merge_action"))
-            .alias("merge_action"),
-        )
-        inserts = changes.where(F.col("op") == "I").select(
-            F.col("k").alias("c_custkey"),
-            F.concat(F.lit("Customer#new"), F.col("k").cast("string")).alias("c_name"),
-            (F.col("k") % 25).cast("int").alias("c_nationkey"),
-            F.lit(0.0).alias("c_acctbal"),
-            F.lit("AUTOMOBILE").alias("c_mktsegment"),
-            F.lit("inserted").alias("merge_action"),
-        )
-        survivors.unionByName(inserts).write.mode("overwrite").parquet(
+        merge_changes(cur, batch_df).write.mode("overwrite").parquet(
             os.path.join(root, f"v{batch_id + 1}")
         )
 
@@ -688,9 +569,8 @@ def cdc_apply_batch(spark: SparkSession, root: str):
     # The change classes partition the key space (U: key%10=3, D:
     # key%10=7, I: fresh keys), so applying the change stream in ANY
     # batching order reaches the same final table — which makes the
-    # batch MERGE oracle (identical to merge_upsert's) exact for the
-    # streaming apply.
-    oracle=_CDC_MERGE_ORACLE,
+    # batch MERGE oracle (merge_upsert's) exact for the streaming apply.
+    oracle=MERGE_ORACLE,
     tags=("streaming", "warehouse", "merge", "cdc"),
 )
 def stream_cdc_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -715,10 +595,6 @@ def stream_cdc_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cites dirhash_spark/operators/warehouse.py:merge_upsert for the
     MERGE semantics (shared oracle).
     """
-    import shutil
-
-    from ..operators.warehouse import _change_batch
-
     cat = Catalog(spark, sf_dir)
     root = sink_dir("cdc_merge", sf_dir)
     src = os.path.join(root, "src")
@@ -730,14 +606,7 @@ def stream_cdc_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # v0 snapshot: the base table with merge_action bookkeeping
     state = {"version": 0}
-    cat.customer.select(
-        "c_custkey",
-        "c_name",
-        "c_nationkey",
-        "c_acctbal",
-        "c_mktsegment",
-        F.lit("kept").alias("merge_action"),
-    ).write.mode("overwrite").parquet(os.path.join(root, "v0"))
+    kept_base(cat).write.mode("overwrite").parquet(os.path.join(root, "v0"))
 
     inner = cdc_apply_batch(spark, root)
 
@@ -750,20 +619,48 @@ def stream_cdc_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
+    run_bounded(
+        stream.writeStream.foreachBatch(apply_batch).option("checkpointLocation", ckpt),
+        "stream_cdc_merge_upsert",
     )
-    try:
-        _await_or_raise(q, "stream_cdc_merge_upsert")
-    finally:
-        q.stop()
     final = spark.read.parquet(os.path.join(root, f"v{state['version']}"))
     # materialize the result BEFORE the version dirs can be cleaned by a
     # subsequent run (the sink root is shared scratch)
     return final.localCheckpoint()
+
+
+def _stamp_wave(path: str, order: int) -> None:
+    """Deterministic replay order: the file source processes the oldest
+    mtime first, so each wave's files are stamped 100 s apart."""
+    t = 1_600_000_000 + order * 100
+    os.utime(path, (t, t))
+
+
+def _write_sentinel(src: str, hi) -> None:
+    """Wave 2: one sentinel row (user_id -1) 365 days past the corpus
+    max ``hi``, written driver-side (bounded: a single literal row)
+    instead of paying a Spark job and commit for it.  tz="UTC" writes
+    isAdjustedToUTC micros, the physical type Spark's own writer
+    produces; the session is pinned UTC, so the wall clock is the one a
+    ``timestamp'{hi}' + INTERVAL 365 DAYS`` literal gives."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(src, exist_ok=True)
+    path = os.path.join(src, "wave2-sentinel.parquet")
+    sent = hi + datetime.timedelta(days=365)
+    pq.write_table(
+        pa.table(
+            {
+                "ts": pa.array([sent], pa.timestamp("us", tz="UTC")),
+                "user_id": pa.array([-1], pa.int64()),
+            }
+        ),
+        path,
+    )
+    _stamp_wave(path, 2)
 
 
 def stage_session_replay(
@@ -881,10 +778,6 @@ def _stage_replay_local(sf_dir: str, src: str, waves: tuple[int, ...]) -> bool:
     mid = lo + (hi - lo) / 2
     mid_us = (mid - epoch) // datetime.timedelta(microseconds=1)
 
-    def _stamp(p, order):
-        tm = 1_600_000_000 + order * 100
-        os.utime(p, (tm, tm))
-
     os.makedirs(src, exist_ok=True)
     sidecar = os.path.join(src, "_events_fingerprint")
     stamp = repr(st.fingerprint)
@@ -916,20 +809,9 @@ def _stage_replay_local(sf_dir: str, src: str, waves: tuple[int, ...]) -> bool:
             ),
             wp,
         )
-        _stamp(wp, order)
+        _stamp_wave(wp, order)
     if 2 in waves and not os.path.exists(os.path.join(src, "wave2-sentinel.parquet")):
-        sent = hi + datetime.timedelta(days=365)
-        p = os.path.join(src, "wave2-sentinel.parquet")
-        _pq.write_table(
-            pa.table(
-                {
-                    "ts": pa.array([sent], pa.timestamp("us", tz="UTC")),
-                    "user_id": pa.array([-1], pa.int64()),
-                }
-            ),
-            p,
-        )
-        _stamp(p, 2)
+        _write_sentinel(src, hi)
     with open(sidecar, "w") as f:
         f.write(stamp)
     return True
@@ -948,88 +830,39 @@ def stage_replay_from(
         # SQL would interpolate "timestamp'None'"; name the real cause
         raise ValueError("stage_replay_from: empty input DataFrame")
     mid = lo + (hi - lo) / 2
-
-    def _stamp(path, order):
-        # deterministic replay order: the file source processes oldest
-        # mtime first, so stamp each wave 100 s apart
-        t = 1_600_000_000 + order * 100
-        os.utime(path, (t, t))
-
-    def add_file(df, order):
-        known = set()
-        if os.path.isdir(src):
-            known = {f for f in os.listdir(src) if not f.startswith("_")}
-        df.coalesce(1).write.mode("append").parquet(src)
-        for f in os.listdir(src):
-            if not f.startswith("_") and f not in known:
-                _stamp(os.path.join(src, f), order)
-
-    if 0 in waves and 1 in waves:
-        # Both real waves in one corpus pass (r14): the two where()
-        # writes each re-scanned events — one partitionBy("wave") write
-        # halves the staging scans/jobs; the per-wave files then move
-        # into the flat src layout with the same mtime stamps.  An
-        # empty wave (all-equal timestamps put every event in wave 1)
-        # writes no directory on either path — parity with the old
-        # empty-where() write, which also produced no part file.
-        import shutil
+    real = [w for w in (0, 1) if w in waves]
+    if real:
+        # One corpus pass for the requested real waves: a partitionBy
+        # ("wave") write filtered to them, whose per-wave files then move
+        # into the flat src layout with their mtime stamps.  An empty
+        # wave (all-equal timestamps put every event in wave 1) writes
+        # no directory, so no file, as on the driver route.
         import tempfile
 
+        wave = F.when(F.col("ts") < F.lit(mid), 0).otherwise(1)
         tmp = tempfile.mkdtemp(prefix="dirhash_session_waves_")
         try:
             (
-                ev.select(
-                    "ts",
-                    "user_id",
-                    F.when(F.col("ts") < F.lit(mid), 0).otherwise(1).alias("wave"),
-                )
+                ev.select("ts", "user_id", wave.alias("wave"))
+                .where(F.col("wave").isin(real))
                 .coalesce(1)
                 .write.mode("overwrite")
                 .partitionBy("wave")
                 .parquet(tmp)
             )
             os.makedirs(src, exist_ok=True)
-            for order in (0, 1):
+            for order in real:
                 wdir = os.path.join(tmp, f"wave={order}")
                 if os.path.isdir(wdir):
                     for f in os.listdir(wdir):
                         if not f.startswith(("_", ".")):
                             dst = os.path.join(src, f"wave{order}-{f}")
                             shutil.move(os.path.join(wdir, f), dst)
-                            _stamp(dst, order)
+                            _stamp_wave(dst, order)
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
-    else:
-        if 0 in waves:
-            add_file(ev.where(F.col("ts") < F.lit(mid)), 0)
-        if 1 in waves:
-            add_file(ev.where(F.col("ts") >= F.lit(mid)), 1)
     if 2 in waves:
-        # One sentinel row 365 days past the corpus max: written
-        # driver-side (bounded: a single literal row) instead of
-        # paying a Spark job + commit for it.  tz="UTC" writes
-        # isAdjustedToUTC micros — the same physical type Spark's own
-        # writer produced; the session is pinned UTC, so the wall
-        # clock is identical to the old timestamp'{hi}' + INTERVAL
-        # 365 DAYS literal.
-        import datetime
-
-        import pyarrow as pa
-        import pyarrow.parquet as _pq
-
-        os.makedirs(src, exist_ok=True)
-        sent = hi + datetime.timedelta(days=365)
-        path = os.path.join(src, "wave2-sentinel.parquet")
-        _pq.write_table(
-            pa.table(
-                {
-                    "ts": pa.array([sent], pa.timestamp("us", tz="UTC")),
-                    "user_id": pa.array([-1], pa.int64()),
-                }
-            ),
-            path,
-        )
-        _stamp(path, 2)
+        _write_sentinel(src, hi)
 
 
 #: Target state rows per state-store commit when deriving the session
@@ -1125,12 +958,14 @@ def run_session_flush(
     staged sf0.1 corpus (≈1500 users) derives exactly the width the
     r12 A/B measured optimal (8), and a production deployment with
     millions of open sessions lands proportionally wider at first
-    start instead of relying on a hand-picked constant.  The session
-    conf is scoped with try/finally and restored after the query
-    terminates.
-    """
-    import shutil
+    start instead of relying on a hand-picked constant.
 
+    The stream runs in ``spark.newSession()``: same SparkContext, its
+    own SQL conf (the engine's runtime confs plus this width), its own
+    stream manager and memory-sink table, so the caller's
+    ``spark.sql.shuffle.partitions`` is never touched and a query
+    running beside this one on the caller's session plans as before.
+    """
     from .ops import session_counts
 
     if state_partitions is None:
@@ -1139,33 +974,26 @@ def run_session_flush(
     shutil.rmtree(src, ignore_errors=True)
     stage_session_replay(spark, sf_dir, src)
 
+    inner = configure(spark.newSession())
+    inner.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     stream = (
-        spark.readStream.schema("ts TIMESTAMP, user_id BIGINT")
+        inner.readStream.schema("ts TIMESTAMP, user_id BIGINT")
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            session_counts(stream)
-            .writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            _await_or_raise(q, "session flush stream", 300)
-            progress = [
-                p["stateOperators"]
-                for p in (json.loads(pr.json) for pr in q.recentProgress)
-                if p.get("stateOperators")
-            ]
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    q = run_bounded(
+        session_counts(stream)
+        .writeStream.format("memory")
+        .queryName(query_name)
+        .outputMode("append"),
+        "session flush stream",
+        300,
+    )
+    progress = [
+        p["stateOperators"]
+        for p in (json.loads(pr.json) for pr in q.recentProgress)
+        if p.get("stateOperators")
+    ]
     # Snapshot the memory sink JVM-side: the sink table is already a
     # bounded driver-resident buffer (one row per CLOSED session, never
     # per event); localCheckpoint decouples the result from the sink's
@@ -1174,7 +1002,7 @@ def run_session_flush(
     # vs 0.6 s on the sf0.1 sink — same rows, same schema).  Same
     # lineage-truncation fault-tolerance trade as hashdir.py:237.
     out = (
-        spark.table(query_name)
+        inner.table(query_name)
         .where(F.col("user_id") >= 0)
         .select(
             F.col("user_id").cast("bigint").alias("user_id"),

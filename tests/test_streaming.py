@@ -161,6 +161,65 @@ def test_cdc_merge_stream_equals_batch_merge(spark, sf_dir):
     assert versions == ["v0", "v1", "v2", "v3", "v4"], versions
 
 
+def test_bloom_gate_stream_equals_batch_probe(spark, sf_dir):
+    """The streaming ingest gate (4 micro-batches, each probing the
+    checkpointed corpus manifest inside foreachBatch) must emit exactly
+    the batch probe's verdicts, row for row and dtype for dtype."""
+    from dirhash_spark.registry import all_queries
+
+    qs = all_queries()
+    gate = qs["stream_bloom_ingest_gate"].fn(spark, sf_dir)
+    probe = qs["dedup_bloom_probe"].fn(spark, sf_dir)
+    assert gate.dtypes == probe.dtypes
+    streamed = sorted(map(tuple, gate.collect()))
+    batch = sorted(map(tuple, probe.collect()))
+    assert streamed == batch and len(streamed) > 0
+
+
+def test_bounded_streams_run_only_through_the_runner():
+    """Every stream query starts, waits and stops through
+    stateful.run_bounded: the available-now trigger and the bounded
+    wait are written once in the package, inside the runner."""
+    import inspect
+    import pathlib
+    import re
+
+    from dirhash_spark.streaming import stateful
+
+    pkg = pathlib.Path(stateful.__file__).resolve().parent.parent
+    runner = inspect.getsource(stateful.run_bounded)
+    for pattern in (r"trigger\(availableNow=True\)", r"(?<!def )_await_or_raise\("):
+        hits = {
+            str(p.relative_to(pkg)): len(re.findall(pattern, p.read_text()))
+            for p in pkg.rglob("*.py")
+        }
+        assert {k: n for k, n in hits.items() if n} == {"streaming/stateful.py": 1}, pattern
+        assert re.search(pattern, runner), pattern
+
+
+def test_session_flush_runs_in_its_own_session(spark, sf_dir, monkeypatch):
+    """The session stream runs in a session of its own: while it runs,
+    the caller's spark.sql.shuffle.partitions is the caller's value,
+    and every state operator reports the derived state width."""
+    import dirhash_spark.streaming.stateful as S
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    during = []
+    wait = S._await_or_raise
+
+    def spy(q, name, timeout_s):
+        during.append(spark.conf.get(key))
+        wait(q, name, timeout_s)
+
+    monkeypatch.setattr(S, "_await_or_raise", spy)
+    _, prog = S.run_session_flush(spark, sf_dir, query_name="t_session_own")
+    assert during == [before]
+    ops = [op for batch in prog for op in batch]
+    width = S._session_state_width(spark, sf_dir)
+    assert ops and {op["numShufflePartitions"] for op in ops} == {width}
+
+
 def test_session_native_state_store_lifecycle(spark, sf_dir):
     """The stream-native session query must demonstrably exercise the
     session-window state store, not just produce the right rows:
@@ -503,6 +562,39 @@ def test_stage_replay_from_empty_input_raises(spark, tmp_path):
     empty = spark.createDataFrame([], "ts timestamp, user_id bigint")
     with _pytest.raises(ValueError, match="empty input"):
         stage_replay_from(spark, empty, str(tmp_path / "src"))
+
+
+def test_stage_replay_from_incremental_equals_one_pass(spark, tmp_path):
+    """Staging wave 0 and then waves 1-2 through stage_replay_from must
+    leave, per wave, the same rows in the same mtime replay order as
+    staging all three waves at once."""
+    import os
+    from datetime import datetime, timedelta
+
+    import pyarrow.parquet as pq
+
+    from dirhash_spark.streaming.stateful import stage_replay_from
+
+    base = datetime(2024, 1, 1)
+    rows = [(base + timedelta(minutes=7 * i), i % 5) for i in range(40)]
+    ev = spark.createDataFrame(rows, "ts timestamp, user_id bigint")
+    whole, parts = str(tmp_path / "whole"), str(tmp_path / "parts")
+    stage_replay_from(spark, ev, whole, (0, 1, 2))
+    stage_replay_from(spark, ev, parts, (0,))
+    stage_replay_from(spark, ev, parts, (1, 2))
+
+    def waves(src):
+        files = (
+            os.path.join(src, f) for f in os.listdir(src) if not f.startswith(("_", "."))
+        )
+        return sorted(
+            (os.path.getmtime(p), sorted(pq.read_table(p).to_pylist(), key=str))
+            for p in files
+        )
+
+    staged = waves(whole)
+    assert len(staged) == 3
+    assert waves(parts) == staged
 
 
 def test_driver_staging_matches_spark_route(spark, sf_dir, tmp_path):
