@@ -29,7 +29,6 @@ Scale design (the point of each variant at 100 TB):
 
 from __future__ import annotations
 
-import os
 import zlib
 from collections.abc import Callable, Iterator
 
@@ -904,15 +903,16 @@ _CC_MAX_ITERS = 20
 #: Edge-count bound under which :func:`_connected_components` solves
 #: the labeling driver-side instead of iterating cluster-side.  The
 #: same route-by-measurement pattern as the listing's serial-walk
-#: budget: the edge list is already materialized (localCheckpoint), so
-#: one count decides; at or below the bound a union-find over the
-#: edges costs one collect of <= 2^16 pairs (~1 MB) and ONE broadcast
-#: join back, replacing O(log diameter) rounds of two shuffles + a
-#: checkpoint each — measured 1.5-2 s of fixed per-round job overhead
-#: on the e2e dedup pipelines whose verified-pair graphs are far
-#: smaller than this at any corpus size where they're sparse.  Above
-#: the bound (web-scale dup graphs) the distributed propagation runs
-#: unchanged.  Tests monkeypatch to -1 to force the distributed path.
+#: budget: the pair list's entry checkpoint counts it on the same job,
+#: so one count decides; at or below the bound (two symmetric edges per
+#: pair) a union-find costs one collect of <= 2^15 pairs (~0.5 MB) and
+#: at most ONE broadcast join back, replacing O(log diameter) rounds
+#: of two shuffles + a checkpoint each — measured 1.5-2 s of fixed
+#: per-round job overhead on the e2e dedup pipelines whose verified-pair
+#: graphs are far smaller than this at any corpus size where they're
+#: sparse.  Above the bound (web-scale dup graphs) the distributed
+#: propagation runs unchanged.  Tests monkeypatch to -1 to force the
+#: distributed path.
 _CC_DRIVER_EDGE_BOUND = 1 << 16
 
 
@@ -920,7 +920,8 @@ def _union_by_min(pairs) -> Callable:
     """Union-find over ``(a, b)`` pairs with path compression and
     union-by-min: returns ``find``, which maps every element to the
     minimum member of its component — min-label propagation's fixpoint
-    exactly, so both driver routes below match the distributed one."""
+    exactly, so :func:`_connected_components`' driver route matches its
+    distributed one."""
     parent: dict = {}
 
     def find(x):
@@ -938,113 +939,54 @@ def _union_by_min(pairs) -> Callable:
     return find
 
 
-def _cc_driver_unionfind(
-    nodes: DataFrame, edges: DataFrame, labels_are_ids: bool = False
-) -> DataFrame:
-    """Driver fast path of :func:`_connected_components`: union-find
-    (path compression) over an edge list the router just counted at
-    <= :data:`_CC_DRIVER_EDGE_BOUND` rows.  Only edge ENDPOINTS enter
-    the driver (bounded by 2x the edge count, both the pair list and
-    the one broadcast-semi-join collect of their INITIAL labels);
-    ``nodes`` — corpus-sized, every singleton — never leaves the
-    cluster: the mapping broadcasts back and singletons keep their own
-    label via coalesce.
-
-    Route parity is exact UNDER THE CALLER CONTRACT (labels
-    initialized to doc_id — what every in-repo caller does — or more
-    generally seeds that never collide with a doc_id in another
-    component): each component labels as the MIN of its members'
-    initial labels.  Under adversarial seeding OUTSIDE that contract
-    the routes can diverge — the distributed route's pointer-jump step
-    joins label VALUES against doc_ids, so a seeded label equal to a
-    foreign component's doc_id can adopt that component's label, which
-    this route never does.  With ``labels_are_ids=False`` an edge
-    endpoint absent from ``nodes`` raises loudly rather than silently
-    diverging from what propagation would emit for it (no in-repo
-    caller constructs that; the error keeps the routes
-    answer-identical by construction).  ``labels_are_ids=True`` is the
-    caller ALSO asserting endpoints ⊆ nodes: the assertion is what
-    lets this route skip the corpus-sized label fetch, so there is no
-    cluster-free way to re-check it here — a violating caller gets the
-    left-join's silent semantics (missing endpoints dropped from the
-    output) instead of the loud raise.  The result is a LAZY plan —
-    one broadcast join over nodes — unlike the distributed route,
-    whose per-iteration localCheckpoints materialize as a side effect;
-    re-execution here is one cheap map-side join, so callers need no
-    checkpoint.
-    """
-    rows = edges.select("u", "v").collect()  # bounded: router-counted
-    find = _union_by_min(rows)
-    endpoints = {e["u"] for e in rows} | {e["v"] for e in rows}
-    t = dict(nodes.dtypes)["doc_id"]
-    spark = nodes.sparkSession
-    if labels_are_ids:
-        # Caller asserts label == doc_id AND endpoints ⊆ nodes (every
-        # in-repo caller constructs nodes exactly that way) — the
-        # initial labels are then the endpoint ids themselves, so the
-        # broadcast-semi-join label fetch below would be a corpus scan
-        # producing an identity map.  Skipping it removes one whole
-        # Spark job per CC (at scale: a full pass over the node table).
-        init = {x: x for x in endpoints}
-    else:
-        ep_df = spark.createDataFrame([(x,) for x in endpoints], f"doc_id {t}")
-        init = {
-            r["doc_id"]: r["label"]
-            # bounded: one initial-label row per edge ENDPOINT (<= 2x the
-            # router-counted edge bound), fetched with a broadcast semi-join
-            for r in nodes.join(F.broadcast(ep_df), "doc_id").collect()
-        }
-        missing = endpoints - init.keys()
-        if missing:
-            raise ValueError(
-                f"_connected_components: {len(missing)} edge endpoint(s) absent "
-                f"from nodes (e.g. {next(iter(missing))!r}) — callers must list "
-                "every endpoint in nodes"
-            )
-    comp_min: dict = {}
-    for x in endpoints:
-        r = find(x)
-        m = comp_min.get(r)
-        comp_min[r] = init[x] if m is None or init[x] < m else m
-    mapping = [(x, comp_min[find(x)]) for x in endpoints]
-    lt = dict(nodes.dtypes)["label"]
-    map_df = spark.createDataFrame(mapping, f"doc_id {t}, cc_label {lt}")
-    return nodes.join(F.broadcast(map_df), "doc_id", "left").select(
-        "doc_id", F.coalesce("cc_label", "label").alias("label")
+def _clusters_over(ids: DataFrame, labels: DataFrame) -> DataFrame:
+    """``(doc_id, cluster_id, is_canonical)`` for every row of ``ids``
+    from a ``(doc_id, label)`` frame that may leave ids out: an id with
+    no label is a singleton, its own cluster and its own keeper."""
+    cluster = F.coalesce("label", "doc_id")
+    return ids.join(labels, "doc_id", "left").select(
+        "doc_id",
+        cluster.alias("cluster_id"),
+        (F.col("doc_id") == cluster).alias("is_canonical"),
     )
 
 
 def _connected_components(
-    nodes: DataFrame, edges: DataFrame, labels_are_ids: bool = False
+    pairs: DataFrame, ids: DataFrame | None = None
 ) -> tuple[DataFrame, int]:
-    """Distributed connected components by min-label propagation with
-    pointer jumping — or, below a measured edge bound, a driver
-    union-find with a broadcast join back (see
-    :data:`_CC_DRIVER_EDGE_BOUND`).  Returns ``(labels, rounds)``;
-    ``rounds == 0`` means the driver route ran.
-    ``labels_are_ids=True`` is the caller's assertion that
-    ``label == doc_id`` for every node AND every edge endpoint appears
-    in ``nodes`` (how all in-repo callers construct the node table);
-    the driver route then derives initial labels from the endpoint ids
-    themselves instead of scanning ``nodes`` for them — one whole
-    Spark job (a corpus-sized pass at scale) removed per CC.  The
-    large/small-star scale witness
+    """Near-dup pairs → clusters: the one connected-components step of
+    every clustering query.  ``pairs`` is a ``(doc_a, doc_b)`` edge
+    list; ``ids`` is a ``(doc_id)`` frame of every node — the corpus,
+    so singletons are their own cluster — or None for the pairs'
+    endpoints alone.  Returns ``(clusters, rounds)``: clusters are
+    ``(doc_id, cluster_id, is_canonical)``, cluster_id the smallest
+    doc_id in the component; ``rounds == 0`` means the driver route
+    ran.  The large/small-star scale witness
     (``dedup_cluster_canonical_bigstar``) deliberately does NOT route:
     it exists to demonstrate the distributed algorithm.
 
-    ``nodes`` is (doc_id, label) with label initialized to doc_id;
-    ``edges`` is a symmetric (u, v) edge list.  Each round does one
-    neighbor-min step (every node adopts the smallest label among itself
-    and its neighbors — one shuffle) and one pointer-jump step
-    (label ← label(label), the path-halving trick that turns O(diameter)
-    convergence into O(log diameter) — one more shuffle).  Convergence
-    is detected by the monotonically-decreasing label sum, and lineage
-    is truncated per round with localCheckpoint so the plan doesn't grow
-    exponentially across iterations.  The edge list itself is
-    checkpointed ONCE on entry: it is re-read every round, and leaving
-    it lazy would re-execute its whole upstream lineage (candidate
-    generation, sketches, verification) once per iteration — measured
-    170 s → 11 s on pipeline_neardup_e2e at sf0.1.
+    One counted checkpoint on entry both materializes the pairs and
+    counts them for the router.  The checkpoint matters on both routes:
+    left lazy, the upstream lineage (candidate generation, sketches,
+    verification) would run once per read — per symmetrized branch,
+    per round — measured 170 s → 11 s on pipeline_neardup_e2e at sf0.1.
+
+    - Driver route (2·pairs <= :data:`_CC_DRIVER_EDGE_BOUND` symmetric
+      edges): one bounded collect of the pairs and :func:`_union_by_min`.
+      With ``ids`` the label map broadcasts back over them (the corpus
+      never enters the driver; a lazy map-side join, so callers need no
+      checkpoint); without, the result is a local frame of the
+      endpoints.
+    - Distributed route: min-label propagation with pointer jumping
+      over the symmetrized pairs, nodes = ``ids`` or the distinct
+      endpoints.  Each round does one neighbor-min step (every node
+      adopts the smallest label among itself and its neighbors — one
+      shuffle) and one pointer-jump step (label ← label(label), the
+      path-halving trick that turns O(diameter) convergence into
+      O(log diameter) — one more shuffle).  Convergence is detected by
+      the monotonically-decreasing label sum, and lineage is truncated
+      per round with a checkpoint so the plan doesn't grow across
+      iterations.
 
     This simple variant is fine up to graphs whose label table fits a
     normal shuffle (billions of nodes).  For web-scale edge sets the
@@ -1053,10 +995,26 @@ def _connected_components(
     SoCC 2014) — same primitives, provably fewer rounds on skewed
     degree distributions.
     """
-    edges, m = checkpoint_counted(edges, n=F.count(F.lit(1)))
-    if m["n"] <= _CC_DRIVER_EDGE_BOUND:
-        return _cc_driver_unionfind(nodes, edges, labels_are_ids=labels_are_ids), 0
-    labels = nodes
+    pairs, m = checkpoint_counted(pairs.select("doc_a", "doc_b"), n=F.count(F.lit(1)))
+    if 2 * m["n"] <= _CC_DRIVER_EDGE_BOUND:
+        spark = pairs.sparkSession
+        t = dict(pairs.dtypes)["doc_a"] if ids is None else dict(ids.dtypes)["doc_id"]
+        rows = pairs.collect()  # bounded: router-counted
+        find = _union_by_min(rows)
+        label = {x: find(x) for r in rows for x in r}
+        if ids is None:
+            return spark.createDataFrame(
+                [(x, c, x == c) for x, c in label.items()],
+                f"doc_id {t}, cluster_id {t}, is_canonical boolean",
+            ), 0
+        labels = spark.createDataFrame(list(label.items()), f"doc_id {t}, label {t}")
+        return _clusters_over(ids, F.broadcast(labels)), 0
+
+    edges = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")).unionByName(
+        pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
+    )
+    nodes = edges.select(F.col("u").alias("doc_id")).distinct() if ids is None else ids
+    labels = nodes.select("doc_id", F.col("doc_id").alias("label"))
     prev_sum = None
     iters = 0
     for _ in range(_CC_MAX_ITERS):
@@ -1077,7 +1035,11 @@ def _connected_components(
         if m["s"] == prev_sum:
             break
         prev_sum = m["s"]
-    return labels, iters
+    return labels.select(
+        "doc_id",
+        F.col("label").alias("cluster_id"),
+        (F.col("doc_id") == F.col("label")).alias("is_canonical"),
+    ), iters
 
 
 #: Shared by dedup_cluster_canonical and its large-star/small-star twin
@@ -1137,29 +1099,11 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTE builds the reachability closure and takes min(reachable id) per
     doc — portable SQL, no engine-specific CC primitive.
     """
-    cat = Catalog(spark, sf_dir)
-    # NOT checkpointed before symmetrizing, unlike the semdedup/neardup
-    # twins: the jaccard pairs sit directly above a join exchange, so
-    # the union's second branch resolves as ReusedExchange and a
-    # checkpoint only adds materialization cost (A/B'd r9: 5.80 s
-    # lazy vs 6.14 s checkpointed at sf0.1).  The pattern's trigger is
-    # a NON-reusable stage above the exchange (e.g. applyInPandas).
-    pairs = (
-        REGISTRY["dedup_ngram_jaccard"]
-        .fn(spark, sf_dir)
-        .where(F.col("jaccard") >= _CLUSTER_JACCARD)
-        .select("doc_a", "doc_b")
+    pairs = REGISTRY["dedup_ngram_jaccard"].fn(spark, sf_dir).where(
+        F.col("jaccard") >= _CLUSTER_JACCARD
     )
-    edges = pairs.select(
-        F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
-    ).unionByName(pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v")))
-    nodes = cat.documents.select("doc_id", F.col("doc_id").alias("label"))
-    labels, _ = _connected_components(nodes, edges, labels_are_ids=True)
-    return labels.select(
-        "doc_id",
-        F.col("label").alias("cluster_id"),
-        (F.col("doc_id") == F.col("label")).alias("is_canonical"),
-    )
+    ids = Catalog(spark, sf_dir).documents.select("doc_id")
+    return _connected_components(pairs, ids)[0]
 
 
 def _cc_large_small_star(
@@ -1265,7 +1209,6 @@ def dedup_cluster_canonical_bigstar(spark: SparkSession, sf_dir: str) -> DataFra
     pays per-round full-label-table work; the round-count comparison on
     the adversarial fixtures lives in tests/test_llm_ops.py.
     """
-    cat = Catalog(spark, sf_dir)
     pairs = (
         REGISTRY["dedup_ngram_jaccard"]
         .fn(spark, sf_dir)
@@ -1273,17 +1216,7 @@ def dedup_cluster_canonical_bigstar(spark: SparkSession, sf_dir: str) -> DataFra
         .select("doc_a", "doc_b")
     )
     member, _ = _cc_large_small_star(pairs)
-    return (
-        cat.documents.select("doc_id")
-        .join(member, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("label", F.col("doc_id")).alias("cluster_id"),
-            (F.col("doc_id") == F.coalesce("label", F.col("doc_id"))).alias(
-                "is_canonical"
-            ),
-        )
-    )
+    return _clusters_over(Catalog(spark, sf_dir).documents.select("doc_id"), member)
 
 
 # ------------------------------------------------------- embedding near-dup
@@ -1524,7 +1457,7 @@ def dedup_embedding_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     1. ASSIGN each vector to its 3 nearest k-means centroids
        (multi-assignment catches pairs straddling a Voronoi boundary;
-       JVM codegen argmin, same trainer/centroids as the sim_ann_ivf
+       the map-only Arrow argmin and trainer/centroids of the sim_ann_ivf
        family);
     2. per-list row-blocked matmul: ``groupBy(list_id).applyInPandas``
        — each inverted list normalizes its vector block once and
@@ -1607,7 +1540,7 @@ def pipeline_semdedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         checkpointed assignment pass, equi-join candidates, exact
         cosine >= 0.35 verify)
         → connected components over the verified pair graph
-          (:func:`_connected_components`; edge list checkpointed once
+          (:func:`_connected_components`; pair list checkpointed once
           on entry, label table corpus-keyed)
         → canonical keep-list (vec_id, cluster_id, is_canonical) with
           every vector present — singletons are their own cluster.
@@ -1620,27 +1553,11 @@ def pipeline_semdedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted pair set, so only candidate recall (pinned separately on
     dedup_embedding_ann) is probabilistic.
     """
-    cat = Catalog(spark, sf_dir)
-    # materialized before symmetrizing (the _neardup_cluster pattern):
-    # the union reads `pairs` twice, and the FlatMapGroupsInPandas
-    # scoring stage above the list-id exchange is NOT reusable across
-    # branches (unlike a plain join exchange), so left lazy the IVF
-    # assignment + per-list BLAS pass executed once per branch —
-    # A/B'd r9: 4.25 → 3.64 s at sf0.1, and at scale it halves the
-    # expensive candidate pass outright.
-    pairs = dedup_embedding_ann(spark, sf_dir).select("vec_a", "vec_b").localCheckpoint()
-    edges = pairs.select(
-        F.col("vec_a").alias("u"), F.col("vec_b").alias("v")
-    ).unionByName(pairs.select(F.col("vec_b").alias("u"), F.col("vec_a").alias("v")))
-    nodes = cat.embeddings.select(
-        F.col("vec_id").alias("doc_id"), F.col("vec_id").alias("label")
+    pairs = dedup_embedding_ann(spark, sf_dir).select(
+        F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
     )
-    labels, _ = _connected_components(nodes, edges, labels_are_ids=True)
-    return labels.select(
-        F.col("doc_id").alias("vec_id"),
-        F.col("label").alias("cluster_id"),
-        (F.col("doc_id") == F.col("label")).alias("is_canonical"),
-    )
+    ids = Catalog(spark, sf_dir).embeddings.select(F.col("vec_id").alias("doc_id"))
+    return _connected_components(pairs, ids)[0].withColumnRenamed("doc_id", "vec_id")
 
 
 @query(
@@ -2329,9 +2246,11 @@ def pipeline_neardup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     dense corpora — the count is free, the list is checkpointed);
     components via min-label propagation + pointer jumping
     (:func:`_connected_components`) on the verified-pair graph only,
-    which is near-dup-group-sized, not corpus-sized.
+    which is near-dup-group-sized, not corpus-sized: the node set is the
+    verified pairs' endpoints, so on the driver route the result is a
+    local frame, with no node DISTINCT shuffle and no join back.
     """
-    return _neardup_cluster(spark, sf_dir, include_lsh=False)
+    return _connected_components(_neardup_verified_pairs(spark, sf_dir))[0]
 
 
 @query("pipeline_neardup_e2e_lsh_union", oracle=None, tags=("dedup", "pipeline", "e2e"))
@@ -2346,54 +2265,7 @@ def pipeline_neardup_e2e_lsh_union(spark: SparkSession, sf_dir: str) -> DataFram
     test instead (tests/test_llm_ops.py), and the verify stage's
     contract is unchanged: it accepts ANY candidate stream and owns
     correctness from there."""
-    return _neardup_cluster(spark, sf_dir, include_lsh=True)
-
-
-def _neardup_cluster(spark: SparkSession, sf_dir: str, include_lsh: bool) -> DataFrame:
-    ver, m = checkpoint_counted(
-        _neardup_verified_pairs(spark, sf_dir, include_lsh=include_lsh), n=F.count(F.lit(1))
-    )
-    # materialized ONCE (localCheckpoint): both the edge list and the
-    # node list read it, and the CC loop re-reads edges every round —
-    # left lazy, the posting+verify lineage would execute 2+ more times.
-
-    # Unlike the canonical/semdedup callers — whose corpus-sized node
-    # tables (singletons included) must stay cluster-side — this graph's
-    # node set IS its edge endpoints.  Below the CC router's edge bound
-    # the whole labeling therefore collapses driver-side: one bounded
-    # collect of the checkpointed pair list (the same rows the generic
-    # route collects anyway), union-find, and a LocalTableScan result.
-    # That removes the edge-symmetrization checkpoint, the endpoint
-    # DISTINCT shuffle (which ran twice: once in the generic route's
-    # initial-label collect and again at the final action re-executing
-    # the lazy join-back), ~1.0 s of the 2.8 s e2e wall at sf0.1.
-    # Above the bound the distributed propagation runs exactly as
-    # before; route parity is pinned by test_neardup_cluster_route_parity.
-    if m["n"] * 2 <= _CC_DRIVER_EDGE_BOUND:
-        pairs = ver.collect()  # bounded: router-counted
-        find = _union_by_min((p["doc_a"], p["doc_b"]) for p in pairs)
-        endpoints = {p["doc_a"] for p in pairs} | {p["doc_b"] for p in pairs}
-        t = dict(ver.dtypes)["doc_a"]
-        return spark.createDataFrame(
-            [(d, find(d), d == find(d)) for d in endpoints],
-            f"doc_id {t}, cluster_id {t}, is_canonical boolean",
-        )
-
-    edges = ver.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")).unionByName(
-        ver.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
-    )
-    nodes = (
-        ver.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(ver.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-        .select("doc_id", F.col("doc_id").alias("label"))
-    )
-    labels, _ = _connected_components(nodes, edges, labels_are_ids=True)
-    return labels.select(
-        "doc_id",
-        F.col("label").alias("cluster_id"),
-        (F.col("doc_id") == F.col("label")).alias("is_canonical"),
-    )
+    return _connected_components(_neardup_verified_pairs(spark, sf_dir, include_lsh=True))[0]
 
 
 #: Candidate-pair count above which the e2e verify join abandons the
@@ -2676,11 +2548,7 @@ _VERBATIM_BROADCAST_MAX_HASHES = 1 << 22
 #: are bit-identical by construction (equal strings hash equal; the
 #: definitional per-string bucketing runs unchanged over survivors),
 #: pinned by tests/test_llm_ops.py::test_verbatim_runs_route_parity.
-#: Env-overridable for deployments whose shuffle/scan cost ratio
-#: differs (faster networks → raise it, slower → lower it).
-_VERBATIM_PREPASS_MIN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_VERBATIM_PREPASS_MIN_BYTES", str(1 << 30))
-)
+_VERBATIM_PREPASS_MIN_BYTES = 1 << 30
 
 
 def _verbatim_window_hashes(ws_col, wh_col):

@@ -164,21 +164,7 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 _IVF_TARGET_LIST = 128
 _IVF_K_MIN = 4
 #: Driver/centroid-state bound: K×64 doubles stays ~2 MB at the cap.
-#: Beyond _IVF_CODEGEN_MAX_K the literal-expression argmin would bloat
-#: codegen, so assignment switches to the Arrow-batched numpy route
-#: (same ordering semantics; forced-route parity pinned in tests).
-#: The threshold is a PLANNING-cost guard, not an execution one: the
-#: literal argmin costs the DRIVER O(K·dim) Catalyst nodes per query
-#: construction — measured r14 (joblog, sf0.1, K=16): 3.2 s of
-#: inter-job driver stall per steady-state run, vs ~0.05 s for the
-#: Arrow route's one-node plan (sim_ann_ivf_distfit 4.1 s → 1.0 s
-#: total, identical rows — route parity is bit-exact by construction
-#: and pinned in tests/test_llm_ops.py).  8 keeps tiny-K corpora
-#: (≤ ~1k vectors, e.g. the sf0.01 sweep's K=4) on the pure-JVM form
-#: that needs no Python workers, while anything bench/production-sized
-#: takes the map-only Arrow route it would use at scale anyway.
 _IVF_K_MAX = 4096
-_IVF_CODEGEN_MAX_K = 8
 _IVF_ITERS = 8
 _IVF_NPROBE = 6  # probed lists at K=16; scales with K via _nprobe_for
 _IVF_SAMPLE = 2048
@@ -289,8 +275,8 @@ def _train_centroids_distributed(cat: Catalog) -> np.ndarray | None:
     pass runs over the FULL corpus as a Spark aggregation — the answer
     to "what if the training sample can't represent 100 TB".
 
-    Per iteration: assignment reuses the same codegen argmin the query
-    path uses (``_nearest_centroid`` — no Python in the pass), and
+    Per iteration: assignment reuses the same map-only Arrow argmin the
+    query path uses (:func:`_nprobe_clusters`), and
     re-centering is one ``groupBy(cluster).agg(avg per dimension)``
     shuffle whose output is exactly K rows of K×64 doubles.  Only those
     K centroids (a few KiB) return to the driver between iterations —
@@ -321,7 +307,7 @@ def _train_centroids_distributed(cat: Catalog) -> np.ndarray | None:
     dim = cents.shape[1]
     for _ in range(_IVF_ITERS):
         recentered = (
-            emb.select(_nearest_centroid(F.col("v"), cents).alias("cid"), "v")
+            emb.select(_nprobe_clusters(F.col("v"), cents, 1)[0].alias("cid"), "v")
             .groupBy("cid")
             .agg(*[F.avg(F.col("v")[i]).alias(f"c{i}") for i in range(dim)])
             .collect()  # exactly K rows — bounded by design
@@ -331,62 +317,30 @@ def _train_centroids_distributed(cat: Catalog) -> np.ndarray | None:
     return cents
 
 
-def _centroid_dist2(vec_col, c: np.ndarray):
-    """Squared distance to one centroid, as a codegen expression."""
-    carr = F.array(*[F.lit(float(xx)) for xx in c])
-    return F.aggregate(
-        F.zip_with(vec_col, carr, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-
-
-def _nearest_centroid(vec_col, cents: np.ndarray):
-    """Argmin over squared distances to every centroid.  K (from the
-    trained quantizer itself, ``len(cents)``) ≤ _IVF_CODEGEN_MAX_K uses
-    the JVM codegen form: array_min over (distance, id) structs —
-    lexicographic struct order makes the min-by-distance explicit, all
-    inside codegen, zero Python in the pass.  Larger K (derived from
-    corpus size at 100 TB) would bloat the generated code O(K·dim), so
-    it switches to the Arrow-batched numpy route (ordering parity —
-    smallest distance, ties to smallest id — pinned in tests)."""
-    if len(cents) > _IVF_CODEGEN_MAX_K:
-        return _nprobe_clusters_arrow(vec_col, cents, 1)[0]
-    return F.array_min(
-        F.array(*[
-            F.struct(_centroid_dist2(vec_col, cents[i]).alias("d"), F.lit(i).alias("cid"))
-            for i in range(len(cents))
-        ])
-    )["cid"]
+def _nearest_lists(x: np.ndarray, cents: np.ndarray, take: int) -> np.ndarray:
+    """Ids of each row of ``x``'s ``take`` nearest centroids, nearest
+    first — the one assignment kernel behind every IVF query.  Squared
+    distances accumulate per DIMENSION, in dimension order, so every
+    caller runs the identical left-to-right IEEE addition chain per
+    (row, centroid): the Spark assignment and the driver-side probe of
+    the indexed queries rank bit-identically (numpy's pairwise
+    ``.sum(-1)`` reassociates and could flip near-tie rankings, ADVICE
+    r11).  Stable argsort keeps ties on the smallest centroid id."""
+    d = np.zeros((x.shape[0], cents.shape[0]), dtype=np.float64)
+    for j in range(cents.shape[1]):
+        t = x[:, j, None] - cents[None, :, j]
+        d += t * t
+    return np.argsort(d, axis=1, kind="stable")[:, :take]
 
 
 def _nprobe_clusters(vec_col, cents: np.ndarray, nprobe: int):
-    """The ``nprobe`` nearest centroid ids for a vector, as a codegen
-    expression (array_sort of (distance, id) structs, slice, project id)
-    — so probe→lists stays a dataflow edge, not a driver collect.
-    Same K-threshold switch to the Arrow route as
-    :func:`_nearest_centroid`."""
-    nprobe = min(nprobe, len(cents))
-    if len(cents) > _IVF_CODEGEN_MAX_K:
-        return _nprobe_clusters_arrow(vec_col, cents, nprobe)
-    structs = F.array(*[
-        F.struct(_centroid_dist2(vec_col, cents[i]).alias("d"), F.lit(i).alias("cid"))
-        for i in range(len(cents))
-    ])
-    return F.transform(F.slice(F.array_sort(structs), 1, nprobe), lambda s: s["cid"])
-
-
-def _nprobe_clusters_arrow(vec_col, cents: np.ndarray, nprobe: int):
-    """Arrow-batched twin of :func:`_nprobe_clusters` for K above the
-    codegen threshold.  Distances accumulate per DIMENSION, in
-    dimension order, exactly like the codegen ``F.aggregate`` fold —
-    ``d += (x[:, j] - c[:, j])²`` is the same left-to-right IEEE
-    addition chain per (row, centroid), so the two routes produce
-    bit-identical distances (not merely tolerance-close: numpy's
-    pairwise ``.sum(-1)`` reassociates and could flip near-tie
-    rankings, ADVICE r11).  Scratch is (chunk, K) per dimension step —
-    strictly below the old (chunk, K, dim) bound; stable argsort keeps
-    ties on the smallest centroid id exactly like the struct sort."""
+    """The ``nprobe`` nearest centroid ids for a vector column, as an
+    Arrow-batched map-only expression over :func:`_nearest_lists` — so
+    probe→lists stays a dataflow edge, not a driver collect (``[0]`` of
+    a 1-probe call is the nearest centroid).  The plan is one node
+    whatever K is; a literal-expression argmin grows O(K·dim) Catalyst
+    nodes, measured r14 at K=16 as 3.2 s of driver planning per run
+    against ~0.05 s here.  Scratch is (chunk, K) per dimension step."""
     from pyspark.sql.functions import pandas_udf
 
     c = np.ascontiguousarray(cents, dtype=np.float64)
@@ -401,15 +355,10 @@ def _nprobe_clusters_arrow(vec_col, cents: np.ndarray, nprobe: int):
     @pandas_udf("array<int>")
     def nearest_lists(v: pd.Series) -> pd.Series:
         x = np.asarray(v.tolist(), dtype=np.float64)
-        out = []
-        for s in range(0, len(x), chunk):
-            xc = x[s : s + chunk]
-            d = np.zeros((xc.shape[0], c.shape[0]), dtype=np.float64)
-            for j in range(c.shape[1]):  # fold dims in order == codegen
-                t = xc[:, j, None] - c[None, :, j]
-                d += t * t
-            idx = np.argsort(d, axis=1, kind="stable")[:, :take]
-            out.append(idx.astype(np.int32))
+        out = [
+            _nearest_lists(x[s : s + chunk], c, take).astype(np.int32)
+            for s in range(0, len(x), chunk)
+        ]
         return pd.Series([row.tolist() for row in np.vstack(out)]) if out else pd.Series(
             [], dtype=object
         )
@@ -430,16 +379,16 @@ def _empty_topk(spark: SparkSession) -> DataFrame:
 @query("sim_ann_ivf", oracle=None, tags=("similarity", "ann", "ivf"))
 def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN top-k via IVF coarse quantization: k-means centroids (trained
-    once per corpus version on a bounded sample, memoized), JVM-side cluster
-    assignment, search only the probe's nprobe nearest clusters, exact
-    cosine re-rank inside.
+    once per corpus version on a bounded sample, memoized), map-only
+    Arrow cluster assignment, search only the probe's nprobe nearest
+    clusters, exact cosine re-rank inside.
 
     On these near-uniform fixtures recall ≈ candidate share (the
     no-structure worst case, measured in tests); on clustered real
     embeddings the inverted lists concentrate neighbors so recall ≫
     share — the standard IVF trade.  The whole query path is dataflow:
-    the probe's nprobe lists are computed as a codegen expression on the
-    broadcast probe row (no ``.first()``), and the write-time form of
+    the probe's nprobe lists are computed by the same Arrow expression on
+    the broadcast probe row (no ``.first()``), and the write-time form of
     the assignment is ``sim_ann_ivf_indexed`` below, where list id is a
     partition key and nprobe pruning is partition pruning on read.
 
@@ -466,7 +415,7 @@ def _ivf_topk(cat: Catalog, cents: np.ndarray) -> DataFrame:
         )
     )
     assigned = cat.embeddings.where(F.col("vec_id") != 0).select(
-        "vec_id", "label", v.alias("vv"), _nearest_centroid(v, cents).alias("cluster_id")
+        "vec_id", "label", v.alias("vv"), _nprobe_clusters(v, cents, 1)[0].alias("cluster_id")
     )
     candidates = assigned.crossJoin(probe).where(
         F.array_contains(F.col("probe_clusters"), F.col("cluster_id"))
@@ -506,17 +455,9 @@ _ANN_INDEX_VERSION = 7  # v6: duplicate-grouped rows; v7: residual PQ codes
 
 def _probe_nprobe_lists(cents: np.ndarray, probe_vec: np.ndarray) -> list[int]:
     """Driver-side twin of :func:`_nprobe_clusters` for a single probe:
-    squared distances fold per DIMENSION in dimension order — the
-    identical IEEE addition chain as the codegen aggregate and the
-    Arrow route — so the indexed queries probe EXACTLY the lists the
-    unindexed form would.  numpy's pairwise ``.sum(-1)`` reassociates
-    and can flip near-tie centroid rankings (the r11 ADVICE class);
-    stable argsort keeps the smallest-id tie order."""
-    d = np.zeros(len(cents), dtype=np.float64)
-    for j in range(cents.shape[1]):
-        t = cents[:, j] - probe_vec[j]
-        d += t * t
-    return d.argsort(kind="stable")[: _nprobe_for(len(cents))].tolist()
+    the same kernel, so the indexed queries probe EXACTLY the lists the
+    unindexed form would."""
+    return _nearest_lists(probe_vec[None, :], cents, _nprobe_for(len(cents)))[0].tolist()
 
 
 def _ann_index_path(sf_dir: str) -> str:
@@ -645,7 +586,7 @@ def build_ann_index(spark: SparkSession, sf_dir: str) -> str | None:
                 F.element_at("m", 1)["label"].alias("label"),
                 "v",
                 sig.alias("sig"),
-                _nearest_centroid(F.col("v"), cents).alias("cluster_id"),
+                _nprobe_clusters(F.col("v"), cents, 1)[0].alias("cluster_id"),
                 # primitive parallel arrays (not array<struct>): they
                 # round-trip the Arrow mapInPandas boundary untouched
                 F.transform("m", lambda s: s["vec_id"]).alias("member_ids"),

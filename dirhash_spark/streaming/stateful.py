@@ -497,20 +497,26 @@ def stream_bloom_ingest_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_bloom_probe: documents arrive as a file stream in multiple
     micro-batches (maxFilesPerTrigger=1 over a 4-file source), each
     batch probes the STATIC corpus Bloom manifest inside foreachBatch
-    (manifest broadcast once, reused every trigger) and appends
-    per-document verdicts (bloom maybe_seen + exact is_dup truth) to
-    the sink.  Because the manifest is static, the verdict for a
-    document is independent of how the stream is batched — which is
-    what makes the gate exactly checkable: the sink's final contents
+    and appends per-document verdicts (bloom maybe_seen + exact is_dup
+    truth) to the sink.  Because the manifest is static, the verdict
+    for a document is independent of how the stream is batched — which
+    is what makes the gate exactly checkable: the sink's final contents
     equal the batch probe, row for row.
 
-    Scale shape per trigger: the manifest is ~{m} bits packed in
-    BIGINT words (broadcast-sized at ANY corpus size — that is the
-    point of the bloom form over the 32-byte hash manifest), the probe
-    is map-side explode + broadcast join + bool_and, and the exact
-    truth probe broadcasts the corpus hash set exactly as
-    dedup_incremental does.  State stores hold nothing: the gate is
-    stateless per batch, so it runs at source parallelism forever.
+    Built once, before the stream starts: the corpus manifest and the
+    corpus hash set, each a checkpointed frame.  NOT built once: their
+    broadcasts.  Every micro-batch plans ``bloom_verdicts`` afresh, so
+    each trigger launches 5 jobs (read from the status store's job
+    list, sf0.01): it broadcasts the checkpointed manifest (1) and hash
+    set (1) again, runs the map stage of the per-document bool_and over
+    the batch file (1), broadcasts the batch's exact-truth side (1; the
+    batch file is read a second time), and appends the joined verdicts
+    (1).  The manifest is ``dedup._BLOOM_M`` bits packed in BIGINT words
+    (broadcast-sized at ANY corpus size — that is the point of the
+    bloom form over the 32-byte hash manifest); the corpus hash set
+    grows with the corpus, exactly as in dedup_incremental.  State
+    stores hold nothing: the gate is stateless per batch, so it runs at
+    source parallelism forever.
     """
     cat = Catalog(spark, sf_dir)
     src = sink_dir("bloom_gate_src", sf_dir)

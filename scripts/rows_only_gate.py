@@ -322,8 +322,6 @@ def check_cc_routes(spark) -> bool:
     random graph (route equivalence, not just both-converge)."""
     import random
 
-    from pyspark.sql import functions as F
-
     import dirhash_spark.operators.dedup as dedup_mod
 
     rng = random.Random(13)
@@ -332,20 +330,17 @@ def check_cc_routes(spark) -> bool:
          for a, b in ((rng.randrange(300), rng.randrange(300)) for _ in range(220))
          if a != b}
     )
-    pairs = spark.createDataFrame(pairs_list, "u long, v long")
-    edges = pairs.unionByName(pairs.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    nodes = (
-        pairs.select(F.col("u").alias("doc_id"))
-        .unionByName(pairs.select(F.col("v").alias("doc_id")))
-        .distinct()
-        .select("doc_id", F.col("doc_id").alias("label"))
-    )
+    pairs = spark.createDataFrame(pairs_list, "doc_a long, doc_b long")
+
+    def clusters():
+        return sorted(map(tuple, dedup_mod._connected_components(pairs)[0].collect()))
+
     saved = dedup_mod._CC_DRIVER_EDGE_BOUND
     try:
         dedup_mod._CC_DRIVER_EDGE_BOUND = 1 << 30  # force driver route
-        drv = dict(map(tuple, dedup_mod._connected_components(nodes, edges)[0].collect()))
+        drv = clusters()
         dedup_mod._CC_DRIVER_EDGE_BOUND = -1  # force distributed route
-        dist = dict(map(tuple, dedup_mod._connected_components(nodes, edges)[0].collect()))
+        dist = clusters()
     finally:
         dedup_mod._CC_DRIVER_EDGE_BOUND = saved
     return drv == dist

@@ -555,8 +555,6 @@ def test_bigstar_cc_matches_minlabel_and_round_counts(spark, tmp_path, monkeypat
     must never need MORE rounds than the sibling on any of them."""
     import random
 
-    from pyspark.sql import functions as F
-
     import dirhash_spark.operators.dedup as dedup_mod
     from dirhash_spark.operators.dedup import (
         _cc_large_small_star,
@@ -571,17 +569,8 @@ def test_bigstar_cc_matches_minlabel_and_round_counts(spark, tmp_path, monkeypat
         pairs = spark.createDataFrame(pairs_list, "doc_a long, doc_b long")
         star_labels, it_star = _cc_large_small_star(pairs)
         star = dict(map(tuple, star_labels.collect()))
-        edges = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")).unionByName(
-            pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
-        )
-        nodes = (
-            pairs.select(F.col("doc_a").alias("doc_id"))
-            .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
-            .distinct()
-            .select("doc_id", F.col("doc_id").alias("label"))
-        )
-        ml_labels, it_ml = _connected_components(nodes, edges)
-        ml = dict(map(tuple, ml_labels.collect()))
+        ml_clusters, it_ml = _connected_components(pairs)
+        ml = dict(map(tuple, ml_clusters.select("doc_id", "cluster_id").collect()))
         # the star form omits component roots (label == self by
         # construction); the registered query restores them via the
         # documents left-join, so compare with that coalesce applied
@@ -1352,45 +1341,16 @@ def test_ivf_k_scales_with_fixture_size(spark):
     assert len(S._train_centroids_distributed(Catalog(spark, "/root/testdata/sf0.01"))) == 4
 
 
-def test_ivf_arrow_assignment_route_parity(spark, monkeypatch):
-    """The Arrow-batched assignment route (taken when derived K exceeds
-    the codegen threshold at real scale) must order exactly like the
-    codegen struct sort: smallest distance first, ties to the smallest
-    centroid id.  Forced here by dropping the threshold to 0."""
-    from pyspark.sql import functions as F
-
-    from dirhash_spark.catalog import Catalog
-    from dirhash_spark.operators import similarity as S
-
-    cat = Catalog(spark, "/root/testdata/sf0.01")
-    cents = S._train_centroids(cat)
-    base = cat.embeddings.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-
-    def assignments():
-        df = base.select(
-            "vec_id",
-            S._nprobe_clusters(F.col("v"), cents, 3).alias("lists"),
-            S._nearest_centroid(F.col("v"), cents).alias("cid"),
-        )
-        return {r["vec_id"]: (tuple(r["lists"]), r["cid"]) for r in df.collect()}
-
-    codegen = assignments()
-    monkeypatch.setattr(S, "_IVF_CODEGEN_MAX_K", 0)  # force the Arrow route
-    arrow = assignments()
-    assert codegen == arrow
-
-
-def test_nprobe_routes_bit_identical_on_near_ties(spark, monkeypatch):
-    """ADVICE r11: the Arrow route now accumulates squared distances
-    per DIMENSION in dimension order — the same left-to-right IEEE
-    addition chain as the codegen F.aggregate fold — so the two routes
-    are BIT-identical, including on near-tie and exact-tie rankings
-    that numpy's reassociating .sum() could flip.  Adversarial data:
-    random vectors against centroids containing exact duplicates (tie
-    broken by centroid id on both routes) and tight jitter clusters
-    (distances differing near the last ulp)."""
+def test_nprobe_routes_bit_identical_on_near_ties(spark):
+    """ADVICE r11: the Spark assignment (the unindexed queries) and the
+    driver-side probe of the indexed queries accumulate squared
+    distances per DIMENSION in dimension order — one left-to-right IEEE
+    addition chain — so both probe the same lists, BIT-identically,
+    including on near-tie and exact-tie rankings that numpy's
+    reassociating .sum() could flip.  Adversarial data: random vectors
+    against centroids containing exact duplicates (tie broken by
+    centroid id on both routes) and tight jitter clusters (distances
+    differing near the last ulp)."""
     import numpy as np
     from pyspark.sql import functions as F
 
@@ -1410,14 +1370,13 @@ def test_nprobe_routes_bit_identical_on_near_ties(spark, monkeypatch):
         "vec_id int, v array<double>",
     )
 
-    def lists(force_arrow):
-        monkeypatch.setattr(S, "_IVF_CODEGEN_MAX_K", 0 if force_arrow else 64)
-        out = df.select(
-            "vec_id", S._nprobe_clusters(F.col("v"), cents, 8).alias("l")
-        ).collect()
-        return {r["vec_id"]: tuple(r["l"]) for r in out}
-
-    assert lists(False) == lists(True)
+    nprobe = S._nprobe_for(len(cents))
+    out = df.select(
+        "vec_id", S._nprobe_clusters(F.col("v"), cents, nprobe).alias("l")
+    ).collect()
+    spark_lists = {r["vec_id"]: list(r["l"]) for r in out}
+    driver_lists = {i: S._probe_nprobe_lists(cents, v) for i, v in enumerate(vecs)}
+    assert spark_lists == driver_lists
 
 
 def test_pq_encode_chunk_stitch_transparent():
@@ -1459,7 +1418,7 @@ def test_ivf_arrow_route_chunked_scratch(spark):
     got = {
         r["id"]: list(r["lists"])
         for r in df.select(
-            "id", S._nprobe_clusters_arrow(F.col("v"), cents, 4).alias("lists")
+            "id", S._nprobe_clusters(F.col("v"), cents, 4).alias("lists")
         ).collect()
     }
     d2 = ((vecs[:, None, :] - cents[None, :, :]) ** 2).sum(-1)
@@ -1468,13 +1427,13 @@ def test_ivf_arrow_route_chunked_scratch(spark):
 
 
 def test_cc_driver_fastpath_matches_distributed(spark, monkeypatch):
-    """The CC router's driver union-find must label every graph
+    """The CC router's driver union-find must cluster every graph
     identically to the forced distributed min-label propagation —
-    including singletons (present in nodes, absent from edges: they
-    must keep their own label, proving corpus-sized nodes never enter
-    the driver mapping), chains, cliques, and fixed-seed random graphs
-    — and the router must actually take each route (0 rounds on the
-    fast path, > 0 when forced distributed)."""
+    including singletons (present in ids, absent from the pairs: they
+    must be their own canonical cluster, proving corpus-sized ids never
+    enter the driver mapping), chains, cliques, and fixed-seed random
+    graphs — and the router must actually take each route (0 rounds on
+    the fast path, > 0 when forced distributed)."""
     import random
 
     from pyspark.sql import functions as F
@@ -1484,18 +1443,13 @@ def test_cc_driver_fastpath_matches_distributed(spark, monkeypatch):
 
     def run(pairs_list, n_nodes):
         pairs = spark.createDataFrame(pairs_list, "doc_a long, doc_b long")
-        edges = pairs.select(
-            F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
-        ).unionByName(pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v")))
-        nodes = spark.range(n_nodes).select(
-            F.col("id").alias("doc_id"), F.col("id").alias("label")
-        )
-        fast_labels, rounds = _connected_components(nodes, edges)
-        fast = dict(map(tuple, fast_labels.collect()))
+        ids = spark.range(n_nodes).select(F.col("id").alias("doc_id"))
+        fast_clusters, rounds = _connected_components(pairs, ids)
+        fast = {r[0]: tuple(r[1:]) for r in fast_clusters.collect()}
         assert rounds == 0, "fast path not taken"
         monkeypatch.setattr(dedup_mod, "_CC_DRIVER_EDGE_BOUND", -1)
-        slow_labels, rounds = _connected_components(nodes, edges)
-        slow = dict(map(tuple, slow_labels.collect()))
+        slow_clusters, rounds = _connected_components(pairs, ids)
+        slow = {r[0]: tuple(r[1:]) for r in slow_clusters.collect()}
         assert rounds > 0, "force-route failed"
         monkeypatch.setattr(dedup_mod, "_CC_DRIVER_EDGE_BOUND", 1 << 16)
         assert fast == slow and len(fast) == n_nodes
@@ -1510,57 +1464,28 @@ def test_cc_driver_fastpath_matches_distributed(spark, monkeypatch):
     run(rand, 180)
 
 
-def test_cc_fastpath_seeded_labels_and_missing_endpoint(spark, monkeypatch):
-    """The route contract is exact, not approximate: with SEEDED initial
-    labels (label != doc_id) the fast path must still produce what
-    min-label propagation converges to — per component, the minimum
-    INITIAL label — and an edge endpoint absent from nodes must raise
-    loudly instead of silently diverging between routes."""
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    import dirhash_spark.operators.dedup as dedup_mod
-    from dirhash_spark.operators.dedup import _connected_components
-
-    pairs = spark.createDataFrame(
-        [(0, 1), (1, 2), (5, 6)], "doc_a long, doc_b long"
-    )
-    edges = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")).unionByName(
-        pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
-    )
-    # seeded: node i carries label 100 - i, so component minima are the
-    # labels of the HIGHEST doc_ids (98 for {0,1,2}, 94 for {5,6}, and
-    # singletons 3/4 keep their own seeds 97/96)
-    nodes = spark.range(7).select(
-        F.col("id").alias("doc_id"), (F.lit(100) - F.col("id")).alias("label")
-    )
-    fast_labels, rounds = _connected_components(nodes, edges)
-    fast = dict(map(tuple, fast_labels.collect()))
-    assert rounds == 0
-    monkeypatch.setattr(dedup_mod, "_CC_DRIVER_EDGE_BOUND", -1)
-    slow = dict(map(tuple, _connected_components(nodes, edges)[0].collect()))
-    monkeypatch.setattr(dedup_mod, "_CC_DRIVER_EDGE_BOUND", 1 << 16)
-    assert fast == slow == {0: 98, 1: 98, 2: 98, 3: 97, 4: 96, 5: 94, 6: 94}
-
-    incomplete = spark.range(6).select(
-        F.col("id").alias("doc_id"), F.col("id").alias("label")
-    )  # node 6 missing
-    with _pytest.raises(ValueError, match="absent"):
-        _connected_components(incomplete, edges)
-
-
 def test_neardup_cluster_route_parity(spark, sf_dir, monkeypatch):
-    """_neardup_cluster's full-driver route (endpoint-only node set →
-    bounded collect + union-find + LocalTableScan) must emit the exact
-    row set and schema of the forced distributed CC path, and the verify
-    stage's default broadcast join those of its forced sort-merge join
-    (candidate count above VERIFY_BROADCAST_MAX_PAIRS), for both the
-    registered posting-only pipeline and the lsh_union variant."""
+    """Every caller of the CC primitive must emit, on its driver route
+    (bounded collect + union-find; a local frame of the endpoints, or a
+    broadcast join back over the corpus ids), the exact row set and
+    schema of the forced distributed CC path — the two near-dup
+    pipelines, dedup_cluster_canonical and pipeline_semdedup_e2e — and
+    the verify stage's default broadcast join those of its forced
+    sort-merge join (candidate count above VERIFY_BROADCAST_MAX_PAIRS)."""
     import dirhash_spark.operators.dedup as dedup_mod
 
-    for constant, forced in (("_CC_DRIVER_EDGE_BOUND", -1), ("VERIFY_BROADCAST_MAX_PAIRS", 0)):
+    cc_callers = (
+        "pipeline_neardup_e2e",
+        "pipeline_neardup_e2e_lsh_union",
+        "dedup_cluster_canonical",
+        "pipeline_semdedup_e2e",
+    )
+    for constant, forced, names in (
+        ("_CC_DRIVER_EDGE_BOUND", -1, cc_callers),
+        ("VERIFY_BROADCAST_MAX_PAIRS", 0, cc_callers[:2]),
+    ):
         default = getattr(dedup_mod, constant)
-        for name in ("pipeline_neardup_e2e", "pipeline_neardup_e2e_lsh_union"):
+        for name in names:
             df_fast = QUERIES[name].fn(spark, sf_dir)
             fast = sorted(map(tuple, df_fast.collect()))
             monkeypatch.setattr(dedup_mod, constant, forced)

@@ -1,7 +1,9 @@
-"""The counted checkpoint every runtime router reads its measurement from."""
+"""The counted checkpoint every runtime router reads its measurement from,
+and the one connected-components router every clustering query shares."""
 
 from __future__ import annotations
 
+import ast
 import pathlib
 import re
 import uuid
@@ -55,3 +57,23 @@ def test_observation_is_built_only_by_the_primitive():
         if re.search(r"\bObservation\(", p.read_text())
     )
     assert users == ["operators/udfs.py", "routing.py"]
+
+
+def test_union_find_runs_only_inside_the_cc_primitive():
+    """Every clustering query reaches the driver union-find through
+    dedup._connected_components; no caller keeps a router of its own."""
+
+    def calls(node):
+        return sum(
+            isinstance(n, ast.Call)
+            and getattr(n.func, "id", getattr(n.func, "attr", None)) == "_union_by_min"
+            for n in ast.walk(node)
+        )
+
+    callers = [
+        (str(p.relative_to(PKG)), getattr(top, "name", None), calls(top))
+        for p in sorted(PKG.rglob("*.py"))
+        for top in ast.parse(p.read_text()).body
+        if calls(top)
+    ]
+    assert callers == [("operators/dedup.py", "_connected_components", 1)]

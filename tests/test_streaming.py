@@ -310,9 +310,10 @@ def test_session_flush_restart_recovery(spark, sf_dir, tmp_path):
 
 
 def test_session_flush_restores_shuffle_conf_on_failure(spark, sf_dir, monkeypatch):
-    """run_session_flush scopes spark.sql.shuffle.partitions to its
-    state width; a failure while the scoped conf is live must restore
-    the session value (a leaked width would silently re-plan every
+    """A stream construction that fails leaves the caller's
+    spark.sql.shuffle.partitions as it was: run_session_flush runs the
+    stream in a session of its own, so its state width never reaches
+    the caller's session (a leaked width would silently re-plan every
     subsequent batch query in the session)."""
     import dirhash_spark.streaming.stateful as S
 
