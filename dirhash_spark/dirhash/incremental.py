@@ -31,12 +31,15 @@ measures, never from an option; both are bit-identical:
 
   (a) DRIVER (:func:`_rehash_entries`): the serial walk finishes inside
       its budget and the listing's chunk count is at most
-      ``hashdir.COLLECT_MAX_CHUNKS`` → one ``collect`` of the manifest
-      serves the stamp check, the diff, the splice and the refreshed
-      manifest as Python over its rows; the changed files' chunks are
-      cut into byte-balanced segments on the driver and read+hashed in
-      one job with no shuffle (``hashdir.digest_directory``), whose
-      digests are collected; a driver sort and ``fold_digest``;
+      ``hashdir.COLLECT_MAX_CHUNKS`` → the manifest is read as one
+      Arrow table (``toArrow``, one job) whose columns serve the stamp
+      check, the diff (Arrow joins on the stat key) and the splice; the
+      changed files' chunks are cut into byte-balanced segments on the
+      driver and read+hashed in one job with no shuffle
+      (``hashdir.digest_directory``), whose digests are collected; a
+      driver sort and ``fold_digest``; the refreshed manifest goes back
+      to Spark as the spliced Arrow table — no manifest row is pickled
+      either way;
   (b) CLUSTER (:func:`rehash_listing_df`): the walk trips its budget
       (the listing stays cluster-side, ``listing.list_entries_df``), or
       the driver listing has too many chunks to collect the digests of
@@ -61,6 +64,8 @@ contract rsync's quick check makes.
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -76,6 +81,7 @@ from .codec import (
 )
 from .hashdir import digest_directory, hash_chunk_plan
 from .listing import (
+    arrow_table,
     entries_frame,
     list_entries,
     list_entries_df,
@@ -83,8 +89,18 @@ from .listing import (
     strip_trailing_slash,
 )
 
-_MANIFEST_SCHEMA = "path STRING, size BIGINT, mtime_ns BIGINT, block_num BIGINT, digest BINARY"
-_MANIFEST_COLUMNS = ("path", "size", "mtime_ns", "block_num", "digest")
+_MANIFEST_SCHEMA = pa.schema(
+    [
+        ("path", pa.string()),
+        ("size", pa.int64()),
+        ("mtime_ns", pa.int64()),
+        ("block_num", pa.int64()),
+        ("digest", pa.binary()),
+    ]
+)
+_MANIFEST_COLUMNS = tuple(_MANIFEST_SCHEMA.names)
+#: a file's stat key: the diff reuses its stored digests while it matches
+_KEY_SCHEMA = pa.schema(list(_MANIFEST_SCHEMA)[:3])
 _STAMP_COLUMNS = ("hash_algorithm", "blocksize_bytes")
 
 
@@ -218,54 +234,62 @@ def _rehash_entries(
     bs: int,
     with_manifest: bool,
 ) -> tuple:
-    """The driver route (:func:`rehash` contract): ONE manifest collect
-    serves the stamp check, the stat diff, the splice and the refreshed
-    manifest; only the changed files are read and hashed, in one
-    shuffle-free job whose digests are collected, and the fold is
-    ``fold_digest``."""
-    stored: dict[tuple, list] = {}
+    """The driver route (:func:`rehash` contract): the manifest is read
+    as ONE Arrow table (``toArrow``, one job), and the stamp check, the
+    stat diff (two joins on (path, size, mtime_ns)) and the splice run
+    over its columns; only the changed files are read and hashed, in
+    one shuffle-free job whose digests are collected, and the fold is
+    ``fold_digest``.  The refreshed manifest goes back to Spark as that
+    spliced Arrow table: no manifest row is pickled in either
+    direction."""
+    files = [e for e in entries if not e.is_dir]
+    changed, stats, spliced = files, None, []
     if manifest is not None:
-        rows = manifest.select(*_MANIFEST_COLUMNS, *_STAMP_COLUMNS).collect()
+        table = manifest.select(*_MANIFEST_COLUMNS, *_STAMP_COLUMNS).toArrow()
         # bounded: one row per chunk (and per empty file) of the tree the
         # manifest was built from — the scale of the digest collect below
-        _check_manifest_parameters({r[5:] for r in rows}, hash_algorithm, bs)
-        for path, size, mtime_ns, num, digest, *_ in rows:
-            chunks = stored.setdefault((path, size, mtime_ns), [])
-            if digest is not None:  # empty files carry no chunks
-                chunks.append((path, num, bytes(digest)))
+        stamps = table.group_by(list(_STAMP_COLUMNS)).aggregate([]).to_pylist()
+        _check_manifest_parameters(  # the distinct (algorithm, blocksize) PAIRS
+            {(s["hash_algorithm"], s["blocksize_bytes"]) for s in stamps}, hash_algorithm, bs
+        )
+        stored = table.select(_MANIFEST_COLUMNS).cast(_MANIFEST_SCHEMA)
+        listed = arrow_table([(e.relative_path, e.size, e.mtime_ns) for e in files], _KEY_SCHEMA)
+        key = _KEY_SCHEMA.names
+        spliced.append(stored.join(listed, key, join_type="left semi"))
+        unmatched = listed.join(stored.select(key), key, join_type="left anti")
+        changed_paths = set(unmatched["path"].to_pylist())
+        changed = [e for e in files if e.relative_path in changed_paths]
+        stats = _stats(len(files), len(changed))
 
-    files = [e for e in entries if not e.is_dir]
-    digests, changed = [], []
-    for e in files:
-        kept = stored.get((e.relative_path, e.size, e.mtime_ns))
-        if kept is None:
-            changed.append(e)
-        else:
-            digests += kept
+    digests = []
     if any(e.size > 0 for e in changed):
         # bounded: at most COLLECT_MAX_CHUNKS digest rows (the cluster
         # route takes over beyond that)
-        digests += digest_directory(spark, changed, bs, hash_algorithm).collect()
-    # Driver-side tuple sort == reference sortBy((path, num)),
-    # dirhash.py:413 — and avoids the range-exchange sampling pass that
-    # would re-execute the read+hash stage.  The fold itself is
+        digests = digest_directory(spark, changed, bs, hash_algorithm).collect()
+    stat = {e.relative_path: (e.size, e.mtime_ns) for e in changed}
+    rows = [(path, *stat[path], num, d) for path, num, d in digests]
+    rows += [  # zero-chunk (empty) files keep their key
+        (e.relative_path, e.size, e.mtime_ns, None, None) for e in changed if e.size == 0
+    ]
+    spliced.append(arrow_table(rows, _MANIFEST_SCHEMA))
+    # Driver-side sort on (path, block_num) == reference sortBy((path,
+    # num)), dirhash.py:413 (Arrow compares strings as UTF-8 bytes, which
+    # is code-point order) — and avoids the range-exchange sampling pass
+    # that would re-execute the read+hash stage.  The fold itself is
     # inherently sequential (each step hashes the previous digest,
     # dirhash.py:413-441), so no cluster topology helps it.
-    digests.sort(key=lambda d: (d[0], d[1]))
+    new_manifest = pa.concat_tables(spliced).sort_by(
+        [("path", "ascending"), ("block_num", "ascending")]
+    )
 
     hex_digest = fold_digest(
-        hash_algorithm, [e.relative_path for e in entries], [d[2] for d in digests]
+        hash_algorithm,
+        [e.relative_path for e in entries],
+        pc.drop_null(new_manifest["digest"]).to_numpy(zero_copy_only=False),
     )
-    stats = None if manifest is None else _stats(len(files), len(changed))
     if not with_manifest:
         return hex_digest, stats, None
-    file_stats = {e.relative_path: (e.size, e.mtime_ns) for e in files}
-    new_rows = [(path, *file_stats[path], num, d) for path, num, d in digests]
-    new_rows += [  # zero-chunk (empty) files keep their key
-        (e.relative_path, e.size, e.mtime_ns, None, None) for e in files if e.size == 0
-    ]
-    new_manifest = spark.createDataFrame(new_rows, _MANIFEST_SCHEMA)
-    return hex_digest, stats, _stamped(new_manifest, hash_algorithm, bs)
+    return hex_digest, stats, _stamped(spark.createDataFrame(new_manifest), hash_algorithm, bs)
 
 
 def rehash_listing_df(

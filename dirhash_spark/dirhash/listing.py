@@ -25,7 +25,8 @@ level-parallel cluster walk whose rows stay in executor-side
 DataFrames — only one level's directory frontier ever returns to the
 driver.  The callers' second trigger for the cluster fold, a driver
 listing with too many chunks to collect the digests of, ships the
-listing once with :func:`entries_frame` (same columns).
+listing once with :func:`entries_frame` (same columns, one Arrow
+table).
 
 Every walk takes a file's size and ``mtime_ns`` from ONE stat: the
 local walks' ``scandir`` entry stat, the JVM-gateway walk's
@@ -41,6 +42,8 @@ import re
 import time
 from collections.abc import Iterator
 from dataclasses import dataclass
+
+import pyarrow as pa
 
 #: A URI scheme with an authority marker ("scheme://...").  Plain local
 #: paths — including pathological names containing ':' — never match.
@@ -334,14 +337,35 @@ def list_entries_df(spark, root: str):
     return df.drop("walk_into")
 
 
+def arrow_table(rows: list[tuple], schema: pa.Schema) -> pa.Table:
+    """Driver ``rows`` (tuples in ``schema``'s column order) as ONE
+    Arrow table: the one way the dirhash driver turns O(files) rows
+    into what it hands to ``spark.createDataFrame`` — the JVM reads
+    columnar Arrow batches, and no row is pickled."""
+    columns = list(zip(*rows)) or [()] * len(schema)
+    arrays = [pa.array(c, f.type) for c, f in zip(columns, schema)]
+    return pa.Table.from_arrays(arrays, schema=schema)
+
+
+_ENTRY_SCHEMA = pa.schema(
+    [
+        ("relative_path", pa.string()),
+        ("is_dir", pa.bool_()),
+        ("size", pa.int64()),
+        ("full_path", pa.string()),
+        ("mtime_ns", pa.int64()),
+    ]
+)
+
+
 def entries_frame(spark, entries: list[Entry]):
     """A driver listing shipped to the cluster as a DataFrame with
     :func:`list_entries_df`'s columns, for the cluster route when the
     listing is too big to collect the digests of (``incremental`` module
-    doc).  Checkpointed: the fold reads the listing several times
-    (count, header sort, chunk plan, stat diff), and each read of an
-    unmaterialized local relation re-runs its Python row conversion."""
-    return spark.createDataFrame(
-        [(e.relative_path, e.is_dir, e.size, e.full_path, e.mtime_ns) for e in entries],
-        "relative_path string, is_dir boolean, size long, full_path string, mtime_ns long",
-    ).localCheckpoint()
+    doc); built from one Arrow table (:func:`arrow_table`).
+    Checkpointed: the fold reads the listing several times (count,
+    header sort, chunk plan, stat diff), and each read re-runs the
+    relation's conversion from Arrow batches unless it is
+    materialized."""
+    rows = [(e.relative_path, e.is_dir, e.size, e.full_path, e.mtime_ns) for e in entries]
+    return spark.createDataFrame(arrow_table(rows, _ENTRY_SCHEMA)).localCheckpoint()

@@ -8,6 +8,9 @@ removes that caveat: one run, all queries, one commit hash.
 
 Usage: python scripts/oracle_snapshot.py [sf_dir] [out.json] [--skip-tags t1,t2]
 
+Spark runs at ``local[$SPARK_GRAFT_CPUS]``; unset, the width is the
+number of CPUs this process may run on.
+
 ``--skip-tags witness`` mechanically excludes deliberate scale-witness
 queries (currently ``join_asof_pairwise``: it multiplies each event by
 the user's full order history, so a skewed corpus at sf0.1 gives it a
@@ -48,6 +51,9 @@ def parse_args(argv: list[str]) -> tuple[str, str, frozenset[str]]:
 
 def main() -> int:
     sf_dir, out_path, skip_tags = parse_args(sys.argv[1:])
+    # the width Tier-1 runs at: the CPUs this process may use, unless
+    # SPARK_GRAFT_CPUS says otherwise (unset, get_spark opens local[32])
+    os.environ.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
 
     from dirhash_spark.registry import all_queries
     from dirhash_spark.session import get_spark

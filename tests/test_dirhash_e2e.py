@@ -778,6 +778,116 @@ def test_incremental_rejects_mismatched_manifest_parameters(spark, tmp_path):
     assert {"hash_algorithm", "blocksize_bytes"} <= set(man2.columns)
 
 
+def test_driver_route_stamp_check_reads_row_pairs(spark, tmp_path, monkeypatch):
+    """The driver route's stamp check reads the (hash_algorithm,
+    blocksize_bytes) PAIR of every row: on a union of two manifests
+    stamped with different pairs it raises naming exactly the pairs the
+    rows carry — not the cross product of the two columns' distinct
+    values, and not only the first row's pair."""
+    import re
+
+    from dirhash_spark.dirhash import incremental as I
+
+    root = tmp_path / "tree"
+    root.mkdir()
+    (root / "a.bin").write_bytes(b"spark" * 500)
+
+    def no_cluster_route(*a, **k):
+        raise AssertionError("cluster route taken on a driver-sized tree")
+
+    monkeypatch.setattr(I, "rehash_listing_df", no_cluster_route)
+    first = I.build_chunk_manifest(spark, str(root), "sha256", "1k")
+    second = I.build_chunk_manifest(spark, str(root), "sha3_256", "2k")
+    both = first.unionByName(second).localCheckpoint()
+
+    # the first row's pair is the requested one: the other rows' pair
+    # alone is named
+    with pytest.raises(ValueError, match=re.escape("built with [('sha3_256', 2048)], but")):
+        I.hash_directory_incremental(spark, str(root), both, "sha256", "1k")
+    # a pair neither manifest carries, though the cross product would
+    with pytest.raises(
+        ValueError,
+        match=re.escape("built with [('sha256', 1024), ('sha3_256', 2048)], but"),
+    ):
+        I.hash_directory_incremental(spark, str(root), both, "sha256", "2k")
+
+
+MANIFEST_DDL = (
+    "path STRING, size BIGINT, mtime_ns BIGINT, block_num BIGINT, digest BINARY, "
+    "hash_algorithm STRING NOT NULL, blocksize_bytes BIGINT NOT NULL"
+)
+
+
+def test_manifest_schema_and_interop(spark, tmp_path, monkeypatch):
+    """The manifest is one contract on both routes: on a tree with an
+    empty file, a non-ASCII path and a sub-directory, the built and the
+    refreshed manifest have the DDL's schema (names, types,
+    nullability); a manifest written by either route, read back from
+    parquet and consumed on the other, gives the same hash and stats;
+    an empty file keeps one row with a null block_num and digest; and
+    a tree whose files were all deleted refreshes to a zero-row
+    manifest with the same schema."""
+    from pyspark.sql.types import StructType
+
+    from dirhash_spark.dirhash import hashdir as H
+    from dirhash_spark.dirhash import incremental as I
+
+    want_schema = StructType.fromDDL(MANIFEST_DDL)
+    root = tmp_path / "tree"
+    (root / "sub").mkdir(parents=True)
+    files = {
+        "a.bin": bytes(range(256)) * 10,  # 3 chunks at 1k
+        "empty.txt": b"",
+        "sub/héllo-世界.txt": "über".encode() * 300,
+    }
+    for rel, content in files.items():
+        (root / rel).write_bytes(content)
+    tree, bound = str(root), H.COLLECT_MAX_CHUNKS
+    routes = {"driver": bound, "cluster": -1}
+
+    def on(route):
+        monkeypatch.setattr(H, "COLLECT_MAX_CHUNKS", routes[route])
+
+    written = {}
+    for route in routes:
+        on(route)
+        man = I.build_chunk_manifest(spark, tree, "sha256", "1k")
+        assert man.schema == want_schema, route
+        rows = manifest_rows(man)
+        assert rows == spec_manifest(tree, 1024), route
+        assert [r for r in rows if r[0] == "empty.txt"] == [
+            ("empty.txt", 0, os.stat(root / "empty.txt").st_mtime_ns, None, None)
+        ]
+        written[route] = str(tmp_path / f"manifest-{route}")
+        man.write.parquet(written[route])
+
+    with open(root / "a.bin", "ab") as f:
+        f.write(b"tail")
+    want = hash_directory(spark, tree, "sha256", "1k")
+    results = {}
+    for writer, reader in (("driver", "cluster"), ("cluster", "driver")):
+        on(reader)
+        h, st, refreshed = I.hash_directory_incremental(
+            spark, tree, spark.read.parquet(written[writer]), "sha256", "1k", with_manifest=True
+        )
+        assert refreshed.schema == want_schema, reader
+        assert manifest_rows(refreshed) == spec_manifest(tree, 1024), reader
+        results[reader] = (h, st)
+    assert results["driver"] == results["cluster"]
+    assert results["driver"] == (want, {"n_files": 3, "n_reused_files": 2, "n_rehashed_files": 1})
+
+    for rel in files:
+        (root / rel).unlink()
+    for route in routes:
+        on(route)
+        _, st, refreshed = I.hash_directory_incremental(
+            spark, tree, spark.read.parquet(written[route]), "sha256", "1k", with_manifest=True
+        )
+        assert st == {"n_files": 0, "n_reused_files": 0, "n_rehashed_files": 0}, route
+        assert refreshed.schema == want_schema, route
+        assert refreshed.count() == 0, route
+
+
 def test_parallel_listing_equals_serial(spark, tree, tmp_path):
     """The level-parallel cluster walk must produce the identical entry
     set — same relative paths (dirs slash-suffixed), sizes, and dir
