@@ -260,12 +260,18 @@ def _list_hadoop(spark, root: str) -> list[Entry]:
     return entries
 
 
-#: The cluster walk's per-level rows: :func:`_scan_dir`'s tuples.
-_SCAN_SCHEMA = (
-    "relative_path string, is_dir boolean, size long, full_path string, "
-    "mtime_ns long, walk_into boolean"
+#: A listing's columns, one per :class:`Entry` field.
+_ENTRY_SCHEMA = pa.schema(
+    [
+        ("relative_path", pa.string()),
+        ("is_dir", pa.bool_()),
+        ("size", pa.int64()),
+        ("full_path", pa.string()),
+        ("mtime_ns", pa.int64()),
+    ]
 )
-_SCAN_COLUMNS = [c.split()[0] for c in _SCAN_SCHEMA.split(", ")]
+#: The cluster walk's per-level rows: :func:`_scan_dir`'s tuples.
+_SCAN_SCHEMA = _ENTRY_SCHEMA.append(pa.field("walk_into", pa.bool_()))
 
 
 def _level_frontier_walk(spark, local_root: str):
@@ -274,21 +280,21 @@ def _level_frontier_walk(spark, local_root: str):
     the directory frontier — one level at a time — returns to the
     driver; the checkpoint means later consumers (union / collect)
     re-read materialized metadata rows, never the filesystem."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
     prefix = len(os.path.join(local_root, ""))
 
     def scan(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = [row for d in pdf["dir"] for row in _scan_dir(d, prefix)]
-            yield pd.DataFrame(rows, columns=_SCAN_COLUMNS)
+        for batch in batches:
+            rows = [row for d in batch.column("dir").to_pylist() for row in _scan_dir(d, prefix)]
+            yield from arrow_table(rows, _SCAN_SCHEMA).to_batches()
 
     frontier = [local_root]
     while frontier:
         level = (
             spark.createDataFrame([(d,) for d in frontier], "dir string")
             .repartition(min(_LEVEL_PARTITIONS, max(1, len(frontier))))
-            .mapInPandas(scan, _SCAN_SCHEMA)
+            .mapInArrow(scan, from_arrow_schema(_SCAN_SCHEMA))
             .localCheckpoint()
         )
         frontier = [
@@ -312,7 +318,7 @@ def list_entries_df(spark, root: str):
     at 1M directories × ~1 ms metadata latency (NFS/Lustre; worse on
     object stores) that is ~17 minutes of pure driver wait.  Here every
     executor ``os.scandir``s its slice of the frontier in parallel (one
-    ``mapInPandas`` job per tree LEVEL, so a 1M-dir tree of depth 10
+    ``mapInArrow`` job per tree LEVEL, so a 1M-dir tree of depth 10
     costs 10 jobs of ~100k parallel listings instead of 1M serial ones).
     Rows are :func:`_scan_dir`'s, the serial walk's own scan, one
     column per :class:`Entry` field.
@@ -345,17 +351,6 @@ def arrow_table(rows: list[tuple], schema: pa.Schema) -> pa.Table:
     columns = list(zip(*rows)) or [()] * len(schema)
     arrays = [pa.array(c, f.type) for c, f in zip(columns, schema)]
     return pa.Table.from_arrays(arrays, schema=schema)
-
-
-_ENTRY_SCHEMA = pa.schema(
-    [
-        ("relative_path", pa.string()),
-        ("is_dir", pa.bool_()),
-        ("size", pa.int64()),
-        ("full_path", pa.string()),
-        ("mtime_ns", pa.int64()),
-    ]
-)
 
 
 def entries_frame(spark, entries: list[Entry]):

@@ -13,9 +13,9 @@ Scale design (the point of each variant at 100 TB):
 - exact: one shuffle on a 32-byte content hash — the cheapest possible
   dedup; always run it first to shrink the corpus.
 - MinHash+LSH: near-dup without O(n²) — signatures are embarrassingly
-  parallel (Arrow-batched pandas), candidate generation is an equi-join
-  on (band, band_hash) buckets, so cost is driven by bucket collision
-  counts, not corpus size².
+  parallel (one Arrow-batched numpy stage), candidate generation is an
+  equi-join on (band, band_hash) buckets, so cost is driven by bucket
+  collision counts, not corpus size².
 - SimHash: one 64-bit fingerprint per doc, entirely JVM-side; banding
   on 16-bit quarters finds candidates with ≤3 differing bands, exact
   hamming check via xor+bit_count.
@@ -33,9 +33,11 @@ import zlib
 from collections.abc import Callable, Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
@@ -48,6 +50,7 @@ from pyspark.sql.types import (
 from ..catalog import Catalog, spread_for_compute, table_rowcount, table_stats
 from ..registry import REGISTRY, query
 from ..routing import checkpoint_counted
+from .arrow_lists import list_matrix
 from .text import gram_start_indices
 
 # Shared normalization (Spark expr and DuckDB SQL must stay in lockstep).
@@ -185,6 +188,7 @@ _SIG_SCHEMA = StructType(
         StructField("band_hash", LongType(), False),
     ]
 )
+_SIG_ARROW = to_arrow_schema(_SIG_SCHEMA)
 
 
 def _axb_mod_p(x: np.ndarray) -> np.ndarray:
@@ -269,7 +273,7 @@ def _shingle_crcs(t: str) -> np.ndarray:
     )
 
 
-def _minhash_bands(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _minhash_bands(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     """text → (doc_id, band_id, band_hash) rows.  Deterministic (crc32
     shingle hashing, fixed-seed permutations) and BIT-IDENTICAL to the
     original per-document form (pinned by test_minhash_vectorized_parity);
@@ -289,58 +293,42 @@ def _minhash_bands(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
       serialized) instead of 16 zlib calls per document.
 
     Measured 2.16 → 0.38 s single-thread over the sf0.1 corpus (5.7×),
-    identical output frame."""
-    for pdf in batches:
-        docs = list(zip(pdf["doc_id"], pdf["text"]))
-        doc_out: list[np.ndarray] = []
-        band_out: list[np.ndarray] = []
-        hash_out: list[np.ndarray] = []
+    identical output rows."""
+    for batch in batches:
+        ids = batch.column("doc_id").to_numpy()
+        texts = batch.column("text").to_pylist()
+        nd = len(texts)
+        sig = np.empty((nd, _N_HASHES), dtype=np.int64)
         i = 0
-        while i < len(docs):
-            xs, ids, total = [], [], 0
-            while i < len(docs) and (total < _SKETCH_SUB_WINDOWS or not xs):
-                doc_id, text = docs[i]
-                i += 1
-                t = " ".join(str(text).lower().split())
-                x = _shingle_crcs(t)
+        while i < nd:
+            first, xs, total = i, [], 0
+            while i < nd and (total < _SKETCH_SUB_WINDOWS or not xs):
+                x = _shingle_crcs(" ".join(str(texts[i]).lower().split()))
                 xs.append(x)
-                ids.append(int(doc_id))
+                i += 1
                 total += len(x)
             offs = np.cumsum([0] + [len(x) for x in xs])
             ux, inv = np.unique(np.concatenate(xs), return_inverse=True)
             # (n_distinct, 64): permutations once per distinct shingle
             table_t = np.ascontiguousarray(_axb_mod_p(ux).T)
-            nd = len(ids)
-            sig = np.empty((nd, _N_HASHES), dtype=np.int64)
-            for d in range(nd):
-                sig[d] = table_t[inv[offs[d] : offs[d + 1]]].min(axis=0)
-            sig_bytes = sig.view(np.uint8).reshape(nd, _N_HASHES * 8)
-            bh = np.empty((nd, _N_BANDS), dtype=np.uint32)
-            for band in range(_N_BANDS):
-                chunk = sig_bytes[:, band * _BAND_BYTES : (band + 1) * _BAND_BYTES]
-                acc = np.full(nd, _BAND_CRC_ZERO, dtype=np.uint32)
-                for j in range(_BAND_BYTES):
-                    acc ^= _BAND_CRC_TABLES[j][chunk[:, j]]
-                bh[:, band] = acc
-            doc_out.append(np.repeat(np.asarray(ids, dtype=np.int64), _N_BANDS))
-            band_out.append(np.tile(np.arange(_N_BANDS, dtype=np.int64), nd))
-            hash_out.append(bh.reshape(-1).astype(np.int64))
-        if doc_out:
-            yield pd.DataFrame(
-                {
-                    "doc_id": np.concatenate(doc_out),
-                    "band_id": np.concatenate(band_out),
-                    "band_hash": np.concatenate(hash_out),
-                }
-            )
-        else:
-            yield pd.DataFrame(
-                {
-                    "doc_id": np.array([], dtype=np.int64),
-                    "band_id": np.array([], dtype=np.int64),
-                    "band_hash": np.array([], dtype=np.int64),
-                }
-            )
+            for d in range(len(xs)):
+                sig[first + d] = table_t[inv[offs[d] : offs[d + 1]]].min(axis=0)
+        sig_bytes = sig.view(np.uint8).reshape(nd, _N_HASHES * 8)
+        bh = np.empty((nd, _N_BANDS), dtype=np.uint32)
+        for band in range(_N_BANDS):
+            chunk = sig_bytes[:, band * _BAND_BYTES : (band + 1) * _BAND_BYTES]
+            acc = np.full(nd, _BAND_CRC_ZERO, dtype=np.uint32)
+            for j in range(_BAND_BYTES):
+                acc ^= _BAND_CRC_TABLES[j][chunk[:, j]]
+            bh[:, band] = acc
+        yield pa.record_batch(
+            {
+                "doc_id": np.repeat(ids, _N_BANDS),
+                "band_id": np.tile(np.arange(_N_BANDS, dtype=np.int64), nd),
+                "band_hash": bh.reshape(-1).astype(np.int64),
+            },
+            schema=_SIG_ARROW,
+        )
 
 
 @query("dedup_minhash", oracle=None, tags=("dedup", "lsh"))
@@ -376,7 +364,7 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         spread_for_compute(
             cat.documents.select("doc_id", "text"), cat.sf_dir, "documents"
         )
-        .mapInPandas(_minhash_bands, _SIG_SCHEMA)
+        .mapInArrow(_minhash_bands, _SIG_SCHEMA)
     )
     # Candidate pairs via bucket-collect, NOT a self-join: a self-join
     # would execute the sketch stage twice (both join inputs re-run the
@@ -1307,7 +1295,7 @@ def _score_list_pairs(
     block_rows: int = _ANN_SCORE_BLOCK_ROWS,
     lists: np.ndarray | None = None,
     owner_id: int | None = None,
-) -> pd.DataFrame:
+) -> pa.Table:
     """Score every unordered pair of one inverted list against a cosine
     threshold, in fixed row-blocks.
 
@@ -1402,9 +1390,9 @@ def _score_list_pairs(
     nrm = np.linalg.norm(mat, axis=1, keepdims=True)
     unit = mat / np.where(nrm == 0.0, 1.0, nrm)
     n = len(ids)
-    out_a: list[np.ndarray] = []
-    out_b: list[np.ndarray] = []
-    out_c: list[np.ndarray] = []
+    out_a: list[np.ndarray] = [ids[:0]]
+    out_b: list[np.ndarray] = [ids[:0]]
+    out_c: list[np.ndarray] = [np.empty(0)]
     for start in range(0, n, block_rows):
         stop = min(start + block_rows, n)
         # columns j >= start only: pairs are unordered, so each (i, j)
@@ -1431,16 +1419,11 @@ def _score_list_pairs(
             out_a.append(ids[start + rows])
             out_b.append(ids[start + cols])
             out_c.append(np.round(cos[rows, cols], 4))
-    out_a, out_b, out_c = out_a + chain_a, out_b + chain_b, out_c + chain_c
-    if not out_a:
-        return pd.DataFrame({"vec_a": [], "vec_b": [], "cosine": []}).astype(
-            {"vec_a": "int64", "vec_b": "int64", "cosine": "float64"}
-        )
-    return pd.DataFrame(
+    return pa.table(
         {
-            "vec_a": np.concatenate(out_a),
-            "vec_b": np.concatenate(out_b),
-            "cosine": np.concatenate(out_c),
+            "vec_a": np.concatenate(out_a + chain_a),
+            "vec_b": np.concatenate(out_b + chain_b),
+            "cosine": np.concatenate(out_c + chain_c),
         }
     )
 
@@ -1459,7 +1442,7 @@ def dedup_embedding_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
        (multi-assignment catches pairs straddling a Voronoi boundary;
        the map-only Arrow argmin and trainer/centroids of the sim_ann_ivf
        family);
-    2. per-list row-blocked matmul: ``groupBy(list_id).applyInPandas``
+    2. per-list row-blocked matmul: ``groupBy(list_id).applyInArrow``
        — each inverted list normalizes its vector block once and
        scores its pairs as BLAS matrix products in fixed
        ``_ANN_SCORE_BLOCK_ROWS``-row chunks (:func:`_score_list_pairs`),
@@ -1508,19 +1491,19 @@ def dedup_embedding_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         _nprobe_clusters(v, cents, 3).alias("lists"),
     ).select("vec_id", "v", "lists", F.explode("lists").alias("list_id"))
 
-    def pairs_in_list(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["vec_id"].to_numpy()
-        mat = np.asarray(pdf["v"].tolist(), dtype=np.float64)
-        lists = np.asarray(pdf["lists"].tolist(), dtype=np.int64)
+    def pairs_in_list(key, t):
         return _score_list_pairs(
-            ids, mat, lists=lists, owner_id=int(pdf["list_id"].iloc[0])
+            t["vec_id"].to_numpy(),
+            list_matrix(t["v"]),
+            lists=list_matrix(t["lists"], dtype=np.int64),
+            owner_id=key[0].as_py(),
         )
 
     # each pair is emitted by exactly ONE task (its first shared list),
-    # so the applyInPandas output IS the answer — no cross-list
+    # so the applyInArrow output IS the answer — no cross-list
     # reconciliation exchange (the aggregate this replaced carried the
     # full survivor set through a second shuffle).
-    return assigned.groupBy("list_id").applyInPandas(
+    return assigned.groupBy("list_id").applyInArrow(
         pairs_in_list, "vec_a long, vec_b long, cosine double"
     )
 
@@ -1954,9 +1937,10 @@ _GRAM_SCHEMA = StructType(
         StructField("sz", IntegerType(), False),
     ]
 )
+_GRAM_ARROW = to_arrow_schema(_GRAM_SCHEMA)
 
 
-def _word5_gram_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _word5_gram_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     """(doc_id, ws: array<string>) → (doc_id, grams: distinct word
     5-grams, sz: their count), Arrow-batched and numpy-vectorized over
     the token axis (the _minhash_bands pattern).
@@ -1965,57 +1949,52 @@ def _word5_gram_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
     ``array_distinct(transform(sequence(...), i -> array_join(slice(ws,
     i, 5), ' ')))`` whose per-element expression evaluation dominated
     dedup_containment / pipeline_neardup_e2e (r6 audit: 3.15-4.3 s at
-    sf0.1).  Here the whole batch's tokens live in ONE object ndarray;
-    the five shifted views concatenate elementwise in C, and the
-    per-doc distinct is a single hash pass (pandas drop_duplicates)
-    over (doc, gram) — no per-gram Python, no per-gram expression tree.
+    sf0.1).  Here the batch's tokens are the list column's own flat
+    values: each gram is five ``take``s over them joined in C, and the
+    per-doc distinct is one Arrow hash group-by over (doc, gram) — no
+    per-token or per-gram Python.  A doc's gram list is in
+    first-occurrence order.
 
     Gram semantics are identical to the Catalyst form and the DuckDB
     oracle (``w[i:i+4]`` 1-based inclusive): start positions 1..max(n-4,
     1), window clamped at the document end, so docs under 5 tokens
-    yield their full token string and empty token lists yield "".
+    yield their full token string and empty (or NULL) token lists
+    yield "".
     """
-    for pdf in batches:
-        if len(pdf) == 0:
-            yield pd.DataFrame({"doc_id": [], "grams": [], "sz": []})
-            continue
-        # F.split never yields an empty array (empty input -> [""]),
-        # but normalize anyway so a zero-length list can't alias the
-        # next doc's tokens through the clamped gram window.
-        lists = [x if len(x) else [""] for x in pdf["ws"].tolist()]
-        lens = np.fromiter((len(x) for x in lists), dtype=np.int64, count=len(lists))
-        off = np.zeros(len(lists) + 1, dtype=np.int64)
+    for batch in batches:
+        ws = batch.column("ws")
+        lens = pc.list_value_length(ws).fill_null(0).to_numpy().astype(np.int64)
+        # one trailing "" token: the first word of an empty doc's only gram
+        toks = pa.concat_arrays([pc.list_flatten(ws), pa.array([""], ws.type.value_type)])
+        off = np.zeros(len(lens) + 1, dtype=np.int64)
         np.cumsum(lens, out=off[1:])
-        toks = np.empty(off[-1], dtype=object)
-        for j, x in enumerate(lists):
-            toks[off[j] : off[j + 1]] = x
         n_grams = np.maximum(lens - 4, 1)
-        doc_idx = np.repeat(np.arange(len(lists)), n_grams)
-        gram_off = np.zeros(len(lists) + 1, dtype=np.int64)
+        doc_idx = np.repeat(np.arange(len(lens)), n_grams)
+        gram_off = np.zeros(len(lens) + 1, dtype=np.int64)
         np.cumsum(n_grams, out=gram_off[1:])
-        # global token position of each gram's first word
-        pos = (
-            np.arange(gram_off[-1])
-            - np.repeat(gram_off[:-1], n_grams)
-            + np.repeat(off[:-1], n_grams)
-        )
-        end = np.repeat(off[1:], n_grams)
-        g = toks[pos].copy() if len(pos) else np.empty(0, dtype=object)
+        # global token position of each gram's first word, and its doc's end
+        pos = np.arange(gram_off[-1]) - gram_off[doc_idx] + off[doc_idx]
+        end = off[doc_idx + 1]
+        g = toks.take(np.where(pos < end, pos, off[-1]))
         for k in range(1, 5):
-            idx = pos + k
-            m = idx < end
-            if m.any():
-                g[m] = g[m] + " "
-                g[m] = g[m] + toks[idx[m]]
-        dd = pd.DataFrame({"d": doc_idx, "g": g}).drop_duplicates()
-        grouped = dd.groupby("d", sort=True)["g"].agg(list)
-        ids = pdf["doc_id"].to_numpy()
-        yield pd.DataFrame(
-            {
-                "doc_id": ids[grouped.index.to_numpy()],
-                "grams": grouped.to_numpy(),
-                "sz": [len(x) for x in grouped],
-            }
+            m = pos + k < end
+            nxt = toks.take(np.where(m, pos + k, off[-1]))
+            g = pc.if_else(m, pc.binary_join_element_wise(g, nxt, " "), g)
+        # distinct (doc, gram) pairs in first-occurrence order: doc_idx
+        # ascends, so that order also groups each doc's grams together
+        dd = (
+            pa.table({"d": doc_idx, "g": g, "i": np.arange(len(doc_idx))})
+            .group_by(["d", "g"])
+            .aggregate([("i", "min")])
+            .sort_by("i_min")
+        )
+        sz = np.bincount(dd["d"].to_numpy(), minlength=len(lens))
+        gram_lists = pa.ListArray.from_arrays(
+            np.concatenate([[0], np.cumsum(sz)]).astype(np.int32), dd["g"].combine_chunks()
+        )
+        yield pa.record_batch(
+            {"doc_id": batch.column("doc_id"), "grams": gram_lists, "sz": sz},
+            schema=_GRAM_ARROW,
         )
 
 
@@ -2108,7 +2087,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         cat.documents.select("doc_id", F.split(F.col("text"), " ").alias("ws")),
         cat.sf_dir,
         "documents",
-    ).mapInPandas(_word5_gram_batches, _GRAM_SCHEMA)
+    ).mapInArrow(_word5_gram_batches, _GRAM_SCHEMA)
     e = g.select("doc_id", "sz", F.explode("grams").alias("gram"))
     postings = (
         e.groupBy("gram")
@@ -2303,7 +2282,7 @@ def _neardup_verified_pairs(
     # 12.0 → 5.9 s for the verify stage at sf0.1 (r6, pre-Arrow).  At
     # cluster scale this is the same call: one pass over the corpus
     # building the gram column, persisted, instead of three.
-    g = base.mapInPandas(_word5_gram_batches, _GRAM_SCHEMA).localCheckpoint()
+    g = base.mapInArrow(_word5_gram_batches, _GRAM_SCHEMA).localCheckpoint()
 
     # -- candidate stream 1: exact posting index, df-capped (in-row i<j
     #    expansion on the sorted bucket, as dedup_minhash's buckets do)

@@ -1,6 +1,6 @@
 """Multimodal column plumbing (north-star): image/audio/video as opaque
 ``binary`` columns with typed metadata, processed by Arrow-batched
-mapInPandas stages.
+``mapInArrow`` stages.
 
 The decode step itself is STUBBED — the real codecs (PIL/ffmpeg/soundfile)
 are not in this container.  ``decode_image`` raises NotImplementedError
@@ -9,10 +9,10 @@ derives metadata from the payload's sha256, so the Spark-side plumbing —
 binary schema, batch shapes, 1→N frame expansion, partitioning — is real
 and tested while the codec is swappable.
 
-Scale note: binary payloads never pass through Python row-by-row; they
-move as Arrow buffers into pandas batches.  At 100 TB the payloads live
+Scale note: binary payloads move as Arrow record batches, never as
+pickled rows.  At 100 TB the payloads live
 in parquet binary columns (or file paths + range reads, as in
-dirhash.chunks) and each mapInPandas task handles one partition's worth.
+dirhash.chunks) and each mapInArrow task handles one partition's worth.
 """
 
 from __future__ import annotations
@@ -21,9 +21,10 @@ import hashlib
 import math
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -84,21 +85,26 @@ _META_SCHEMA = StructType(
         StructField("format", StringType(), False),
     ]
 )
+_META_ARROW = to_arrow_schema(_META_SCHEMA)
 
 
-def _extract_meta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = {k: [] for k in ("doc_id", "n_bytes", "payload_sha256", "width", "height", "format")}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            payload = bytes(payload)
+def _payloads(batch: pa.RecordBatch):
+    """(doc_id, payload bytes) pairs of one ``binary_table`` batch."""
+    return zip(batch.column("doc_id").to_pylist(), batch.column("payload").to_pylist())
+
+
+def _extract_meta(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    for batch in batches:
+        rows = {k: [] for k in _META_ARROW.names}
+        for doc_id, payload in _payloads(batch):
             meta = fake_decode(payload)
-            rows["doc_id"].append(int(doc_id))
+            rows["doc_id"].append(doc_id)
             rows["n_bytes"].append(len(payload))
             rows["payload_sha256"].append(hashlib.sha256(payload).hexdigest())
             rows["width"].append(meta["width"])
             rows["height"].append(meta["height"])
             rows["format"].append(meta["format"])
-        yield pd.DataFrame(rows)
+        yield pa.record_batch(rows, schema=_META_ARROW)
 
 
 def binary_table(cat: Catalog) -> DataFrame:
@@ -154,9 +160,9 @@ _HEXPAIR = (
 )
 def mm_meta_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Metadata extraction over a binary column via Arrow-batched
-    mapInPandas (decode stubbed deterministically; see module doc)."""
+    mapInArrow (decode stubbed deterministically; see module doc)."""
     cat = Catalog(spark, sf_dir)
-    return binary_table(cat).mapInPandas(_extract_meta, _META_SCHEMA)
+    return binary_table(cat).mapInArrow(_extract_meta, _META_SCHEMA)
 
 
 _FRAME_SCHEMA = StructType(
@@ -167,9 +173,10 @@ _FRAME_SCHEMA = StructType(
         StructField("frame_hex", StringType(), False),
     ]
 )
+_FRAME_ARROW = to_arrow_schema(_FRAME_SCHEMA)
 
 
-def _sample_frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _sample_frames(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     """1→N expansion: treat the payload as a 'video', emit every k-th
     fixed-size slice as a 'frame' (deterministic sampling).
 
@@ -179,18 +186,17 @@ def _sample_frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     is preserved; the frame-size/stride byte semantics also stay pinned
     by tests/test_llm_ops.py."""
     frame_size, stride = 64, 4
-    for pdf in batches:
-        rows = {k: [] for k in ("doc_id", "frame_idx", "frame_sha256", "frame_hex")}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            payload = bytes(payload)
+    for batch in batches:
+        rows = {k: [] for k in _FRAME_ARROW.names}
+        for doc_id, payload in _payloads(batch):
             n_frames = max(len(payload) // frame_size, 1)
             for idx in range(0, n_frames, stride):
                 frame = payload[idx * frame_size : (idx + 1) * frame_size]
-                rows["doc_id"].append(int(doc_id))
+                rows["doc_id"].append(doc_id)
                 rows["frame_idx"].append(idx)
                 rows["frame_sha256"].append(hashlib.sha256(frame).hexdigest())
                 rows["frame_hex"].append(frame.hex())
-        yield pd.DataFrame(rows)
+        yield pa.record_batch(rows, schema=_FRAME_ARROW)
 
 
 @query(
@@ -216,7 +222,7 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame sampling over binary payloads (every 4th 64-byte slice) —
     the video-frame-extraction batch shape with a stubbed codec."""
     cat = Catalog(spark, sf_dir)
-    return binary_table(cat).mapInPandas(_sample_frames, _FRAME_SCHEMA)
+    return binary_table(cat).mapInArrow(_sample_frames, _FRAME_SCHEMA)
 
 
 _RESIZE_SCHEMA = StructType(
@@ -229,6 +235,7 @@ _RESIZE_SCHEMA = StructType(
         StructField("thumb_sha256", StringType(), False),
     ]
 )
+_RESIZE_ARROW = to_arrow_schema(_RESIZE_SCHEMA)
 
 
 def _resize_batches(target: int):
@@ -236,13 +243,10 @@ def _resize_batches(target: int):
     deterministic fake (digest of payload + target box stands in for the
     thumbnail bytes — a real codec plugs in at the marked line)."""
 
-    def inner(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "doc_id", "src_width", "src_height", "dst_width", "dst_height", "thumb_sha256"
-            )}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                payload = bytes(payload)
+    def inner(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            rows = {k: [] for k in _RESIZE_ARROW.names}
+            for doc_id, payload in _payloads(batch):
                 meta = fake_decode(payload)
                 w, h = meta["width"], meta["height"]
                 scale = target / max(w, h)
@@ -252,13 +256,13 @@ def _resize_batches(target: int):
                 dh = max(1, math.floor(h * scale + 0.5))
                 # REAL CODEC GOES HERE: thumb = resample(payload, dw, dh)
                 thumb = hashlib.sha256(payload + f"{dw}x{dh}".encode()).hexdigest()
-                rows["doc_id"].append(int(doc_id))
+                rows["doc_id"].append(doc_id)
                 rows["src_width"].append(w)
                 rows["src_height"].append(h)
                 rows["dst_width"].append(dw)
                 rows["dst_height"].append(dh)
                 rows["thumb_sha256"].append(thumb)
-            yield pd.DataFrame(rows)
+            yield pa.record_batch(rows, schema=_RESIZE_ARROW)
 
     return inner
 
@@ -297,7 +301,7 @@ def mm_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Thumbnail resize to a 64px bounding box, aspect preserved —
     dimension math real, resample stubbed (see module doc)."""
     cat = Catalog(spark, sf_dir)
-    return binary_table(cat).mapInPandas(_resize_batches(64), _RESIZE_SCHEMA)
+    return binary_table(cat).mapInArrow(_resize_batches(64), _RESIZE_SCHEMA)
 
 
 _FEAT_DIM = 16
@@ -307,9 +311,10 @@ _FEAT_SCHEMA = StructType(
         StructField("feature", ArrayType(DoubleType(), False), False),
     ]
 )
+_FEAT_ARROW = to_arrow_schema(_FEAT_SCHEMA)
 
 
-def _feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _feature_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     """Fixed-dim feature vector per payload: L1-normalized 16-bucket byte
     histogram, numpy-vectorized — the embedding-extraction batch shape
     (swap the histogram for a model forward pass on a GPU executor).
@@ -320,16 +325,18 @@ def _feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """
     import numpy as np
 
-    for pdf in batches:
+    for batch in batches:
         feats = []
-        for payload in pdf["payload"]:
-            arr = np.frombuffer(bytes(payload), dtype=np.uint8)
+        for payload in batch.column("payload").to_pylist():
+            arr = np.frombuffer(payload, dtype=np.uint8)
             if arr.size == 0:
                 feats.append([0.0] * _FEAT_DIM)
                 continue
             hist = np.bincount(arr >> 4, minlength=_FEAT_DIM).astype(np.float64)
             feats.append((np.floor(hist / hist.sum() * 1e6 + 0.5) / 1e6).tolist())
-        yield pd.DataFrame({"doc_id": pdf["doc_id"].astype("int64"), "feature": feats})
+        yield pa.record_batch(
+            {"doc_id": batch.column("doc_id"), "feature": feats}, schema=_FEAT_ARROW
+        )
 
 
 @query(
@@ -367,14 +374,14 @@ def mm_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feature extraction over binary payloads, emitted in exploded form
     ``(doc_id, feat_idx, feat_value)`` — one row per vector component.
 
-    The mapInPandas stage still produces the ``array<double>`` column (the
+    The mapInArrow stage still produces the ``array<double>`` column (the
     shape downstream similarity/dedup operators consume); the registered
     query posexplodes it because (a) long-skinny is the layout a feature
     store sinks anyway and (b) flat scalar cells are canonically hashable
     by any comparator, where array cells are not.
     """
     cat = Catalog(spark, sf_dir)
-    vecs = binary_table(cat).mapInPandas(_feature_batches, _FEAT_SCHEMA)
+    vecs = binary_table(cat).mapInArrow(_feature_batches, _FEAT_SCHEMA)
     return vecs.select(
         "doc_id", F.posexplode("feature").alias("feat_idx", "feat_value")
     ).withColumn("feat_idx", F.col("feat_idx").cast("long"))

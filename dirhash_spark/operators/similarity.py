@@ -22,12 +22,13 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import Catalog, corpus_memo, table_rowcount, table_stats
 from ..registry import query
+from .arrow_lists import list_matrix, matrix_list
 
 _TOP_K = 10
 
@@ -248,16 +249,14 @@ def _train_centroids(cat: Catalog) -> np.ndarray | None:
     for every query in the process — the in-process stand-in for the
     persisted model a production deployment would load (the on-disk
     form is the ANN index, ``_ann_index_path``)."""
-    sample = (
+    x = list_matrix(
         _train_sample_order(cat.embeddings)
         .limit(max(_IVF_SAMPLE, 32 * _corpus_ivf_k(cat)))
         .select(F.col("embedding").cast("array<double>").alias("v"))
-        .toPandas()["v"]  # bounded: limit() right above caps the rows
-        .tolist()
+        .toArrow()["v"]  # bounded: limit() right above caps the rows
     )
-    if not sample:  # empty corpus: nothing to quantize (callers emit empty)
+    if not len(x):  # empty corpus: nothing to quantize (callers emit empty)
         return None
-    x = np.asarray(sample, dtype=np.float64)
     n_k = min(_corpus_ivf_k(cat), len(x))  # K derived from corpus size
     rng = np.random.RandomState(7)
     cents = x[rng.choice(len(x), n_k, replace=False)]
@@ -294,16 +293,14 @@ def _train_centroids_distributed(cat: Catalog) -> np.ndarray | None:
     emb = cat.embeddings.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    init = (
+    cents = list_matrix(
         _train_sample_order(emb)
         .limit(_corpus_ivf_k(cat))  # K derived from corpus size
         .select("v")
-        .toPandas()["v"]  # bounded: limit() right above caps the rows
-        .tolist()
+        .toArrow()["v"]  # bounded: limit() right above caps the rows
     )
-    if not init:  # empty corpus: nothing to quantize (callers emit empty)
+    if not len(cents):  # empty corpus: nothing to quantize (callers emit empty)
         return None
-    cents = np.asarray(init, dtype=np.float64)
     dim = cents.shape[1]
     for _ in range(_IVF_ITERS):
         recentered = (
@@ -341,10 +338,8 @@ def _nprobe_clusters(vec_col, cents: np.ndarray, nprobe: int):
     whatever K is; a literal-expression argmin grows O(K·dim) Catalyst
     nodes, measured r14 at K=16 as 3.2 s of driver planning per run
     against ~0.05 s here.  Scratch is (chunk, K) per dimension step."""
-    from pyspark.sql.functions import pandas_udf
-
     c = np.ascontiguousarray(cents, dtype=np.float64)
-    take = int(nprobe)
+    take = min(int(nprobe), c.shape[0])
     # chunk rows so PEAK live scratch stays ~64 MB: each dimension step
     # holds three (chunk, K) float64 arrays at once — the accumulator
     # `d`, the difference `t`, and the `t*t` temporary — so the budget
@@ -352,16 +347,13 @@ def _nprobe_clusters(vec_col, cents: np.ndarray, nprobe: int):
     # residency 3x per concurrent Python worker).
     chunk = max(1, (64 << 20) // (3 * c.shape[0] * 8))
 
-    @pandas_udf("array<int>")
-    def nearest_lists(v: pd.Series) -> pd.Series:
-        x = np.asarray(v.tolist(), dtype=np.float64)
-        out = [
-            _nearest_lists(x[s : s + chunk], c, take).astype(np.int32)
-            for s in range(0, len(x), chunk)
-        ]
-        return pd.Series([row.tolist() for row in np.vstack(out)]) if out else pd.Series(
-            [], dtype=object
-        )
+    @F.arrow_udf("array<int>")
+    def nearest_lists(v: pa.Array) -> pa.Array:
+        x = list_matrix(v, c.shape[1])
+        out = np.empty((len(x), take), dtype=np.int32)
+        for s in range(0, len(x), chunk):
+            out[s : s + chunk] = _nearest_lists(x[s : s + chunk], c, take)
+        return matrix_list(out)
 
     return nearest_lists(vec_col)
 
@@ -527,7 +519,6 @@ def build_ann_index(spark: SparkSession, sf_dir: str) -> str | None:
     """
     import os
 
-    import pandas as pd
     from pyspark.sql.window import Window
 
     out = _ann_index_path(sf_dir)
@@ -567,18 +558,15 @@ def build_ann_index(spark: SparkSession, sf_dir: str) -> str | None:
         )
 
         def encode(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    yield pdf.assign(
-                        codes=pd.Series(dtype=object), nrm=pd.Series(dtype=float)
-                    )
-                    continue
-                vv = np.asarray(pdf["v"].tolist(), dtype=np.float64)
-                resid = vv - cents[pdf["cluster_id"].to_numpy()]
+            for batch in batches:
+                vv = list_matrix(batch.column("v"), cents.shape[1])
+                resid = vv - cents[batch.column("cluster_id").to_numpy()]
                 codes, _ = _pq_codes_nrm(resid, books)
                 # the stored norm stays ||v|| — it is the cosine
                 # denominator, not part of the quantized displacement
-                yield pdf.assign(codes=codes, nrm=np.sqrt((vv**2).sum(1)))
+                yield batch.append_column("codes", matrix_list(codes)).append_column(
+                    "nrm", pa.array(np.sqrt((vv**2).sum(1)))
+                )
 
         (
             grouped.select(
@@ -588,13 +576,13 @@ def build_ann_index(spark: SparkSession, sf_dir: str) -> str | None:
                 sig.alias("sig"),
                 _nprobe_clusters(F.col("v"), cents, 1)[0].alias("cluster_id"),
                 # primitive parallel arrays (not array<struct>): they
-                # round-trip the Arrow mapInPandas boundary untouched
+                # pass through the Arrow batches untouched
                 F.transform("m", lambda s: s["vec_id"]).alias("member_ids"),
                 F.transform("m", lambda s: s["label"]).alias("member_labels"),
                 "group_n",
             )
             .repartition("cluster_id")
-            .mapInPandas(
+            .mapInArrow(
                 encode,
                 "vec_id bigint, label int, v array<double>, sig bigint, "
                 "cluster_id int, member_ids array<bigint>, "
@@ -966,16 +954,15 @@ def _train_pq_codebooks(cat: Catalog) -> np.ndarray | None:
     recall floors hold on the retrained books).  Books have shape
     (_PQ_M, k_pq, D/_PQ_M)."""
     k_pq, _ = _corpus_pq_params(cat)
-    sample = (
+    x = list_matrix(
         _train_sample_order(cat.embeddings)
         .limit(max(_IVF_SAMPLE, 16 * k_pq))
         .select(F.col("embedding").cast("array<double>").alias("v"))
-        .toPandas()["v"]  # bounded: limit() right above caps the rows
-        .tolist()
+        .toArrow()["v"]  # bounded: limit() right above caps the rows
     )
-    if not sample:  # empty corpus: nothing to encode (callers emit empty)
+    if not len(x):  # empty corpus: nothing to encode (callers emit empty)
         return None
-    return _fit_pq_books(np.asarray(sample, dtype=np.float64), k_pq)
+    return _fit_pq_books(x, k_pq)
 
 
 def _fit_pq_books(x: np.ndarray, k_pq: int) -> np.ndarray:
@@ -1016,16 +1003,14 @@ def _train_pq_residual_codebooks(cat: Catalog, cents: np.ndarray) -> np.ndarray 
     corpus's own memoized quantizer, so the corpus fingerprint keys
     these books too."""
     k_pq, _ = _corpus_pq_params(cat)
-    sample = (
+    x = list_matrix(
         _train_sample_order(cat.embeddings)
         .limit(max(_IVF_SAMPLE, 16 * k_pq))
         .select(F.col("embedding").cast("array<double>").alias("v"))
-        .toPandas()["v"]  # bounded: limit() right above caps the rows
-        .tolist()
+        .toArrow()["v"]  # bounded: limit() right above caps the rows
     )
-    if not sample:
+    if not len(x):
         return None
-    x = np.asarray(sample, dtype=np.float64)
     return _fit_pq_books(x - cents[_assign_chunked(x, cents)], k_pq)
 
 
@@ -1044,10 +1029,7 @@ def _pq_codes_nrm(v: np.ndarray, books: np.ndarray):
         codes[s : s + chunk] = (
             ((sub[:, :, None, :] - books[None, :, :, :]) ** 2).sum(-1).argmin(-1)
         )
-    return (
-        [c.astype("int32").tolist() for c in codes],
-        np.sqrt((v**2).sum(1)),
-    )
+    return codes.astype(np.int32), np.sqrt((v**2).sum(1))
 
 
 #: Literal-inline budget for driver-computed lookup constants (the ADC
@@ -1180,26 +1162,20 @@ def sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows-only: the sketch is engine-specific; recall@10 vs exact brute
     force is pinned in tests/test_llm_ops.py.
     """
-    import pandas as pd
-
     cat = Catalog(spark, sf_dir)
     books = _train_pq_codebooks(cat)  # (M, K, d)
     if books is None:
         return _empty_topk(spark)
 
     def encode(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pd.DataFrame({"vec_id": [], "v": [], "codes": [], "nrm": []})
-                continue
-            codes, nrm = _pq_codes_nrm(
-                np.asarray(pdf["v"].tolist(), dtype=np.float64), books
-            )
-            yield pd.DataFrame(
+        for batch in batches:
+            v = batch.column("v")
+            codes, nrm = _pq_codes_nrm(list_matrix(v, books.shape[0] * books.shape[2]), books)
+            yield pa.record_batch(
                 {
-                    "vec_id": pdf["vec_id"].to_numpy(),
-                    "v": pdf["v"],  # pass-through: re-rank needs no 2nd scan
-                    "codes": codes,
+                    "vec_id": batch.column("vec_id"),
+                    "v": v,  # pass-through: re-rank needs no 2nd scan
+                    "codes": matrix_list(codes),
                     "nrm": nrm,
                 }
             )
@@ -1216,7 +1192,7 @@ def sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
         .groupBy("v")
         .agg(F.min("vec_id").alias("vec_id"))
-        .mapInPandas(
+        .mapInArrow(
             encode, "vec_id bigint, v array<double>, codes array<int>, nrm double"
         )
     )
@@ -1476,7 +1452,7 @@ def embedding_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-scale ever reaches one machine:
 
     1. moment pass: each partition emits ONE row carrying its count,
-       d-vector sum, and flattened d×d Gram partial (``mapInPandas``
+       d-vector sum, and flattened d×d Gram partial (``mapInArrow``
        over Arrow batches, integer ``X.T @ X`` per batch on 2^20
        fixed-point coordinates — EXACT, so the reduced moments are
        identical under any partitioning); the driver reduces
@@ -1496,8 +1472,6 @@ def embedding_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     same fixture (components aligned, 2e-4 tolerance = one rounding
     ulp) plus exact variance-ordering properties.
     """
-    import pandas as pd
-
     cat = Catalog(spark, sf_dir)
     src = cat.embeddings.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
     schema = "vec_id long, " + ", ".join(f"pc{j + 1} double" for j in range(_PCA_K))
@@ -1521,10 +1495,10 @@ def embedding_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
         # raised arrow.maxRecordsPerBatch would otherwise corrupt the
         # components without any error (r9 advisor finding).
         n, s, g = 0, None, None
-        for pdf in batches:
-            x = np.asarray(pdf["v"].tolist(), dtype=np.float64)
-            if not len(x):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
+            x = list_matrix(batch.column("v"))
             xq = np.rint(x * _PCA_SCALE).astype(np.int64)
             if s is None:
                 d = x.shape[1]
@@ -1533,18 +1507,18 @@ def embedding_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
             n += len(x)
             s += xq.sum(0)
             g += _exact_gram(xq)
-        yield pd.DataFrame(
-            {
-                "n": [n],
-                "s": [[] if s is None else [str(int(v)) for v in s]],
-                "g": [[] if g is None else [str(int(v)) for v in g.ravel()]],
-            }
-        )
+        if n:  # an empty partition has no moments to report
+            yield pa.record_batch(
+                {
+                    "n": [n],
+                    "s": [[str(int(v)) for v in s]],
+                    "g": [[str(int(v)) for v in g.ravel()]],
+                }
+            )
 
-    parts = src.select("v").mapInPandas(
+    parts = src.select("v").mapInArrow(
         moments, "n long, s array<string>, g array<string>"
     ).collect()  # O(partitions) rows of d^2 integers — bounded by design
-    parts = [p for p in parts if p["n"]]
     n = sum(p["n"] for p in parts)
     if n == 0:  # empty corpus: no moments to decompose
         return spark.createDataFrame([], schema)
@@ -1568,12 +1542,11 @@ def embedding_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def project(batches):
         mu, w = bc.value
-        for pdf in batches:
-            x = np.asarray(pdf["v"].tolist(), dtype=np.float64)
-            p = np.round((x - mu) @ w, 4) if len(x) else np.zeros((0, _PCA_K))
-            out = {"vec_id": pdf["vec_id"]}
+        for batch in batches:
+            p = np.round((list_matrix(batch.column("v"), len(mu)) - mu) @ w, 4)
+            out = {"vec_id": batch.column("vec_id")}
             for j in range(_PCA_K):
                 out[f"pc{j + 1}"] = p[:, j]
-            yield pd.DataFrame(out)
+            yield pa.record_batch(out)
 
-    return src.mapInPandas(project, schema)
+    return src.mapInArrow(project, schema)

@@ -539,7 +539,7 @@ def text_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every statistic is DOC-LOCAL (a document's tokens live in one row),
     so the whole computation is map-side: one corpus scan, tokenization
     in the JVM (split/lower semantics identical to the oracle's
-    ``string_split_regex``), then an Arrow-batched numpy/pandas stage
+    ``string_split_regex``), then an Arrow-batched numpy stage
     (:func:`_repetition_batches`) that counts per-document — ZERO
     exchanges.  The r13 form shuffled the exploded token AND bigram
     multisets on (doc_id, gram) keys — two corpus-token-sized exchanges
@@ -558,18 +558,20 @@ def text_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread_for_compute(
         cat.documents.select("doc_id", toks.alias("t")), cat.sf_dir, "documents"
     )
-    return docs.mapInPandas(
-        _repetition_batches,
-        "doc_id bigint, n_tokens bigint, distinct_frac double, "
-        "top_unigram_frac double, top_bigram_frac double",
-    )
+    return docs.mapInArrow(_repetition_batches, _REPETITION_SCHEMA)
+
+
+_REPETITION_SCHEMA = (
+    "doc_id bigint, n_tokens bigint, distinct_frac double, "
+    "top_unigram_frac double, top_bigram_frac double"
+)
 
 
 def _repetition_batches(batches):
     """(doc_id, t: array<string>) → per-doc repetition stats, Arrow-
-    batched and vectorized (the ``_word5_gram_batches`` pattern: one
-    flat token ndarray per batch, pandas groupby for the per-(doc,gram)
-    counts — no per-token Python).
+    batched and vectorized (the ``_word5_gram_batches`` pattern: the
+    list column's flat token values, one Arrow hash group-by for the
+    per-(doc, gram) counts — no per-token Python).
 
     Exactness contract with the r13 dataflow form and the DuckDB
     oracle: docs with < 2 tokens yield nothing (no bigram row ⇒ the old
@@ -579,52 +581,40 @@ def _repetition_batches(batches):
     correctly-rounded IEEE ops in both engines, so the doubles are
     bit-identical."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    cols = ["doc_id", "n_tokens", "distinct_frac", "top_unigram_frac", "top_bigram_frac"]
-    for pdf in batches:
-        lists = [
-            x for x in zip(pdf["doc_id"], pdf["t"]) if x[1] is not None and len(x[1]) >= 2
-        ]
-        if not lists:
-            yield pd.DataFrame({c: [] for c in cols})
-            continue
-        doc_ids = np.fromiter((d for d, _ in lists), dtype=np.int64, count=len(lists))
-        lens = np.fromiter((len(t) for _, t in lists), dtype=np.int64, count=len(lists))
-        off = np.zeros(len(lists) + 1, dtype=np.int64)
-        np.cumsum(lens, out=off[1:])
-        toks = np.empty(off[-1], dtype=object)
-        for j, (_, t) in enumerate(lists):
-            toks[off[j] : off[j + 1]] = t
-        doc_idx = np.repeat(np.arange(len(lists)), lens)
+    def per_doc(d, keys, n_docs):
+        """(distinct keys, count of the most frequent key) per doc."""
+        c = pa.table({"d": d, "k": keys}).group_by(["d", "k"]).aggregate([([], "count_all")])
+        cd = c["d"].to_numpy()
+        top = np.zeros(n_docs, dtype=np.int64)
+        np.maximum.at(top, cd, c["count_all"].to_numpy())
+        return np.bincount(cd, minlength=n_docs), top
 
-        per = pd.DataFrame({"d": doc_idx, "w": toks}).groupby(
-            ["d", "w"], sort=False
-        ).size()
-        gb = per.groupby(level=0, sort=True)
-        n_distinct = gb.size().to_numpy()
-        top1 = gb.max().to_numpy()
+    def frac(num, den):
+        return np.floor(num * 10000.0 / den) / 10000
 
+    for batch in batches:
+        batch = batch.filter(pc.greater_equal(pc.list_value_length(batch.column("t")), 2))
+        lens = pc.list_value_length(batch.column("t")).to_numpy().astype(np.int64)
+        toks = pc.list_flatten(batch.column("t"))
+        doc_idx = np.repeat(np.arange(len(lens)), lens)
+        n_distinct, top1 = per_doc(doc_idx, toks, len(lens))
         # bigrams: join each token with its in-doc successor (mask out
         # the cross-doc seams of the flat array)
         seam = doc_idx[:-1] == doc_idx[1:]
-        bg = pd.Series(toks[:-1][seam]) + " " + pd.Series(toks[1:][seam])
-        bper = pd.DataFrame({"d": doc_idx[:-1][seam], "g": bg.to_numpy()}).groupby(
-            ["d", "g"], sort=False
-        ).size()
-        btop1 = bper.groupby(level=0, sort=True).max().to_numpy()
-        n_bigrams = lens - 1
-
-        def frac(num, den):
-            return np.floor(num * 10000.0 / den) / 10000
-
-        yield pd.DataFrame(
+        bigrams = pc.binary_join_element_wise(
+            toks[:-1].filter(pa.array(seam)), toks[1:].filter(pa.array(seam)), " "
+        )
+        _, btop1 = per_doc(doc_idx[:-1][seam], bigrams, len(lens))
+        yield pa.record_batch(
             {
-                "doc_id": doc_ids,
+                "doc_id": batch.column("doc_id"),
                 "n_tokens": lens,
                 "distinct_frac": frac(n_distinct, lens),
                 "top_unigram_frac": frac(top1, lens),
-                "top_bigram_frac": frac(btop1, n_bigrams),
+                "top_bigram_frac": frac(btop1, lens - 1),
             }
         )
 

@@ -38,8 +38,16 @@ RUNTIME_CONF: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # Arrow for every pandas UDF / mapInPandas boundary (vectorized transfer).
+    # Arrow for every driver-side DataFrame ↔ Python conversion
+    # (vectorized transfer); the executor-side Python stages are Arrow
+    # batches already (mapInArrow / applyInArrow / arrow_udf).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # No DataFrame call-site capture: left on, pyspark's first
+    # ``functions`` call imports IPython (~0.8 s) and every later call
+    # retries a failing ``import ipykernel`` plus ~3 Py4J round trips.
+    # pyspark reads this once per process, at that first call, so it
+    # must be set before the engine builds any Column.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
     # Small dims (region/nation/part at test SF) should always broadcast.
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
 }

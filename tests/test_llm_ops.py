@@ -5,6 +5,8 @@ exact baseline, multimodal plumbing invariants."""
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow as pa
+import pytest
 
 from dirhash_spark.operators.dedup import _minhash_bands
 from dirhash_spark.operators.multimodal import fake_decode
@@ -21,9 +23,19 @@ NEAR = BASE.replace("garden", "meadow")  # one word changed
 FAR = "completely different content about distributed query engines and columnar storage formats"
 
 
+def _docs_batch(texts):
+    """The sketch's input: one Arrow batch of (doc_id, text)."""
+    return pa.record_batch(
+        {"doc_id": pa.array(range(len(texts)), pa.int64()), "text": pa.array(texts, pa.string())}
+    )
+
+
+def _sketch(batch):
+    return pa.Table.from_batches(list(_minhash_bands(iter([batch])))).to_pandas()
+
+
 def _bands(texts):
-    pdf = pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
-    out = pd.concat(list(_minhash_bands(iter([pdf]))))
+    out = _sketch(_docs_batch(texts))
     return {
         doc: set(map(tuple, out[out.doc_id == doc][["band_id", "band_hash"]].values))
         for doc in out.doc_id.unique()
@@ -98,17 +110,63 @@ def test_minhash_vectorized_parity():
     ref = reference_bands(pdf).astype(
         {"doc_id": "int64", "band_id": "int64", "band_hash": "int64"}
     )
-    got = pd.concat(list(_minhash_bands(iter([pdf])))).reset_index(drop=True)
+    got = _sketch(_docs_batch(texts))
     pd.testing.assert_frame_equal(ref.reset_index(drop=True), got)
 
     # sub-batch boundary: force several sub-batches in one Arrow batch
     old = dd._SKETCH_SUB_WINDOWS
     dd._SKETCH_SUB_WINDOWS = 64
     try:
-        got_small = pd.concat(list(_minhash_bands(iter([pdf])))).reset_index(drop=True)
+        got_small = _sketch(_docs_batch(texts))
     finally:
         dd._SKETCH_SUB_WINDOWS = old
     pd.testing.assert_frame_equal(ref.reset_index(drop=True), got_small)
+
+
+def _kernel_cases():
+    """(kernel, input schema, declared output schema) of every
+    module-level Arrow batch kernel, plus the ANN scorer that is
+    dedup_embedding_ann's applyInArrow body."""
+    import numpy as np
+
+    from dirhash_spark.operators import dedup as D
+    from dirhash_spark.operators import multimodal as M
+    from dirhash_spark.operators import text as T
+
+    docs = pa.schema([("doc_id", pa.int64()), ("text", pa.string())])
+    blobs = pa.schema([("doc_id", pa.int64()), ("payload", pa.binary())])
+
+    def tokens(col):
+        return pa.schema([("doc_id", pa.int64()), (col, pa.list_(pa.string()))])
+
+    def score_empty_list(batches):
+        return [D._score_list_pairs(np.empty(0, np.int64), np.empty((0, 4)))]
+
+    return {
+        "minhash_bands": (D._minhash_bands, docs, D._SIG_SCHEMA),
+        "word5_grams": (D._word5_gram_batches, tokens("ws"), D._GRAM_SCHEMA),
+        "embedding_ann_scorer": (score_empty_list, docs, "vec_a long, vec_b long, cosine double"),
+        "repetition": (T._repetition_batches, tokens("t"), T._REPETITION_SCHEMA),
+        "mm_meta": (M._extract_meta, blobs, M._META_SCHEMA),
+        "mm_frames": (M._sample_frames, blobs, M._FRAME_SCHEMA),
+        "mm_resize": (M._resize_batches(64), blobs, M._RESIZE_SCHEMA),
+        "mm_features": (M._feature_batches, blobs, M._FEAT_SCHEMA),
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_kernel_cases()))
+def test_arrow_kernel_empty_batch_yields_declared_schema(spark, name):
+    """An empty input batch yields zero rows typed as the schema the
+    stage declares to Spark (the types the JVM reads the batch by)."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    kernel, in_schema, declared = _kernel_cases()[name]
+    out = list(kernel(iter([pa.RecordBatch.from_pylist([], schema=in_schema)])))
+    want = spark.createDataFrame([], declared).schema.simpleString()
+    assert out, name
+    for b in out:
+        assert b.num_rows == 0, name
+        assert from_arrow_schema(b.schema).simpleString() == want, name
 
 
 def test_ann_recall_vs_exact(spark, sf_dir):
@@ -1089,11 +1147,11 @@ def test_score_list_pairs_blocked_matches_full_matrix_on_skew():
     center = rng.randn(64) * 4.0
     mat = np.vstack([center + rng.randn(150, 64) * 0.05, rng.randn(150, 64)])
     ids = rng.permutation(np.arange(300)) * 3 + 1
-    full = _score_list_pairs(ids.copy(), mat.copy(), block_rows=10**9)
+    full = _score_list_pairs(ids.copy(), mat.copy(), block_rows=10**9).to_pandas()
     ref = list(map(tuple, full.itertuples(index=False)))
     assert len(ref) >= 150 * 149 // 2  # the clique really is dense
     for block_rows in (1, 7, 64, 299, 300, 301):
-        blocked = _score_list_pairs(ids.copy(), mat.copy(), block_rows=block_rows)
+        blocked = _score_list_pairs(ids.copy(), mat.copy(), block_rows=block_rows).to_pandas()
         assert list(map(tuple, blocked.itertuples(index=False))) == ref, block_rows
 
 
@@ -2002,12 +2060,12 @@ def test_score_list_pairs_digest_gate_parity():
     mat = rng.randn(n, d)
     mat /= np.linalg.norm(mat, axis=1, keepdims=True)
     ids = np.arange(n, dtype=np.int64)
-    fast = D._score_list_pairs(ids.copy(), mat.copy(), threshold=0.9)
+    fast = D._score_list_pairs(ids.copy(), mat.copy(), threshold=0.9).to_pandas()
     # force the slow path by planting one duplicate pair (digest
     # collision by construction) far from every near-dup pair
     mat2 = np.vstack([mat, mat[:1]])
     ids2 = np.arange(n + 1, dtype=np.int64)
-    slow = D._score_list_pairs(ids2, mat2, threshold=0.9)
+    slow = D._score_list_pairs(ids2, mat2, threshold=0.9).to_pandas()
     # the fast run's pair set must be a subset of the slow run's
     # (which adds only pairs involving the planted duplicate row)
     f = {(r.vec_a, r.vec_b) for r in fast.itertuples()}

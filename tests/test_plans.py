@@ -745,6 +745,27 @@ def test_pattern_match_single_session_shuffle(spark):
     assert "Join" not in p
 
 
+def test_production_python_stages_cross_as_arrow_batches():
+    """Every production Python stage takes and yields Arrow batches
+    (mapInArrow / applyInArrow / arrow_udf): the pandas entry points
+    appear only in udfs.py, whose queries prove each rung of the tier
+    ladder, and stateful.py, whose applyInPandasWithState has no Arrow
+    twin."""
+    import pathlib
+
+    import dirhash_spark
+
+    pkg = pathlib.Path(dirhash_spark.__file__).resolve().parent
+    allowed = {"operators/udfs.py", "streaming/stateful.py"}
+    for needle in ("mapInPandas(", "applyInPandas(", "pandas_udf", "import pandas"):
+        hits = {
+            str(p.relative_to(pkg))
+            for p in pkg.rglob("*.py")
+            if needle in p.read_text()
+        }
+        assert hits <= allowed, (needle, sorted(hits - allowed))
+
+
 def test_arrow_udf_plans_arrow_eval(spark):
     """@udf(useArrow=True) must cross the Python boundary as Arrow
     batches (ArrowEvalPython), never the pickled row path
@@ -931,7 +952,7 @@ def test_pq_rerank_broadcasts_candidate_ids(spark):
     shuffled-hash join anywhere; the only nested-loops are the 1-row
     probe/table crosses."""
     p = plan(spark, "sim_ann_pq", "simple")
-    assert p.count("MapInPandas") == 1, p
+    assert p.count("MapInArrow") == 1, p
     assert "BroadcastHashJoin" in p, p
     assert "SortMergeJoin" not in p, p
     assert "ShuffledHashJoin" not in p, p
@@ -1007,12 +1028,12 @@ def test_ivfpq_prunes_partitions_and_never_scans_floats_for_adc(spark):
 
 def test_embedding_ann_dedup_is_one_shuffle_blocked_matmul(spark):
     """dedup_embedding_ann's scale contract: ONE keyed shuffle on the
-    IVF list id into a per-list blocked matmul (FlatMapGroupsInPandas)
+    IVF list id into a per-list blocked matmul (FlatMapGroupsInArrow)
     — no join of any kind, no cartesian, and exactly one parquet scan
     of the embeddings (the assignment pass)."""
     p = plan(spark, "dedup_embedding_ann")
     assert "CartesianProduct" not in p and "Join" not in p
-    assert "FlatMapGroupsInPandas" in p
+    assert "FlatMapGroupsInArrow" in p
     # formatted mode prints each node in the tree AND a details section
     assert len(re.findall(r"\(\d+\) Scan parquet", p)) == 1, p
     # first-shared-list emission (r9): the per-list scorer IS the
@@ -1204,7 +1225,7 @@ def test_repetition_score_is_single_pass_no_aggregation_exchange(spark):
     form paid 4 aggregation/join exchanges for numbers that never
     needed cross-row state."""
     p = plan(spark, "text_repetition_score", "simple")
-    assert "MapInPandas" in p, p
+    assert "MapInArrow" in p, p
     assert "HashAggregate" not in p, p
     assert "Join" not in p, p
     assert p.count("Exchange") <= 1, p

@@ -306,20 +306,25 @@ def test_word5_gram_batches_match_definition(texts):
     and non-ASCII.  The real hazards are the batch-level offset
     machinery: a wrong cumsum would alias one doc's tokens into the
     next doc's grams."""
-    import pandas as pd
+    import pyarrow as pa
 
     from dirhash_spark.operators.dedup import _word5_gram_batches
 
-    pdf = pd.DataFrame(
-        {"doc_id": range(len(texts)), "ws": [t.split(" ") for t in texts]}
+    batch = pa.record_batch(
+        {
+            "doc_id": pa.array(range(len(texts)), pa.int64()),
+            "ws": pa.array([t.split(" ") for t in texts], pa.list_(pa.string())),
+        }
     )
-    out = list(_word5_gram_batches(iter([pdf])))[0]
+    out = list(_word5_gram_batches(iter([batch])))[0].to_pandas()
     got = {int(r.doc_id): (sorted(r.grams), int(r.sz)) for r in out.itertuples()}
     assert set(got) == set(range(len(texts)))
     for i, t in enumerate(texts):
         w = t.split(" ")
         ref = list(dict.fromkeys(" ".join(w[j : j + 5]) for j in range(max(len(w) - 4, 1))))
         assert got[i] == (sorted(ref), len(ref)), (i, t)
+        # first-occurrence order within a doc's list
+        assert list(out.grams[i]) == ref, (i, t)
 
 
 def test_char3_grams_match_definition_and_null_strict(spark):
@@ -626,7 +631,7 @@ def test_score_list_pairs_ownership_exactly_once(n, nprobe, n_lists, block_rows,
             lists=lists[member].copy(),
             owner_id=lid,
         )
-        emitted.extend((int(a), int(b)) for a, b in zip(out["vec_a"], out["vec_b"]))
+        emitted.extend(zip(out["vec_a"].to_pylist(), out["vec_b"].to_pylist()))
 
     assert len(emitted) == len(set(emitted)), "a pair was emitted twice"
 
@@ -669,7 +674,7 @@ def test_score_list_pairs_ownership_chunking_is_transparent(monkeypatch):
                 ids[m].copy(), mat[m].copy(), block_rows=16,
                 lists=lists[m].copy(), owner_id=lid,
             )
-            got.extend(map(tuple, out.itertuples(index=False)))
+            got.extend(map(tuple, out.to_pandas().itertuples(index=False)))
         return sorted(got)
 
     baseline = run()

@@ -35,3 +35,34 @@ def test_session_socket_has_nodelay(spark):
     spark.sparkContext._jvm.java.lang.Runtime.getRuntime().availableProcessors()
     conn = spark.sparkContext._gateway._gateway_client.get_thread_connection()
     assert conn.socket.getsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY) == 1
+
+
+def test_dataframe_call_site_capture_is_off():
+    """RUNTIME_CONF turns DataFrame call-site capture off: left on,
+    pyspark's first ``functions`` call imports IPython and every later
+    call retries a failing ``import ipykernel``.  pyspark caches the
+    setting per process at that first call, so the check runs in a
+    fresh interpreter: ``get_spark()`` then one Column call must leave
+    IPython unimported (``F.lit`` itself is not call-site wrapped; the
+    Column method ``alias`` is)."""
+    import os
+    import subprocess
+    import sys
+
+    code = (
+        "import sys\n"
+        "from pyspark.sql import functions as F\n"
+        "from dirhash_spark.session import get_spark\n"
+        "s = get_spark('call_site_probe')\n"
+        "F.lit(1).alias('one')\n"
+        "print('IPYTHON', 'IPython' in sys.modules)\n"
+        "s.stop()\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_CPUS="1")
+    proc = subprocess.run(
+        [sys.executable, "-c", code], cwd=repo, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert "IPYTHON False" in proc.stdout, proc.stdout
